@@ -16,19 +16,20 @@ full scan, no full shuffle.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame
 
 
-def driver_probe(df: DataFrame, max_rows: int) -> Optional[list]:
+def driver_probe(df: DataFrame, max_rows: int, as_pandas: bool = False):
     """Collect ``df`` iff it has at most ``max_rows`` rows.
 
     Returns the complete row list (possibly empty) when the frame fits,
     else ``None`` — the caller's signal to stay distributed.  One job
-    either way.
+    either way.  ``as_pandas=True`` collects a pandas frame over Arrow
+    instead (timestamps naive in the session time zone, which is how
+    ``createDataFrame`` reads them back).
     """
     if max_rows <= 0:
         return None
-    rows = df.limit(max_rows + 1).collect()
+    head = df.limit(max_rows + 1)
+    rows = head.toPandas() if as_pandas else head.collect()
     return rows if len(rows) <= max_rows else None

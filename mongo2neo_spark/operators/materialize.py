@@ -6,6 +6,9 @@ Cypher MERGE upserts (SURVEY.md §2.3 J2, §2.4 A1/A2/A4, §2.5 W3).
 
 from __future__ import annotations
 
+from typing import Tuple
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -81,6 +84,46 @@ def canonical_names(mentions: DataFrame = None, components: DataFrame = None,
         .filter(F.col("_rn") == 1)
         .select("entity_id", F.col("norm").alias("entity"))
     )
+
+
+def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
+                        ) -> Tuple[pd.DataFrame, pd.DataFrame]:
+    """Driver venue of :func:`canonical_names` -> :func:`norm_to_entity`
+    -> :func:`nodes` for a vocabulary the driver already holds.
+
+    ``stats`` are collected :func:`mention_stats` rows (norm, kind, cnt,
+    first_ts, last_ts), ``components`` the (norm, entity_id) rows.
+    Returns the (norm, entity) map and the node rows (entity, kind,
+    n_mentions, first_ts, last_ts) as pandas frames, with the Spark
+    functions' tie-breaks: canonical name by ``cnt`` desc then ``norm``
+    asc, majority kind by ``kcnt`` desc then ``kind`` asc, and first/last
+    timestamps as min/max that skip nulls.
+    """
+    counts = stats.groupby("norm", as_index=False, dropna=False)["cnt"].sum()
+    joined = counts.merge(components, on="norm")
+    canon = (
+        joined.sort_values(["cnt", "norm"], ascending=[False, True])
+        .drop_duplicates("entity_id")[["entity_id", "norm"]]
+        .rename(columns={"norm": "entity"})
+    )
+    n2e = components.merge(canon, on="entity_id")[["norm", "entity"]]
+
+    m = stats.merge(n2e, on="norm")
+    by_kind = m.groupby(["entity", "kind"], as_index=False, dropna=False).agg(
+        kcnt=("cnt", "sum")
+    )
+    majority = by_kind.sort_values(
+        ["kcnt", "kind"], ascending=[False, True]
+    ).drop_duplicates("entity")
+    per_entity = m.groupby("entity", as_index=False, dropna=False).agg(
+        n_mentions=("cnt", "sum"),
+        first_ts=("first_ts", "min"),
+        last_ts=("last_ts", "max"),
+    )
+    node_rows = majority.merge(per_entity, on="entity")[
+        ["entity", "kind", "n_mentions", "first_ts", "last_ts"]
+    ]
+    return n2e, node_rows
 
 
 def norm_to_entity(components: DataFrame, canon: DataFrame) -> DataFrame:

@@ -20,8 +20,10 @@ from __future__ import annotations
 import time
 from typing import List, Optional, Sequence
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import LINEAGE
 
@@ -40,20 +42,19 @@ def checksum_expr(cols: Sequence[str]) -> F.Column:
     return F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)"))
 
 
-def checksum_col(df: DataFrame) -> F.Column:
-    """checksum_expr over all of ``df``'s columns, stringified."""
-    return checksum_expr(df.columns).cast("string")
-
-
 def lineage_path(out_dir: str) -> str:
     return f"{out_dir}/lineage"
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    try:
-        return spark.read.schema(LINEAGE).parquet(lineage_path(out_dir))
-    except Exception:
+    """The lineage table, or None when no run has recorded any yet.  Only
+    a missing path means "no lineage": any other failure (an unreadable
+    or corrupt table) is raised, never taken for an empty history."""
+    path = lineage_path(out_dir)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
+    return spark.read.schema(LINEAGE).parquet(path)
 
 
 def completed_keys(spark: SparkSession, out_dir: str, stage: str,
@@ -72,6 +73,12 @@ def completed_keys(spark: SparkSession, out_dir: str, stage: str,
     return [r.partition_key for r in rows]
 
 
+# the LINEAGE fields a record call supplies (ts is stamped by Spark)
+_RECORD_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in LINEAGE.fields if f.name != "ts"]
+)
+
+
 def record(
     spark: SparkSession,
     out_dir: str,
@@ -82,15 +89,18 @@ def record(
     """entries: (partition_key, input_rows, output_rows, checksum, wall_ms)."""
     if not entries:
         return
-    now = F.current_timestamp()
-    df = spark.createDataFrame(
+    # a pandas frame with a declared schema becomes an Arrow
+    # LocalTableScan: no Python worker and no pickled-row RDD to ship
+    rows = pd.DataFrame(
         [
             (stage, str(k), int(i), int(o), str(c), int(w), run_id)
             for (k, i, o, c, w) in entries
         ],
-        "stage string, partition_key string, input_rows long, output_rows long,"
-        " checksum string, wall_ms long, run_id string",
-    ).withColumn("ts", now)
+        columns=_RECORD_SCHEMA.fieldNames(),
+    )
+    df = spark.createDataFrame(rows, _RECORD_SCHEMA).withColumn(
+        "ts", F.current_timestamp()
+    )
     df.write.mode("append").parquet(lineage_path(out_dir))
 
 
@@ -135,14 +145,6 @@ def observe_table_metrics(df: DataFrame):
         checksum_expr(df.columns).alias("c"),
     )
     return obs, out
-
-
-def stage_metrics(df: DataFrame, key_col: str) -> DataFrame:
-    """A5: per-partition-key output metrics for lineage recording."""
-    return df.groupBy(F.col(key_col).cast("string").alias("partition_key")).agg(
-        F.count("*").alias("output_rows"),
-        checksum_col(df).alias("checksum"),
-    )
 
 
 class StageTimer:

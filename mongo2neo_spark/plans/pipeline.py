@@ -20,10 +20,11 @@ import uuid
 from dataclasses import dataclass
 from typing import Dict, Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import rules
+from .. import rules, schemas
 from ..functions import hashing
 from ..functions import probe as probe_mod
 from ..operators import cc as cc_mod
@@ -48,9 +49,12 @@ class PipelineConfig:
     # when the text payload is wide relative to the dedup key, measured
     # from a row sample; both strategies produce identical rows)
     dedup_strategy: str = "auto"
-    # linking venue: norm vocabularies up to this size are linked on the
-    # driver (link.driver_link_components — bit-identical, same shared
-    # hashing/rules code) instead of paying 3 UDF-stage fixed costs on a
+    # linking venue: vocabularies of up to this many mention_stats rows
+    # (one per distinct norm) are linked on the driver
+    # (link.driver_link_components — bit-identical, same shared
+    # hashing/rules code) and canonicalized there too
+    # (materialize.driver_graph_tables), instead of paying the distributed
+    # fixed costs (3 UDF passes, CC rounds, canonicalization jobs) on a
     # vocabulary-sized problem; 0 forces the distributed path
     driver_link_max: int = 100_000
     run_id: str = ""
@@ -77,8 +81,8 @@ def run_pipeline(
         "lineage": lin.lineage_path(out_dir),
     }
     _stage_extract(spark, input_source, paths, cfg, resume)
-    _stage_components(spark, paths, cfg, resume)
-    _stage_materialize(spark, paths, cfg, resume)
+    vocab = _stage_components(spark, paths, cfg, resume)
+    _stage_materialize(spark, paths, cfg, resume, vocab)
     return paths
 
 
@@ -174,35 +178,43 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
 # ---------------------------------------------------------------------------
 # stage 2: link + canonicalize (global stage)
 # ---------------------------------------------------------------------------
-def _stage_components(spark, paths, cfg, resume) -> None:
+def _read_extracted(spark, paths) -> DataFrame:
+    # declared schema: no footer-inference job, and an extraction that
+    # wrote no files (empty input) reads as an empty table
+    return spark.read.schema(schemas.EXTRACTED).parquet(paths["extracted"])
+
+
+def _stage_components(spark, paths, cfg, resume):
+    """Link + canonicalize.  Returns the driver venue's in-memory
+    vocabulary (mention_stats rows, component rows) for the materialize
+    stage, or None when the stage was skipped or ran distributed."""
     stage = "components"
     out_root = paths["lineage"].rsplit("/", 1)[0]
     if resume and lin.completed_keys(spark, out_root, stage):
-        return
+        return None
+    vocab = None
     with lin.StageTimer() as t:
-        ments = extract_mod.mentions(spark.read.parquet(paths["extracted"]))
-        # venue choice: LIMIT max+1 + collect is ONE job — if it comes
-        # back short we already hold the complete vocabulary and the
-        # whole linking stage (3 UDF passes + CC rounds of fixed cost)
-        # collapses to driver arithmetic over the same shared functions
-        sample = None
-        if cfg.driver_link_max > 0:
-            nid = ments.select("norm").distinct().withColumn(
-                "id", F.xxhash64("norm")
-            )
-            sample = probe_mod.driver_probe(nid, cfg.driver_link_max)
-        if sample is not None:
+        ments = extract_mod.mentions(_read_extracted(spark, paths))
+        # venue choice: LIMIT max+1 over the vocabulary-sized mention_stats
+        # rollup (one row per norm: kind is a function of the norm).  If it
+        # comes back short, the driver holds the whole vocabulary with its
+        # counts and timestamps: linking (3 UDF passes + CC rounds of fixed
+        # cost) collapses to driver arithmetic over the same shared
+        # functions, and so does canonicalization in the materialize stage
+        stats = probe_mod.driver_probe(
+            mat_mod.mention_stats(ments).withColumn("id", F.xxhash64("norm")),
+            cfg.driver_link_max, as_pandas=True,
+        )
+        if stats is not None:
+            norm_ids = stats[["norm", "id"]].drop_duplicates()
             comp_rows, dropped = link_mod.driver_link_components(
-                [(r.norm, r.id) for r in sample], cfg.band_cap, cfg.threshold
+                zip(norm_ids["norm"].tolist(), norm_ids["id"].tolist()),
+                cfg.band_cap, cfg.threshold,
             )
-            import pandas as pd
-
-            comp = spark.createDataFrame(
-                pd.DataFrame(comp_rows, columns=["norm", "entity_id"])
-                if comp_rows
-                else pd.DataFrame({"norm": pd.Series(dtype="object"),
-                                   "entity_id": pd.Series(dtype="int64")})
-            )
+            comp_pdf = pd.DataFrame(comp_rows, columns=["norm", "entity_id"])
+            vocab = (stats, comp_pdf)
+            comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
+            # written for resume only; materialize takes comp_pdf from memory
             obs, comp = lin.observe_table_metrics(comp)
             m2nio.write_table(comp, paths["components"])
         else:
@@ -227,54 +239,71 @@ def _stage_components(spark, paths, cfg, resume) -> None:
           str(got["c"]) if got["c"] is not None else "0", t.wall_ms)],
         cfg.run_id,
     )
+    return vocab
 
 
 # ---------------------------------------------------------------------------
 # stage 3: materialize (global stage)
 # ---------------------------------------------------------------------------
-def _stage_materialize(spark, paths, cfg, resume) -> None:
+def _stage_materialize(spark, paths, cfg, resume, vocab=None) -> None:
+    """Nodes, edges and triples.  ``vocab`` is the components stage's
+    driver-venue result; without it (distributed venue, or a resumed run
+    whose components stage was already done) everything is read back."""
     stage = "materialize"
     out_root = paths["lineage"].rsplit("/", 1)[0]
     if resume and lin.completed_keys(spark, out_root, stage):
         return
     with lin.StageTimer() as t:
-        extracted = spark.read.parquet(paths["extracted"])
-        # The (huge) mention stream is scanned ONCE, straight into the
-        # vocabulary-sized mention_stats rollup; canonical naming, the
-        # norm->entity map, and the node table all run on that tiny
-        # persisted aggregate.  The triple stream is NOT persisted:
-        # re-deriving it per consumer (column-pruned scan + broadcast
-        # joins) is parallel CPU, while the columnar cache build is
-        # measurably the opposite — A/B at 27M turns: edges+triples
-        # take 24.7s at 4N with a MEMORY_AND_DISK persist vs 12.7s
-        # recomputing (and 34.4 vs 29.7 at N).  Cache only what is
-        # vocabulary-sized.
-        stats = mat_mod.mention_stats(extract_mod.mentions(extracted)).persist()
-        comp = spark.read.parquet(paths["components"])
-        canon = mat_mod.canonical_names(components=comp, stats=stats)
-        n2e = mat_mod.norm_to_entity(comp, canon).persist()
-        n2e.count()  # materialize the (vocabulary-sized) map before reuse
-
-        def resolved():
-            return mat_mod.resolve_triples(
-                extract_mod.raw_triples(extracted), n2e=n2e
+        extracted = _read_extracted(spark, paths)
+        cached = []
+        if vocab is not None:
+            # driver venue: canonical names, the norm->entity map and the
+            # node rows are driver arithmetic over the probed vocabulary;
+            # both go to Spark as Arrow LocalTableScans (no job)
+            n2e_pdf, nodes_pdf = mat_mod.driver_graph_tables(*vocab)
+            n2e = spark.createDataFrame(n2e_pdf, schemas.NORM_TO_ENTITY)
+            nodes = spark.createDataFrame(nodes_pdf, schemas.NODE_ROWS)
+        else:
+            # The (huge) mention stream is scanned ONCE, straight into the
+            # vocabulary-sized mention_stats rollup; canonical naming, the
+            # norm->entity map, and the node table all run on that tiny
+            # persisted aggregate.  The triple stream is NOT persisted:
+            # re-deriving it per consumer (column-pruned scan + broadcast
+            # joins) is parallel CPU, while the columnar cache build is
+            # measurably the opposite — A/B at 27M turns: edges+triples
+            # take 24.7s at 4N with a MEMORY_AND_DISK persist vs 12.7s
+            # recomputing (and 34.4 vs 29.7 at N).  Cache only what is
+            # vocabulary-sized.
+            stats = mat_mod.mention_stats(extract_mod.mentions(extracted)).persist()
+            comp = spark.read.schema(schemas.COMPONENT_ROWS).parquet(
+                paths["components"]
             )
+            canon = mat_mod.canonical_names(components=comp, stats=stats)
+            n2e = mat_mod.norm_to_entity(comp, canon).persist()
+            n2e.count()  # materialize the (vocabulary-sized) map before reuse
+            nodes = mat_mod.nodes(stats=stats, n2e=n2e)
+            cached = [stats, n2e]
 
-        m2nio.write_table(mat_mod.nodes(stats=stats, n2e=n2e), paths["nodes"])
-        m2nio.write_table(
-            mat_mod.edges(resolved(), cfg.max_provenance), paths["edges"]
+        m2nio.write_table(nodes, paths["nodes"])
+        # the only distributed work left: the edge aggregation over the
+        # triple stream, resolved through the broadcast norm->entity map
+        edges = mat_mod.edges(
+            mat_mod.resolve_triples(extract_mod.raw_triples(extracted), n2e=n2e),
+            cfg.max_provenance,
         )
+        m2nio.write_table(edges, paths["edges"])
         # the edges table already has EXACTLY one row per distinct
         # (subj, pred, obj) — the triples set is a projection of it, so
-        # derive it from the (small) written edges table instead of
-        # re-deriving + re-shuffling the full resolved stream a second
-        # time for a distinct
+        # derive it from the (small) written edges table, read back with
+        # the schema just written, instead of re-deriving + re-shuffling
+        # the full resolved stream a second time for a distinct
         obs, triples_df = lin.observe_table_metrics(
-            spark.read.parquet(paths["edges"]).select("subj", "pred", "obj")
+            spark.read.schema(edges.schema).parquet(paths["edges"])
+            .select("subj", "pred", "obj")
         )
         m2nio.write_table(triples_df, paths["triples"])
-        stats.unpersist()
-        n2e.unpersist()
+        for df in cached:
+            df.unpersist()
     got = obs.get
     lin.record(
         spark, out_root, stage,

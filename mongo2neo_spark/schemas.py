@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from .operators.extract import EXTRACT_TYPE
+
 # ---------------------------------------------------------------------------
 # input: the contract transcript table (BASELINE.json input_hint)
 # ---------------------------------------------------------------------------
@@ -121,6 +123,36 @@ EDGES = T.StructType(
             ),
             True,
         ),
+    ]
+)
+
+# the combined extraction table as pipeline.py writes it (one row per turn,
+# partitioned by bucket) — read back with this schema, never inferred: an
+# inferring read costs a footer job and fails on an extraction that wrote
+# no files (empty input)
+EXTRACTED = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), True),
+        T.StructField("turn_idx", T.IntegerType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("ex", EXTRACT_TYPE, True),
+        T.StructField("bucket", T.IntegerType(), True),
+    ]
+)
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    return T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
+
+
+# frames the driver builds (pandas -> Arrow LocalTableScan).  Nullable like
+# the Spark path's joins/windows, so both link venues write the same schema
+COMPONENT_ROWS = _nullable(COMPONENTS)
+NODE_ROWS = _nullable(NODES)
+NORM_TO_ENTITY = T.StructType(
+    [
+        T.StructField("norm", T.StringType(), True),
+        T.StructField("entity", T.StringType(), True),
     ]
 )
 

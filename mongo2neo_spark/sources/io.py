@@ -80,9 +80,5 @@ def write_table(
 INTERMEDIATE_ROW_GROUP_BYTES = 16 * 1024 * 1024
 
 
-def append_table(df: DataFrame, target: str) -> None:
-    write_table(df, target, mode="append")
-
-
 def _is_path(s: str) -> bool:
     return "/" in s or s.startswith(".")

@@ -3,7 +3,7 @@ idempotent resume, lineage contents."""
 
 import pytest
 
-from mongo2neo_spark import fixtures, oracle
+from mongo2neo_spark import fixtures, oracle, schemas
 from mongo2neo_spark.plans import lineage as lin
 from mongo2neo_spark.plans.pipeline import PipelineConfig, run_pipeline
 
@@ -88,33 +88,169 @@ def test_nodes_and_edges_consistent(spark, pipeline_out):
         assert r.weight >= 1 and len(r.provenance) >= 1
 
 
-def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path):
-    """The size-adaptive driver-side linking (driver_link_max) and the
-    distributed LSH/CC path must produce identical components, triples,
-    and lineage drop audits — same shared hashing/rules code, different
-    venue only."""
-    from mongo2neo_spark import fixtures
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
 
-    df = spark.createDataFrame(fixtures.turns_to_pandas(small_rows))
-    df.write.parquet(str(tmp_path / "in"))
-    pa = run_pipeline(
-        spark, str(tmp_path / "in"), str(tmp_path / "drv"),
-        PipelineConfig(n_buckets=4, run_id="drv"), resume=False,
+
+def _write_input(spark, rows, path):
+    spark.createDataFrame(
+        fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
+    ).write.parquet(path)
+    return path
+
+
+def _run_both_venues(spark, inp, tmp_path):
+    """(driver-venue paths, distributed-venue paths) of fresh runs."""
+    return tuple(
+        run_pipeline(
+            spark, inp, str(tmp_path / name),
+            PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max),
+            resume=False,
+        )
+        for name, link_max in (("drv", 100_000), ("dist", 0))
     )
-    pb = run_pipeline(
-        spark, str(tmp_path / "in"), str(tmp_path / "dist"),
-        PipelineConfig(n_buckets=4, run_id="dist", driver_link_max=0),
-        resume=False,
+
+
+def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path):
+    """The size-adaptive driver venue (linking, canonical names, nodes on
+    the driver) and the distributed LSH/CC path must produce identical
+    components, nodes (stats, timestamps, majority kind), edges (weight,
+    provenance), triples and lineage drop audits — same shared
+    hashing/rules code, different venue only."""
+    inp = _write_input(spark, small_rows, str(tmp_path / "in"))
+    pa, pb = _run_both_venues(spark, inp, tmp_path)
+    for table in ("components", "nodes", "edges", "triples"):
+        a, b = _rows(spark, pa[table]), _rows(spark, pb[table])
+        assert a == b, table
+        assert len(a) > 0, table
+
+    def dropped(paths):
+        return [
+            r.input_rows
+            for r in spark.read.parquet(paths["lineage"])
+            .filter("stage = 'components'").collect()
+        ]
+
+    assert dropped(pa) == dropped(pb) and len(dropped(pa)) == 1
+
+
+def test_driver_graph_tables_match_spark(spark):
+    """The driver venue's canonical names, norm->entity map and node rows
+    equal the Spark functions' on ties (count, kind) and null timestamps."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from mongo2neo_spark.operators import materialize as mat
+
+    t = [dt.datetime(2026, 1, 1, h) for h in range(8)]
+    stats_pdf = pd.DataFrame(
+        [
+            ("alpha", "person", 3, t[1], t[5]),
+            ("alpha", "org", 3, None, t[6]),
+            ("alpah", "person", 6, t[0], None),
+            ("beta", "tool", 2, None, None),
+            ("gamma", "place", 1, t[2], t[3]),
+            ("gama", "place", 1, t[4], t[4]),
+            ("delta corp", "org", 2, t[7], t[7]),
+            ("delta co", "person", 2, t[3], t[3]),
+        ],
+        columns=["norm", "kind", "cnt", "first_ts", "last_ts"],
     )
-    comp_a = sorted(map(tuple, spark.read.parquet(pa["components"]).collect()))
-    comp_b = sorted(map(tuple, spark.read.parquet(pb["components"]).collect()))
-    assert comp_a == comp_b and len(comp_a) > 0
-    tri_a = sorted(
-        (r.subj, r.pred, r.obj)
-        for r in spark.read.parquet(pa["triples"]).collect()
+    comp_pdf = pd.DataFrame(
+        [("alpha", 1), ("alpah", 1), ("beta", 2), ("gamma", 3), ("gama", 3),
+         ("delta corp", 4), ("delta co", 4)],
+        columns=["norm", "entity_id"],
     )
-    tri_b = sorted(
-        (r.subj, r.pred, r.obj)
-        for r in spark.read.parquet(pb["triples"]).collect()
+    n2e_pdf, nodes_pdf = mat.driver_graph_tables(stats_pdf, comp_pdf)
+
+    stats = spark.createDataFrame(
+        stats_pdf,
+        "norm string, kind string, cnt long, first_ts timestamp, last_ts timestamp",
     )
-    assert tri_a == tri_b
+    comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
+    n2e = mat.norm_to_entity(comp, mat.canonical_names(components=comp, stats=stats))
+    got_n2e = spark.createDataFrame(n2e_pdf, schemas.NORM_TO_ENTITY)
+    assert sorted(got_n2e.collect()) == sorted(n2e.collect())
+    got_nodes = spark.createDataFrame(nodes_pdf, schemas.NODE_ROWS)
+    want_nodes = mat.nodes(stats=stats, n2e=n2e)
+    assert sorted(map(tuple, got_nodes.collect())) == sorted(
+        map(tuple, want_nodes.collect())
+    )
+    assert {r.entity: r.kind for r in got_nodes.collect()} == {
+        "alpah": "person", "beta": "tool", "gama": "place", "delta co": "org",
+    }
+
+
+def _no_mention_rows(rows):
+    return [r._replace(text=r.text.lower()) for r in rows]
+
+
+@pytest.mark.parametrize("case", ["no_mentions", "all_duplicates"])
+def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case):
+    """Input without a single mention, and input where every turn comes
+    twice, give the oracle's triples on both link venues."""
+    rows = (_no_mention_rows(small_rows) if case == "no_mentions"
+            else small_rows + small_rows)
+    inp = _write_input(spark, rows, str(tmp_path / "in"))
+    want = oracle.pipeline_triples(rows)
+    assert (len(want) == 0) == (case == "no_mentions")
+    for paths in _run_both_venues(spark, inp, tmp_path):
+        assert set(_rows(spark, paths["triples"])) == want
+        if case == "no_mentions":
+            for table in ("components", "nodes", "edges"):
+                assert _rows(spark, paths[table]) == [], table
+
+
+def test_empty_input_both_venues(spark, tmp_path):
+    """A 0-row transcript table: extraction writes no data files, and
+    every later table comes out empty instead of failing to read back."""
+    inp = _write_input(spark, [], str(tmp_path / "in"))
+    for paths in _run_both_venues(spark, inp, tmp_path):
+        for table in ("components", "nodes", "edges", "triples"):
+            assert _rows(spark, paths[table]) == [], table
+
+
+# Spark jobs of one fresh run on the small fixture: 17 since the driver
+# venue builds canonical names and nodes, the driver-built frames are
+# Arrow local tables and the read-backs declare their schemas (34 before)
+MAX_FRESH_RUN_JOBS = 17
+
+
+def test_fresh_run_job_count(spark, small_rows, tmp_path):
+    """Fixed cost guard: a read-back or an inferring read that comes back
+    shows up here as extra Spark jobs."""
+    inp = _write_input(spark, small_rows, str(tmp_path / "in"))
+    sc = spark.sparkContext
+    group = f"job-count-{tmp_path.name}"
+    sc.setJobGroup(group, "fresh pipeline run")
+    try:
+        run_pipeline(spark, inp, str(tmp_path / "out"),
+                     PipelineConfig(n_buckets=4, run_id="jobs"), resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS, n_jobs
+
+
+def test_read_lineage_raises_on_corrupt_table(spark, tmp_path):
+    """Only a missing lineage path means "no lineage"; a corrupt table is
+    an error, never an empty history that would redo (or skip) work."""
+    out = tmp_path / "out"
+    assert lin.read_lineage(spark, str(out)) is None
+    assert lin.completed_keys(spark, str(out), "extract") == []
+    part = out / "lineage" / "part-00000.parquet"
+    part.parent.mkdir(parents=True)
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        lin.completed_keys(spark, str(out), "extract")
+    # a stray directory makes the table unreadable when it is opened,
+    # before any row is scanned
+    part.unlink()
+    (out / "lineage" / "stage=extract").mkdir()
+    (out / "lineage" / "other=1").mkdir()
+    for d in ("stage=extract", "other=1"):
+        (out / "lineage" / d / "part-00000.parquet").write_bytes(b"x")
+    with pytest.raises(Exception):
+        lin.read_lineage(spark, str(out))
