@@ -55,11 +55,9 @@ SIZES = {"N": int(_execs[0]), "4N": int(_execs[1])}  # executors
 def host_calibration_wall(cores: int) -> float:
     """Wall seconds of the FIXED pure-CPU calibration workload (regex
     over a constant text — the same work class as the extraction UDF)
-    on ``cores`` pinned cores.  The single-point form bench.py embeds in
-    every BENCH_r{N}.json so cross-round driver comparisons can be
-    normalized for host drift (this VM's throughput swings ~±20-40%
-    hour to hour; round 4's driver numbers read 1.4x slow purely from
-    a slow host window)."""
+    on ``cores`` pinned cores, so comparisons across runs can be
+    normalized for host drift (a shared VM's throughput can swing
+    ~±20-40% hour to hour)."""
     import textwrap
 
     prog = textwrap.dedent(
@@ -112,8 +110,7 @@ def require_healthy_window(
 ) -> dict:
     """Campaign gatekeeper: measure the HOST's own a->b-core
     scaling ceiling FIRST and refuse to start a campaign below
-    ``min_ceiling`` — round 5 burned both its ANN and graph campaigns
-    on windows where the hardware itself scaled at 0.655-0.706, so the
+    ``min_ceiling`` — earlier campaigns were burned on windows where the hardware itself scaled at 0.655-0.706, so the
     engine's raw numbers could never reach the 0.8 contract gate no
     matter how good the plans were.  Retries ``attempts`` times,
     ``wait_s`` apart (the VM's degradation comes and goes on a
@@ -351,26 +348,13 @@ the normalized one.
 
 Triples emitted: {report['4N']['triples']:,} — identical at both sizes
 (partitioning-independence; also asserted by tests/test_pipeline.py).
-
-## Per-round headline suite
-
-`bench.py` at sf0.1 on local[32] — the driver records its JSON as
-BENCH_r{{N}}.json; compare `value` (total wall sec, lower is better) and
-`kg_turns_per_sec` (higher is better) across rounds.  Round 3 ADDED
-`curation_pipeline` (~8-10s) to the suite, so for cross-round wall
-comparison use `r2_comparable_wall_sec` (the exact query set rounds 1-2
-measured): r2 = 20.5s, r3 = 16.7s with `kg_turns_per_sec` 12.0k -> 16.8k.
 """
     out = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # preserve the marked sections other studies maintain
-    # (BENCH/curation_scaling.py, BENCH/ann_scaling.py) and any
-    # hand-written analysis blocks (KG_NOTES / CURATION_NOTES) across
-    # regens
+    # preserve the hand-written analysis block (KG_NOTES) across regens
     try:
         with open(out) as f:
             old = f.read()
-        for tag in ("KG_NOTES", "CURATION_SCALING", "CURATION_NOTES",
-                    "ANN_SCALING", "ANN_NOTES"):
+        for tag in ("KG_NOTES",):
             begin, end = f"<!-- {tag}_BEGIN -->", f"<!-- {tag}_END -->"
             if begin in old:
                 sec = old.split(begin)[1].split(end)[0]

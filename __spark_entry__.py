@@ -1,2017 +1,31 @@
-"""Driver contract for the spark-graft builder (PySpark target).
-
-``entry(spark)`` — flagship document→graph ETL (the mongo2neo analog) on
-sf0.001.  ``queries()`` — one entry per implemented operator family from
-SURVEY.md §2 plus the training-data operators.  EVERY entry has a DuckDB
-oracle in ``oracle_sql()``:
-
-- SQL-expressible operators carry a direct ANSI-SQL equivalent;
-- deterministic-but-not-SQL-expressible ones (MinHash-LSH clustering,
-  SimHash, rolling fingerprints, the full rule-based KG extraction,
-  multimodal plumbing) carry the pure-Python specification
-  implementation's output rendered as a DuckDB VALUES query
-  (mongo2neo_spark/entry_oracle.py) — same row-count/schema/value-hash
-  gate as everything else;
-- the approximate ANN path is gated on its MEASURED recall@10 vs exact
-  brute force (deterministic under the fixed plane seed).
-
-Column names and integer widths are aligned between both sides: every
-computed column is aliased identically, counts/ranks cast to bigint,
-floating aggregates rounded to fixed decimals.
+"""Driver contract: ``entry(spark)`` runs the transcript -> KG pipeline
+(``plans.pipeline.run_pipeline``) on the deterministic synthetic fixture
+and returns its distinct (subj, pred, obj) triples.  The rows equal
+``oracle.pipeline_triples`` of the same fixture (tests/test_entry.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import tempfile
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-SF0001 = "/root/testdata/sf0.001"
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# ---------------------------------------------------------------------------
-# flagship: TPC-H-ish tables -> labeled property graph (mongo2neo analog:
-# documents to nodes, reference arrays to typed directed relationships)
-# ---------------------------------------------------------------------------
-def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-
-    def node_id(prefix, key):
-        return F.concat_ws(":", F.lit(prefix), F.col(key).cast("string"))
-
-    def edge(df, src_prefix, src_key, rel, dst_prefix, dst_key):
-        # distinct on the NARROW integer key pair BEFORE the string
-        # formatting: the exchange carries 16 B of ints per row instead
-        # of ~50 B of formatted node-id strings, and the concat runs
-        # once per surviving row.  Every stream has a distinct
-        # (rel_type, src_prefix) pair, so rows from different streams
-        # can never collide — the union of per-stream distincts IS the
-        # global distinct set (oracle-hash-verified identical).
-        d = df.select(
-            F.col(src_key).alias("_sk"), F.col(dst_key).alias("_dk")
-        ).dropDuplicates(["_sk", "_dk"])
-        return d.select(
-            node_id(src_prefix, "_sk").alias("src"),
-            F.lit(rel).alias("rel_type"),
-            node_id(dst_prefix, "_dk").alias("dst"),
-        )
-
-    # lineitem edge emission, A/B-measured at sf0.1 (local[32], warm,
-    # best-of-3): two pruned scans + codegen union = 1.9s vs a
-    # single-scan inline(array(struct,struct)) = 2.8s — the Generate's
-    # per-row struct-array materialization costs more than re-reading
-    # the 3 pruned int columns.  The single-scan form only wins when the
-    # scan itself dominates (remote/object storage, wide row groups);
-    # on that profile swap the union below for the inline variant.
-    edges = (
-        edge(customer, "customer", "c_custkey", "LOCATED_IN", "nation", "c_nationkey")
-        .unionByName(edge(supplier, "supplier", "s_suppkey", "LOCATED_IN", "nation", "s_nationkey"))
-        .unionByName(edge(nation, "nation", "n_nationkey", "PART_OF", "region", "n_regionkey"))
-        .unionByName(edge(orders, "order", "o_orderkey", "PLACED_BY", "customer", "o_custkey"))
-        .unionByName(edge(lineitem, "order", "l_orderkey", "CONTAINS", "part", "l_partkey"))
-        .unionByName(edge(lineitem, "supplier", "l_suppkey", "SUPPLIES", "part", "l_partkey"))
-    )
-    # MERGE semantics: distinct (src, rel_type, dst) set — already
-    # established per stream above (streams are pairwise collision-free)
-    return edges
-
-
-_GRAPH_EDGES_SQL = """
-WITH e AS (
-  SELECT 'customer:' || CAST(c_custkey AS VARCHAR) AS src, 'LOCATED_IN' AS rel_type,
-         'nation:' || CAST(c_nationkey AS VARCHAR) AS dst FROM customer
-  UNION ALL
-  SELECT 'supplier:' || CAST(s_suppkey AS VARCHAR), 'LOCATED_IN',
-         'nation:' || CAST(s_nationkey AS VARCHAR) FROM supplier
-  UNION ALL
-  SELECT 'nation:' || CAST(n_nationkey AS VARCHAR), 'PART_OF',
-         'region:' || CAST(n_regionkey AS VARCHAR) FROM nation
-  UNION ALL
-  SELECT 'order:' || CAST(o_orderkey AS VARCHAR), 'PLACED_BY',
-         'customer:' || CAST(o_custkey AS VARCHAR) FROM orders
-  UNION ALL
-  SELECT 'order:' || CAST(l_orderkey AS VARCHAR), 'CONTAINS',
-         'part:' || CAST(l_partkey AS VARCHAR) FROM lineitem
-  UNION ALL
-  SELECT 'supplier:' || CAST(l_suppkey AS VARCHAR), 'SUPPLIES',
-         'part:' || CAST(l_partkey AS VARCHAR) FROM lineitem
-)
-SELECT DISTINCT src, rel_type, dst FROM e
-"""
-
-
-def graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def node(df, label, key, name_col):
-        return df.select(
-            F.concat_ws(":", F.lit(label), F.col(key).cast("string")).alias("node_id"),
-            F.lit(label).alias("label"),
-            F.col(name_col).cast("string").alias("name"),
-        )
-
-    return (
-        node(_t(spark, sf_dir, "customer"), "customer", "c_custkey", "c_name")
-        .unionByName(node(_t(spark, sf_dir, "supplier"), "supplier", "s_suppkey", "s_name"))
-        .unionByName(node(_t(spark, sf_dir, "nation"), "nation", "n_nationkey", "n_name"))
-        .unionByName(node(_t(spark, sf_dir, "region"), "region", "r_regionkey", "r_name"))
-        .unionByName(node(_t(spark, sf_dir, "part"), "part", "p_partkey", "p_name"))
-    )
-
-
-_GRAPH_NODES_SQL = """
-SELECT 'customer:' || CAST(c_custkey AS VARCHAR) AS node_id, 'customer' AS label,
-       CAST(c_name AS VARCHAR) AS name FROM customer
-UNION ALL
-SELECT 'supplier:' || CAST(s_suppkey AS VARCHAR), 'supplier', s_name FROM supplier
-UNION ALL
-SELECT 'nation:' || CAST(n_nationkey AS VARCHAR), 'nation', n_name FROM nation
-UNION ALL
-SELECT 'region:' || CAST(r_regionkey AS VARCHAR), 'region', r_name FROM region
-UNION ALL
-SELECT 'part:' || CAST(p_partkey AS VARCHAR), 'part', p_name FROM part
-"""
-
-
-# ---------------------------------------------------------------------------
-# relational operator coverage (SURVEY.md §2.2-2.7, §2.9)
-# ---------------------------------------------------------------------------
-def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-shaped pricing summary, hash-robust by construction.
-
-    The money columns are doubles, and SUM(double) is summation-order
-    dependent — a partial/final hash agg (Spark) and a sequential agg
-    (DuckDB) can land one ulp apart, so hashing ROUND(SUM(double)) is
-    fragile-by-luck (the round-3 corpus_stats red row was exactly this
-    class of bug).  Discipline used by every money/measure aggregate in
-    this file: quantize PER ROW to integer cents/micros — the per-row
-    expression is the same arithmetic in both engines, so its result is
-    bit-identical — then SUM exact int64s and emit *_cents/*_micro
-    BIGINT columns.  Means use the round-half-up integer identity
-    (2*s*unit + n) div (2*n)."""
-    li = _t(spark, sf_dir, "lineitem")
-    cents = lambda c: F.round(F.col(c) * 100).cast("bigint")  # noqa: E731
-    return (
-        li.select(
-            "l_returnflag", "l_linestatus",
-            cents("l_quantity").alias("qc"),
-            cents("l_extendedprice").alias("epc"),
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-            .cast("bigint").alias("dpc"),
-        )
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("qc").alias("sum_qty_cents"),
-            F.sum("epc").alias("sum_base_price_cents"),
-            F.sum("dpc").alias("sum_disc_price_cents"),
-            F.expr("(2*sum(qc)*100 + count(*)) div (2*count(*))")
-            .alias("avg_qty_tenthousandths"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-_AGG_PRICING_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
-       CAST((2*SUM(CAST(ROUND(l_quantity * 100) AS BIGINT))*100 + COUNT(*))
-            // (2*COUNT(*)) AS BIGINT) AS avg_qty_tenthousandths,
-       COUNT(*) AS count_order
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            # per-row cents quantize -> exact int sum (see agg_pricing_summary)
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .alias("revenue_cents"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-_JOIN_REVENUE_SQL = """
-SELECT n_name,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-       COUNT(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
-def broadcast_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    return nation.join(
-        F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"]
-    ).select("n_name", "r_name")
-
-
-_BROADCAST_SQL = "SELECT n_name, r_name FROM nation JOIN region ON n_regionkey = r_regionkey"
-
-
-def window_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
-
-
-_WINDOW_TOP_SQL = """
-SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-  FROM orders) WHERE rn <= 3
-"""
-
-
-def topk_expensive_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    return (
-        part.orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-        .limit(10)
-        .select("p_partkey", "p_name", "p_retailprice")
-    )
-
-
-_TOPK_PARTS_SQL = """
-SELECT p_partkey, p_name, p_retailprice FROM part
-ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 10
-"""
-
-
-def anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return customer.join(
-        orders, customer["c_custkey"] == orders["o_custkey"], "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-_ANTI_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-
-
-def semi_suppliers_with_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier = _t(spark, sf_dir, "supplier")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    return supplier.join(
-        lineitem, supplier["s_suppkey"] == lineitem["l_suppkey"], "left_semi"
-    ).select("s_suppkey", "s_name")
-
-
-_SEMI_SQL = """
-SELECT s_suppkey, s_name FROM supplier
-WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-"""
-
-
-def events_json_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
-    parsed = events.withColumn(
-        "k", F.from_json("props", "struct<k:int>")["k"].cast("long")
-    )
-    parsed = parsed.withColumn(
-        "vm", F.round(F.col("value") * 1000000).cast("bigint")
-    )
-    return parsed.groupBy("event_type").agg(
-        F.sum("k").alias("sum_k"),
-        F.count("*").alias("n_events"),
-        # per-row micro quantize -> integer mean (see agg_pricing_summary)
-        F.expr("(2*sum(vm) + count(*)) div (2*count(*))")
-        .alias("avg_value_micro"),
-    )
-
-
-_EVENTS_JSON_SQL = """
-SELECT event_type,
-       CAST(SUM(CAST(regexp_extract(props, '([0-9]+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-       COUNT(*) AS n_events,
-       CAST((2*SUM(CAST(ROUND(value * 1000000) AS BIGINT)) + COUNT(*))
-            // (2*COUNT(*)) AS BIGINT) AS avg_value_micro
-FROM events GROUP BY event_type
-"""
-
-
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2-style lag window: per user, count sessions split at >30 min gaps."""
-    events = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    marked = events.withColumn(
-        "new_session",
-        F.when(F.lag("ts").over(w).isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    return marked.groupBy("user_id").agg(
-        F.sum("new_session").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-_SESSIONIZE_SQL = """
-WITH g AS (
-  SELECT user_id,
-         CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR date_diff('second', LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events)
-SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-       COUNT(*) AS n_events
-FROM g GROUP BY user_id
-"""
-
-
-def rollup_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return orders.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n"),
-        # per-row cents quantize -> exact int sum (see agg_pricing_summary)
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .alias("total_cents"),
-    )
-
-
-_ROLLUP_SQL = """
-SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-def word_freq_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """explode coverage: corpus word frequencies, deterministic top-50."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("word"))
-        .limit(50)
-    )
-
-
-_WORD_FREQ_SQL = """
-SELECT word, COUNT(*) AS n
-FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM documents)
-WHERE word <> ''
-GROUP BY word ORDER BY n DESC, word ASC LIMIT 50
-"""
-
-
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """date_trunc coverage: hourly event volumes and value sums."""
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.date_trunc("hour", "ts").alias("hour"))
-        .agg(
-            F.count("*").alias("n_events"),
-            # per-row cents quantize -> exact int sum (see agg_pricing_summary)
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .alias("total_value_cents"),
-        )
-    )
-
-
-_EVENTS_HOURLY_SQL = """
-SELECT date_trunc('hour', ts) AS hour, COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS total_value_cents
-FROM events GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# training-data operators (dedup / similarity / text analysis)
-# ---------------------------------------------------------------------------
-def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.dedup import exact_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    return exact_dedup(docs, "text", "doc_id").select("doc_id", "n_chars")
-
-
-_EXACT_DEDUP_SQL = """
-SELECT doc_id, n_chars FROM documents
-WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY text)
-"""
-
-
-def token_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        textops.token_count("text").cast("long").alias("n_tokens"),
-        textops.bpe_ish_token_count("text").cast("long").alias("n_bpe_tokens"),
-    )
-
-
-# token class mirrors operators.text.ASCII_NONSPACE_PATTERN exactly
-# (explicit ASCII set — Java/RE2/Python `\s` classes disagree on \x0B
-# and Unicode spaces, the spelled-out class cannot)
-_TOKEN_COUNTS_SQL = r"""
-SELECT doc_id,
-       LEN(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0B\f\r]+')) AS n_tokens,
-       LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe_tokens
-FROM documents
-"""
-
-
-def quality_scores_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", F.round(textops.quality_score("text"), 6).alias("quality")
-    )
-
-
-_QUALITY_SQL = r"""
-WITH b AS (
-  SELECT doc_id,
-         LEN(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0B\f\r]+')) AS n_tok,
-         LEN(regexp_extract_all(LOWER(text), '\b(the|a|of|and|to|in|is|for)\b')) AS n_stop,
-         LENGTH(text) - LENGTH(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-         LENGTH(text) AS n_char
-  FROM documents)
-SELECT doc_id,
-       ROUND(0.4 * LEAST(n_tok / 100.0, 1.0)
-           + 0.3 * (1.0 - LEAST((n_punct::DOUBLE / GREATEST(n_char, 1)) * 5.0, 1.0))
-           + 0.3 * LEAST((n_stop::DOUBLE / GREATEST(n_tok, 1)) * 4.0, 1.0), 6) AS quality
-FROM b
-"""
-
-
-def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", textops.lang_id("text").alias("pred_lang"))
-
-
-def _lang_id_sql() -> str:
-    from mongo2neo_spark.operators.text import LANG_MARKERS
-
-    langs = sorted(LANG_MARKERS)
-    cnts = ",\n       ".join(
-        "LEN(regexp_extract_all(LOWER(text), '\\b("
-        + "|".join(LANG_MARKERS[l])
-        + ")\\b')) AS c_" + l
-        for l in langs
-    )
-    best = "GREATEST(" + ", ".join("c_" + l for l in langs) + ")"
-    whens = " ".join(f"WHEN c_{l} = {best} THEN '{l}'" for l in langs)
-    return f"""
-WITH b AS (SELECT doc_id, {cnts} FROM documents)
-SELECT doc_id,
-       CASE WHEN {best} = 0 THEN 'unknown' {whens} ELSE 'unknown' END AS pred_lang
-FROM b
-"""
-
-
-def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = brute_force_topk(emb, emb.filter("vec_id < 5"), k=10)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cos", 6).alias("cos"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-_ANN_TOPK_SQL = """
-WITH q AS (SELECT vec_id AS qid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-           FROM embeddings WHERE vec_id < 5),
-     c AS (SELECT vec_id AS nid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-           FROM embeddings),
-scored AS (
-  SELECT qid, nid,
-         list_sum(list_transform(list_zip(qv, cv), t -> t[1] * t[2]))
-         / (SQRT(list_sum(list_transform(qv, x -> x * x)))
-            * SQRT(list_sum(list_transform(cv, x -> x * x)))) AS cos
-  FROM q, c WHERE qid != nid),
-ranked AS (
-  SELECT qid AS query_id, nid AS neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, ROUND(cos, 6) AS cos, rank FROM ranked WHERE rank <= 10
-"""
-
-
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table hyperplane-LSH ANN, gated by its MEASURED recall@10 vs
-    exact brute force — the oracle row asserts per-query ground-truth
-    size and recall >= 0.9 (deterministic: fixed plane seed, fixed data).
-    An approximate index without a recall meter is not an operator."""
-    from mongo2neo_spark.operators.similarity import ann_recall
-
-    emb = _t(spark, sf_dir, "embeddings")
-    rec = ann_recall(emb, emb.filter("vec_id < 5"), k=10,
-                     n_planes=3, n_tables=16)
-    return rec.select(
-        "query_id",
-        "n_exact",
-        (F.col("recall") >= 0.9).alias("recall_ok"),
-    )
-
-
-_ANN_LSH_RECALL_SQL = """
-SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_exact, TRUE AS recall_ok
-FROM embeddings WHERE vec_id < 5
-"""
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH path's full approximate neighbor sets, hash-checked row by
-    row against a numpy replica (entry_oracle.ann_lsh_topk_rows — same
-    deterministic plane family) — the oracle pins (query, neighbor, rank)
-    exactly, not just the recall boolean (the recall gate stays as its
-    own entry)."""
-    from mongo2neo_spark.operators.similarity import lsh_bucketed_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = lsh_bucketed_topk(emb, emb.filter("vec_id < 5"), k=10,
-                            n_planes=3, n_tables=16)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF path's full approximate neighbor sets vs the numpy replica
-    of the (deterministic) quantizer + probe assignment."""
-    from mongo2neo_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ivf_topk(emb, emb.filter("vec_id < 5"), k=10,
-                   n_centroids=8, n_probe=6)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
-def ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build-once/probe-many LSH: persist the bucket index to parquet,
-    then probe it (bkey-pruned scan + broadcast join, zero Python).
-    Results are identical to ann_lsh_topk by construction, so the same
-    exact neighbor-set oracle applies — which makes the identity a
-    driver-checked fact rather than a claim.  Uses the path-based index
-    round trip (metadata sidecar written at build, validated at probe);
-    the result frame is materialized before the temp index dir is swept
-    so repeated harness runs leave no /tmp residue."""
-    import shutil
-    import tempfile
-
-    from mongo2neo_spark.operators.similarity import (
-        lsh_bucketed_topk,
-        write_lsh_bucket_index,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="m2n_lsh_idx_")
-    try:
-        write_lsh_bucket_index(emb, f"{root}/idx", n_planes=3, n_tables=16)
-        out = lsh_bucketed_topk(
-            emb, emb.filter("vec_id < 5"), k=10, n_planes=3, n_tables=16,
-            index=f"{root}/idx",
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        )
-        # the driver compares collected rows; the scan must happen while
-        # the index files still exist
-        return spark.createDataFrame(out.collect(), schema=out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def ann_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build-once/probe-many IVF: persisted inverted lists + cell-pruned
-    probe; same exact neighbor-set oracle as ann_ivf_topk.  The probe
-    passes NO centroids — the quantizer rides the index's metadata
-    sidecar (write_ivf_cell_index/read_ivf_cell_index round trip), so
-    build and probe cannot use different quantizers.  Temp index dir is
-    swept after the result is materialized."""
-    import shutil
-    import tempfile
-
-    from mongo2neo_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids,
-        write_ivf_cell_index,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = train_ivf_centroids(emb, n_centroids=8)
-    root = tempfile.mkdtemp(prefix="m2n_ivf_idx_")
-    try:
-        write_ivf_cell_index(emb, cents, f"{root}/idx")
-        out = ivf_topk(
-            emb, emb.filter("vec_id < 5"), k=10, n_probe=6,
-            index=f"{root}/idx",
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        )
-        return spark.createDataFrame(out.collect(), schema=out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def minhash_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.dedup import minhash_dedup_components
-
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_dedup_components(docs, "text", "doc_id", threshold=0.5)
-
-
-def ngram_jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT n-gram-jaccard near-dup clustering (no MinHash anywhere):
-    (crc32, shingle)-ordered prefix filter blocking -> exact verify ->
-    min-id CC; pure-Python replica rendered as the VALUES oracle."""
-    from mongo2neo_spark.operators.dedup import ngram_jaccard_dedup_components
-
-    docs = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_dedup_components(docs, "text", "doc_id",
-                                          threshold=0.5)
-
-
-def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (deterministic spherical-k-means coarse quantizer, probe
-    top-n cells) gated on measured MEAN recall@10 >= 0.9 vs brute force.
-    On these weakly-clustered synthetic embeddings that takes probing
-    6/8 cells — the recall meter makes the data-dependent trade visible
-    instead of hiding it."""
-    from mongo2neo_spark.operators.similarity import ivf_recall
-
-    emb = _t(spark, sf_dir, "embeddings")
-    rec = ivf_recall(emb, emb.filter("vec_id < 5"), k=10,
-                     n_centroids=8, n_probe=6)
-    return rec.agg(
-        F.count("*").cast("long").alias("n_queries"),
-        (F.avg("recall") >= 0.9).alias("mean_recall_ok"),
-    )
-
-
-_ANN_IVF_SQL = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS mean_recall_ok
-FROM embeddings WHERE vec_id < 5
-"""
-
-
-def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup clustering (LSH blocking + exact cosine
-    verify + min-id CC).  threshold=0.4 exercises clustering on the
-    synthetic embeddings (whose strongest neighbors sit near cos 0.45);
-    real dedup runs use ~0.9."""
-    from mongo2neo_spark.operators.similarity import embedding_dedup_components
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_dedup_components(emb, threshold=0.4)
-
-
-def simhash_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.dedup import simhash_groups
-
-    return simhash_groups(_t(spark, sf_dir, "documents"), "text", "doc_id")
-
-
-def simhash_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end SimHash near-dup clustering (Manku t-of-b blocking +
-    capped buckets + exact hamming verify + min-id CC); the pure-Python
-    oracle replicates blocking, cap, and union-find exactly."""
-    from mongo2neo_spark.operators.dedup import simhash_dedup_components
-
-    return simhash_dedup_components(
-        _t(spark, sf_dir, "documents"), "text", "doc_id"
-    )
-
-
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.text import fingerprint_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint_udf(F.col("text")).alias("fingerprint"))
-
-
-def kg_triples_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full transcript->KG pipeline on the deterministic synthetic
-    fixture (the contract input shape; parity vs the pure-Python oracle
-    is asserted in tests/test_pipeline.py)."""
-    from mongo2neo_spark import fixtures
-    from mongo2neo_spark.operators import extract, ingest, materialize, skew
-
-    rows = fixtures.generate_transcripts(n_convs=10, seed=11, max_turns=40)
-    df = spark.createDataFrame(fixtures.turns_to_pandas(rows))
-    turns = skew.salted_repartition(ingest.ingest(df), 16)
-    ex = extract.extract(turns)
-    ments = extract.mentions(ex)
-    raw = extract.raw_triples(ex)
-    comp = materialize.norm_components(ments)
-    canon = materialize.canonical_names(ments, comp)
-    return materialize.triples(materialize.resolve_triples(raw, comp, canon))
-
-
-def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED training-data curation pipeline (plans/curation.py):
-    profile -> exact dedup -> minhash near-dup -> quality/lang filter,
-    run end-to-end with per-bucket lineage and idempotent resume — the
-    same checkpoint plumbing as the KG pipeline.  The oracle combines
-    the pure-Python dedup-survivor replica (VALUES) with the exact
-    quality/lang SQL the per-operator entries validate."""
-    import tempfile
-
-    from mongo2neo_spark.plans.curation import CurationConfig, run_curation
-
-    out = tempfile.mkdtemp(prefix="m2n_curation_")
-    paths = run_curation(
-        spark, f"{sf_dir}/documents.parquet", f"{out}/cur",
-        CurationConfig(n_buckets=8), resume=False,
-    )
-    cur = spark.read.parquet(paths["curated"])
-    return cur.select(
-        "doc_id", "pred_lang",
-        F.col("n_tokens").cast("long").alias("n_tokens"), "quality",
-    )
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.multimodal import extract_features, synthesize_media
-
-    media = synthesize_media(spark, n=64, seed=42)
-    return extract_features(media).select("media_id", "kind", "n_bytes")
-
-
-def media_feature_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal -> similarity CHAINING: opaque media payloads (16 of
-    64 are planted byte-duplicates) flow through the mapInPandas feature
-    extractor and straight into the embedding near-dup stack
-    (hyperplane-LSH blocking -> cosine verify -> min-id CC).  The oracle
-    is a full numpy replica (entry_oracle.media_dedup_cluster_rows) —
-    exact (media_id, n_bytes, component) rows, not just counts."""
-    from mongo2neo_spark import entry_oracle as eo
-    from mongo2neo_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-    from mongo2neo_spark.operators.similarity import embedding_dedup_components
-
-    payloads = eo.media_payloads()
-    media = spark.createDataFrame(
-        [
-            (
-                i,
-                eo.MEDIA_KINDS[i % 3],
-                bytearray(p),
-                ("application/octet-stream", 64, 64, 1000),
-            )
-            for i, p in enumerate(payloads)
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = extract_features(media)
-    comp = embedding_dedup_components(
-        feats, id_col="media_id", vec_col="feature",
-        threshold=0.9, n_planes=6, n_tables=8, dim=16,
-    )
-    return (
-        feats.select(F.col("media_id"), F.col("n_bytes"))
-        .join(comp.withColumnRenamed("id", "media_id"), "media_id")
-        .select("media_id", "n_bytes", "component")
-    )
-
-
-# ---------------------------------------------------------------------------
-# map functions (SURVEY §2.9) + grouped-agg pandas UDAF (A7)
-# ---------------------------------------------------------------------------
-def events_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """map_from_entries / map_keys / element_at coverage: per user, an
-    event_type->count map queried for its size and the 'click' entry."""
-    events = _t(spark, sf_dir, "events")
-    per = events.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    m = per.groupBy("user_id").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("event_type", "n")))
-        ).alias("m")
-    )
-    return m.select(
-        "user_id",
-        F.size(F.map_keys("m")).cast("long").alias("n_types"),
-        F.coalesce(F.element_at("m", F.lit("click")), F.lit(0))
-        .cast("long")
-        .alias("n_click"),
-    )
-
-
-_EVENTS_TYPE_MAP_SQL = """
-SELECT user_id,
-       CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
-       CAST(COUNT(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS n_click
-FROM events GROUP BY user_id
-"""
-
-
-def asof_click_to_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (custom temporal operator, single window pass — no
-    range join): each click event annotated with the most recent signup
-    time at-or-before it for the same user; DuckDB's native ASOF JOIN is
-    the oracle."""
-    from mongo2neo_spark.operators.joins import asof_join
-
-    events = _t(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts"
-    )
-    out = asof_join(clicks, signups, on="user_id")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("asof_ts").alias("signup_ts"),
-        (F.unix_timestamp("ts") - F.unix_timestamp("asof_ts"))
-        .cast("long")
-        .alias("lag_sec"),
-    )
-
-
-_ASOF_SQL = """
-SELECT l.event_id, l.user_id, r.ts AS signup_ts,
-       CAST(date_diff('second', r.ts, l.ts) AS BIGINT) AS lag_sec
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l
-ASOF LEFT JOIN (SELECT DISTINCT user_id, ts FROM events
-                WHERE event_type = 'signup') r
-  ON l.user_id = r.user_id AND l.ts >= r.ts
-"""
-
-
-def asof_bucketed_click_to_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hot-key-safe as-of variant (operators.joins.asof_join_bucketed:
-    (key, time-bucket) window partitioning + bucket-level carry-forward)
-    against the SAME DuckDB native ASOF JOIN oracle — output-identical to
-    asof_join by construction, here proven against an independent engine.
-    A deliberately small bucket (15 min vs the events table's multi-day
-    span) forces many cross-bucket carries."""
-    from mongo2neo_spark.operators.joins import asof_join_bucketed
-
-    events = _t(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts"
-    )
-    out = asof_join_bucketed(clicks, signups, on="user_id",
-                             bucket_seconds=900)
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("asof_ts").alias("signup_ts"),
-        (F.unix_timestamp("ts") - F.unix_timestamp("asof_ts"))
-        .cast("long")
-        .alias("lag_sec"),
-    )
-
-
-def rms_chars_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 grouped-agg pandas UDAF: per-language root-mean-square document
-    length.  The UDAF accumulates the square-sum in exact Python integers
-    and divides once, so the double result is bit-identical to DuckDB's
-    SQRT(SUM(n*n)/COUNT(*)) over the same int64 column."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def rms(v: pd.Series) -> float:
-        if len(v) == 0:
-            return 0.0
-        s = int((v.astype("int64").astype(object) ** 2).sum())
-        return float(s / len(v)) ** 0.5
-
-    # grouped-agg pandas UDFs cannot mix with built-in aggregates in one
-    # agg(), so the count is a (tiny) second UDAF over the same column
-    @pandas_udf("long")
-    def n_rows(v: pd.Series) -> int:
-        return len(v)
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.round(rms(F.col("n_chars")), 6).alias("rms_chars"),
-        n_rows(F.col("n_chars")).alias("n_docs"),
-    )
-
-
-_RMS_CHARS_SQL = """
-SELECT lang,
-       ROUND(SQRT(CAST(SUM(n_chars * n_chars) AS DOUBLE) / COUNT(*)), 6) AS rms_chars,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# repetition profile (Gopher/C4-style): word/n-gram/line repetition signals
-# + composite keep verdict, all JVM-side (operators/text.repetition_profile)
-# ---------------------------------------------------------------------------
-def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    return textops.repetition_profile(docs).select(
-        "doc_id", "n_words", "dup_word_frac", "n_lines", "dup_line_frac",
-        "dup_line_char_frac", "top_bigram_cov", "dup_trigram_cov", "keep",
-    )
-
-
-_REPETITION_SQL = r"""
-WITH base AS (
-  SELECT doc_id,
-         string_split_regex(trim(text), '\s+') AS w,
-         length(regexp_replace(text, '\s', '', 'g')) AS chars_total,
-         list_filter(list_transform(string_split(text, chr(10)), s -> trim(s)),
-                     s -> length(s) > 0) AS lines
-  FROM documents
-),
-arrm AS (
-  SELECT doc_id,
-         len(w) AS n_words,
-         ROUND(CASE WHEN len(w) > 0
-               THEN (len(w) - len(list_distinct(w))) / CAST(len(w) AS DOUBLE)
-               ELSE 0.0 END, 6) AS dup_word_frac,
-         chars_total,
-         len(lines) AS n_lines,
-         ROUND(CASE WHEN len(lines) > 0
-               THEN (len(lines) - len(list_distinct(lines)))
-                    / CAST(len(lines) AS DOUBLE)
-               ELSE 0.0 END, 6) AS dup_line_frac,
-         ROUND(CASE WHEN COALESCE(list_sum(list_transform(lines, s -> length(s))), 0) > 0
-               THEN (list_sum(list_transform(lines, s -> length(s)))
-                     - list_sum(list_transform(list_distinct(lines), s -> length(s))))
-                    / CAST(list_sum(list_transform(lines, s -> length(s))) AS DOUBLE)
-               ELSE 0.0 END, 6) AS dup_line_char_frac
-  FROM base
-),
-grams AS (
-  SELECT doc_id, 2 AS n,
-         unnest(CASE WHEN len(w) >= 2 THEN list_transform(
-             generate_series(1, len(w) - 1), i -> w[i] || ' ' || w[i + 1])
-           ELSE [] END) AS gram
-  FROM base
-  UNION ALL
-  SELECT doc_id, 3,
-         unnest(CASE WHEN len(w) >= 3 THEN list_transform(
-             generate_series(1, len(w) - 2),
-             i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2])
-           ELSE [] END)
-  FROM base
-),
-gc AS (
-  SELECT doc_id, n, gram, COUNT(*) AS cnt,
-         length(regexp_replace(gram, '\s', '', 'g')) AS gchars
-  FROM grams GROUP BY doc_id, n, gram
-),
-gm AS (
-  SELECT doc_id,
-         COALESCE(MAX(CASE WHEN n = 2 THEN cnt * gchars END), 0) AS top2,
-         COALESCE(SUM(CASE WHEN n = 3 AND cnt >= 2 THEN cnt * gchars END), 0) AS dup3
-  FROM gc GROUP BY doc_id
-)
-SELECT a.doc_id, a.n_words, a.dup_word_frac, a.n_lines, a.dup_line_frac,
-       a.dup_line_char_frac,
-       ROUND(LEAST(COALESCE(g.top2, 0) / CAST(GREATEST(a.chars_total, 1) AS DOUBLE), 1.0), 6) AS top_bigram_cov,
-       ROUND(LEAST(COALESCE(g.dup3, 0) / CAST(GREATEST(a.chars_total, 1) AS DOUBLE), 1.0), 6) AS dup_trigram_cov,
-       (a.n_words >= 10
-        AND a.dup_word_frac < 0.9
-        AND ROUND(LEAST(COALESCE(g.top2, 0) / CAST(GREATEST(a.chars_total, 1) AS DOUBLE), 1.0), 6) < 0.2
-        AND ROUND(LEAST(COALESCE(g.dup3, 0) / CAST(GREATEST(a.chars_total, 1) AS DOUBLE), 1.0), 6) < 0.3
-        AND a.dup_line_frac < 0.3) AS keep
-FROM arrm a LEFT JOIN gm g USING (doc_id)
-"""
-
-
-# ---------------------------------------------------------------------------
-# deterministic mixture sampling + global shuffle (operators/sampling):
-# md5-hash-driven, cluster-size-independent, bit-reproducible in SQL
-# ---------------------------------------------------------------------------
-_MIX_RATES = {"en": 1.0, "de": 0.6, "fr": 0.25, "zh": 0.1}
-
-
-def mixture_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents")
-    return sampling.mixture_sample(
-        docs, _MIX_RATES, domain_col="lang", id_col="doc_id", seed=42
-    ).select("doc_id", "lang", "source")
-
-
-_MIXTURE_SQL = """
-WITH h AS (
-  SELECT doc_id, lang, source,
-         list_reduce(
-           list_transform(generate_series(1, 15),
-             i -> strpos('0123456789abcdef',
-                         substr(md5('42:' || CAST(doc_id AS VARCHAR)), i, 1)) - 1),
-           (a, b) -> a * 16 + b) % 1000000 AS hv
-  FROM documents
-)
-SELECT doc_id, lang, source FROM h
-WHERE hv < CASE lang WHEN 'en' THEN 1000000 WHEN 'de' THEN 600000
-                     WHEN 'fr' THEN 250000 WHEN 'zh' THEN 100000 ELSE 0 END
-"""
-
-
-_QUOTAS = {"en": 50, "de": 30, "zh": 10}
-
-
-def quota_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents")
-    return sampling.quota_sample(
-        docs, _QUOTAS, domain_col="lang", id_col="doc_id", seed=42
-    ).select("doc_id", "lang")
-
-
-_QUOTA_SQL = """
-WITH r AS (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (
-           PARTITION BY lang
-           ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-  FROM documents
-)
-SELECT doc_id, lang FROM r
-WHERE rn <= CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 30
-                      WHEN 'zh' THEN 10 ELSE 0 END
-"""
-
-
-def shuffle_order_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents")
-    top = sampling.deterministic_shuffle(docs, id_col="doc_id", seed=7).select(
-        "doc_id", "shuffle_key"
-    ).limit(100)
-    w = Window.orderBy("shuffle_key", "doc_id")
-    # row_number over the already-limited 100 rows (TakeOrderedAndProject
-    # upstream); the single-partition window never sees more than k rows
-    return top.select(
-        "doc_id", "shuffle_key",
-        F.row_number().over(w).cast("bigint").alias("rank"),
-    )
-
-
-_SHUFFLE_ORDER_SQL = """
-SELECT doc_id,
-       md5('7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key,
-       CAST(ROW_NUMBER() OVER (ORDER BY md5('7:' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rank
-FROM documents
-ORDER BY shuffle_key, doc_id
-LIMIT 100
-"""
-
-
-# ---------------------------------------------------------------------------
-# corpus-wide boilerplate-line removal (C4 heuristic): the sf documents
-# are single-line, so the entry synthesizes the multi-line shape the
-# operator exists for — a per-source header and a global footer wrapped
-# around every document (deterministic, from table columns only).  With
-# min_df=20, every header (25 docs/source) and the footer (all docs) is
-# boilerplate; every body line is unique and survives verbatim.
-# ---------------------------------------------------------------------------
-def boilerplate_removed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    ml = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("SOURCE HEADER "), F.col("source"), F.lit("\n"),
-            F.col("text"), F.lit("\nGLOBAL FOOTER LINE"),
-        ).alias("text"),
-    )
-    out = textops.remove_boilerplate_lines(ml, min_df=20)
-    return out.select("doc_id", "clean_text", "n_lines_kept")
-
-
-_BOILERPLATE_SQL = """
-WITH ml AS (
-  SELECT doc_id,
-         'SOURCE HEADER ' || source || chr(10) || text || chr(10)
-           || 'GLOBAL FOOTER LINE' AS text
-  FROM documents
-),
-l AS (
-  SELECT doc_id, u.pos, ls[u.pos] AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM ml) s,
-       unnest(generate_series(1, len(ls))) AS u(pos)
-),
-boiler AS (
-  SELECT trim(line) AS lkey FROM l
-  WHERE length(trim(line)) > 0
-  GROUP BY 1 HAVING COUNT(DISTINCT doc_id) >= 20
-),
-kept AS (SELECT * FROM l WHERE trim(line) NOT IN (SELECT lkey FROM boiler))
-SELECT m.doc_id,
-       COALESCE(string_agg(k.line, chr(10) ORDER BY k.pos), '') AS clean_text,
-       CAST(COUNT(k.line) AS BIGINT) AS n_lines_kept
-FROM ml m LEFT JOIN kept k USING (doc_id)
-GROUP BY m.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# the FULL training-data assembly: curation pipeline with the repetition
-# filter and the deterministic mixture-sample + training-shuffle stage
-# enabled (plans/curation.py stages 1-5).  The oracle composes the three
-# independently-validated pieces: the curation survivor oracle, the
-# repetition keep verdict, and the md5 mixture hash — all intersections,
-# because every stage is a pure per-doc predicate over upstream survivors.
-# ---------------------------------------------------------------------------
-def curation_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from mongo2neo_spark.plans.curation import CurationConfig, run_curation
-
-    out = tempfile.mkdtemp(prefix="m2n_curation_full_")
-    paths = run_curation(
-        spark, f"{sf_dir}/documents.parquet", f"{out}/cur",
-        CurationConfig(
-            n_buckets=8, repetition_filter=True,
-            mixture_rates={"en": 0.8}, sample_seed=42,
-        ),
-        resume=False,
-    )
-    return spark.read.parquet(paths["sampled"]).select(
-        "doc_id", "pred_lang", "shuffle_key"
-    )
-
-
-def _curation_sampled_sql() -> str:
-    cur = _eo().curation_sql(_QUALITY_SQL, _lang_id_sql(), _TOKEN_COUNTS_SQL)
-    return f"""
-WITH cur AS ({cur}),
-rep AS ({_REPETITION_SQL})
-SELECT cur.doc_id, cur.pred_lang,
-       md5('42:' || CAST(cur.doc_id AS VARCHAR)) AS shuffle_key
-FROM cur JOIN rep ON cur.doc_id = rep.doc_id
-WHERE rep.keep
-  AND list_reduce(
-        list_transform(generate_series(1, 15),
-          i -> strpos('0123456789abcdef',
-                      substr(md5('42:' || CAST(cur.doc_id AS VARCHAR)), i, 1)) - 1),
-        (a, b) -> a * 16 + b) % 1000000
-      < CASE cur.pred_lang WHEN 'en' THEN 800000 ELSE 0 END
-"""
-
-
-# ---------------------------------------------------------------------------
-# corpus analytics for curation planning: per-language size/quality
-# distribution, and the percentile-thresholded quality selection (top
-# quartile per language via a single window pass — the dynamic-threshold
-# alternative to a fixed min_quality, standard in curation recipes).
-#
-# The distribution stats are emitted as INTEGER MICRO-UNITS (value*1e6
-# as bigint) computed with pure integer arithmetic on both sides —
-# never by hashing an engine-computed double.  Round 3 proved why:
-# Spark `percentile` and DuckDB `quantile_cont` agree mathematically
-# (linear interpolation) but evaluate it through different float
-# expression orders, so ROUND(double, 6) can land one ulp apart and
-# flip a value hash.  Here the interpolated quantile pos = 1 + (n-1)*q
-# is computed in hundredths (q = p/100), the lo/hi order statistics
-# are picked by exact window rank, and lo*1e6 + (hi-lo)*frac100*1e4 is
-# exact int64; the mean uses the round-half-up identity
-# (2*sum*1e6 + n) div (2*n).  Overflow bound: 2*sum*1e6 < 2^63 holds
-# while a language holds < ~4.6e12 chars (4.6 TB of text PER LANGUAGE
-# per stats run); past that, lift the sums to decimal(38,0).
-# ---------------------------------------------------------------------------
-def corpus_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    w_ord = Window.partitionBy("lang").orderBy("nc")
-    w_all = Window.partitionBy("lang")
-    r = docs.select(
-        "lang",
-        F.col("n_chars").cast("bigint").alias("nc"),
-        F.length("text").cast("bigint").alias("tc"),
-    ).select(
-        "lang", "nc", "tc",
-        F.row_number().over(w_ord).alias("rn"),
-        F.count("*").over(w_all).alias("n"),
-    )
-    # quantile positions in hundredths (1-based): pos100 = 100 + (n-1)*p
-    g = r.groupBy("lang").agg(
-        F.max("n").alias("n"),
-        F.sum("nc").alias("s"),
-        F.sum("tc").alias("t"),
-        F.max(F.expr(
-            "CASE WHEN rn = (100 + (n-1)*50) div 100 THEN nc END"
-        )).alias("p50_lo"),
-        F.max(F.expr(
-            "CASE WHEN rn = (100 + (n-1)*50) div 100 + 1 THEN nc END"
-        )).alias("p50_next"),
-        F.max(F.expr(
-            "CASE WHEN rn = (100 + (n-1)*95) div 100 THEN nc END"
-        )).alias("p95_lo"),
-        F.max(F.expr(
-            "CASE WHEN rn = (100 + (n-1)*95) div 100 + 1 THEN nc END"
-        )).alias("p95_next"),
-    )
-    return g.selectExpr(
-        "lang",
-        "CAST(n AS BIGINT) AS n_docs",
-        "CAST((2*s*1000000 + n) div (2*n) AS BIGINT) AS mean_chars_micro",
-        "CAST(p50_lo*1000000 + (COALESCE(p50_next, p50_lo) - p50_lo)"
-        " * ((100 + (n-1)*50) % 100) * 10000 AS BIGINT) AS p50_chars_micro",
-        "CAST(p95_lo*1000000 + (COALESCE(p95_next, p95_lo) - p95_lo)"
-        " * ((100 + (n-1)*95) % 100) * 10000 AS BIGINT) AS p95_chars_micro",
-        "CAST(t AS BIGINT) AS total_text_chars",
-    )
-
-
-_CORPUS_STATS_SQL = """
-WITH r AS (
-  SELECT lang,
-         CAST(n_chars AS BIGINT) AS nc,
-         CAST(length(text) AS BIGINT) AS tc,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS n
-  FROM documents
-),
-g AS (
-  SELECT lang,
-         MAX(n) AS n,
-         SUM(nc) AS s,
-         SUM(tc) AS t,
-         MAX(CASE WHEN rn = (100 + (n-1)*50) // 100 THEN nc END) AS p50_lo,
-         MAX(CASE WHEN rn = (100 + (n-1)*50) // 100 + 1 THEN nc END) AS p50_next,
-         MAX(CASE WHEN rn = (100 + (n-1)*95) // 100 THEN nc END) AS p95_lo,
-         MAX(CASE WHEN rn = (100 + (n-1)*95) // 100 + 1 THEN nc END) AS p95_next
-  FROM r GROUP BY lang
-)
-SELECT lang,
-       CAST(n AS BIGINT) AS n_docs,
-       CAST((2*s*1000000 + n) // (2*n) AS BIGINT) AS mean_chars_micro,
-       CAST(p50_lo*1000000 + (COALESCE(p50_next, p50_lo) - p50_lo)
-            * ((100 + (n-1)*50) % 100) * 10000 AS BIGINT) AS p50_chars_micro,
-       CAST(p95_lo*1000000 + (COALESCE(p95_next, p95_lo) - p95_lo)
-            * ((100 + (n-1)*95) % 100) * 10000 AS BIGINT) AS p95_chars_micro,
-       CAST(t AS BIGINT) AS total_text_chars
-FROM g
-"""
-
-
-def top_quality_quartile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id", "lang", F.round(textops.quality_score("text"), 6).alias("quality")
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("quality").desc(), F.col("doc_id")
-    )
-    return scored.withColumn(
-        "pr", F.percent_rank().over(w)
-    ).filter(F.col("pr") < 0.25).select(
-        "doc_id", "lang", "quality", F.round("pr", 6).alias("pr")
-    )
-
-
-def _top_quartile_sql() -> str:
-    return f"""
-WITH scored AS (SELECT doc_id, quality FROM ({_QUALITY_SQL})),
-d AS (SELECT s.doc_id, d.lang, s.quality
-      FROM scored s JOIN documents d USING (doc_id)),
-r AS (SELECT doc_id, lang, quality,
-             PERCENT_RANK() OVER (PARTITION BY lang
-                                  ORDER BY quality DESC, doc_id) AS pr
-      FROM d)
-SELECT doc_id, lang, quality, ROUND(pr, 6) AS pr FROM r WHERE pr < 0.25
-"""
-
-
-# ---------------------------------------------------------------------------
-# decontamination + PII scrubbing (operators/text.py round-4 additions)
-# ---------------------------------------------------------------------------
-def contamination_check_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: docs sharing any word-8-gram with the
-    deterministic pseudo-eval set (every 97th document) are flagged.
-    The eval docs themselves are trivially contaminated, which makes the
-    positive path observable; full SQL mirror."""
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("doc_id") % 97 == 0)
-    return textops.contamination_flags(docs, ev, n=8)
-
-
-_CONTAMINATION_SQL = r"""
-WITH t AS (
-  SELECT doc_id, trim(COALESCE(text, '')) AS tt,
-         string_split_regex(trim(COALESCE(text, '')), '\s+') AS w
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN length(tt) = 0 THEN CAST([] AS VARCHAR[])
-              WHEN len(w) < 8 THEN [array_to_string(w, ' ')]
-              ELSE list_distinct(list_transform(
-                     generate_series(1, len(w) - 7),
-                     i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' '
-                          || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' '
-                          || w[i+6] || ' ' || w[i+7]))
-         END AS gs
-  FROM t
-),
-ev AS (SELECT DISTINCT unnest(gs) AS g FROM sh WHERE doc_id % 97 = 0),
-dg AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-hits AS (
-  SELECT doc_id, COUNT(*) AS n_eval_hits
-  FROM dg JOIN ev USING (g) GROUP BY doc_id
-)
-SELECT d.doc_id AS id,
-       CAST(COALESCE(h.n_eval_hits, 0) AS BIGINT) AS n_eval_hits,
-       COALESCE(h.n_eval_hits, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits h USING (doc_id)
-"""
-
-
-def pii_redaction_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub on documents with deterministic planted PII (synthetic
-    texts contain none, so an email + phone are appended per doc on BOTH
-    sides — the redaction path is exercised, not vacuously green)."""
-    from mongo2neo_spark.operators import text as textops
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.concat(
-            F.col("text"), F.lit(" Contact: user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or 555-123-4567."),
-        ),
-    )
-    return textops.redact_pii(docs)
-
-
-_PII_SQL = r"""
-WITH t AS (
-  SELECT doc_id,
-         text || ' Contact: user' || CAST(doc_id AS VARCHAR)
-              || '@example.com or 555-123-4567.' AS tt
-  FROM documents
-),
-e AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(tt,
-              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-           AS n_emails,
-         regexp_replace(tt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                        '[EMAIL]', 'g') AS ne
-  FROM t
-)
-SELECT doc_id AS id,
-       regexp_replace(ne, '\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b',
-                      '[PHONE]', 'g') AS clean_text,
-       n_emails,
-       CAST(len(regexp_extract_all(ne,
-            '\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b')) AS BIGINT) AS n_phones
-FROM e
-"""
-
-
-# ---------------------------------------------------------------------------
-# exact substring dedup (operators/dedup.py round-5 additions)
-# ---------------------------------------------------------------------------
-def substring_dup_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document exact-substring duplication profile (the Lee et al.
-    suffix-array recipe re-expressed as distributed group-bys): per doc,
-    how many of its word-8-gram windows occur verbatim in another doc.
-    dup_window_ppm is integer parts-per-million (integer division on
-    both engines — no float-rounding hash fragility).  Full SQL mirror
-    over exact gram strings."""
-    from mongo2neo_spark.operators.dedup import duplicated_window_profile
-
-    return duplicated_window_profile(_t(spark, sf_dir, "documents"), k=8)
-
-
-_SUBSTRING_PROFILE_SQL = r"""
-WITH t AS (
-  SELECT doc_id, trim(COALESCE(text, '')) AS tt,
-         string_split_regex(trim(COALESCE(text, '')), '\s+') AS w
-  FROM documents
-),
-nw AS (
-  SELECT doc_id,
-         CASE WHEN length(tt) = 0 THEN 0
-              ELSE greatest(len(w) - 7, 0) END AS n_win
-  FROM t
-),
-g AS (
-  SELECT doc_id, unnest(list_transform(
-           generate_series(1, len(w) - 7),
-           i -> array_to_string(w[i:i+7], ' '))) AS gram
-  FROM t WHERE length(tt) > 0 AND len(w) >= 8
-),
-d AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2),
-c AS (SELECT doc_id, COUNT(*) AS n_dup FROM g JOIN d USING (gram) GROUP BY doc_id)
-SELECT nw.doc_id AS id,
-       CAST(nw.n_win AS BIGINT) AS n_windows,
-       CAST(COALESCE(c.n_dup, 0) AS BIGINT) AS n_dup_windows,
-       CAST(CASE WHEN nw.n_win > 0
-                 THEN (1000000 * COALESCE(c.n_dup, 0)) // nw.n_win
-                 ELSE 0 END AS BIGINT) AS dup_window_ppm
-FROM nw LEFT JOIN c USING (doc_id)
-"""
-
-
-def substring_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document dedup proper: duplicated >=8-token spans removed
-    from every doc except each gram's keeper (min doc id), clean text
-    rebuilt JVM-side.  Oracle: pure-Python spec replica rendered as
-    VALUES (entry_oracle.substring_dedup_rows)."""
-    from mongo2neo_spark.operators.dedup import substring_dedup
-
-    return substring_dedup(_t(spark, sf_dir, "documents"), k=8)
-
-
-# ---------------------------------------------------------------------------
-# graph analytics over the materialized KG / co-occurrence graphs
-# ---------------------------------------------------------------------------
-def _part_edges(spark: SparkSession, sf_dir: str, min_weight: int = 1):
-    """Part co-occurrence graph: parts appearing in the same order.
-    Group sizes are bounded by order line counts, so the JVM pair
-    expansion is bounded per group (operators/graph.py scale notes)."""
-    from mongo2neo_spark.operators.graph import cooccurrence_edges
-
-    return cooccurrence_edges(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        min_weight=min_weight,
-    )
-
-
-def part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _part_edges(spark, sf_dir).select("s1", "s2", "weight")
-
-
-_PART_COOC_CTE = """
-d AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-w AS (SELECT a.l_partkey AS s1, b.l_partkey AS s2, COUNT(*) AS weight
-      FROM d a JOIN d b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2)
-"""
-
-_PART_COOC_SQL = f"WITH {_PART_COOC_CTE} SELECT s1, s2, weight FROM w"
-
-
-def triangle_counts_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts, degree-ordered orientation (skew-safe:
-    out-degree bounded O(sqrt(m)) so hub parts can't explode the wedge
-    join).  The oracle uses the naive id ordering — the triangle set is
-    orientation-invariant, which is exactly what this checks."""
-    from mongo2neo_spark.operators.graph import triangle_counts
-
-    return triangle_counts(_part_edges(spark, sf_dir).select("s1", "s2"))
-
-
-_TRIANGLE_SQL = f"""
-WITH {_PART_COOC_CTE},
-e AS (SELECT s1, s2 FROM w),
-t AS (SELECT e1.s1 AS a, e1.s2 AS b, e2.s2 AS c
-      FROM e e1 JOIN e e2 ON e1.s2 = e2.s1
-                JOIN e e3 ON e3.s1 = e1.s1 AND e3.s2 = e2.s2),
-n AS (SELECT a AS node FROM t UNION ALL SELECT b FROM t
-      UNION ALL SELECT c FROM t)
-SELECT node, COUNT(*) AS n_triangles FROM n GROUP BY node
-"""
-
-
-def part_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2neo_spark.operators.graph import degree_distribution
-
-    return degree_distribution(_part_edges(spark, sf_dir).select("s1", "s2"))
-
-
-_DEGREE_DIST_SQL = f"""
-WITH {_PART_COOC_CTE},
-deg AS (SELECT node, COUNT(*) AS degree
-        FROM (SELECT s1 AS node FROM w UNION ALL SELECT s2 FROM w)
-        GROUP BY node)
-SELECT degree, COUNT(*) AS n_nodes FROM deg GROUP BY degree
-"""
-
-
-def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank (bigint micro-units, floor division) on
-    the weight>=2 co-occurrence graph — float PageRank would hash-
-    mismatch on summation order alone; integer math is associative so
-    Spark and the pure-Python oracle agree bit-for-bit."""
-    from mongo2neo_spark.operators.graph import pagerank_integer
-
-    return pagerank_integer(
-        _part_edges(spark, sf_dir, min_weight=2).select("s1", "s2"), iters=10
-    )
-
-
-def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-core of the weight>=2 graph via distributed peeling; the
-    k-core is unique, so the peeling-order-free Python replica is an
-    exact oracle (entry_oracle.kcore_rows)."""
-    from mongo2neo_spark.operators.graph import k_core
-
-    return k_core(_part_edges(spark, sf_dir, min_weight=2).select("s1", "s2"), k=3)
-
-
-def link_prediction_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor link prediction on the weight>=2 graph:
-    non-adjacent pairs with >=2 shared neighbors, jaccard in exact
-    integer ppm."""
-    from mongo2neo_spark.operators.graph import link_prediction
-
-    return link_prediction(
-        _part_edges(spark, sf_dir, min_weight=2).select("s1", "s2"),
-        min_common=2,
-    )
-
-
-_LINK_PRED_SQL = f"""
-WITH {_PART_COOC_CTE},
-e AS (SELECT s1, s2 FROM w WHERE weight >= 2),
-sym AS (SELECT s1 AS mid, s2 AS fin FROM e UNION ALL SELECT s2, s1 FROM e),
-wed AS (SELECT w1.fin AS s1, w2.fin AS s2, COUNT(*) AS n_common
-        FROM sym w1 JOIN sym w2 ON w1.mid = w2.mid AND w1.fin < w2.fin
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-na AS (SELECT wed.* FROM wed ANTI JOIN e
-       ON wed.s1 = e.s1 AND wed.s2 = e.s2),
-deg AS (SELECT node, COUNT(*) AS degree
-        FROM (SELECT s1 AS node FROM e UNION ALL SELECT s2 FROM e)
-        GROUP BY node)
-SELECT na.s1, na.s2, na.n_common,
-       (1000000 * na.n_common) // (da.degree + db.degree - na.n_common)
-         AS jaccard_ppm
-FROM na JOIN deg da ON na.s1 = da.node JOIN deg db ON na.s2 = db.node
-"""
-
-
-def label_propagation_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label-propagation communities on the weight>=2
-    co-occurrence graph: all-integer votes with min-label tie-break and
-    a fixed round count, so the pure-Python replica
-    (entry_oracle.label_propagation_rows) is an exact oracle."""
-    from mongo2neo_spark.operators.graph import label_propagation
-
-    return label_propagation(
-        _part_edges(spark, sf_dir, min_weight=2).select("s1", "s2"), iters=5
-    )
-
-
-BM25_QUERY_TERMS = ("spark", "join", "window", "vector")
-
-
-def bm25_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-15 over the documents table for a fixed
-    bag-of-words query.  Corpus is never shuffled: map-side HOF term
-    frequencies, one 1-row stats agg broadcast back, map-side scoring,
-    TakeOrdered top-k.  Scores in integer micro-units (the repo-wide
-    float-hash discipline); the DuckDB oracle mirrors the expression
-    term-for-term."""
-    from mongo2neo_spark.operators.retrieval import bm25_topk
-
-    return bm25_topk(
-        _t(spark, sf_dir, "documents"), BM25_QUERY_TERMS, k=15
-    )
-
-
-# 60-term query for the wide-query (token-join) BM25 path: the full
-# fixture vocabulary plus terms absent from the corpus (df=0 terms
-# must contribute nothing on both engines)
-BM25_WIDE_QUERY_TERMS = tuple(sorted(
-    {"join", "hash", "row", "batch", "scan", "customer", "column",
-     "filter", "small", "slow", "merge", "order", "vector", "line",
-     "data", "table", "agg", "value", "key", "stream", "window",
-     "spark", "a", "part", "group", "big", "sort", "query", "fast",
-     "the", "dup"} | {f"zzabsent{i}" for i in range(29)}
-))
-
-
-def bm25_widequery_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide-query BM25 (60 terms) via the query-term-table join path:
-    corpus tokens explode once, a broadcast term join filters map-side,
-    and the ONLY corpus-scale exchange is the (doc, term) aggregation
-    of matched occurrences — the per-term-column plan would need a
-    60-column projection here.  Per-term micro-quantization before the
-    int64 doc sum keeps the score summation-order-proof (SURVEY §5)."""
-    from mongo2neo_spark.operators.retrieval import bm25_topk_tokenjoin
-
-    return bm25_topk_tokenjoin(
-        _t(spark, sf_dir, "documents"), BM25_WIDE_QUERY_TERMS, k=25
-    )
-
-
-def tfidf_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-5 keywords by smoothed TF-IDF: one corpus
-    (doc, term) exchange, window document frequency, 1-row doc-count
-    broadcast, literal-bound rank window (partial WindowGroupLimit
-    pushes map-side).  Integer micro scores, term-asc tie-break."""
-    from mongo2neo_spark.operators.retrieval import tfidf_topk_terms
-
-    return tfidf_topk_terms(_t(spark, sf_dir, "documents"), k=5)
-
-
-def chunk_documents_rag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-style overlapping token-window chunking of the documents
-    table (window=32, stride=24): pure map-side sequence/posexplode/
-    slice — zero shuffles, zero Python."""
-    from mongo2neo_spark.operators.retrieval import chunk_documents
-
-    return chunk_documents(
-        _t(spark, sf_dir, "documents"), window=32, stride=24
-    )
-
-
-def unigram_logprob_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style corpus-LM quality signal: per-doc unigram
-    log-probability under the corpus's own unigram distribution.
-    Per-token micro quantization before the integer sum keeps the doc
-    aggregate independent of float summation order (SURVEY.md §5)."""
-    from mongo2neo_spark.operators.lm import unigram_logprob
-
-    return unigram_logprob(_t(spark, sf_dir, "documents"))
-
-
-def hybrid_rrf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: BM25 top-20 (sparse) + exact-cosine top-20 for
-    embedding vec_id=0 (dense, vec_id==doc_id aligned), fused by
-    reciprocal-rank fusion into one top-10.  The fusion join is over
-    two k-row lists — the heavy lifting stays in the two rankers."""
-    from pyspark.sql import Window
-
-    from mongo2neo_spark.operators.retrieval import bm25_topk, rrf_fuse
-    from mongo2neo_spark.operators.similarity import brute_force_topk
-
-    bm = bm25_topk(
-        _t(spark, sf_dir, "documents"), BM25_QUERY_TERMS, k=20
-    ).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("score_micro"), F.asc("doc_id")))
-        .alias("rank"),
-    )
-    emb = _t(spark, sf_dir, "embeddings")
-    cs = brute_force_topk(emb, emb.filter("vec_id = 0"), k=20).select(
-        F.col("neighbor_id").alias("doc_id"), "rank"
-    )
-    return rrf_fuse(bm, cs, k=10)
-
-
-_HYBRID_COSINE_SQL = """
-WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-           FROM embeddings WHERE vec_id = 0),
-     c AS (SELECT vec_id AS nid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-           FROM embeddings WHERE vec_id != 0),
-scored AS (
-  SELECT nid,
-         list_sum(list_transform(list_zip(qv, cv), t -> t[1] * t[2]))
-         / (SQRT(list_sum(list_transform(qv, x -> x * x)))
-            * SQRT(list_sum(list_transform(cv, x -> x * x)))) AS cos
-  FROM q, c),
-ranked AS (
-  SELECT nid AS doc_id, CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, nid ASC) AS BIGINT) AS rank
-  FROM scored)
-SELECT doc_id, rank FROM ranked WHERE rank <= 20
-"""
-
-
-def khop_order_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Min-hop BFS within 3 hops of every 10th order node over the KG's
-    directed edges (order->customer->nation->region, order->part);
-    frontier joins against a once-partitioned adjacency.  Oracle: the
-    same graph + seeds as a DuckDB recursive CTE."""
-    from mongo2neo_spark.operators.graph import khop_reachability
-
-    def nid(prefix, col):
-        return F.concat_ws(":", F.lit(prefix), F.col(col).cast("string"))
-
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (
-        orders.select(nid("order", "o_orderkey").alias("src"),
-                      nid("customer", "o_custkey").alias("dst"))
-        .unionByName(customer.select(
-            nid("customer", "c_custkey").alias("src"),
-            nid("nation", "c_nationkey").alias("dst")))
-        .unionByName(nation.select(
-            nid("nation", "n_nationkey").alias("src"),
-            nid("region", "n_regionkey").alias("dst")))
-        .unionByName(lineitem.select(
-            nid("order", "l_orderkey").alias("src"),
-            nid("part", "l_partkey").alias("dst")))
-    )
-    seeds = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-        nid("order", "o_orderkey").alias("node")
-    )
-    return khop_reachability(edges, seeds, k=3)
-
-
-_KHOP_SQL = """
-WITH RECURSIVE g AS (
-  SELECT 'order:' || CAST(o_orderkey AS VARCHAR) AS src,
-         'customer:' || CAST(o_custkey AS VARCHAR) AS dst FROM orders
-  UNION ALL
-  SELECT 'customer:' || CAST(c_custkey AS VARCHAR),
-         'nation:' || CAST(c_nationkey AS VARCHAR) FROM customer
-  UNION ALL
-  SELECT 'nation:' || CAST(n_nationkey AS VARCHAR),
-         'region:' || CAST(n_regionkey AS VARCHAR) FROM nation
-  UNION ALL
-  SELECT 'order:' || CAST(l_orderkey AS VARCHAR),
-         'part:' || CAST(l_partkey AS VARCHAR) FROM lineitem
-), r(node, hop) AS (
-  SELECT 'order:' || CAST(o_orderkey AS VARCHAR), 0
-  FROM orders WHERE o_orderkey % 10 = 0
-  UNION ALL
-  SELECT g.dst, r.hop + 1 FROM r JOIN g ON g.src = r.node WHERE r.hop < 3
-)
-SELECT node, CAST(MIN(hop) AS INTEGER) AS hop FROM r GROUP BY node
-"""
-
-
-# ---------------------------------------------------------------------------
-# sequence packing (training-data assembly)
-# ---------------------------------------------------------------------------
-def pack_sequences_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic first-fit-decreasing packing of documents into
-    256-token training sequences across 16 hash buckets; only
-    (doc_id, n_tokens) metadata enters Python.  Oracle: pure-Python
-    replica rendered as VALUES (entry_oracle.pack_rows)."""
-    from mongo2neo_spark.operators.packing import pack_sequences
-
-    return pack_sequences(
-        _t(spark, sf_dir, "documents"), budget=256, n_buckets=16
-    )
-
-
-def packing_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bucket fill efficiency of the packed assignment in integer
-    ppm; the oracle runs the SAME aggregation in SQL over the replica's
-    VALUES-rendered packing."""
-    from mongo2neo_spark.operators.packing import (
-        pack_sequences,
-        packing_profile,
-    )
-
-    packed = pack_sequences(
-        _t(spark, sf_dir, "documents"), budget=256, n_buckets=16
-    )
-    return packing_profile(packed, budget=256)
-
-
-# ---------------------------------------------------------------------------
-# contract surface
-# ---------------------------------------------------------------------------
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: document->property-graph ETL on sf0.001 (rows > 0)."""
-    return graph_edges(spark, SF0001)
+    """A fresh pipeline run on ``fixtures.generate_transcripts(n_convs=10,
+    seed=11, max_turns=40)`` in a temporary directory; the returned frame
+    holds the triples in memory, so it outlives the directory."""
+    from mongo2neo_spark import fixtures, schemas
+    from mongo2neo_spark.plans.pipeline import PipelineConfig, run_pipeline
 
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS for driver-side correctness coverage (round-6
-    # VERDICT #2): the driver's sweep has checked exactly the first 50
-    # keys for two consecutive rounds, so the dict leads with one
-    # representative entry per operator family — graph analytics,
-    # retrieval/LM, packing, and substring dedup moved inside the
-    # window, the most redundant early demo variants moved after it.
-    # Every key (and every query/oracle body) is unchanged; only the
-    # insertion order moved.
-    return {
-        "graph_edges": graph_edges,
-        "graph_nodes": graph_nodes,
-        "agg_pricing_summary": agg_pricing_summary,
-        "join_revenue_by_nation": join_revenue_by_nation,
-        "window_top_orders_per_customer": window_top_orders_per_customer,
-        "events_sessionize": events_sessionize,
-        "exact_dedup_documents": exact_dedup_documents,
-        "token_counts_documents": token_counts_documents,
-        "quality_scores_documents": quality_scores_documents,
-        "lang_id_documents": lang_id_documents,
-        "ann_topk_cosine": ann_topk_cosine,
-        "ann_ivf_recall": ann_ivf_recall,
-        "ann_lsh_topk": ann_lsh_topk,
-        "ann_ivf_topk": ann_ivf_topk,
-        "ann_lsh_topk_indexed": ann_lsh_topk_indexed,
-        "ann_ivf_topk_indexed": ann_ivf_topk_indexed,
-        "minhash_doc_clusters": minhash_doc_clusters,
-        "ngram_jaccard_clusters": ngram_jaccard_clusters,
-        "embedding_dedup_clusters": embedding_dedup_clusters,
-        "simhash_doc_clusters": simhash_doc_clusters,
-        "kg_triples_synthetic": kg_triples_synthetic,
-        "curation_pipeline": curation_pipeline,
-        "multimodal_features": multimodal_features,
-        "asof_click_to_signup": asof_click_to_signup,
-        "repetition_profile_documents": repetition_profile_documents,
-        "mixture_sample_documents": mixture_sample_documents,
-        "quota_sample_documents": quota_sample_documents,
-        "boilerplate_removed_documents": boilerplate_removed_documents,
-        "curation_sampled": curation_sampled,
-        "corpus_stats_by_lang": corpus_stats_by_lang,
-        "contamination_check_documents": contamination_check_documents,
-        "pii_redaction_documents": pii_redaction_documents,
-        "substring_dup_profile_documents": substring_dup_profile_documents,
-        "substring_dedup_documents": substring_dedup_documents,
-        "part_cooccurrence_edges": part_cooccurrence_edges,
-        "triangle_counts_parts": triangle_counts_parts,
-        "part_degree_distribution": part_degree_distribution,
-        "pagerank_parts": pagerank_parts,
-        "kcore_parts": kcore_parts,
-        "link_prediction_parts": link_prediction_parts,
-        "label_propagation_parts": label_propagation_parts,
-        "bm25_topk_documents": bm25_topk_documents,
-        "bm25_widequery_documents": bm25_widequery_documents,
-        "tfidf_keywords_documents": tfidf_keywords_documents,
-        "chunk_documents_rag": chunk_documents_rag,
-        "unigram_logprob_documents": unigram_logprob_documents,
-        "hybrid_rrf_documents": hybrid_rrf_documents,
-        "khop_order_reachability": khop_order_reachability,
-        "pack_sequences_documents": pack_sequences_documents,
-        "packing_profile_documents": packing_profile_documents,
-        # --- entries past the driver's 50-key sweep window: demo
-        # variants of families already represented above (still fully
-        # callable and oracled; judge-verifiable via check_entry.py) ---
-        "broadcast_nation_region": broadcast_nation_region,
-        "topk_expensive_parts": topk_expensive_parts,
-        "anti_customers_without_orders": anti_customers_without_orders,
-        "semi_suppliers_with_lineitems": semi_suppliers_with_lineitems,
-        "events_json_by_type": events_json_by_type,
-        "rollup_orders_status_priority": rollup_orders_status_priority,
-        "word_freq_documents": word_freq_documents,
-        "events_hourly_rollup": events_hourly_rollup,
-        "events_type_map": events_type_map,
-        "rms_chars_by_lang": rms_chars_by_lang,
-        "asof_bucketed_click_to_signup": asof_bucketed_click_to_signup,
-        "shuffle_order_documents": shuffle_order_documents,
-        "doc_fingerprints": doc_fingerprints,
-        "simhash_doc_signatures": simhash_doc_signatures,
-        "media_feature_clusters": media_feature_clusters,
-        "top_quality_quartile_documents": top_quality_quartile_documents,
-        "ann_lsh_recall": ann_lsh_recall,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "graph_edges": _GRAPH_EDGES_SQL,
-        "graph_nodes": _GRAPH_NODES_SQL,
-        "agg_pricing_summary": _AGG_PRICING_SQL,
-        "join_revenue_by_nation": _JOIN_REVENUE_SQL,
-        "broadcast_nation_region": _BROADCAST_SQL,
-        "window_top_orders_per_customer": _WINDOW_TOP_SQL,
-        "topk_expensive_parts": _TOPK_PARTS_SQL,
-        "anti_customers_without_orders": _ANTI_SQL,
-        "semi_suppliers_with_lineitems": _SEMI_SQL,
-        "events_json_by_type": _EVENTS_JSON_SQL,
-        "events_sessionize": _SESSIONIZE_SQL,
-        "rollup_orders_status_priority": _ROLLUP_SQL,
-        "word_freq_documents": _WORD_FREQ_SQL,
-        "events_hourly_rollup": _EVENTS_HOURLY_SQL,
-        "exact_dedup_documents": _EXACT_DEDUP_SQL,
-        "token_counts_documents": _TOKEN_COUNTS_SQL,
-        "quality_scores_documents": _QUALITY_SQL,
-        "lang_id_documents": _lang_id_sql(),
-        "ann_topk_cosine": _ANN_TOPK_SQL,
-        # deterministic-but-not-SQL-expressible operators: the pure-Python
-        # specification implementation (shared rules/hashing, zero Spark)
-        # computes the expected output driver-side and entry_oracle renders
-        # it as a DuckDB VALUES query — a hard row-count/schema/value-hash
-        # check, not a rows-only count (mongo2neo_spark/entry_oracle.py)
-        "ann_lsh_recall": _ANN_LSH_RECALL_SQL,
-        "ann_ivf_recall": _ANN_IVF_SQL,
-        "ann_lsh_topk": _eo().ann_lsh_topk_sql(),
-        "ann_ivf_topk": _eo().ann_ivf_topk_sql(),
-        # indexed variants return identical rows by construction — same
-        # exact neighbor-set oracles, so identity is driver-checked
-        "ann_lsh_topk_indexed": _eo().ann_lsh_topk_sql(),
-        "ann_ivf_topk_indexed": _eo().ann_ivf_topk_sql(),
-        "minhash_doc_clusters": _eo().minhash_clusters_sql(),
-        "ngram_jaccard_clusters": _eo().ngram_jaccard_sql(),
-        "embedding_dedup_clusters": _eo().embedding_clusters_sql(),
-        "simhash_doc_signatures": _eo().simhash_sql(),
-        "simhash_doc_clusters": _eo().simhash_clusters_sql(),
-        "doc_fingerprints": _eo().fingerprints_sql(),
-        "kg_triples_synthetic": _eo().kg_triples_sql(),
-        "curation_pipeline": _eo().curation_sql(
-            _QUALITY_SQL, _lang_id_sql(), _TOKEN_COUNTS_SQL
-        ),
-        "multimodal_features": _eo().multimodal_sql(),
-        "media_feature_clusters": _eo().media_dedup_sql(),
-        "events_type_map": _EVENTS_TYPE_MAP_SQL,
-        "rms_chars_by_lang": _RMS_CHARS_SQL,
-        "asof_click_to_signup": _ASOF_SQL,
-        "asof_bucketed_click_to_signup": _ASOF_SQL,
-        "repetition_profile_documents": _REPETITION_SQL,
-        "mixture_sample_documents": _MIXTURE_SQL,
-        "quota_sample_documents": _QUOTA_SQL,
-        "shuffle_order_documents": _SHUFFLE_ORDER_SQL,
-        "boilerplate_removed_documents": _BOILERPLATE_SQL,
-        "curation_sampled": _curation_sampled_sql(),
-        "corpus_stats_by_lang": _CORPUS_STATS_SQL,
-        "top_quality_quartile_documents": _top_quartile_sql(),
-        "contamination_check_documents": _CONTAMINATION_SQL,
-        "pii_redaction_documents": _PII_SQL,
-        "substring_dup_profile_documents": _SUBSTRING_PROFILE_SQL,
-        "substring_dedup_documents": _eo().substring_dedup_sql(),
-        "part_cooccurrence_edges": _PART_COOC_SQL,
-        "triangle_counts_parts": _TRIANGLE_SQL,
-        "part_degree_distribution": _DEGREE_DIST_SQL,
-        "pagerank_parts": _eo().pagerank_sql(),
-        "kcore_parts": _eo().kcore_sql(),
-        "link_prediction_parts": _LINK_PRED_SQL,
-        "label_propagation_parts": _eo().label_propagation_sql(),
-        "bm25_topk_documents": _bm25_sql(),
-        "bm25_widequery_documents": _bm25_widequery_sql(),
-        "tfidf_keywords_documents": _tfidf_sql(),
-        "chunk_documents_rag": _chunk_sql(),
-        "unigram_logprob_documents": _unigram_sql(),
-        "hybrid_rrf_documents": _hybrid_rrf_sql(),
-        "khop_order_reachability": _KHOP_SQL,
-        "pack_sequences_documents": _eo().pack_sql(),
-        "packing_profile_documents": _eo().pack_profile_sql(),
-    }
-
-
-def _eo():
-    from mongo2neo_spark import entry_oracle
-
-    return entry_oracle
-
-
-def _bm25_sql() -> str:
-    from mongo2neo_spark.operators.retrieval import bm25_sql
-
-    return bm25_sql("documents", BM25_QUERY_TERMS, k=15)
-
-
-def _bm25_widequery_sql() -> str:
-    from mongo2neo_spark.operators.retrieval import bm25_tokenjoin_sql
-
-    return bm25_tokenjoin_sql("documents", BM25_WIDE_QUERY_TERMS, k=25)
-
-
-def _tfidf_sql() -> str:
-    from mongo2neo_spark.operators.retrieval import tfidf_topk_sql
-
-    return tfidf_topk_sql("documents", k=5)
-
-
-def _chunk_sql() -> str:
-    from mongo2neo_spark.operators.retrieval import chunk_sql
-
-    return chunk_sql("documents", window=32, stride=24)
-
-
-def _unigram_sql() -> str:
-    from mongo2neo_spark.operators.lm import unigram_logprob_sql
-
-    return unigram_logprob_sql("documents")
-
-
-def _hybrid_rrf_sql() -> str:
-    from mongo2neo_spark.operators.retrieval import bm25_sql, hybrid_rrf_sql
-
-    return hybrid_rrf_sql(
-        bm25_sql("documents", BM25_QUERY_TERMS, k=20),
-        _HYBRID_COSINE_SQL,
-        k=10,
-    )
+    with tempfile.TemporaryDirectory(prefix="m2n_entry_") as tmp:
+        inp = os.path.join(tmp, "in")
+        rows = fixtures.generate_transcripts(n_convs=10, seed=11, max_turns=40)
+        spark.createDataFrame(
+            fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
+        ).write.parquet(inp)
+        paths = run_pipeline(spark, inp, os.path.join(tmp, "out"),
+                             PipelineConfig(n_buckets=8), resume=False)
+        triples = spark.read.parquet(paths["triples"])
+        return spark.createDataFrame(triples.toPandas(), triples.schema)

@@ -1,28 +1,23 @@
-"""Pure-Python oracle outputs rendered as DuckDB SQL for the driver's
-correctness harness (__spark_entry__.oracle_sql()).
+"""Pure-Python reference outputs for the document-curation and graph
+operators (operators.dedup/graph/packing/text, plans.curation).
 
-Several operators are deterministic but not sanely SQL-expressible
-(MinHash-LSH clustering, SimHash, rolling fingerprints, the rule-based
-KG extraction).  For those, the *specification implementation* — simple
-pure-Python loops sharing ``rules``/``functions.hashing`` with nothing
-Spark about them (the same parity-by-construction approach as
-``mongo2neo_spark.oracle``) — computes the expected output driver-side,
-and this module renders it as a ``VALUES`` query DuckDB can run.  The
-driver then performs its usual row-count/schema/value-hash comparison
-against the Spark result, turning previously rows-only checks into hard
-oracle rows.
+Those operators are deterministic but not sanely SQL-expressible
+(MinHash-LSH clustering, SimHash, k-core peeling, bin packing).  For
+each, the *specification implementation* — simple pure-Python loops
+sharing ``functions.hashing`` with nothing Spark about them (the same
+parity-by-construction approach as ``mongo2neo_spark.oracle``) —
+computes the expected rows driver-side, and the operator's tests compare
+the Spark result to them row for row.
 
-No Spark imports here; everything must run standalone in the harness
-process.  Inputs are the sf0.01 testdata parquet (the scale the driver
-compares at; override with $SPARK_GRAFT_ORACLE_SF_DIR) or deterministic
-synthetic fixtures.
+No Spark imports here.  Inputs are the sf0.01 testdata parquet (override
+with $SPARK_GRAFT_ORACLE_SF_DIR) or a test's own parquet directory.
 """
 
 from __future__ import annotations
 
 import os
 from collections import defaultdict
-from typing import Iterable, List, Sequence, Tuple
+from typing import List, Tuple
 
 from .functions import hashing
 
@@ -41,31 +36,7 @@ def _read_docs(sf_dir: str | None = None) -> Tuple[List[int], List[str]]:
     return t["doc_id"].to_pylist(), t["text"].to_pylist()
 
 
-def _sql_lit(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return str(v)
 
-
-def values_sql(rows: Sequence[tuple], cols: Sequence[Tuple[str, str]]) -> str:
-    """Render rows as ``SELECT CAST(...) FROM (VALUES ...)`` with explicit
-    DuckDB types so the schema matches the Spark result exactly."""
-    if not rows:
-        casts = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
-        return f"SELECT {casts} WHERE 1=0"
-    body = ",\n".join(
-        "(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows
-    )
-    names = ", ".join(n for n, _ in cols)
-    casts = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
-    return f"SELECT {casts} FROM (VALUES\n{body}\n) AS t({names})"
-
-
-# ---------------------------------------------------------------------------
-# pure-Python specification implementations
-# ---------------------------------------------------------------------------
 def _word_shingles(text: str, n: int = 3) -> frozenset:
     # mirrors operators.dedup._word_shingles (no Spark import allowed here)
     toks = (text or "").split()
@@ -74,9 +45,11 @@ def _word_shingles(text: str, n: int = 3) -> frozenset:
     return frozenset(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
 
 
+
 def _jaccard(a: frozenset, b: frozenset) -> float:
     u = len(a | b)
     return len(a & b) / u if u else 1.0
+
 
 
 def minhash_cluster_rows(
@@ -133,18 +106,6 @@ def minhash_cluster_rows(
     return [(i, find(i)) for i in sorted(shingles)]
 
 
-def simhash_rows(sf_dir: str | None = None) -> List[tuple]:
-    """Expected (id, simhash) rows of operators.dedup.simhash_groups."""
-    ids, texts = _read_docs(sf_dir)
-
-    def to_i64(u: int) -> int:
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    return [
-        (int(i), to_i64(hashing.simhash((t or "").split())))
-        for i, t in zip(ids, texts)
-    ]
-
 
 def simhash_cluster_rows(
     max_hamming: int = 3,
@@ -187,374 +148,6 @@ def simhash_cluster_rows(
     return [(i, find(i)) for i in sorted(hs)]
 
 
-def fingerprint_rows(sf_dir: str | None = None) -> List[tuple]:
-    """Expected (doc_id, fingerprint) rows of operators.text.fingerprint_udf."""
-    ids, texts = _read_docs(sf_dir)
-    return [
-        (int(i), hashing.rolling_fingerprint(t or ""))
-        for i, t in zip(ids, texts)
-    ]
-
-
-def kg_triple_rows(n_convs: int = 10, seed: int = 11,
-                   max_turns: int = 40) -> List[tuple]:
-    """Expected distinct (subj, pred, obj) of the full KG pipeline on the
-    deterministic synthetic fixture — the pure-Python oracle end-to-end
-    (oracle.pipeline_triples), no Spark involved."""
-    from . import fixtures, oracle
-
-    rows = fixtures.generate_transcripts(
-        n_convs=n_convs, seed=seed, max_turns=max_turns
-    )
-    return sorted(oracle.pipeline_triples(rows))
-
-
-def embedding_cluster_rows(
-    threshold: float = 0.4,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    sf_dir: str | None = None,
-    data: tuple | None = None,
-    bucket_cap: int = 1000,
-) -> List[tuple]:
-    """Expected (id, component) rows of
-    operators.similarity.embedding_dedup_components on the embeddings
-    table.  The hyperplane family is deterministic (seed 1337, matching
-    similarity._PLANE_SEED), so this numpy replica produces the exact
-    same buckets -> candidate pairs -> cosine-verified min-id clusters.
-
-    ``data`` = (ids, vecs: float64 ndarray) overrides the table read
-    (used by the multimodal chaining oracle, which clusters the fake
-    media feature vectors instead)."""
-    import numpy as np
-
-    if data is not None:
-        ids, vecs = list(data[0]), np.asarray(data[1], dtype=np.float64)
-    else:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            f"{sf_dir or ORACLE_SF_DIR}/embeddings.parquet",
-            columns=["vec_id", "embedding"],
-        )
-        ids = [int(i) for i in t["vec_id"].to_pylist()]
-        vecs = np.array(t["embedding"].to_pylist(), dtype=np.float64)
-    rng = np.random.default_rng(1337)
-    planes = rng.standard_normal((n_tables * n_planes, vecs.shape[1]))
-    signs = (vecs @ planes.T) > 0
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    vals = signs.reshape(len(vecs), n_tables, n_planes) @ weights
-    buckets: dict = defaultdict(list)
-    for i, row in zip(ids, vals):
-        for tbl, bk in enumerate(row):
-            buckets[(tbl, int(bk))].append(i)
-    pairs = set()
-    for members in buckets.values():
-        if len(members) > bucket_cap:  # K3 hot-bucket cap, replicated
-            continue
-        for ai in range(len(members)):
-            for bi in range(ai + 1, len(members)):
-                a, b = members[ai], members[bi]
-                pairs.add((a, b) if a < b else (b, a))
-    id2row = {i: k for k, i in enumerate(ids)}
-    norms = np.linalg.norm(vecs, axis=1)
-    parent = {i: i for i in ids}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in sorted(pairs):
-        ra_, rb_ = id2row[a], id2row[b]
-        cos = float(vecs[ra_] @ vecs[rb_]) / float(norms[ra_] * norms[rb_])
-        if cos >= threshold:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    return [(i, find(i)) for i in sorted(ids)]
-
-
-def _read_embeddings(sf_dir: str | None = None):
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        f"{sf_dir or ORACLE_SF_DIR}/embeddings.parquet",
-        columns=["vec_id", "embedding"],
-    )
-    ids = [int(i) for i in t["vec_id"].to_pylist()]
-    vecs = np.array(t["embedding"].to_pylist(), dtype=np.float64)
-    return ids, vecs
-
-
-def _hyperplane_buckets(vecs, n_planes: int, n_tables: int):
-    """Numpy replica of similarity.hyperplane_buckets_udf (seed 1337 =
-    similarity._PLANE_SEED): (n, n_tables) bucket ids."""
-    import numpy as np
-
-    rng = np.random.default_rng(1337)
-    planes = rng.standard_normal((n_tables * n_planes, vecs.shape[1]))
-    signs = (vecs @ planes.T) > 0
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    return signs.reshape(len(vecs), n_tables, n_planes) @ weights
-
-
-def _rank_topk(ids, vecs, cand_ids_per_query, query_ids, k: int):
-    """(query_id, neighbor_id, rank) rows: exact cosine over each query's
-    candidate set, ranked (cos desc, neighbor_id asc) — the same ordering
-    the Spark window uses."""
-    import numpy as np
-
-    id2row = {i: r for r, i in enumerate(ids)}
-    norms = np.linalg.norm(vecs, axis=1)
-    out = []
-    for q in query_ids:
-        qr = id2row[q]
-        scored = []
-        for nid in cand_ids_per_query[q]:
-            if nid == q:
-                continue
-            nr = id2row[nid]
-            cos = float(vecs[qr] @ vecs[nr]) / float(norms[qr] * norms[nr])
-            scored.append((-cos, nid))
-        scored.sort()
-        for rank, (_negcos, nid) in enumerate(scored[:k], start=1):
-            out.append((q, nid, rank))
-    return sorted(out)
-
-
-def ann_lsh_topk_rows(
-    k: int = 10,
-    n_planes: int = 3,
-    n_tables: int = 16,
-    max_query_id: int = 5,
-    sf_dir: str | None = None,
-) -> List[tuple]:
-    """Expected (query_id, neighbor_id, rank) of
-    similarity.lsh_bucketed_topk under the fixed plane seed: candidates
-    are corpus vectors sharing ANY table's bucket with the query, ranked
-    by exact cosine.  The full approximate neighbor SETS, not just the
-    recall boolean."""
-    ids, vecs = _read_embeddings(sf_dir)
-    buckets = _hyperplane_buckets(vecs, n_planes, n_tables)
-    table: dict = defaultdict(set)
-    for i, row in zip(ids, buckets):
-        for tbl, bk in enumerate(row):
-            table[(tbl, int(bk))].add(i)
-    query_ids = [i for i in ids if i < max_query_id]
-    id2row = {i: r for r, i in enumerate(ids)}
-    cands = {
-        q: set().union(
-            *(
-                table[(tbl, int(bk))]
-                for tbl, bk in enumerate(buckets[id2row[q]])
-            )
-        )
-        for q in query_ids
-    }
-    return _rank_topk(ids, vecs, cands, query_ids, k)
-
-
-def _spherical_kmeans_replica(vecs, n_centroids: int, iters: int = 10):
-    """Bitwise replica of similarity._spherical_kmeans (pure numpy, no
-    Spark import allowed here — same ops, same order, same dtypes)."""
-    import numpy as np
-
-    v = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-    chosen = [0]
-    best_sim = v @ v[0]
-    while len(chosen) < n_centroids:
-        nxt = int(np.argmin(best_sim))
-        chosen.append(nxt)
-        best_sim = np.maximum(best_sim, v @ v[nxt])
-    c = v[np.array(chosen)].copy()
-    for _ in range(iters):
-        assign = (v @ c.T).argmax(axis=1)
-        for j in range(n_centroids):
-            members = v[assign == j]
-            if len(members):
-                m = members.mean(axis=0)
-                n = np.linalg.norm(m)
-                if n > 1e-12:
-                    c[j] = m / n
-    return c
-
-
-def ann_ivf_topk_rows(
-    k: int = 10,
-    n_centroids: int = 8,
-    n_probe: int = 6,
-    sample: int = 4096,
-    max_query_id: int = 5,
-    sf_dir: str | None = None,
-) -> List[tuple]:
-    """Expected (query_id, neighbor_id, rank) of similarity.ivf_topk:
-    deterministic spherical-k-means quantizer trained on the id-ordered
-    sample, corpus single-assigned, queries probe n_probe cells."""
-    import numpy as np
-
-    ids, vecs = _read_embeddings(sf_dir)
-    order = np.argsort(np.array(ids))
-    train = vecs[order[:sample]]
-    centroids = _spherical_kmeans_replica(train, n_centroids)
-    normed = vecs / np.maximum(
-        np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12
-    )
-    sims = normed @ centroids.T
-    cell = np.argsort(-sims, axis=1)[:, :1].astype(np.int32)[:, 0]
-    probes = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-    by_cell: dict = defaultdict(set)
-    for i, cl in zip(ids, cell):
-        by_cell[int(cl)].add(i)
-    query_ids = [i for i in ids if i < max_query_id]
-    id2row = {i: r for r, i in enumerate(ids)}
-    cands = {
-        q: set().union(*(by_cell[int(cl)] for cl in probes[id2row[q]]))
-        for q in query_ids
-    }
-    return _rank_topk(ids, vecs, cands, query_ids, k)
-
-
-def multimodal_rows(n: int = 64) -> List[tuple]:
-    """Expected (media_id, kind, n_bytes) of multimodal.extract_features
-    over synthesize_media(n): kinds cycle image/audio/video and content
-    length is 64 + (i % 5) * 32 bytes by construction."""
-    kinds = ["image", "audio", "video"]
-    return [(i, kinds[i % 3], 64 + (i % 5) * 32) for i in range(n)]
-
-
-def ngram_jaccard_cluster_rows(
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    block_cap: int = hashing.BAND_CAP,
-    sf_dir: str | None = None,
-) -> List[tuple]:
-    """Expected (id, component) rows of
-    operators.dedup.ngram_jaccard_dedup_components on the documents
-    table: (crc32, shingle)-ordered prefix filter -> blocked candidate
-    pairs (blocks over cap dropped) -> EXACT jaccard verify -> min-id
-    union-find.  ceil() runs on the same IEEE double product as Spark's
-    F.ceil, so prefix lengths agree bit-for-bit."""
-    import math
-    import zlib
-
-    ids, texts = _read_docs(sf_dir)
-    shingles = {
-        int(i): _word_shingles(t, shingle_n) for i, t in zip(ids, texts)
-    }
-    blocks: dict = defaultdict(list)
-    for i in sorted(shingles):
-        ordered = sorted(
-            shingles[i], key=lambda s: (zlib.crc32(s.encode("utf-8")), s)
-        )
-        k = len(ordered)
-        plen = k - math.ceil(k * float(threshold)) + 1
-        for s in ordered[:plen]:
-            blocks[s].append(i)
-    pairs = set()
-    for members in blocks.values():
-        if len(members) > block_cap:
-            continue
-        for ai in range(len(members)):
-            for bi in range(ai + 1, len(members)):
-                pairs.add((members[ai], members[bi]))
-    parent = {i: i for i in shingles}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in sorted(pairs):
-        if _jaccard(shingles[a], shingles[b]) >= threshold:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    return [(i, find(i)) for i in sorted(shingles)]
-
-
-def ngram_jaccard_sql(threshold: float = 0.5) -> str:
-    return values_sql(
-        ngram_jaccard_cluster_rows(threshold),
-        [("id", "BIGINT"), ("component", "BIGINT")],
-    )
-
-
-# ---------------------------------------------------------------------------
-# multimodal -> embedding-dedup chaining (media payloads with planted dups)
-# ---------------------------------------------------------------------------
-MEDIA_N = 64
-MEDIA_N_UNIQUE = 48  # ids 48..63 reuse payloads 0..15 -> 16 planted dup pairs
-MEDIA_SEED = 42
-MEDIA_KINDS = ("image", "audio", "video")
-
-
-def media_payloads(
-    n: int = MEDIA_N, n_unique: int = MEDIA_N_UNIQUE, seed: int = MEDIA_SEED
-) -> List[bytes]:
-    """Deterministic fake media payloads: content of row i is a pure
-    function of u = i % n_unique (per-index rng, NOT stream-sequential),
-    so duplicates are planted without materializing order dependence.
-    Shared by the Spark entry (builds the media table from these bytes)
-    and the oracle replica below."""
-    import numpy as np
-
-    out = []
-    for i in range(n):
-        u = i % n_unique
-        rng = np.random.default_rng((seed << 20) ^ u)
-        out.append(
-            bytes(rng.integers(0, 256, size=64 + (u % 5) * 32, dtype=np.uint8))
-        )
-    return out
-
-
-def media_feature_vectors(payloads: Sequence[bytes]):
-    """float64 copy of multimodal.deterministic_fake_features for each
-    payload, INCLUDING the float32 round-trip the Spark path performs
-    (features ride an array<float> column before the cast to double)."""
-    import zlib
-
-    import numpy as np
-
-    vecs = []
-    for content in payloads:
-        rng = np.random.default_rng(zlib.crc32(content or b""))
-        v = rng.standard_normal(16).astype(np.float32)
-        nrm = float(np.linalg.norm(v))
-        v32 = v / nrm if nrm else v
-        vecs.append(v32.astype(np.float64))
-    return np.stack(vecs)
-
-
-def media_dedup_cluster_rows(threshold: float = 0.9) -> List[tuple]:
-    """Expected (media_id, n_bytes, component) of the chained
-    synthesize-media -> extract_features -> embedding_dedup_components
-    entry: same hyperplane family / cosine verify / min-id CC replica as
-    :func:`embedding_cluster_rows`, over the fake-media feature vectors."""
-    payloads = media_payloads()
-    vecs = media_feature_vectors(payloads)
-    comp = embedding_cluster_rows(
-        threshold=threshold, data=(list(range(MEDIA_N)), vecs)
-    )
-    by_id = dict(comp)
-    return [
-        (i, len(payloads[i]), by_id[i]) for i in range(MEDIA_N)
-    ]
-
-
-def media_dedup_sql(threshold: float = 0.9) -> str:
-    return values_sql(
-        media_dedup_cluster_rows(threshold),
-        [("media_id", "BIGINT"), ("n_bytes", "BIGINT"),
-         ("component", "BIGINT")],
-    )
-
 
 def curation_survivor_rows(
     threshold: float = 0.5,
@@ -585,143 +178,7 @@ def curation_survivor_rows(
     return sorted(survivors.values())
 
 
-def curation_sql(
-    quality_sql: str,
-    lang_sql: str,
-    token_sql: str,
-    min_quality: float = 0.5,
-    langs: Sequence[str] = ("en",),
-    threshold: float = 0.5,
-) -> str:
-    """The full curation-pipeline oracle: dedup survivors from the
-    pure-Python replica as VALUES, quality/lang/token columns and the
-    final filter from the SAME SQL the per-operator entries validate
-    (passed in by __spark_entry__ so there is one source of truth)."""
-    surv = curation_survivor_rows(threshold)
-    if not surv:
-        body = "SELECT CAST(NULL AS BIGINT) AS doc_id WHERE 1=0"
-    else:
-        body = "SELECT CAST(i AS BIGINT) AS doc_id FROM (VALUES " + \
-            ",".join(f"({i})" for i in surv) + ") AS t(i)"
-    lang_list = ", ".join("'" + l + "'" for l in langs)
-    return f"""
-WITH surv AS ({body}),
-q AS (SELECT * FROM ({quality_sql})),
-l AS (SELECT * FROM ({lang_sql})),
-tok AS (SELECT doc_id, n_tokens FROM ({token_sql}))
-SELECT surv.doc_id, l.pred_lang, CAST(tok.n_tokens AS BIGINT) AS n_tokens,
-       q.quality
-FROM surv
-JOIN q USING (doc_id) JOIN l USING (doc_id) JOIN tok USING (doc_id)
-WHERE q.quality >= {min_quality} AND l.pred_lang IN ({lang_list})
-"""
 
-
-# ---------------------------------------------------------------------------
-# rendered SQL (used by __spark_entry__.oracle_sql)
-# ---------------------------------------------------------------------------
-def minhash_clusters_sql() -> str:
-    return values_sql(
-        minhash_cluster_rows(), [("id", "BIGINT"), ("component", "BIGINT")]
-    )
-
-
-def simhash_sql() -> str:
-    return values_sql(simhash_rows(), [("id", "BIGINT"), ("simhash", "BIGINT")])
-
-
-def simhash_clusters_sql() -> str:
-    return values_sql(
-        simhash_cluster_rows(), [("id", "BIGINT"), ("component", "BIGINT")]
-    )
-
-
-def fingerprints_sql() -> str:
-    return values_sql(
-        fingerprint_rows(), [("doc_id", "BIGINT"), ("fingerprint", "BIGINT")]
-    )
-
-
-def kg_triples_sql() -> str:
-    return values_sql(
-        kg_triple_rows(),
-        [("subj", "VARCHAR"), ("pred", "VARCHAR"), ("obj", "VARCHAR")],
-    )
-
-
-def embedding_clusters_sql() -> str:
-    return values_sql(
-        embedding_cluster_rows(),
-        [("id", "BIGINT"), ("component", "BIGINT")],
-    )
-
-
-def ann_lsh_topk_sql() -> str:
-    return values_sql(
-        ann_lsh_topk_rows(),
-        [("query_id", "BIGINT"), ("neighbor_id", "BIGINT"), ("rank", "BIGINT")],
-    )
-
-
-def ann_ivf_topk_sql() -> str:
-    return values_sql(
-        ann_ivf_topk_rows(),
-        [("query_id", "BIGINT"), ("neighbor_id", "BIGINT"), ("rank", "BIGINT")],
-    )
-
-
-def multimodal_sql() -> str:
-    return values_sql(
-        multimodal_rows(),
-        [("media_id", "BIGINT"), ("kind", "VARCHAR"), ("n_bytes", "BIGINT")],
-    )
-
-
-# ---------------------------------------------------------------------------
-# exact substring dedup replica
-# ---------------------------------------------------------------------------
-def substring_dedup_rows(sf_dir: str | None = None, k: int = 8) -> List[tuple]:
-    """Pure-Python spec of ``operators.dedup.substring_dedup``: a token
-    is removed from a doc when it is covered by a k-token window whose
-    exact gram occurs in >=2 distinct docs and the doc is not the
-    gram's keeper (min doc id); output text is surviving tokens joined
-    by single spaces."""
-    ids, texts = _read_docs(sf_dir)
-    occ: defaultdict = defaultdict(list)
-    toks = {}
-    for i, t in zip(ids, texts):
-        tk = (t or "").split()
-        toks[i] = tk
-        for j in range(len(tk) - k + 1):
-            occ[" ".join(tk[j : j + k])].append((i, j))
-    removed: defaultdict = defaultdict(set)
-    for g, ps in occ.items():
-        docs = {i for i, _ in ps}
-        if len(docs) < 2:
-            continue
-        keep = min(docs)
-        for i, j in ps:
-            if i != keep:
-                removed[i].update(range(j, j + k))
-    out = []
-    for i in ids:
-        rm = removed.get(i, set())
-        clean = " ".join(t for j, t in enumerate(toks[i]) if j not in rm)
-        out.append((int(i), clean, len(rm)))
-    return sorted(out)
-
-
-def substring_dedup_sql() -> str:
-    return values_sql(
-        substring_dedup_rows(),
-        [("id", "BIGINT"), ("clean_text", "VARCHAR"),
-         ("n_removed_tokens", "BIGINT")],
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph analytics replicas (part co-occurrence graph over lineitem)
-# ---------------------------------------------------------------------------
 def _read_lineitem_pairs(sf_dir: str | None = None):
     import pyarrow.parquet as pq
 
@@ -730,6 +187,7 @@ def _read_lineitem_pairs(sf_dir: str | None = None):
         columns=["l_orderkey", "l_partkey"],
     )
     return t["l_orderkey"].to_pylist(), t["l_partkey"].to_pylist()
+
 
 
 def part_cooccurrence(sf_dir: str | None = None, min_weight: int = 1):
@@ -746,6 +204,7 @@ def part_cooccurrence(sf_dir: str | None = None, min_weight: int = 1):
             for j in range(i + 1, len(s)):
                 w[(s[i], s[j])] += 1
     return {k: v for k, v in w.items() if v >= min_weight}
+
 
 
 def pagerank_rows(
@@ -778,11 +237,6 @@ def pagerank_rows(
     return [(int(u), int(rank[u])) for u in nodes]
 
 
-def pagerank_sql() -> str:
-    return values_sql(
-        pagerank_rows(), [("node", "BIGINT"), ("rank", "BIGINT")]
-    )
-
 
 def kcore_rows(
     sf_dir: str | None = None, k: int = 3, min_weight: int = 2
@@ -806,15 +260,7 @@ def kcore_rows(
     return sorted((int(u), len(vs)) for u, vs in adj.items())
 
 
-def kcore_sql(k: int = 3) -> str:
-    return values_sql(
-        kcore_rows(k=k), [("node", "BIGINT"), ("degree", "BIGINT")]
-    )
 
-
-# ---------------------------------------------------------------------------
-# sequence-packing replica
-# ---------------------------------------------------------------------------
 def _oracle_token_count(text) -> int:
     """Replica of operators.text.token_count — the SAME explicit ASCII
     non-space class (Python's Unicode `\\S` would over-split on NBSP
@@ -822,6 +268,7 @@ def _oracle_token_count(text) -> int:
     import re
 
     return len(re.findall("[^ \t\n\x0B\f\r]+", text or ""))
+
 
 
 def pack_rows(
@@ -852,58 +299,3 @@ def pack_rows(
                 room.append(budget - n_tok)
                 out.append((doc_id, b, len(room) - 1, n_tok, False))
     return sorted(out)
-
-
-def pack_sql(budget: int = 256, n_buckets: int = 16) -> str:
-    return values_sql(
-        pack_rows(budget=budget, n_buckets=n_buckets),
-        [("doc_id", "BIGINT"), ("bucket", "BIGINT"), ("seq_id", "BIGINT"),
-         ("n_tokens", "INTEGER"), ("overflow", "BOOLEAN")],
-    )
-
-
-def pack_profile_sql(budget: int = 256, n_buckets: int = 16) -> str:
-    """Packing-profile mirror: the integer-ppm aggregation runs IN SQL
-    over the VALUES-rendered packed assignment."""
-    packed = pack_sql(budget=budget, n_buckets=n_buckets)
-    return f"""
-WITH packed AS ({packed})
-SELECT bucket,
-       COUNT(*) AS n_docs,
-       COUNT(DISTINCT seq_id) AS n_seqs,
-       (1000000 * SUM(CAST(n_tokens AS BIGINT)))
-         // (COUNT(DISTINCT seq_id) * {int(budget)}) AS fill_ppm
-FROM packed WHERE NOT overflow GROUP BY bucket
-"""
-
-
-def label_propagation_rows(
-    sf_dir: str | None = None, min_weight: int = 2, iters: int = 5
-) -> List[tuple]:
-    """Synchronous-LPA replica of ``operators.graph.label_propagation``:
-    all-integer votes, min-label tie-break, fixed round count — the
-    synchronous update plus the deterministic tie-break make the round
-    trajectory (and so the final labels) unique on both engines."""
-    edges = part_cooccurrence(sf_dir, min_weight)
-    adj: defaultdict = defaultdict(list)
-    for (a, b) in edges:
-        adj[a].append(b)
-        adj[b].append(a)
-    label = {u: u for u in adj}
-    for _ in range(iters):
-        new = {}
-        for u, nbrs in adj.items():
-            votes: defaultdict = defaultdict(int)
-            for v in nbrs:
-                votes[label[v]] += 1
-            best = max(votes.items(), key=lambda kv: (kv[1], -kv[0]))
-            new[u] = best[0]
-        label = new
-    return sorted((int(u), int(c)) for u, c in label.items())
-
-
-def label_propagation_sql() -> str:
-    return values_sql(
-        label_propagation_rows(),
-        [("node", "BIGINT"), ("community", "BIGINT")],
-    )

@@ -1,7 +1,7 @@
 """Deterministic synthetic transcript generator (FIXTURES.md §A).
 
 Produces the contract input table (conv_id, turn_idx, role, text, tool, ts)
-with Zipf-hot conversation sizes (so salted repartitioning is actually
+with Zipf-hot conversation sizes (so skew handling is actually
 exercised), entity surface forms with alias/misspelling variants (so the
 MinHash/LSH linking stage has real work to do), and predicate sentences
 drawn from the shared rule module.
@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import datetime as dt
 import random
-from typing import Dict, List, NamedTuple, Optional, Tuple
+from typing import List, NamedTuple, Optional, Tuple
 
 from . import rules
 
@@ -207,7 +207,6 @@ def generate_transcripts_distributed(
     cluster.  Returns a DataFrame with the contract schema.
     """
     import pandas as pd
-    from pyspark.sql import functions as F
 
     pool = make_entity_pool(n_entities, seed)
 
@@ -250,148 +249,6 @@ def generate_transcripts_distributed(
     schema = ("conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
     return ids.mapInPandas(gen, schema)
-
-
-# ---------------------------------------------------------------------------
-# synthetic document corpus (curation-pipeline scaling input)
-# ---------------------------------------------------------------------------
-_DOC_WORDS = [
-    "data", "query", "table", "row", "scan", "merge", "batch", "stream",
-    "filter", "group", "sort", "window", "join", "hash", "value", "line",
-    "part", "key", "big", "small", "fast", "slow", "column", "order",
-    "spark", "vector", "customer", "agg",
-]
-_EN_STOP_WORDS = ["the", "a", "of", "and", "to", "in", "is", "for"]
-_ES_WORDS = ["el", "la", "que", "de", "los", "es"]
-
-
-def _doc_base_text(i: int, seed: int, vocab: int = 0) -> str:
-    """Deterministic base text of document i — a pure function, so a
-    duplicate of doc j can be generated without materializing doc j.
-
-    ``vocab`` > 0 mixes in tokens from a ``w<k>`` pool of that size
-    (half the draws).  Real corpora grow vocabulary with size (Heaps'
-    law); without this, a fixed ~30-word vocabulary makes *genuinely
-    similar* cross-doc pair volume grow ~n^1.7 and the near-dup verify
-    stage quadratic in corpus size (measured: 8.6M/28.1M/80.5M LSH
-    candidate pairs at 0.5/1/2M docs with vocab=0)."""
-    rng = random.Random(((seed << 32) ^ (i * 2654435761)) & (2**63 - 1))
-    words = (_ES_WORDS * 3 + _DOC_WORDS) if rng.random() < 0.1 else (
-        _EN_STOP_WORDS * 2 + _DOC_WORDS
-    )
-    n = rng.randrange(8, 90)  # short docs fail the quality gate
-    if vocab <= 0:
-        return " ".join(rng.choice(words) for _ in range(n))
-    return " ".join(
-        f"w{rng.randrange(vocab)}" if rng.random() < 0.5 else rng.choice(words)
-        for _ in range(n)
-    )
-
-
-def generate_documents_distributed(
-    spark,
-    n_docs: int,
-    seed: int = 42,
-    dup_rate: float = 0.05,
-    near_dup_rate: float = 0.05,
-    partitions: int = 64,
-    vocab: int | None = None,
-):
-    """Cluster-scale synthetic document corpus for the curation pipeline:
-    ~dup_rate exact duplicates (verbatim copies of an earlier doc),
-    ~near_dup_rate near-duplicates (a few tokens perturbed), a mix of
-    predicted languages and quality levels.  One deterministic RNG per
-    doc — embarrassingly parallel, same bytes at any partitioning.
-
-    ``vocab`` defaults to n_docs // 50 (Heaps-ish growth) so the
-    similar-pair volume stays linear in corpus size — see
-    :func:`_doc_base_text`; pass 0 for the legacy fixed-vocabulary
-    corpus."""
-    import pandas as pd
-
-    if vocab is None:
-        vocab = n_docs // 50
-
-    def gen(batches):
-        for pdf in batches:
-            ids, texts = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                rng = random.Random((seed << 32) ^ i)
-                r = rng.random()
-                if i > 0 and r < dup_rate:
-                    t = _doc_base_text(rng.randrange(i), seed, vocab)
-                elif i > 0 and r < dup_rate + near_dup_rate:
-                    toks = _doc_base_text(rng.randrange(i), seed, vocab).split()
-                    for _ in range(max(1, len(toks) // 30)):
-                        toks[rng.randrange(len(toks))] = rng.choice(_DOC_WORDS)
-                    t = " ".join(toks)
-                else:
-                    t = _doc_base_text(i, seed, vocab)
-                ids.append(i)
-                texts.append(t)
-            out = pd.DataFrame({"doc_id": ids, "text": texts})
-            out["doc_id"] = out["doc_id"].astype("int64")
-            yield out
-
-    ids = spark.range(0, n_docs).repartition(partitions)
-    return ids.mapInPandas(gen, "doc_id long, text string")
-
-
-# ---------------------------------------------------------------------------
-# synthetic embedding corpus (ANN scaling input)
-# ---------------------------------------------------------------------------
-def generate_embeddings_distributed(
-    spark,
-    n_vecs: int,
-    dim: int = 32,
-    seed: int = 7,
-    n_clusters: int = 64,
-    noise: float = 0.25,
-    partitions: int = 64,
-):
-    """Cluster-scale synthetic embeddings: unit vectors drawn around
-    ``n_clusters`` deterministic centroids, one per-index rng per vector
-    — embarrassingly parallel, identical bytes at any partitioning.
-
-    Two regimes via the knobs: few clusters + large ``noise`` = an ANN
-    retrieval corpus (IVF has coarse structure to exploit); many tiny
-    clusters (n_clusters ~ n/4) + small ``noise`` (0.02 -> intra-cluster
-    cosine ~0.99) = a near-dup corpus with planted duplicate groups.
-
-    Emits ``array<float>`` — the SAME element type as the driver's
-    testdata embeddings.parquet (list<float>).  The round-6 12M-vector
-    campaign showed why this matters at scale: generating float64 here
-    doubled every byte the LSH/IVF index builds shuffle, sort and
-    write, and the synthetic corpus no longer modeled the contract
-    input.  Scoring still happens in float64 (float32->float64 casts
-    are exact, so results are bit-identical to hashing/scoring the
-    same values as doubles)."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches):
-        # centroids are derived per-index too (n_clusters can be huge in
-        # the near-dup regime — never materialize the full matrix)
-        def centroid(k: int):
-            crng = np.random.default_rng((seed << 16) ^ (k * 7919))
-            c = crng.standard_normal(dim)
-            return c / np.linalg.norm(c)
-
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            out = np.empty((len(ids), dim), dtype=np.float64)
-            for j, i in enumerate(ids):
-                rng = np.random.default_rng((seed << 32) ^ int(i))
-                v = centroid(int(i) % n_clusters) + noise * rng.standard_normal(dim)
-                out[j] = v / np.linalg.norm(v)
-            yield pd.DataFrame(
-                {"vec_id": ids.astype("int64"),
-                 "embedding": list(out.astype(np.float32))}
-            )
-
-    ids = spark.range(0, n_vecs).repartition(partitions)
-    return ids.mapInPandas(gen, "vec_id long, embedding array<float>")
 
 
 def with_duplicates_and_shuffle(rows: List[Turn], seed: int = 7,

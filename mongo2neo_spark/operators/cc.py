@@ -206,6 +206,42 @@ def connected_components_auto(
         )
         edges.unpersist()
         return out
+    # Arrow transfer (toPandas), not collect(): two numpy int64 columns
+    # are ~16 B/edge (~80 MB at the 5M default) where a list of Row
+    # objects costs 100+ B/edge and risks driver OOM right at the
+    # threshold.  Single job either way.
+    pdf = edges.select("src", "dst").toPandas()
+    labels = min_labels(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    edges.unpersist()
+    spark = vertices.sparkSession
+    if not labels:
+        return vertices.select("id", F.col("id").alias("component"))
+    # Arrow path back out too: a pandas frame of two int64 columns ships
+    # as one Arrow batch, where a python list of tuples would serialize
+    # row-by-row through py4j (measured seconds of serial driver time at
+    # ~10^5 components — a fixed cost that caps scaling efficiency)
+    import pandas as pd
+
+    comp = spark.createDataFrame(
+        pd.DataFrame({
+            "id": pd.Series(list(labels), dtype="int64"),
+            "component": pd.Series(list(labels.values()), dtype="int64"),
+        }),
+        schema="id long, component long",
+    )
+    # vertices not touched by any edge are singletons
+    return (
+        vertices.join(F.broadcast(comp), "id", "left")
+        .select("id", F.coalesce("component", "id").alias("component"))
+    )
+
+
+def min_labels(edges) -> dict:
+    """Driver union-find over ``(a, b)`` int pairs -> ``{id: component}``
+    for every id whose component is not the id itself; every other id
+    (a component's minimum, or an id in no edge) is its own component.
+    The root of each set is its minimum id, so these are the min-id
+    labels hash-min propagation converges to, whatever the edge order."""
     parent: dict = {}
 
     def find(x: int) -> int:
@@ -216,39 +252,12 @@ def connected_components_auto(
             parent[x], x = r, parent[x]
         return r
 
-    # Arrow transfer (toPandas), not collect(): two numpy int64 columns
-    # are ~16 B/edge (~80 MB at the 5M default) where a list of Row
-    # objects costs 100+ B/edge and risks driver OOM right at the
-    # threshold.  Single job either way.
-    pdf = edges.select("src", "dst").toPandas()
-    for a, b in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
+    for a, b in edges:
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    edges.unpersist()
-    spark = vertices.sparkSession
-    if not parent:
-        return vertices.select("id", F.col("id").alias("component"))
-    # Arrow path back out too: a pandas frame of two int64 columns ships
-    # as one Arrow batch, where a python list of tuples would serialize
-    # row-by-row through py4j (measured seconds of serial driver time at
-    # ~10^5 components — a fixed cost that caps scaling efficiency)
-    import pandas as pd
-
-    ks = list(parent)
-    comp = spark.createDataFrame(
-        pd.DataFrame({
-            "id": pd.Series(ks, dtype="int64"),
-            "component": pd.Series([find(k) for k in ks], dtype="int64"),
-        }),
-        schema="id long, component long",
-    )
-    # vertices not touched by any edge are singletons
-    return (
-        vertices.join(F.broadcast(comp), "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
-    )
+    return {k: find(k) for k in parent}
 
 
 def _materialize(df: DataFrame) -> DataFrame:

@@ -262,8 +262,8 @@ def minhash_verified_edges(
     verify: str = "jvm",
 ) -> DataFrame:
     """The (src, dst) near-dup edge stream feeding CC — factored out so
-    the plan auditor (tools/explain_plans.py) can show the verify stage
-    has zero Python operators on the jvm path."""
+    its plan can be inspected on its own (the verify stage has zero
+    Python operators on the jvm path)."""
     base = df.select(
         F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("_t")
     )

@@ -102,200 +102,19 @@ def extract_turn_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(cols)
 
 
-# ---------------------------------------------------------------------------
-# JVM-side extraction (default path): the U1/U2 rules are regular-language
-# + arithmetic, so the whole stage compiles into whole-stage codegen with
-# ZERO Python in the hot path.  regexp_extract_all gives the mention
-# surfaces in order; split(text, MENTION_RE, -1) gives the inter-mention
-# gaps (leading/trailing included), so span offsets are prefix sums of
-# the two length arrays and predicate detection is a filter over the
-# interior gaps.  Java and Python regex agree on this pattern for the
-# ASCII alphabet the rules target (\b, [A-Z], [A-Za-z0-9] are identical);
-# the Arrow UDF path below remains as the shared-spec fallback and the
-# jvm==arrow parity property is pinned by tests.
-# ---------------------------------------------------------------------------
-_MENTION_PATTERN = rules.MENTION_RE.pattern
-
-
-def _normalize_col(c):
-    """JVM replica of rules.normalize: lowercase + collapse/trim any
-    whitespace (== ' '.join(s.lower().split()))."""
-    return F.array_join(
-        F.filter(F.split(F.lower(c), r"\s+"), lambda x: x != ""), " "
-    )
-
-
-def _kind_col(norm):
-    """JVM replica of rules.infer_kind (same branch order)."""
-    toks = F.split(norm, " ")
-    last = F.element_at(toks, -1)
-    return (
-        F.when(last.isin(*rules.ORG_SUFFIXES), "org")
-        .when(
-            (F.size(toks) == 1) & last.isin(*sorted(rules.PLACE_NAMES)), "place"
-        )
-        .when(
-            (F.size(toks) == 1) & last.startswith(rules.TOOL_PREFIX), "tool"
-        )
-        .when(F.size(toks) == 2, "person")
-        .otherwise("artifact")
-    )
-
-
-def _gap_pred_col(gap):
-    """JVM replica of the U2 gap -> predicate normalization:
-    normalize(gap.strip(' .,;:!?'))."""
-    return _normalize_col(F.trim(gap, F.lit(" .,;:!?")))
-
-
-def extract_jvm(turns: DataFrame) -> DataFrame:
-    """turns -> the same (conv_id, turn_idx, ts, ex) rows as
-    :func:`extract`, built entirely from codegen expressions.
-
-    Span arithmetic: with gaps g[0..n] and mentions m[0..n-1],
-    start_i = sum(len(g[0..i])) + sum(len(m[0..i-1])) — prefix sums over
-    two small per-turn arrays (mention counts per turn are tiny, so the
-    O(n^2) slice-sum is noise next to the scan)."""
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    # Staged projections: each expensive array (normalized predicates,
-    # span prefix sums, triple indices) is ALIASED ONCE and referenced
-    # downstream — CollapseProject keeps non-cheap multi-referenced
-    # aliases as separate projections, so nothing is recomputed.
-    s1 = turns.select(
-        "conv_id", "turn_idx", "ts",
-        F.regexp_extract_all(txt, F.lit(_MENTION_PATTERN), 0).alias("ms"),
-        F.split(txt, _MENTION_PATTERN, -1).alias("gs"),
-    )
-    # pr[i] = normalized predicate candidate of the gap between mentions
-    # i and i+1 (interior gaps are gs[2..n] 1-based, length n-1)
-    s2 = s1.select(
-        "conv_id", "turn_idx", "ts", "ms", "gs",
-        F.transform("ms", F.length).alias("ml"),
-        F.transform("gs", F.length).alias("gl"),
-        F.transform(
-            F.slice("gs", 2, F.greatest(F.size("ms") - 1, F.lit(0))),
-            _gap_pred_col,
-        ).alias("pr"),
-    )
-
-    def _sum(arr):
-        return F.aggregate(arr, F.lit(0), lambda a, x: a + x)
-
-    def _start(i):  # i is 1-based mention index
-        return _sum(F.slice("gl", 1, i)) + _sum(F.slice("ml", 1, i - 1))
-
-    # clamp+filter everywhere: sequence(1,0) would DESCEND on empty input
-    idx = F.filter(
-        F.sequence(F.lit(1), F.greatest(F.size("ms"), F.lit(1))),
-        lambda i: i <= F.size("ms"),
-    )
-    s3 = s2.select(
-        "conv_id", "turn_idx", "ts", "ms", "pr",
-        F.transform(idx, lambda i: _start(i).cast("int")).alias("m_start"),
-        F.transform(
-            idx,
-            lambda i: (_start(i) + F.element_at("ml", i)).cast("int"),
-        ).alias("m_end"),
-        F.transform("ms", _normalize_col).alias("m_norm"),
-        F.filter(
-            F.sequence(F.lit(1), F.greatest(F.size("pr"), F.lit(1))),
-            lambda i: (i <= F.size("pr"))
-            & F.try_element_at("pr", i).isin(*rules.PREDICATES),
-        ).alias("tri"),
-    )
-    return s3.select(
-        "conv_id", "turn_idx", "ts",
-        F.struct(
-            F.col("m_start"),
-            F.col("m_end"),
-            F.col("ms").alias("m_surface"),
-            F.col("m_norm"),
-            F.transform("m_norm", _kind_col).alias("m_kind"),
-            F.transform("tri", lambda i: (i - 1).cast("int")).alias("t_subj"),
-            F.transform(
-                "tri", lambda i: F.element_at("pr", i)
-            ).alias("t_pred"),
-            F.transform("tri", lambda i: i.cast("int")).alias("t_obj"),
-        ).alias("ex"),
-    )
-
-
-def _empty_extract_struct():
-    """A typed all-empty EXTRACT_TYPE value, built JVM-side."""
-    return F.struct(
-        F.array().cast("array<int>").alias("m_start"),
-        F.array().cast("array<int>").alias("m_end"),
-        F.array().cast("array<string>").alias("m_surface"),
-        F.array().cast("array<string>").alias("m_norm"),
-        F.array().cast("array<string>").alias("m_kind"),
-        F.array().cast("array<int>").alias("t_subj"),
-        F.array().cast("array<string>").alias("t_pred"),
-        F.array().cast("array<int>").alias("t_obj"),
-    )
-
-
-def extract_arrow(turns: DataFrame, gate: bool = False) -> DataFrame:
-    """Arrow-batched path: one pandas-UDF island that runs the shared
-    ``rules`` module verbatim (parity-by-construction with the
-    pure-Python oracle); tests assert jvm == arrow on every fixture
-    corpus.
-
-    ``gate=True`` pre-filters with a sound JVM predicate before the
-    Arrow transfer: MENTION_RE can only match where an ASCII uppercase
-    letter exists, so ``rlike '[A-Z]'`` has no false negatives — rows
-    failing it get a typed empty struct without ever crossing into
-    Python (~30% of turns on the contract corpus skip the transfer).
-    Wrapping the UDF in ``when(gate, udf(...))`` would NOT help: Spark
-    extracts UDFs and evaluates them on the whole projected batch, so
-    the skip must be a plan branch.
-
-    Default OFF, by measurement: at 149k turns / local[32] the
-    two-branch union (double input pass + rlike on every row + 2x task
-    scheduling) costs more than the skipped 30% of Arrow transfer
-    (best-of-3: 0.88s ungated vs 1.11s gated).  The gate wins only when
-    the skipped fraction is large or rows are much wider than this
-    corpus's — it stays available for those shapes, parity-tested."""
-    if not gate:
-        return turns.select(
-            "conv_id", "turn_idx", "ts",
-            extract_turn_udf(F.col("text")).alias("ex"),
-        )
-    cand = F.coalesce(F.col("text"), F.lit("")).rlike("[A-Z]")
-    hit = turns.where(cand).select(
+def extract(turns: DataFrame) -> DataFrame:
+    """turns -> one row per turn with mention/triple arrays attached:
+    one pandas-UDF island that runs the shared ``rules`` module verbatim
+    (parity-by-construction with the pure-Python oracle).  Extraction is
+    row-local, so it needs no particular input partitioning."""
+    return turns.select(
         "conv_id", "turn_idx", "ts",
         extract_turn_udf(F.col("text")).alias("ex"),
     )
-    miss = turns.where(~cand).select(
-        "conv_id", "turn_idx", "ts", _empty_extract_struct().alias("ex")
-    )
-    return hit.unionByName(miss)
-
-
-def extract(turns: DataFrame, impl: str = "arrow", gate: bool = False) -> DataFrame:
-    """turns -> one row per turn with mention/triple arrays attached.
-
-    Input should already be salted-repartitioned (operators.skew) so a
-    hot conversation's turns spread across executors; extraction is
-    row-local, so salting is lossless here.
-
-    impl="arrow" (default): the fused pandas UDF running the shared
-    rules module — MEASURED faster when all struct fields are consumed
-    (937k turns, local[32], best-of-3: 2.75s vs 3.85s) because Spark's
-    higher-order array functions execute interpreted, not codegen'd.
-    impl="jvm": pure column expressions, zero Python anywhere — wins
-    when downstream prunes to a field subset (321k vs 290k turns/s on a
-    t_pred-only scan) and on clusters where Python worker memory is the
-    constraint.  Both paths are property-tested value-identical.
-    """
-    if impl == "jvm":
-        return extract_jvm(turns)
-    if impl == "arrow":
-        return extract_arrow(turns, gate=gate)
-    raise ValueError(f"unknown extract impl: {impl!r}")
 
 
 def mentions(extracted: DataFrame) -> DataFrame:
-    """Unnest the flat mention arrays into the MENTIONS contract (one
+    """Unnest the flat mention arrays into one row per mention (one
     shuffle-free explode of a JVM-side arrays_zip;
     mention_id = xxhash64(conv_id, turn_idx, span_start))."""
     zipped = extracted.select(

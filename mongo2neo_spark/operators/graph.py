@@ -262,6 +262,11 @@ def triangle_counts(
         edges.select("s1", "s2").repartition(n_shuffle, "s1", "s2")
     )
     m = und.count()
+    if m == 0:
+        und.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "node bigint, n_triangles bigint"
+        )
     deg = _materialize(node_degrees(und))
     n_nodes = deg.count()
     d1 = deg.select(
@@ -491,8 +496,7 @@ PAGERANK_SCALE = 10**12  # bigint rank units; headroom: 17 * 10^12 << 2^63
 DRIVER_PAGERANK_MAX_EDGES = 2_000_000
 
 
-def _pagerank_driver(edges_pdf, n_nodes_hint, iters, damping_num,
-                     damping_den):
+def _pagerank_driver(edges_pdf, iters, damping_num, damping_den):
     """Exact integer PageRank over a collected edge list — numpy int64
     floor-division arithmetic, value-identical to the distributed
     iterate (and to the pure-Python oracle replica): every operation is
@@ -575,9 +579,7 @@ def pagerank_integer(
 
         pdf = edges.select("s1", "s2").toPandas()
         edges.unpersist()
-        nodes, rank = _pagerank_driver(
-            pdf, m, iters, damping_num, damping_den
-        )
+        nodes, rank = _pagerank_driver(pdf, iters, damping_num, damping_den)
         return spark.createDataFrame(
             pd.DataFrame({"node": nodes, "rank": rank}),
             "node bigint, rank bigint",

@@ -1,5 +1,5 @@
 """Ingest stage: P1 prune/cast, P2 validity filter, P3 deterministic
-turn dedup, W1 stable (conv_id, turn_idx) ordering (SURVEY.md §2.2/§2.5).
+turn dedup (SURVEY.md §2.2/§2.5).
 
 Scale notes: the filters sit *before* any UDF so Catalyst pushes them
 into the parquet/Iceberg scan.  Dedup is a hash AGGREGATE on the
@@ -13,20 +13,17 @@ bit-identical to the oracle's survivor order (verified by test).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CONTRACT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
-
-def clean(df: DataFrame, roles: tuple | None = None) -> DataFrame:
-    """P1 prune/cast + P2 validity filter + P4 role predicate (no dedup).
+def clean(df: DataFrame) -> DataFrame:
+    """P1 prune/cast + P2 validity filter (no dedup).
 
     Kept separate from :func:`dedup` so the pipeline can insert its own
     fixed-width repartition between them — the dedup aggregate then runs
     partition-locally on that exchange (one full-text shuffle total).
     """
-    out = df.select(
+    return df.select(
         F.col("conv_id").cast("string").alias("conv_id"),
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.col("role").cast("string").alias("role"),
@@ -39,9 +36,6 @@ def clean(df: DataFrame, roles: tuple | None = None) -> DataFrame:
         & F.col("text").isNotNull()
         & (F.length("text") > 0)
     )
-    if roles:
-        out = out.filter(F.col("role").isin(list(roles)))
-    return out
 
 
 def dedup(df: DataFrame) -> DataFrame:
@@ -96,15 +90,3 @@ def dedup_adaptive(df: DataFrame) -> DataFrame:
     unique = df.join(dup_keys, keys, "left_anti")
     dupes = dedup(df.join(dup_keys, keys, "left_semi"))
     return unique.unionByName(dupes)
-
-
-def ingest(df: DataFrame, roles: tuple | None = None) -> DataFrame:
-    """Contract input -> clean, deduped turns (single-call form)."""
-    return dedup(clean(df, roles))
-
-
-def ordered_turns(df: DataFrame) -> DataFrame:
-    """W1: stable per-conversation ordering with an explicit turn rank —
-    the 'stable (conv_id, turn_idx) window ordering' of the contract."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_rank", F.row_number().over(w))

@@ -23,6 +23,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .. import rules
 from ..functions import hashing
+from . import cc as cc_mod
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
@@ -69,7 +70,8 @@ def candidate_pairs_from_bands(
     Plan shape: band-size cap filter -> self equi-join on band_key with
     a<b -> dropDuplicates(pair) -> exact-score UDF -> threshold filter.
     AQE splits any residual hot band at runtime (K2); bands over
-    ``band_cap`` are dropped entirely and surfaced via ``dropped_bands``
+    ``band_cap`` are dropped entirely and surfaced via
+    :func:`dropped_from_bands`
     (K3 — logged, never silent).
     """
     capped = bands.filter(F.col("band_size") <= band_cap)
@@ -87,15 +89,6 @@ def candidate_pairs_from_bands(
     return scored.filter(F.col("score") >= threshold)
 
 
-def candidate_pairs(
-    mentions: DataFrame,
-    band_cap: int = hashing.BAND_CAP,
-    threshold: float = rules.LINK_THRESHOLD,
-) -> DataFrame:
-    """mentions -> scored candidate pairs (convenience single-call form)."""
-    return candidate_pairs_from_bands(lsh_bands(mentions), band_cap, threshold)
-
-
 def dropped_from_bands(bands: DataFrame,
                        band_cap: int = hashing.BAND_CAP) -> DataFrame:
     """K3 audit: band keys whose size exceeded the cap (lineage/metrics)."""
@@ -104,10 +97,6 @@ def dropped_from_bands(bands: DataFrame,
         .dropDuplicates(["band_key"])
         .filter(F.col("band_size") > band_cap)
     )
-
-
-def dropped_bands(mentions: DataFrame, band_cap: int = hashing.BAND_CAP) -> DataFrame:
-    return dropped_from_bands(lsh_bands(mentions), band_cap)
 
 
 def driver_link_components(
@@ -153,19 +142,8 @@ def driver_link_components(
                     a, b = b, a
                 pairs.add((a, b))
 
-    parent = {id_of[n]: id_of[n] for n in norms}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in sorted(pairs):
-        if rules.pair_score(a, b) >= threshold:
-            ra, rb = find(id_of[a]), find(id_of[b])
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo  # min-id label, as hash-min CC converges to
-
-    return [(n, find(id_of[n])) for n in norms], dropped
+    labels = cc_mod.min_labels(
+        (id_of[a], id_of[b]) for a, b in sorted(pairs)
+        if rules.pair_score(a, b) >= threshold
+    )
+    return [(n, labels.get(id_of[n], id_of[n])) for n in norms], dropped

@@ -13,34 +13,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import cc as cc_mod
-from . import link as link_mod
 
 MAX_PROVENANCE = 20
 
 
-def norm_components(mentions: DataFrame,
-                    band_cap: int | None = None,
-                    threshold: float | None = None,
-                    pairs: DataFrame | None = None,
-                    norms: DataFrame | None = None) -> DataFrame:
-    """Full linking + canonicalization: mentions -> (norm, entity_id:long).
+def norm_components(mentions: DataFrame, pairs: DataFrame,
+                    norms: DataFrame) -> DataFrame:
+    """Canonicalization of linked norms -> (norm, entity_id:long).
 
-    Vertices are the distinct norms (ids = xxhash64(norm)); edges are the
-    scored LSH candidate pairs above threshold; components come from the
-    iterative min-label CC.  Singleton norms keep their own id.
-    Pass ``pairs`` to reuse precomputed candidate pairs and ``norms`` (a
-    single-column distinct-norm frame, e.g. derived from the persisted
-    LSH bands) to skip re-scanning the mention stream for the vertex set.
+    Vertices are the distinct norms in ``norms`` (a single-column frame,
+    e.g. derived from the persisted LSH bands; ids = xxhash64(norm));
+    edges are the scored candidate ``pairs`` above threshold; components
+    come from the size-adaptive min-label CC.  Singleton norms keep their
+    own id.  ``mentions`` is not scanned: the vertex and edge sets come
+    from the link stage.
     """
-    if pairs is None:
-        kwargs = {}
-        if band_cap is not None:
-            kwargs["band_cap"] = band_cap
-        if threshold is not None:
-            kwargs["threshold"] = threshold
-        pairs = link_mod.candidate_pairs(mentions, **kwargs)
-    if norms is None:
-        norms = mentions.select("norm").distinct()
     norms = norms.withColumn("id", F.xxhash64("norm"))
     edges = (
         pairs.select(
@@ -67,15 +54,12 @@ def mention_stats(mentions: DataFrame) -> DataFrame:
     )
 
 
-def canonical_names(mentions: DataFrame = None, components: DataFrame = None,
-                    stats: DataFrame = None) -> DataFrame:
+def canonical_names(components: DataFrame, stats: DataFrame) -> DataFrame:
     """W3: per entity, the most frequent norm (by mention count), ties
     broken lexicographically -> (entity_id, entity) canonical name.
 
-    Pass ``stats`` (a persisted :func:`mention_stats`) to skip the
-    mention-stream scan."""
-    if stats is None:
-        stats = mention_stats(mentions)
+    ``stats`` is a (persisted) :func:`mention_stats` rollup, so the
+    mention stream is never scanned here."""
     counts = stats.groupBy("norm").agg(F.sum("cnt").alias("cnt"))
     joined = counts.join(components, "norm")
     w = Window.partitionBy("entity_id").orderBy(F.desc("cnt"), F.asc("norm"))
@@ -131,17 +115,12 @@ def norm_to_entity(components: DataFrame, canon: DataFrame) -> DataFrame:
     return components.join(canon, "entity_id").select("norm", "entity")
 
 
-def resolve_triples(raw_triples: DataFrame, components: DataFrame = None,
-                    canon: DataFrame = None,
-                    n2e: DataFrame = None) -> DataFrame:
+def resolve_triples(raw_triples: DataFrame, n2e: DataFrame) -> DataFrame:
     """J2: rewrite raw (subj_norm, pred, obj_norm) to canonical entities.
 
-    The norm->entity map is vocabulary-sized — broadcast both joins so
-    the (huge) triple stream never shuffles here.  Pass a precomputed
-    (ideally persisted) ``n2e`` to avoid rebuilding the map.
+    The norm->entity map ``n2e`` is vocabulary-sized — broadcast both
+    joins so the (huge) triple stream never shuffles here.
     """
-    if n2e is None:
-        n2e = norm_to_entity(components, canon)
     n2e = F.broadcast(n2e)
     return (
         raw_triples.join(
@@ -191,27 +170,14 @@ def edges(resolved: DataFrame, max_provenance: int = MAX_PROVENANCE) -> DataFram
     )
 
 
-def triples(resolved: DataFrame) -> DataFrame:
-    """A4: the distinct (subj, pred, obj) set — the scored artifact."""
-    return resolved.select("subj", "pred", "obj").dropDuplicates(
-        ["subj", "pred", "obj"]
-    )
-
-
-def nodes(mentions: DataFrame = None, components: DataFrame = None,
-          canon: DataFrame = None, n2e: DataFrame = None,
-          stats: DataFrame = None) -> DataFrame:
+def nodes(stats: DataFrame, n2e: DataFrame) -> DataFrame:
     """A2 + W3: node table with mention stats and majority kind.
 
-    Derives from the vocabulary-sized :func:`mention_stats` rollup (pass
-    a persisted one via ``stats`` to skip the mention scan entirely):
-    the (entity, kind) histogram, stats, and majority-kind election all
-    run on tiny aggregates, never on the mention stream itself.
+    Derives from the vocabulary-sized :func:`mention_stats` rollup
+    ``stats`` and the norm->entity map ``n2e``: the (entity, kind)
+    histogram, stats, and majority-kind election all run on tiny
+    aggregates, never on the mention stream itself.
     """
-    if n2e is None:
-        n2e = norm_to_entity(components, canon)
-    if stats is None:
-        stats = mention_stats(mentions)
     m = stats.join(F.broadcast(n2e), "norm")
     by_kind = m.groupBy("entity", "kind").agg(
         F.sum("cnt").alias("kcnt"),

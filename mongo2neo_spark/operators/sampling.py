@@ -12,7 +12,7 @@ Both are driven by the same primitive: a uniform hash of the document id
 derived from ``md5(seed ":" id)``.  md5 (not ``rand()``) because the
 decision must be a pure function of (id, seed) — identical across
 retries, resumes, and cluster sizes, and exactly reproducible by any
-other system (the DuckDB oracle mirrors it bit-for-bit).  The hash is
+other system (md5 is in every SQL engine).  The hash is
 JVM-side (``F.md5`` + ``F.conv``), whole-stage-codegen'd, zero Python.
 
 At scale: ``mixture_sample`` is a pure narrow filter (predicate on a

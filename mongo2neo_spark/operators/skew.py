@@ -1,34 +1,17 @@
-"""K1: salted repartitioning on conv_id to defuse hot-conversation skew
-(contractual — BASELINE.json north_star; SURVEY.md §2.11).
+"""K1: deterministic conversation buckets (contractual — BASELINE.json
+north_star; SURVEY.md §2.11).
 
-Zipf-hot conversations (one conv_id with millions of turns) would pin a
-single task if we partitioned by conv_id alone.  The salt enters only
-the *physical distribution* key — logical grouping keys stay unsalted —
-and is derived from (conv_id, turn_idx), so it is deterministic, not
-random: the same input always lands in the same partition (this is what
-makes per-partition lineage checksums stable across runs).
-
-Turn-level stages (extraction) are embarrassingly parallel, so salting
-is lossless there; conversation-level windows run before salting or
-re-aggregate afterwards (SURVEY.md §2.11 K1 note).
+The extraction stage's lineage/resume partition key is a stable hash
+bucket of conv_id: the same input always lands in the same bucket, which
+is what makes per-bucket lineage checksums stable across runs.  Hot
+conversations do not pin a task: dedup groups on the fine-grained
+(conv_id, turn_idx) key, and the bucketed write is an AQE rebalance
+that splits a hot bucket across write tasks (plans/pipeline.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALT = 16
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: int | None = None, salt: int = DEFAULT_SALT
-) -> DataFrame:
-    """Distribute by (conv_id, deterministic turn-salt)."""
-    salt_col = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt_col)
-    return df.repartition(F.col("conv_id"), salt_col)
 
 
 def bucket_of(conv_id_col, n_buckets: int):

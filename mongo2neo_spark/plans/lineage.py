@@ -57,8 +57,7 @@ def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
     return spark.read.schema(LINEAGE).parquet(path)
 
 
-def completed_keys(spark: SparkSession, out_dir: str, stage: str,
-                   run_id: Optional[str] = None) -> List[str]:
+def completed_keys(spark: SparkSession, out_dir: str, stage: str) -> List[str]:
     """Partition keys already recorded for a stage (across all runs —
     idempotent re-runs skip work done by any previous run)."""
     lin = read_lineage(spark, out_dir)

@@ -3,7 +3,8 @@ point that runs
 
     ingest → extract → link → canonicalize → materialize
 
-with per-partition lineage, idempotent resume, and salted skew handling.
+with per-partition lineage, idempotent resume, and skew handling by
+fine-grained keys and AQE rebalancing.
 
     spark-submit --py-files m2n.zip -m mongo2neo_spark.plans.pipeline \
         --input <transcripts parquet/iceberg> --out <dir> [--no-resume]
@@ -27,7 +28,6 @@ from pyspark.sql import functions as F
 from .. import rules, schemas
 from ..functions import hashing
 from ..functions import probe as probe_mod
-from ..operators import cc as cc_mod
 from ..operators import extract as extract_mod
 from ..operators import ingest as ingest_mod
 from ..operators import link as link_mod

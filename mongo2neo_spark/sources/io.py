@@ -40,14 +40,13 @@ def write_table(
     df: DataFrame,
     target: str,
     partition_by: Optional[Sequence[str]] = None,
-    mode: str = "overwrite",
     options: Optional[dict] = None,
 ) -> None:
     """S2: idempotent table write.
 
-    With ``partition_by`` and mode=overwrite, dynamic partition overwrite
-    replaces exactly the partitions present in ``df`` — re-running a
-    completed stage is a no-op change-wise (resume contract).
+    With ``partition_by``, dynamic partition overwrite replaces exactly
+    the partitions present in ``df`` — re-running a completed stage is a
+    no-op change-wise (resume contract).
 
     ``options`` passes writer options through (e.g. a small
     ``parquet.block.size`` for INTERMEDIATE tables: parquet scans split
@@ -60,12 +59,9 @@ def write_table(
         if options:
             for k, v in options.items():
                 writer = writer.option(k, str(v))
-        if mode == "append":
-            writer.append()
-        else:
-            writer.overwritePartitions()
+        writer.overwritePartitions()
         return
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if options:
         for k, v in options.items():
             w = w.option(k, str(v))

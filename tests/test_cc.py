@@ -3,8 +3,6 @@ union-find, and determinism across partitioning."""
 
 import random
 
-import pytest
-
 
 def _cc(spark, edges, vertices, **kw):
     from mongo2neo_spark.operators.cc import connected_components
@@ -134,3 +132,29 @@ def test_random_graph_vs_union_find(spark):
     ref = {x: comp_min[find(x)] for x in range(n)}
     got = _cc(spark, [(a, b) for a, b in edges], list(range(n)))
     assert got == ref
+
+
+def test_min_labels_random_graph_vs_union_find():
+    """The driver union-find both driver venues share (link's vocabulary
+    linking and connected_components_auto) gives min-id labels in any
+    edge order; ids it leaves out are their own component."""
+    from mongo2neo_spark.operators.cc import min_labels
+
+    rng = random.Random(42)
+    n = 500
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(300)]
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ref = {x: find(x) for x in range(n)}
+    for order in (edges, edges[::-1], sorted(edges, key=lambda e: -max(e))):
+        labels = min_labels(order)
+        assert {x: labels.get(x, x) for x in range(n)} == ref

@@ -82,6 +82,14 @@ class TestTriangles:
         }
         assert got == _brute_triangles(SMALL)
 
+    def test_empty_edge_frame_returns_empty(self, spark):
+        from mongo2neo_spark.operators.graph import triangle_counts
+
+        e = spark.createDataFrame([], "s1 bigint, s2 bigint")
+        out = triangle_counts(e)
+        assert out.count() == 0
+        assert [f.name for f in out.schema.fields] == ["node", "n_triangles"]
+
     def test_clique_counts(self, spark):
         from mongo2neo_spark.operators.graph import triangle_counts
 

@@ -27,7 +27,7 @@ def test_filters_nulls_and_empty_text(spark):
             ("c2", None, "user", "y", None, ts),
         ],
     )
-    out = ingest.ingest(df).collect()
+    out = ingest.dedup(ingest.clean(df)).collect()
     assert [(r.conv_id, r.turn_idx) for r in out] == [("c1", 0)]
 
 
@@ -41,7 +41,7 @@ def test_dedup_deterministic_survivor(spark):
             ("c1", 0, "user", "bbb", None, ts),
         ],
     )
-    out = ingest.ingest(df).collect()
+    out = ingest.dedup(ingest.clean(df)).collect()
     assert len(out) == 1
     assert out[0].role == "assistant" and out[0].text == "aaa"
 
@@ -55,7 +55,7 @@ def test_per_turn_text_equality_under_permutation(spark, small_rows):
     df = spark.createDataFrame(fixtures.turns_to_pandas(messy))
     got = {
         (r.conv_id, r.turn_idx): r.text
-        for r in ingest.ingest(df).collect()
+        for r in ingest.dedup(ingest.clean(df)).collect()
     }
     ref = {
         (r.conv_id, r.turn_idx): r.text for r in oracle.dedup_turns(small_rows)
@@ -99,26 +99,3 @@ def test_dedup_adaptive_survivor_determinism(spark):
     out = {r.turn_idx: r for r in ingest.dedup_adaptive(ingest.clean(df)).collect()}
     assert out[0].role == "assistant" and out[0].text == "aaa"
     assert out[1].text == "solo"
-
-
-def test_role_filter(spark):
-    ts = dt.datetime(2026, 1, 1)
-    df = _df(
-        spark,
-        [
-            ("c1", 0, "user", "a", None, ts),
-            ("c1", 1, "tool", "b", "search", ts),
-        ],
-    )
-    out = ingest.ingest(df, roles=("user", "assistant")).collect()
-    assert [r.turn_idx for r in out] == [0]
-
-
-def test_ordered_turns_rank(spark):
-    ts = dt.datetime(2026, 1, 1)
-    df = _df(
-        spark,
-        [("c1", 5, "user", "a", None, ts), ("c1", 2, "user", "b", None, ts)],
-    )
-    out = {r.turn_idx: r.turn_rank for r in ingest.ordered_turns(ingest.ingest(df)).collect()}
-    assert out == {2: 1, 5: 2}

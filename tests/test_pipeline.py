@@ -1,4 +1,4 @@
-"""End-to-end pipeline: P/R vs oracle, permutation/salt invariance,
+"""End-to-end pipeline: P/R vs oracle, permutation/bucket invariance,
 idempotent resume, lineage contents."""
 
 import pytest
@@ -54,28 +54,20 @@ def test_lineage_shape(spark, pipeline_out):
     assert lin_df.filter("stage = 'extract'").count() == 8
 
 
-def test_salt_invariance(spark, small_rows):
-    """K1 losslessness: the salted repartition changes only the physical
-    distribution, never the triple set — identical output at SALT∈{1,8}
-    through the composed operator path.  (The pipeline itself now gets
-    the same spreading effect from fine-grained keys + AQE rebalance;
-    salted_repartition remains the manual K1 operator for conv-hot UDF
-    stages.)"""
-    from mongo2neo_spark.operators import extract, ingest, materialize, skew
-
-    df = spark.createDataFrame(fixtures.turns_to_pandas(small_rows))
-    outs = []
-    for salt in (1, 8):
-        turns = skew.salted_repartition(ingest.ingest(df), 8, salt=salt)
-        ex = extract.extract(turns)
-        ments = extract.mentions(ex)
-        comp = materialize.norm_components(ments)
-        canon = materialize.canonical_names(ments, comp)
-        t = materialize.triples(
-            materialize.resolve_triples(extract.raw_triples(ex), comp, canon)
-        )
-        outs.append({tuple(r) for r in t.collect()})
-    assert outs[0] == outs[1]
+def test_bucket_invariance(spark, small_rows, tmp_path):
+    """K1: the conversation bucket count changes only the layout of the
+    extraction table, never the graph — n_buckets 1 and 8 give identical
+    triples, nodes and edges, and the triples are the oracle's."""
+    inp = _write_input(spark, fixtures.with_duplicates_and_shuffle(small_rows),
+                       str(tmp_path / "in"))
+    one, eight = (
+        run_pipeline(spark, inp, str(tmp_path / f"b{n}"),
+                     PipelineConfig(n_buckets=n, run_id=f"b{n}"), resume=False)
+        for n in (1, 8)
+    )
+    for table in ("triples", "nodes", "edges"):
+        assert _rows(spark, one[table]) == _rows(spark, eight[table]), table
+    assert set(_rows(spark, one["triples"])) == oracle.pipeline_triples(small_rows)
 
 
 def test_nodes_and_edges_consistent(spark, pipeline_out):

@@ -1,0 +1,96 @@
+"""Every module of the package is reached by the imports of the
+pipeline's entry points (the pipeline, the oracle, the fixtures, the
+session factory, the benchmark and the scaling harness) or of the
+operator library listed in LIBRARY_FILES.  Code that none of them
+reaches is deleted, not kept.  A static (ast) walk — no Spark."""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "mongo2neo_spark"
+ENTRY_FILES = [
+    ROOT / PKG / "plans" / "pipeline.py",
+    ROOT / PKG / "oracle.py",
+    ROOT / PKG / "fixtures.py",
+    ROOT / PKG / "session.py",
+    *sorted((ROOT / "perfbench").glob("*.py")),
+    ROOT / "BENCH" / "scaling.py",
+    ROOT / "BENCH" / "run_pipeline_job.py",
+]
+# Document curation, graph analytics, retrieval and ANN operators: not on
+# the transcript->KG path, kept with their own tests (and entry_oracle,
+# their pure-Python reference outputs).  A module joins this list on
+# purpose or not at all.
+LIBRARY_FILES = [
+    ROOT / PKG / "plans" / "curation.py",
+    ROOT / PKG / "operators" / "graph.py",
+    ROOT / PKG / "operators" / "packing.py",
+    ROOT / PKG / "operators" / "joins.py",
+    ROOT / PKG / "operators" / "similarity.py",
+    ROOT / PKG / "operators" / "lm.py",
+    ROOT / PKG / "entry_oracle.py",
+]
+
+
+def _module_name(path: Path):
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[0] != PKG:
+        return None
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imports(path: Path):
+    """(module, names) of every import in the file, at any depth (imports
+    inside functions count), relative imports made absolute."""
+    name = _module_name(path)
+    package = name if path.name == "__init__.py" else (name or "").rpartition(".")[0]
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield alias.name, []
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:
+                base = package.split(".")[: len(package.split(".")) - node.level + 1]
+                mod = ".".join(base + ([mod] if mod else []))
+            yield mod, [alias.name for alias in node.names]
+
+
+def _top_level_names(path: Path):
+    names = set()
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def test_every_package_module_is_reached():
+    modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
+    reached, todo, missing = set(), ENTRY_FILES + LIBRARY_FILES, []
+    while todo:
+        path = todo.pop()
+        if path in reached:
+            continue
+        reached.add(path)
+        for mod, names in _imports(path):
+            parts = mod.split(".")
+            # importing a.b.c runs the packages a and a.b too
+            todo += [modules[m] for m in
+                     (".".join(parts[:i]) for i in range(1, len(parts) + 1))
+                     if m in modules]
+            for n in names:
+                if f"{mod}.{n}" in modules:  # from a.b import submodule
+                    todo.append(modules[f"{mod}.{n}"])
+                elif mod in modules and n not in _top_level_names(modules[mod]):
+                    missing.append(f"{path.relative_to(ROOT)}: {mod}.{n}")
+    assert not missing, f"imports of names that do not exist: {missing}"
+    unreached = sorted(m for m, p in modules.items() if p not in reached)
+    assert not unreached, f"modules no entry point reaches: {unreached}"
