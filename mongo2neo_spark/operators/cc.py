@@ -79,7 +79,10 @@ def connected_components(
         if changed == 0:
             break
     sym.unpersist()
-    return labels.select("id", F.col("label").alias("component"))
+    # every vertex has a label (its own id rides along as the old one);
+    # the coalesce only keeps min()'s nullable result out of the schema,
+    # so every CC branch returns a not-null component for not-null ids
+    return labels.select("id", F.coalesce("label", "id").alias("component"))
 
 
 # ---------------------------------------------------------------------------
@@ -186,7 +189,7 @@ DRIVER_CC_MAX_EDGES = 5_000_000
 def connected_components_auto(
     edges: DataFrame,
     vertices: DataFrame,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
+    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Size-adaptive CC — the AQE-broadcast-threshold idea applied to
     graph canonicalization.
@@ -196,7 +199,11 @@ def connected_components_auto(
     stream.  Below ``driver_max_edges`` it is collected and union-found
     on the driver in one pass (exact same min-id semantics, ~10 driver
     jobs cheaper); above it, the distributed iterative version runs.
+    ``driver_max_edges`` defaults to ``DRIVER_CC_MAX_EDGES``, read at
+    call time.
     """
+    if driver_max_edges is None:
+        driver_max_edges = DRIVER_CC_MAX_EDGES
     edges = edges.persist()
     n_edges = edges.count()
     if n_edges > driver_max_edges:

@@ -23,6 +23,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .. import rules
 from ..functions import hashing
+from ..functions import probe as probe_mod
 from . import cc as cc_mod
 
 
@@ -121,7 +122,6 @@ def driver_link_components(
 
     items = sorted(norm_ids)  # deterministic order
     norms = [n for n, _ in items]
-    id_of = dict(items)
     sigs = hashing.minhash_signatures_batch(
         [rules.char_ngrams(n or "") for n in norms]
     )
@@ -142,8 +142,60 @@ def driver_link_components(
                     a, b = b, a
                 pairs.add((a, b))
 
-    labels = cc_mod.min_labels(
-        (id_of[a], id_of[b]) for a, b in sorted(pairs)
-        if rules.pair_score(a, b) >= threshold
+    id_of = dict(items)
+    linked = (
+        (id_of[a], id_of[b])
+        for a, b in sorted(pairs) if rules.pair_score(a, b) >= threshold
     )
-    return [(n, labels.get(id_of[n], id_of[n])) for n in norms], dropped
+    return _min_id_components(items, linked), dropped
+
+
+def spark_link_components(
+    spark,
+    norm_ids,
+    band_cap: int = hashing.BAND_CAP,
+    threshold: float = rules.LINK_THRESHOLD,
+):
+    """Distributed-LSH venue with the contract of
+    :func:`driver_link_components`: ``(norm, xxhash64-id)`` pairs the
+    driver holds -> (``[(norm, entity_id)]``, ``n_dropped_bands``), or
+    None when more than ``cc.DRIVER_CC_MAX_EDGES`` pairs link — the
+    bound :func:`cc.connected_components_auto` puts on a driver
+    union-find; the caller then stays on the distributed CC path.
+
+    For vocabularies too large to band and score serially: a
+    driver-made norm frame goes through :func:`lsh_bands` ->
+    :func:`candidate_pairs_from_bands` as Spark jobs, only the linked
+    pairs come back (as int64 id pairs, over Arrow), and
+    :func:`cc.min_labels` labels them on the driver — the same min-id
+    components, with no CC rounds and no component join.
+    """
+    items = sorted(norm_ids)
+    frame = spark.createDataFrame(
+        pd.DataFrame({"norm": pd.Series([n for n, _ in items], dtype=object)}),
+        "norm string",
+    )
+    bands = lsh_bands(frame).persist()
+    try:
+        linked = probe_mod.driver_probe(
+            candidate_pairs_from_bands(bands, band_cap, threshold).select(
+                F.xxhash64("a_norm").alias("a"), F.xxhash64("b_norm").alias("b")
+            ),
+            cc_mod.DRIVER_CC_MAX_EDGES, as_pandas=True,
+        )
+        if linked is None:
+            return None
+        dropped = dropped_from_bands(bands, band_cap).count()
+    finally:
+        bands.unpersist()
+    return _min_id_components(
+        items, zip(linked["a"].tolist(), linked["b"].tolist())
+    ), dropped
+
+
+def _min_id_components(items, linked):
+    """Sorted ``(norm, id)`` items and linked ``(id, id)`` pairs ->
+    ``[(norm, entity_id)]``: each norm labelled with the minimum id of its
+    component (:func:`cc.min_labels`), singletons with their own id."""
+    labels = cc_mod.min_labels(linked)
+    return [(n, labels.get(i, i)) for n, i in items]

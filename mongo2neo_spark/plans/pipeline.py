@@ -37,6 +37,16 @@ from ..sources import io as m2nio
 from . import lineage as lin
 
 
+# Vocabularies (mention_stats rows, one per distinct norm) of up to this
+# many rows are held on the driver whichever venue runs LSH: components,
+# canonical names, the norm->entity map and nodes are then driver
+# arithmetic (materialize.driver_graph_tables).  Above it the whole
+# components/canonicalization chain runs as Spark jobs.  A design bound,
+# not a measured capacity: the largest vocabulary a pipeline run held is
+# ~1.5k norms (README "Scale design notes" has the driver-side figures).
+DRIVER_VOCAB_MAX = 1_000_000
+
+
 @dataclass
 class PipelineConfig:
     n_buckets: int = 64          # extraction lineage/resume granularity
@@ -49,13 +59,13 @@ class PipelineConfig:
     # when the text payload is wide relative to the dedup key, measured
     # from a row sample; both strategies produce identical rows)
     dedup_strategy: str = "auto"
-    # linking venue: vocabularies of up to this many mention_stats rows
-    # (one per distinct norm) are linked on the driver
+    # LSH venue: vocabularies of up to this many mention_stats rows (one
+    # per distinct norm) are banded, scored and union-found on the driver
     # (link.driver_link_components — bit-identical, same shared
-    # hashing/rules code) and canonicalized there too
-    # (materialize.driver_graph_tables), instead of paying the distributed
-    # fixed costs (3 UDF passes, CC rounds, canonicalization jobs) on a
-    # vocabulary-sized problem; 0 forces the distributed path
+    # hashing/rules code) instead of paying the Spark fixed costs
+    # (UDF passes, band join) on a vocabulary-sized problem; 0 forces
+    # distributed LSH.  Where the vocabulary itself lives is bounded by
+    # DRIVER_VOCAB_MAX, not by this
     driver_link_max: int = 100_000
     run_id: str = ""
 
@@ -131,9 +141,11 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
         if strategy == "adaptive":
             turns = ingest_mod.dedup_adaptive(raw)
         else:
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            # no explicit partition count: AQE coalesces the exchange by
+            # bytes, so a small input does not pay one Python-UDF task
+            # (a fixed worker cost) per shuffle partition in extraction
             turns = ingest_mod.dedup(
-                raw.repartition(n_part, F.col("conv_id"), F.col("turn_idx"))
+                raw.repartition(F.col("conv_id"), F.col("turn_idx"))
             )
         # ONE write of the combined extraction table (flat mention/triple
         # arrays, one row per turn); mentions/raw_triples are derived
@@ -151,7 +163,8 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
         # right — it coalesces small buckets into few files at sandbox
         # scale AND splits a hot bucket across several write tasks at
         # 100 TB (the salt trick, done by the optimizer from runtime
-        # sizes).  Plain repartition-by-column is never AQE-resized.
+        # sizes).  AQE coalesces a plain repartition-by-column but
+        # never splits it.
         ex = ex.hint("rebalance", "bucket")
         # per-bucket lineage metrics ride the write job via observe() —
         # no second scan of the (largest) table just to count it.
@@ -185,9 +198,22 @@ def _read_extracted(spark, paths) -> DataFrame:
 
 
 def _stage_components(spark, paths, cfg, resume):
-    """Link + canonicalize.  Returns the driver venue's in-memory
-    vocabulary (mention_stats rows, component rows) for the materialize
-    stage, or None when the stage was skipped or ran distributed."""
+    """Link + canonicalize.  Returns the in-memory vocabulary
+    (mention_stats rows, component rows) for the materialize stage, or
+    None when the stage was skipped or the vocabulary stayed on Spark.
+
+    Two decisions, made apart:
+    - where the vocabulary lives: one probe collects the mention_stats
+      rollup if it has at most DRIVER_VOCAB_MAX rows; then the driver
+      holds it whichever venue links, and materialize builds canonical
+      names, the norm->entity map and nodes from it;
+    - where LSH runs: up to ``cfg.driver_link_max`` norms on the driver
+      (link.driver_link_components), above that as Spark jobs over a
+      driver-made norm frame (link.spark_link_components), whose linked
+      pairs go to a driver union-find only up to cc.DRIVER_CC_MAX_EDGES.
+    A vocabulary above DRIVER_VOCAB_MAX, or more linked pairs than that,
+    keeps the all-Spark path (norm_components, then canonicalization in
+    materialize)."""
     stage = "components"
     out_root = paths["lineage"].rsplit("/", 1)[0]
     if resume and lin.completed_keys(spark, out_root, stage):
@@ -195,28 +221,35 @@ def _stage_components(spark, paths, cfg, resume):
     vocab = None
     with lin.StageTimer() as t:
         ments = extract_mod.mentions(_read_extracted(spark, paths))
-        # venue choice: LIMIT max+1 over the vocabulary-sized mention_stats
-        # rollup (one row per norm: kind is a function of the norm).  If it
-        # comes back short, the driver holds the whole vocabulary with its
-        # counts and timestamps: linking (3 UDF passes + CC rounds of fixed
-        # cost) collapses to driver arithmetic over the same shared
-        # functions, and so does canonicalization in the materialize stage
+        # LIMIT max+1 over the vocabulary-sized mention_stats rollup (one
+        # row per norm: kind is a function of the norm).  If it comes back
+        # short, the driver holds the whole vocabulary with its counts and
+        # timestamps
         stats = probe_mod.driver_probe(
             mat_mod.mention_stats(ments).withColumn("id", F.xxhash64("norm")),
-            cfg.driver_link_max, as_pandas=True,
+            DRIVER_VOCAB_MAX, as_pandas=True,
         )
         if stats is not None:
-            norm_ids = stats[["norm", "id"]].drop_duplicates()
-            comp_rows, dropped = link_mod.driver_link_components(
-                zip(norm_ids["norm"].tolist(), norm_ids["id"].tolist()),
-                cfg.band_cap, cfg.threshold,
-            )
+            ids = stats[["norm", "id"]].drop_duplicates()
+            norm_ids = zip(ids["norm"].tolist(), ids["id"].tolist())
+            if 0 < cfg.driver_link_max and len(stats) <= cfg.driver_link_max:
+                # banding, scoring and CC collapse to driver arithmetic
+                # over the same shared hashing/rules functions
+                linked = link_mod.driver_link_components(
+                    norm_ids, cfg.band_cap, cfg.threshold
+                )
+            else:
+                # None: more linked pairs than a driver union-find takes
+                linked = link_mod.spark_link_components(
+                    spark, norm_ids, cfg.band_cap, cfg.threshold
+                )
+                if linked is None:
+                    stats = None
+        if stats is not None:
+            comp_rows, dropped = linked
             comp_pdf = pd.DataFrame(comp_rows, columns=["norm", "entity_id"])
             vocab = (stats, comp_pdf)
             comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
-            # written for resume only; materialize takes comp_pdf from memory
-            obs, comp = lin.observe_table_metrics(comp)
-            m2nio.write_table(comp, paths["components"])
         else:
             # one LSH pass feeds both candidates and the drop audit
             bands = link_mod.lsh_bands(ments).persist()
@@ -227,9 +260,12 @@ def _stage_components(spark, paths, cfg, resume):
             # band key), not a second scan of the extraction table
             comp = mat_mod.norm_components(
                 ments, pairs=pairs, norms=bands.select("norm").distinct()
-            )
-            obs, comp = lin.observe_table_metrics(comp)
-            m2nio.write_table(comp, paths["components"])
+            ).to(schemas.COMPONENT_ROWS)
+        # with the vocabulary on the driver this is written for resume
+        # only: materialize takes comp_pdf from memory
+        obs, comp = lin.observe_table_metrics(comp)
+        m2nio.write_table(comp, paths["components"])
+        if stats is None:
             dropped = link_mod.dropped_from_bands(bands, cfg.band_cap).count()
             bands.unpersist()
     got = obs.get

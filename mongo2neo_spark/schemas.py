@@ -40,12 +40,14 @@ EXTRACTED = T.StructType(
 )
 
 
-# frames the driver builds (pandas -> Arrow LocalTableScan).  Nullable like
-# the Spark path's joins/windows, so both link venues write the same schema
+# frames the driver builds (pandas -> Arrow LocalTableScan).  Nullability
+# as the Spark path's joins/windows produce it, so every venue writes the
+# same schema: a component label is an xxhash64 id, never null (the Spark
+# path's frame goes through DataFrame.to(COMPONENT_ROWS), which keeps it so)
 COMPONENT_ROWS = T.StructType(
     [
         T.StructField("norm", T.StringType(), True),
-        T.StructField("entity_id", T.LongType(), True),
+        T.StructField("entity_id", T.LongType(), False),
     ]
 )
 NODE_ROWS = T.StructType(

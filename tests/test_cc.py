@@ -158,3 +158,28 @@ def test_min_labels_random_graph_vs_union_find():
     for order in (edges, edges[::-1], sorted(edges, key=lambda e: -max(e))):
         labels = min_labels(order)
         assert {x: labels.get(x, x) for x in range(n)} == ref
+
+
+def test_component_not_null_on_every_branch(spark):
+    """With not-null vertex and edge ids (xxhash64 in the pipeline), every
+    CC branch — hash-min, star, and connected_components_auto's driver
+    and distributed venues — returns the same min-id labels in a not-null
+    ``component``, so a components table has one schema whichever
+    branch ran."""
+    from pyspark.sql import functions as F
+
+    from mongo2neo_spark.operators import cc
+
+    v = spark.range(1, 8)  # id long not null; 7 is a singleton
+    e = spark.range(1, 6).filter("id != 4").select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )  # 1-2-3-4 and 5-6
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
+    for name, out in (
+        ("hashmin", cc.connected_components(e, v)),
+        ("star", cc.connected_components_star(e, v)),
+        ("auto_driver", cc.connected_components_auto(e, v)),
+        ("auto_distributed", cc.connected_components_auto(e, v, driver_max_edges=0)),
+    ):
+        assert not out.schema["component"].nullable, name
+        assert {r.id: r.component for r in out.collect()} == want, name

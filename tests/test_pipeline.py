@@ -1,10 +1,15 @@
 """End-to-end pipeline: P/R vs oracle, permutation/bucket invariance,
 idempotent resume, lineage contents."""
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 
 from mongo2neo_spark import fixtures, oracle, schemas
+from mongo2neo_spark.operators import cc
 from mongo2neo_spark.plans import lineage as lin
+from mongo2neo_spark.plans import pipeline
 from mongo2neo_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 
@@ -56,18 +61,24 @@ def test_lineage_shape(spark, pipeline_out):
 
 def test_bucket_invariance(spark, small_rows, tmp_path):
     """K1: the conversation bucket count changes only the layout of the
-    extraction table, never the graph — n_buckets 1 and 8 give identical
-    triples, nodes and edges, and the triples are the oracle's."""
+    extraction table, and the dedup strategy only the plan, never the
+    graph — n_buckets 1 and 8 with the shuffle and the adaptive dedup
+    give identical triples, nodes and edges, and the triples are the
+    oracle's."""
     inp = _write_input(spark, fixtures.with_duplicates_and_shuffle(small_rows),
                        str(tmp_path / "in"))
-    one, eight = (
-        run_pipeline(spark, inp, str(tmp_path / f"b{n}"),
-                     PipelineConfig(n_buckets=n, run_id=f"b{n}"), resume=False)
-        for n in (1, 8)
-    )
-    for table in ("triples", "nodes", "edges"):
-        assert _rows(spark, one[table]) == _rows(spark, eight[table]), table
-    assert set(_rows(spark, one["triples"])) == oracle.pipeline_triples(small_rows)
+    runs = [
+        run_pipeline(spark, inp, str(tmp_path / f"b{n}-{strategy}"),
+                     PipelineConfig(n_buckets=n, dedup_strategy=strategy,
+                                    run_id=f"b{n}-{strategy}"),
+                     resume=False)
+        for n in (1, 8) for strategy in ("shuffle", "adaptive")
+    ]
+    first = runs[0]
+    for paths in runs[1:]:
+        for table in ("triples", "nodes", "edges"):
+            assert _rows(spark, first[table]) == _rows(spark, paths[table]), table
+    assert set(_rows(spark, first["triples"])) == oracle.pipeline_triples(small_rows)
 
 
 def test_nodes_and_edges_consistent(spark, pipeline_out):
@@ -84,6 +95,11 @@ def _rows(spark, path):
     return sorted(map(tuple, spark.read.parquet(path).collect()))
 
 
+def _schema(path):
+    """Schema of a written table, Spark's row metadata included."""
+    return pq.read_schema(next(glob.iglob(f"{path}/*.parquet")))
+
+
 def _write_input(spark, rows, path):
     spark.createDataFrame(
         fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
@@ -91,30 +107,46 @@ def _write_input(spark, rows, path):
     return path
 
 
-def _run_both_venues(spark, inp, tmp_path):
-    """(driver-venue paths, distributed-venue paths) of fresh runs."""
-    return tuple(
-        run_pipeline(
-            spark, inp, str(tmp_path / name),
-            PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max),
-            resume=False,
-        )
-        for name, link_max in (("drv", 100_000), ("dist", 0))
+def _run(spark, inp, tmp_path, name, link_max):
+    """Paths of a fresh run with ``driver_link_max=link_max``."""
+    return run_pipeline(
+        spark, inp, str(tmp_path / name),
+        PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max),
+        resume=False,
     )
 
 
-def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path):
-    """The size-adaptive driver venue (linking, canonical names, nodes on
-    the driver) and the distributed LSH/CC path must produce identical
-    components, nodes (stats, timestamps, majority kind), edges (weight,
-    provenance), triples and lineage drop audits — same shared
+def _run_venues(spark, inp, tmp_path, monkeypatch):
+    """Paths of fresh runs on the three venues: driver link, distributed
+    LSH with the vocabulary on the driver, and fully distributed (the
+    vocabulary over DRIVER_VOCAB_MAX, so canonicalization runs on
+    Spark)."""
+    drv = _run(spark, inp, tmp_path, "drv", 100_000)
+    lsh = _run(spark, inp, tmp_path, "lsh", 0)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
+        dist = _run(spark, inp, tmp_path, "dist", 0)
+    return drv, lsh, dist
+
+
+GRAPH_TABLES = ("components", "nodes", "edges", "triples")
+
+
+def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
+                                               monkeypatch):
+    """The size-adaptive venues (linking, canonical names, nodes on the
+    driver; LSH on Spark with the vocabulary on the driver; everything on
+    Spark; and distributed LSH with more linked pairs than a driver
+    union-find takes, which hands over to the all-Spark path and its
+    distributed CC rounds) must produce identical components, nodes
+    (stats, timestamps, majority kind), edges (weight, provenance),
+    triples, parquet schemas and lineage drop audits — same shared
     hashing/rules code, different venue only."""
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
-    pa, pb = _run_both_venues(spark, inp, tmp_path)
-    for table in ("components", "nodes", "edges", "triples"):
-        a, b = _rows(spark, pa[table]), _rows(spark, pb[table])
-        assert a == b, table
-        assert len(a) > 0, table
+    venues = list(_run_venues(spark, inp, tmp_path, monkeypatch))
+    with monkeypatch.context() as m:
+        m.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
+        venues.append(_run(spark, inp, tmp_path, "dist_cc", 0))
 
     def dropped(paths):
         return [
@@ -123,7 +155,16 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path):
             .filter("stage = 'components'").collect()
         ]
 
-    assert dropped(pa) == dropped(pb) and len(dropped(pa)) == 1
+    first = venues[0]
+    for table in GRAPH_TABLES:
+        assert len(_rows(spark, first[table])) > 0, table
+    assert len(dropped(first)) == 1
+    for paths in venues[1:]:
+        for table in GRAPH_TABLES:
+            assert _rows(spark, first[table]) == _rows(spark, paths[table]), table
+            assert _schema(first[table]).equals(
+                _schema(paths[table]), check_metadata=True), table
+        assert dropped(first) == dropped(paths)
 
 
 def test_driver_graph_tables_match_spark(spark):
@@ -179,37 +220,43 @@ def _no_mention_rows(rows):
 
 
 @pytest.mark.parametrize("case", ["no_mentions", "all_duplicates"])
-def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case):
+def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case,
+                                      monkeypatch):
     """Input without a single mention, and input where every turn comes
-    twice, give the oracle's triples on both link venues."""
+    twice, give the oracle's triples on every venue."""
     rows = (_no_mention_rows(small_rows) if case == "no_mentions"
             else small_rows + small_rows)
     inp = _write_input(spark, rows, str(tmp_path / "in"))
     want = oracle.pipeline_triples(rows)
     assert (len(want) == 0) == (case == "no_mentions")
-    for paths in _run_both_venues(spark, inp, tmp_path):
+    for paths in _run_venues(spark, inp, tmp_path, monkeypatch):
         assert set(_rows(spark, paths["triples"])) == want
         if case == "no_mentions":
             for table in ("components", "nodes", "edges"):
                 assert _rows(spark, paths[table]) == [], table
 
 
-def test_empty_input_both_venues(spark, tmp_path):
+def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
     """A 0-row transcript table: extraction writes no data files, and
-    every later table comes out empty instead of failing to read back."""
+    every later table comes out empty instead of failing to read back,
+    on every venue."""
     inp = _write_input(spark, [], str(tmp_path / "in"))
-    for paths in _run_both_venues(spark, inp, tmp_path):
-        for table in ("components", "nodes", "edges", "triples"):
+    for paths in _run_venues(spark, inp, tmp_path, monkeypatch):
+        for table in GRAPH_TABLES:
             assert _rows(spark, paths[table]) == [], table
 
 
-# Spark jobs of one fresh run on the small fixture: 17 since the driver
-# venue builds canonical names and nodes, the driver-built frames are
-# Arrow local tables and the read-backs declare their schemas (34 before)
-MAX_FRESH_RUN_JOBS = 17
+# Spark jobs of one fresh run on the small fixture, per LSH venue: 17 on
+# the driver link venue since canonical names and nodes are driver-built,
+# the driver-built frames are Arrow local tables and the read-backs
+# declare their schemas (34 before); 26 on the distributed-LSH venue
+# since the vocabulary stays on the driver there too (44 before)
+MAX_FRESH_RUN_JOBS = {100_000: 17, 0: 26}
 
 
-def test_fresh_run_job_count(spark, small_rows, tmp_path):
+@pytest.mark.parametrize("driver_link_max", sorted(MAX_FRESH_RUN_JOBS),
+                         ids=lambda n: "driver_link" if n else "distributed_lsh")
+def test_fresh_run_job_count(spark, small_rows, tmp_path, driver_link_max):
     """Fixed cost guard: a read-back or an inferring read that comes back
     shows up here as extra Spark jobs."""
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
@@ -218,12 +265,14 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path):
     sc.setJobGroup(group, "fresh pipeline run")
     try:
         run_pipeline(spark, inp, str(tmp_path / "out"),
-                     PipelineConfig(n_buckets=4, run_id="jobs"), resume=False)
+                     PipelineConfig(n_buckets=4, run_id="jobs",
+                                    driver_link_max=driver_link_max),
+                     resume=False)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS, n_jobs
+    assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[driver_link_max], n_jobs
 
 
 def test_read_lineage_raises_on_corrupt_table(spark, tmp_path):
