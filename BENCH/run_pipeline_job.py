@@ -29,6 +29,9 @@ def main() -> None:
     builder = SparkSession.builder.appName("m2n-pipeline-job")
     for k, v in DEFAULT_CONFS.items():
         builder = builder.config(k, v)
+    # --py-files reach the executors' Python path per task, after their
+    # worker daemon has started, so the package daemon is not importable
+    builder = builder.config("spark.python.daemon.module", "pyspark.daemon")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     # scans must be at least as wide as the cluster: the default 128MB

@@ -19,6 +19,11 @@ DEFAULT_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     "spark.sql.execution.pythonUDF.arrow.enabled": "true",
+    # fork the Python workers from a daemon that has compiled pyspark and
+    # the UDF modules loaded, and no archive on its path that the workers
+    # do not import from (worker_daemon.py); the module must be importable
+    # when the daemon starts
+    "spark.python.daemon.module": "mongo2neo_spark.worker_daemon",
     # AQE: runtime shuffle coalescing + skew-join splitting (K2).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

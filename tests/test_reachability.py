@@ -1,8 +1,9 @@
 """Every module of the package is reached by the imports of the
 pipeline's entry points (the pipeline, the oracle, the fixtures, the
-session factory, the benchmark and the scaling harness) or of the
-operator library listed in LIBRARY_FILES.  Code that none of them
-reaches is deleted, not kept.  A static (ast) walk — no Spark."""
+session factory, the Python workers' daemon, the benchmark and the
+scaling harness) or of the operator library listed in LIBRARY_FILES.
+Code that none of them reaches is deleted, not kept.  A static (ast)
+walk — no Spark."""
 
 import ast
 from pathlib import Path
@@ -14,6 +15,9 @@ ENTRY_FILES = [
     ROOT / PKG / "oracle.py",
     ROOT / PKG / "fixtures.py",
     ROOT / PKG / "session.py",
+    # the Python workers' entry point: session.DEFAULT_CONFS names it in
+    # spark.python.daemon.module, a conf string rather than an import
+    ROOT / PKG / "worker_daemon.py",
     *sorted((ROOT / "perfbench").glob("*.py")),
     ROOT / "BENCH" / "scaling.py",
     ROOT / "BENCH" / "run_pipeline_job.py",
