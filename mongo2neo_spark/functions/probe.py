@@ -1,10 +1,11 @@
 """Driver-venue probe: the one shared primitive behind every
 size-adaptive execution-venue choice in the engine.
 
-Pattern (used by plans.pipeline's driver linking and both ANN query
-venues in operators.similarity): some stage is a fixed-cost distributed
-job (Python UDF passes, CC rounds) whose input is USUALLY tiny — a norm
-vocabulary, a query set.  Instead of paying the fixed cost, run ONE
+Pattern (used by plans.pipeline's vocabulary probe and by
+operators.link.spark_link_components' linked-pair collect): some stage
+is a fixed-cost distributed job (Python UDF passes, CC rounds) whose
+input is USUALLY tiny — a norm vocabulary, a linked-pair set.  Instead
+of paying the fixed cost, run ONE
 ``LIMIT max+1`` job; if it comes back short we already hold the
 complete input and the stage collapses to driver arithmetic over the
 same shared functions (bit-identical by construction, parity

@@ -8,7 +8,9 @@ and its neighbors; stop when no label changes.  Converges in O(graph
 diameter) rounds — alias-cluster components are tiny (stars around a
 canonical surface form), so diameter is small; a checkpoint every round
 truncates the logical plan so analysis cost stays O(1) per round
-(SURVEY.md §4 'iterative-plan lineage blowup').
+(SURVEY.md §4 'iterative-plan lineage blowup').  A graph still changing
+after HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK rounds goes to large-star/
+small-star, whose round count does not grow with the diameter.
 
 Determinism: min() over int64 labels has a unique fixed point — the
 component id is always the minimum vertex id in the component,
@@ -21,11 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_ITERATIONS = 50
+HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK = 8
 
 
 def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iterations: int = MAX_ITERATIONS,
-    star_fallback_after: int | None = None
+    edges: DataFrame, vertices: DataFrame, max_iterations: int = MAX_ITERATIONS
 ) -> DataFrame:
     """edges(src:long, dst:long) + vertices(id:long) -> (id, component).
 
@@ -34,8 +36,10 @@ def connected_components(
 
     Hash-min propagation needs O(diameter) rounds — right for the
     shallow alias-star graphs linking produces, degenerate on long
-    chains.  ``star_fallback_after=k`` switches to the O(log² n)
-    large-star/small-star algorithm if round ``k`` still sees changes.
+    chains.  If round ``HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK`` still sees
+    changes, the graph goes to the O(log² n) large-star/small-star
+    algorithm, which gets ``max_iterations`` rounds and raises when they
+    run out — labels are never returned unconverged.
     """
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -46,13 +50,7 @@ def connected_components(
     labels = _materialize(labels)
     handle = labels  # the persisted DataFrame backing `labels`
 
-    for it in range(max_iterations):
-        if star_fallback_after is not None and it >= star_fallback_after:
-            # diameter apparently large: hand off to the round-bounded
-            # star algorithm on the original edges
-            handle.unpersist()
-            sym.unpersist()
-            return connected_components_star(edges, vertices, max_iterations)
+    for _ in range(HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK):
         # neighbor labels: for each edge src->dst, src's label flows to dst.
         # The old label rides along (is_old tag) so one aggregation yields
         # BOTH the new min-label and the change indicator — a single
@@ -78,6 +76,12 @@ def connected_components(
         labels = agg.select("id", "label")
         if changed == 0:
             break
+    else:
+        # diameter apparently large: hand off to the round-bounded star
+        # algorithm on the original edges
+        handle.unpersist()
+        sym.unpersist()
+        return connected_components_star(edges, vertices, max_iterations)
     sym.unpersist()
     # every vertex has a label (its own id rides along as the old one);
     # the coalesce only keeps min()'s nullable result out of the schema,
@@ -182,7 +186,6 @@ def connected_components_star(
     return out
 
 
-HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK = 8
 DRIVER_CC_MAX_EDGES = 5_000_000
 
 
@@ -207,10 +210,7 @@ def connected_components_auto(
     edges = edges.persist()
     n_edges = edges.count()
     if n_edges > driver_max_edges:
-        out = connected_components(
-            edges, vertices,
-            star_fallback_after=HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK,
-        )
+        out = connected_components(edges, vertices)
         edges.unpersist()
         return out
     # Arrow transfer (toPandas), not collect(): two numpy int64 columns

@@ -585,8 +585,7 @@ def simhash_dropped_from_blocks(
 ) -> DataFrame:
     """K3 audit: (block_key, bs) buckets whose size exceeded the cap —
     the same logged-never-silent drop rule as every sibling blocking
-    path (link.dropped_from_bands, the minhash band cap, the embedding
-    bucket cap)."""
+    path (link.dropped_from_bands, the minhash band cap)."""
     return (
         bx.select("block_key", "bs")
         .dropDuplicates(["block_key"])

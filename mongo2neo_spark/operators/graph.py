@@ -205,7 +205,7 @@ def triangle_counts(
     triangle SET (and therefore each node's count) is identical under
     any orientation, which is what the id-ordered SQL oracle checks.
 
-    Venue choice (size-adaptive, same discipline as the ANN query
+    Venue choice (size-adaptive, same discipline as the pipeline's link
     venues).  ``broadcast_max_edges`` expresses a per-relation broadcast
     BYTE budget (``broadcast_max_edges * BROADCAST_EDGE_ROW_BYTES``,
     256 MB at the default — see BROADCAST_BUDGET_BYTES):

@@ -636,44 +636,3 @@ WHERE ({matched}) > 0
 ORDER BY score_micro DESC, {id_col} ASC
 LIMIT {k}
 """
-
-
-def hybrid_rrf_sql(
-    bm25_subquery: str,
-    cosine_subquery: str,
-    id_col: str = "doc_id",
-    k_rrf: int = 60,
-    k: int = 10,
-) -> str:
-    """DuckDB mirror of :func:`rrf_fuse` over two ranked subqueries.
-
-    ``bm25_subquery`` must yield (id_col, score_micro) rows (rank is
-    derived here with the same (score desc, id asc) tie-break the Spark
-    entry uses); ``cosine_subquery`` must yield (id_col, rank).  Each
-    may carry its own WITH clause — standard SQL allows a WITH inside a
-    parenthesized subquery.
-    """
-    contrib = (
-        "COALESCE(CAST(round(1000000.0 / ({kr} + CAST({{r}} AS DOUBLE)))"
-        " AS BIGINT), 0)"
-    ).format(kr=float(k_rrf))
-    ca = contrib.format(r="bm.rank_a")
-    cb = contrib.format(r="cs.rank_b")
-    return f"""
-WITH bm AS (
-  SELECT {id_col},
-         ROW_NUMBER() OVER (ORDER BY score_micro DESC, {id_col} ASC)
-           AS rank_a
-  FROM ({bm25_subquery})
-), cs AS (
-  SELECT {id_col}, CAST(rank AS BIGINT) AS rank_b
-  FROM ({cosine_subquery})
-)
-SELECT COALESCE(bm.{id_col}, cs.{id_col}) AS {id_col},
-       {ca} + {cb} AS rrf_micro,
-       bm.rank_a AS rank_a,
-       cs.rank_b AS rank_b
-FROM bm FULL OUTER JOIN cs ON bm.{id_col} = cs.{id_col}
-ORDER BY rrf_micro DESC, {id_col} ASC
-LIMIT {k}
-"""

@@ -42,10 +42,6 @@ DEFAULT_CONFS = {
     # zstd for parquet — both trade cheap CPU for scarce IO bandwidth
     "spark.rdd.compress": "true",
     "spark.sql.parquet.compression.codec": "zstd",
-    # ANN probes push the probed bucket/cell set down as an IN filter
-    # (hundreds of keys); the parquet default stops converting IN to a
-    # row-group-prunable predicate above 10 values
-    "spark.sql.parquet.pushdown.inFilterThreshold": "2048",
     # ObjectHashAggregate (collect_set/collect_list) falls back to
     # sort-based aggregation after 128 in-memory keys — sized for
     # huge-object aggs, pathological for the bounded small-set aggs

@@ -94,18 +94,23 @@ def test_star_algorithm_random_vs_union_find(spark):
     assert _cc_star(spark, edges, list(range(n))) == ref
 
 
-def test_hashmin_falls_back_to_star_on_chain(spark):
-    """connected_components with star_fallback_after must hand a
-    high-diameter graph to the star algorithm and still return min-id
-    labels."""
-    n = 200
-    got = _cc(
-        spark,
-        [(i, i + 1) for i in range(n - 1)],
-        list(range(n)),
-        star_fallback_after=3,
-    )
+def test_hashmin_falls_back_to_star_on_chain(spark, monkeypatch):
+    """A chain longer than HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK rounds of
+    hash-min can cover is handed to the star algorithm, which returns
+    min-id labels — never the unconverged hash-min labels."""
+    from mongo2neo_spark.operators import cc
+
+    calls, star = [], cc.connected_components_star
+
+    def spy(*args):
+        calls.append(args)
+        return star(*args)
+
+    monkeypatch.setattr(cc, "connected_components_star", spy)
+    n = 12
+    got = _cc(spark, [(i, i + 1) for i in range(n - 1)], list(range(n)))
     assert got == {i: 0 for i in range(n)}
+    assert len(calls) == 1
 
 
 def test_random_graph_vs_union_find(spark):

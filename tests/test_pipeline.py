@@ -246,19 +246,25 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
             assert _rows(spark, paths[table]) == [], table
 
 
-# Spark jobs of one fresh run on the small fixture, per LSH venue: 17 on
-# the driver link venue since canonical names and nodes are driver-built,
-# the driver-built frames are Arrow local tables and the read-backs
-# declare their schemas (34 before); 26 on the distributed-LSH venue
-# since the vocabulary stays on the driver there too (44 before)
-MAX_FRESH_RUN_JOBS = {100_000: 17, 0: 26}
+# Spark jobs of one fresh run on the small fixture, per venue: 17 on the
+# driver link venue since canonical names and nodes are driver-built, the
+# driver-built frames are Arrow local tables and the read-backs declare
+# their schemas (34 before); 26 on the distributed-LSH venue since the
+# vocabulary stays on the driver there too (44 before); 59 on the
+# all-Spark chain with distributed CC rounds (DRIVER_VOCAB_MAX and
+# DRIVER_CC_MAX_EDGES patched to 0)
+MAX_FRESH_RUN_JOBS = {"driver_link": 17, "distributed_lsh": 26,
+                      "all_spark_cc": 59}
 
 
-@pytest.mark.parametrize("driver_link_max", sorted(MAX_FRESH_RUN_JOBS),
-                         ids=lambda n: "driver_link" if n else "distributed_lsh")
-def test_fresh_run_job_count(spark, small_rows, tmp_path, driver_link_max):
+@pytest.mark.parametrize("venue", list(MAX_FRESH_RUN_JOBS))
+def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     """Fixed cost guard: a read-back or an inferring read that comes back
     shows up here as extra Spark jobs."""
+    if venue == "all_spark_cc":
+        monkeypatch.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
+    driver_link_max = 100_000 if venue == "driver_link" else 0
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
     sc = spark.sparkContext
     group = f"job-count-{tmp_path.name}"
@@ -272,7 +278,7 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, driver_link_max):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[driver_link_max], n_jobs
+    assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[venue], n_jobs
 
 
 def test_read_lineage_raises_on_corrupt_table(spark, tmp_path):

@@ -1,9 +1,10 @@
 """Every module of the package is reached by the imports of the
 pipeline's entry points (the pipeline, the oracle, the fixtures, the
 session factory, the Python workers' daemon, the benchmark and the
-scaling harness) or of the operator library listed in LIBRARY_FILES.
-Code that none of them reaches is deleted, not kept.  A static (ast)
-walk — no Spark."""
+scaling harness) or of the operator library listed in LIBRARY_FILES,
+and every package module or name those files and the tests import
+exists.  Code that none of them reaches is deleted, not kept.  A static
+(ast) walk — no Spark."""
 
 import ast
 from pathlib import Path
@@ -22,8 +23,8 @@ ENTRY_FILES = [
     ROOT / "BENCH" / "scaling.py",
     ROOT / "BENCH" / "run_pipeline_job.py",
 ]
-# Document curation, graph analytics, retrieval and ANN operators: not on
-# the transcript->KG path, kept with their own tests (and entry_oracle,
+# Document curation, graph analytics, joins and retrieval operators: not
+# on the transcript->KG path, kept with their own tests (and entry_oracle,
 # their pure-Python reference outputs).  A module joins this list on
 # purpose or not at all.
 LIBRARY_FILES = [
@@ -31,8 +32,7 @@ LIBRARY_FILES = [
     ROOT / PKG / "operators" / "graph.py",
     ROOT / PKG / "operators" / "packing.py",
     ROOT / PKG / "operators" / "joins.py",
-    ROOT / PKG / "operators" / "similarity.py",
-    ROOT / PKG / "operators" / "lm.py",
+    ROOT / PKG / "operators" / "retrieval.py",
     ROOT / PKG / "entry_oracle.py",
 ]
 
@@ -76,6 +76,22 @@ def _top_level_names(path: Path):
     return names
 
 
+def _missing_names(path: Path, modules: dict):
+    """Imports in ``path`` of package modules, or of names in them, that
+    do not exist."""
+    missing = []
+    for mod, names in _imports(path):
+        if mod.split(".")[0] != PKG:
+            continue
+        if mod not in modules:
+            missing.append(f"{path.relative_to(ROOT)}: {mod}")
+            continue
+        missing += [f"{path.relative_to(ROOT)}: {mod}.{n}" for n in names
+                    if f"{mod}.{n}" not in modules
+                    and n not in _top_level_names(modules[mod])]
+    return missing
+
+
 def test_every_package_module_is_reached():
     modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
     reached, todo, missing = set(), ENTRY_FILES + LIBRARY_FILES, []
@@ -84,17 +100,20 @@ def test_every_package_module_is_reached():
         if path in reached:
             continue
         reached.add(path)
+        missing += _missing_names(path, modules)
         for mod, names in _imports(path):
             parts = mod.split(".")
             # importing a.b.c runs the packages a and a.b too
             todo += [modules[m] for m in
                      (".".join(parts[:i]) for i in range(1, len(parts) + 1))
                      if m in modules]
-            for n in names:
-                if f"{mod}.{n}" in modules:  # from a.b import submodule
-                    todo.append(modules[f"{mod}.{n}"])
-                elif mod in modules and n not in _top_level_names(modules[mod]):
-                    missing.append(f"{path.relative_to(ROOT)}: {mod}.{n}")
+            # from a.b import submodule
+            todo += [modules[f"{mod}.{n}"] for n in names
+                     if f"{mod}.{n}" in modules]
+    # the tests' imports are checked too, but reach nothing: a module only
+    # its tests import is dead code
+    for path in sorted((ROOT / "tests").glob("*.py")):
+        missing += _missing_names(path, modules)
     assert not missing, f"imports of names that do not exist: {missing}"
     unreached = sorted(m for m, p in modules.items() if p not in reached)
     assert not unreached, f"modules no entry point reaches: {unreached}"

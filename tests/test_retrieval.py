@@ -485,80 +485,3 @@ class TestBM25QueryValidation:
         assert "x = 'spark'" in sql and "x = 's'" in sql
         assert "x = 'join'" in sql
         assert "Spark" not in sql
-
-
-class TestUnigramLM:
-    DOCS = [
-        (1, "the cat sat on the mat"),
-        (2, "the dog"),
-        (3, "cat cat cat"),
-        (4, ""),
-        (5, None),
-    ]
-
-    @staticmethod
-    def _py_unigram(docs):
-        import math
-        import re
-        from collections import Counter
-
-        toks = {
-            i: [t for t in re.split(r"[^a-z0-9]+", (txt or "").lower()) if t]
-            for i, txt in docs
-        }
-        vocab = Counter(t for v in toks.values() for t in v)
-        total = sum(vocab.values())
-        logp = {
-            t: int(round(math.log(c / total) * 1_000_000.0))
-            for t, c in vocab.items()
-        }
-        return {
-            i: (len(v), sum(logp[t] for t in v))
-            for i, v in toks.items()
-            if v
-        }
-
-    def test_matches_python_reference(self, spark):
-        from mongo2neo_spark.operators.lm import unigram_logprob
-
-        df = spark.createDataFrame(self.DOCS, "doc_id bigint, text string")
-        got = {
-            r.doc_id: (r.n_tokens, r.sum_logp_micro)
-            for r in unigram_logprob(df).collect()
-        }
-        assert got == self._py_unigram(self.DOCS)
-        assert 4 not in got and 5 not in got  # token-less docs drop
-
-    def test_broadcast_off_same_answer(self, spark):
-        """The sort-merge fallback venue must be answer-identical."""
-        from mongo2neo_spark.operators.lm import unigram_logprob
-
-        df = spark.createDataFrame(self.DOCS, "doc_id bigint, text string")
-        a = {tuple(r) for r in unigram_logprob(df).collect()}
-        b = {
-            tuple(r)
-            for r in unigram_logprob(df, broadcast_vocab=False).collect()
-        }
-        assert a == b
-
-    def test_sql_mirror_agrees(self, spark):
-        duckdb = pytest.importorskip("duckdb")
-        import pandas as pd
-
-        from mongo2neo_spark.operators.lm import (
-            unigram_logprob,
-            unigram_logprob_sql,
-        )
-
-        con = duckdb.connect()
-        con.register(
-            "documents",
-            pd.DataFrame(self.DOCS, columns=["doc_id", "text"]),
-        )
-        want = {
-            tuple(r)
-            for r in con.sql(unigram_logprob_sql("documents")).fetchall()
-        }
-        df = spark.createDataFrame(self.DOCS, "doc_id bigint, text string")
-        got = {tuple(r) for r in unigram_logprob(df).collect()}
-        assert got == want
