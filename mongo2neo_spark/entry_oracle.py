@@ -1,10 +1,10 @@
-"""Pure-Python reference outputs for the document-curation and graph
-operators (operators.dedup/graph/packing/text, plans.curation).
+"""Pure-Python reference outputs for the document-curation operators
+(operators.dedup/packing/text, plans.curation).
 
 Those operators are deterministic but not sanely SQL-expressible
-(MinHash-LSH clustering, SimHash, k-core peeling, bin packing).  For
-each, the *specification implementation* — simple pure-Python loops
-sharing ``functions.hashing`` with nothing Spark about them (the same
+(MinHash-LSH clustering, SimHash, bin packing).  For each, the
+*specification implementation* — simple pure-Python loops sharing
+``functions.hashing`` with nothing Spark about them (the same
 parity-by-construction approach as ``mongo2neo_spark.oracle``) —
 computes the expected rows driver-side, and the operator's tests compare
 the Spark result to them row for row.
@@ -176,88 +176,6 @@ def curation_survivor_rows(
     for i, c in comp:
         survivors[c] = min(survivors.get(c, i), i)
     return sorted(survivors.values())
-
-
-
-def _read_lineitem_pairs(sf_dir: str | None = None):
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        f"{sf_dir or ORACLE_SF_DIR}/lineitem.parquet",
-        columns=["l_orderkey", "l_partkey"],
-    )
-    return t["l_orderkey"].to_pylist(), t["l_partkey"].to_pylist()
-
-
-
-def part_cooccurrence(sf_dir: str | None = None, min_weight: int = 1):
-    """{(s1, s2): weight} with s1 < s2 — pure-Python spec of
-    ``operators.graph.cooccurrence_edges`` on (l_orderkey, l_partkey)."""
-    orders, parts = _read_lineitem_pairs(sf_dir)
-    groups: defaultdict = defaultdict(set)
-    for o, p in zip(orders, parts):
-        groups[o].add(p)
-    w: defaultdict = defaultdict(int)
-    for items in groups.values():
-        s = sorted(items)
-        for i in range(len(s)):
-            for j in range(i + 1, len(s)):
-                w[(s[i], s[j])] += 1
-    return {k: v for k, v in w.items() if v >= min_weight}
-
-
-
-def pagerank_rows(
-    sf_dir: str | None = None,
-    min_weight: int = 2,
-    iters: int = 10,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 10**12,
-) -> List[tuple]:
-    """Integer-exact PageRank replica of ``operators.graph.
-    pagerank_integer`` — bigint micro-unit ranks with floor division,
-    so summation order cannot perturb the result on either side."""
-    edges = part_cooccurrence(sf_dir, min_weight)
-    adj: defaultdict = defaultdict(list)
-    for (a, b) in edges:
-        adj[a].append(b)
-        adj[b].append(a)
-    nodes = sorted(adj)
-    n = len(nodes)
-    base = ((damping_den - damping_num) * scale) // (damping_den * n)
-    rank = {u: scale // n for u in nodes}
-    for _ in range(iters):
-        incoming = {u: 0 for u in nodes}
-        for u in nodes:
-            c = (damping_num * rank[u]) // (damping_den * len(adj[u]))
-            for v in adj[u]:
-                incoming[v] += c
-        rank = {u: base + incoming[u] for u in nodes}
-    return [(int(u), int(rank[u])) for u in nodes]
-
-
-
-def kcore_rows(
-    sf_dir: str | None = None, k: int = 3, min_weight: int = 2
-) -> List[tuple]:
-    """Peeling replica of ``operators.graph.k_core`` (the k-core is
-    unique, so any peeling order yields the same node set/degrees)."""
-    edges = part_cooccurrence(sf_dir, min_weight)
-    adj: defaultdict = defaultdict(set)
-    for (a, b) in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    changed = True
-    while changed:
-        changed = False
-        for u in list(adj):
-            if len(adj[u]) < k:
-                for v in adj[u]:
-                    adj[v].discard(u)
-                del adj[u]
-                changed = True
-    return sorted((int(u), len(vs)) for u, vs in adj.items())
 
 
 

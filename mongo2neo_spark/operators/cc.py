@@ -26,9 +26,7 @@ MAX_ITERATIONS = 50
 HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK = 8
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iterations: int = MAX_ITERATIONS
-) -> DataFrame:
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """edges(src:long, dst:long) + vertices(id:long) -> (id, component).
 
     ``vertices`` must contain every id in ``edges`` (singletons allowed —
@@ -38,7 +36,7 @@ def connected_components(
     shallow alias-star graphs linking produces, degenerate on long
     chains.  If round ``HASHMIN_MAX_ROUNDS_BEFORE_FALLBACK`` still sees
     changes, the graph goes to the O(log² n) large-star/small-star
-    algorithm, which gets ``max_iterations`` rounds and raises when they
+    algorithm, which gets ``MAX_ITERATIONS`` rounds and raises when they
     run out — labels are never returned unconverged.
     """
     sym = edges.select("src", "dst").unionByName(
@@ -81,7 +79,7 @@ def connected_components(
         # algorithm on the original edges
         handle.unpersist()
         sym.unpersist()
-        return connected_components_star(edges, vertices, max_iterations)
+        return connected_components_star(edges, vertices)
     sym.unpersist()
     # every vertex has a label (its own id rides along as the old one);
     # the coalesce only keeps min()'s nullable result out of the schema,
@@ -130,9 +128,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_iterations: int = MAX_ITERATIONS
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Large-star/small-star CC (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SOCC'14 — public algorithm): alternating
     star contractions converge in O(log² n) rounds REGARDLESS of graph
@@ -141,13 +137,15 @@ def connected_components_star(
     alias-star graphs entity linking actually produces.
 
     Same contract as :func:`connected_components`: min-id component
-    labels, singletons keep their own id.
+    labels, singletons keep their own id.  Raises when the edge set has
+    not reached a fixed point within ``MAX_ITERATIONS`` rounds (read at
+    call time).
     """
     cur = _materialize(_canon(edges))
     handle = cur
     prev_sig = None
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         nxt = _materialize(_canon(_small_star(_large_star(cur))))
         row = nxt.agg(
             F.count("*").alias("n"),
@@ -174,8 +172,8 @@ def connected_components_star(
     if not converged:
         raise RuntimeError(
             f"connected_components_star: edge set did not reach a fixed "
-            f"point within {max_iterations} rounds — raise max_iterations "
-            f"(graph needs O(log^2 n) rounds)"
+            f"point within {MAX_ITERATIONS} rounds (the graph needs "
+            f"O(log^2 n) rounds; raise cc.MAX_ITERATIONS)"
         )
     # converged star state: every edge is (child, root) with root < child
     mapping = cur.groupBy("src").agg(F.min("dst").alias("component"))
@@ -189,27 +187,20 @@ def connected_components_star(
 DRIVER_CC_MAX_EDGES = 5_000_000
 
 
-def connected_components_auto(
-    edges: DataFrame,
-    vertices: DataFrame,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
+def connected_components_auto(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Size-adaptive CC — the AQE-broadcast-threshold idea applied to
     graph canonicalization.
 
     The mention graph's edge set is *vocabulary* metadata (distinct
     surface-form pairs), orders of magnitude smaller than the mention
-    stream.  Below ``driver_max_edges`` it is collected and union-found
-    on the driver in one pass (exact same min-id semantics, ~10 driver
-    jobs cheaper); above it, the distributed iterative version runs.
-    ``driver_max_edges`` defaults to ``DRIVER_CC_MAX_EDGES``, read at
-    call time.
+    stream.  Up to ``DRIVER_CC_MAX_EDGES`` edges (read at call time) it
+    is collected and union-found on the driver in one pass (exact same
+    min-id semantics, ~10 driver jobs cheaper); above it, the distributed
+    iterative version runs.
     """
-    if driver_max_edges is None:
-        driver_max_edges = DRIVER_CC_MAX_EDGES
     edges = edges.persist()
     n_edges = edges.count()
-    if n_edges > driver_max_edges:
+    if n_edges > DRIVER_CC_MAX_EDGES:
         out = connected_components(edges, vertices)
         edges.unpersist()
         return out

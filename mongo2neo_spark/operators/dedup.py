@@ -671,8 +671,7 @@ def _window_fps_udf(k: int):
 
 # hot-fp broadcast budget for the substring-dedup candidate recovery:
 # fp-only rows, ~32 B each in a broadcast HashedRelation — 8M fps keeps
-# the relation within the engine-wide ~256 MB per-relation envelope
-# (operators.graph.BROADCAST_BUDGET_BYTES discipline)
+# the relation within a ~256 MB per-relation broadcast budget
 HOT_FP_BROADCAST_MAX = 8_000_000
 
 

@@ -20,8 +20,9 @@ def clean(df: DataFrame) -> DataFrame:
     """P1 prune/cast + P2 validity filter (no dedup).
 
     Kept separate from :func:`dedup` so the pipeline can insert its own
-    fixed-width repartition between them — the dedup aggregate then runs
-    partition-locally on that exchange (one full-text shuffle total).
+    hash repartition on the dedup key between them (AQE sizes that
+    exchange) — the dedup aggregate then runs partition-locally on it
+    (one full-text shuffle total).
     """
     return df.select(
         F.col("conv_id").cast("string").alias("conv_id"),

@@ -3,8 +3,10 @@ union-find, and determinism across partitioning."""
 
 import random
 
+import pytest
 
-def _cc(spark, edges, vertices, **kw):
+
+def _cc(spark, edges, vertices):
     from mongo2neo_spark.operators.cc import connected_components
 
     e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
@@ -12,7 +14,7 @@ def _cc(spark, edges, vertices, **kw):
         e = e.limit(0)
     v = spark.createDataFrame([(x,) for x in vertices], "id long")
     return {
-        r.id: r.component for r in connected_components(e, v, **kw).collect()
+        r.id: r.component for r in connected_components(e, v).collect()
     }
 
 
@@ -36,7 +38,7 @@ def test_no_edges(spark):
     assert got == {3: 3, 7: 7}
 
 
-def _cc_star(spark, edges, vertices, **kw):
+def _cc_star(spark, edges, vertices):
     from mongo2neo_spark.operators.cc import connected_components_star
 
     e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
@@ -44,8 +46,7 @@ def _cc_star(spark, edges, vertices, **kw):
         e = e.limit(0)
     v = spark.createDataFrame([(x,) for x in vertices], "id long")
     return {
-        r.id: r.component
-        for r in connected_components_star(e, v, **kw).collect()
+        r.id: r.component for r in connected_components_star(e, v).collect()
     }
 
 
@@ -92,6 +93,17 @@ def test_star_algorithm_random_vs_union_find(spark):
         comp_min.setdefault(find(x), x)
     ref = {x: comp_min[find(x)] for x in range(n)}
     assert _cc_star(spark, edges, list(range(n))) == ref
+
+
+def test_star_algorithm_raises_when_rounds_run_out(spark, monkeypatch):
+    """Out of rounds, the star algorithm raises rather than return
+    unconverged labels: one round can never confirm a fixed point (that
+    takes two equal rounds in a row), so a budget of 1 always raises."""
+    from mongo2neo_spark.operators import cc
+
+    monkeypatch.setattr(cc, "MAX_ITERATIONS", 1)
+    with pytest.raises(RuntimeError, match="within 1 rounds"):
+        _cc_star(spark, [(1, 2), (2, 3), (3, 4)], [1, 2, 3, 4])
 
 
 def test_hashmin_falls_back_to_star_on_chain(spark, monkeypatch):
@@ -165,7 +177,7 @@ def test_min_labels_random_graph_vs_union_find():
         assert {x: labels.get(x, x) for x in range(n)} == ref
 
 
-def test_component_not_null_on_every_branch(spark):
+def test_component_not_null_on_every_branch(spark, monkeypatch):
     """With not-null vertex and edge ids (xxhash64 in the pipeline), every
     CC branch — hash-min, star, and connected_components_auto's driver
     and distributed venues — returns the same min-id labels in a not-null
@@ -180,11 +192,13 @@ def test_component_not_null_on_every_branch(spark):
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )  # 1-2-3-4 and 5-6
     want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
-    for name, out in (
+    outs = [
         ("hashmin", cc.connected_components(e, v)),
         ("star", cc.connected_components_star(e, v)),
         ("auto_driver", cc.connected_components_auto(e, v)),
-        ("auto_distributed", cc.connected_components_auto(e, v, driver_max_edges=0)),
-    ):
+    ]
+    monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
+    outs.append(("auto_distributed", cc.connected_components_auto(e, v)))
+    for name, out in outs:
         assert not out.schema["component"].nullable, name
         assert {r.id: r.component for r in out.collect()} == want, name

@@ -1,6 +1,7 @@
 """End-to-end pipeline: P/R vs oracle, permutation/bucket invariance,
 idempotent resume, lineage contents."""
 
+import dataclasses
 import glob
 
 import pyarrow.parquet as pq
@@ -107,29 +108,39 @@ def _write_input(spark, rows, path):
     return path
 
 
-def _run(spark, inp, tmp_path, name, link_max):
-    """Paths of a fresh run with ``driver_link_max=link_max``."""
-    return run_pipeline(
-        spark, inp, str(tmp_path / name),
-        PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max),
-        resume=False,
-    )
+GRAPH_TABLES = ("components", "nodes", "edges", "triples")
 
 
-def _run_venues(spark, inp, tmp_path, monkeypatch):
+def _run(spark, inp, tmp_path, name, link_max, check_resume=False):
+    """Paths of a fresh run with ``driver_link_max=link_max``.  With
+    ``check_resume``, a resumed run follows it and must leave the graph
+    tables as they are and add no lineage row."""
+    out = str(tmp_path / name)
+    cfg = PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max)
+    paths = run_pipeline(spark, inp, out, cfg, resume=False)
+    if check_resume:
+        before = {t: _rows(spark, paths[t]) for t in GRAPH_TABLES}
+        n_lineage = spark.read.parquet(paths["lineage"]).count()
+        run_pipeline(spark, inp, out,
+                     dataclasses.replace(cfg, run_id=f"{name}-resumed"),
+                     resume=True)
+        for table in GRAPH_TABLES:
+            assert _rows(spark, paths[table]) == before[table], (name, table)
+        assert spark.read.parquet(paths["lineage"]).count() == n_lineage, name
+    return paths
+
+
+def _run_venues(spark, inp, tmp_path, monkeypatch, check_resume=False):
     """Paths of fresh runs on the three venues: driver link, distributed
     LSH with the vocabulary on the driver, and fully distributed (the
     vocabulary over DRIVER_VOCAB_MAX, so canonicalization runs on
-    Spark)."""
-    drv = _run(spark, inp, tmp_path, "drv", 100_000)
-    lsh = _run(spark, inp, tmp_path, "lsh", 0)
+    Spark); ``check_resume`` as in :func:`_run`."""
+    drv = _run(spark, inp, tmp_path, "drv", 100_000, check_resume)
+    lsh = _run(spark, inp, tmp_path, "lsh", 0, check_resume)
     with monkeypatch.context() as m:
         m.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
-        dist = _run(spark, inp, tmp_path, "dist", 0)
+        dist = _run(spark, inp, tmp_path, "dist", 0, check_resume)
     return drv, lsh, dist
-
-
-GRAPH_TABLES = ("components", "nodes", "edges", "triples")
 
 
 def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
@@ -223,13 +234,15 @@ def _no_mention_rows(rows):
 def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case,
                                       monkeypatch):
     """Input without a single mention, and input where every turn comes
-    twice, give the oracle's triples on every venue."""
+    twice, give the oracle's triples on every venue, and a resumed run
+    changes nothing."""
     rows = (_no_mention_rows(small_rows) if case == "no_mentions"
             else small_rows + small_rows)
     inp = _write_input(spark, rows, str(tmp_path / "in"))
     want = oracle.pipeline_triples(rows)
     assert (len(want) == 0) == (case == "no_mentions")
-    for paths in _run_venues(spark, inp, tmp_path, monkeypatch):
+    for paths in _run_venues(spark, inp, tmp_path, monkeypatch,
+                             check_resume=True):
         assert set(_rows(spark, paths["triples"])) == want
         if case == "no_mentions":
             for table in ("components", "nodes", "edges"):
@@ -239,9 +252,10 @@ def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case,
 def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
     """A 0-row transcript table: extraction writes no data files, and
     every later table comes out empty instead of failing to read back,
-    on every venue."""
+    on every venue, fresh and resumed."""
     inp = _write_input(spark, [], str(tmp_path / "in"))
-    for paths in _run_venues(spark, inp, tmp_path, monkeypatch):
+    for paths in _run_venues(spark, inp, tmp_path, monkeypatch,
+                             check_resume=True):
         for table in GRAPH_TABLES:
             assert _rows(spark, paths[table]) == [], table
 
