@@ -739,8 +739,9 @@ def duplicated_windows(
     #   count-windowed it (a second full-stream sort post-exchange).
     #   The gate only needs "fp seen >= 2 times": exchange the flat fp
     #   column alone (no id, no positions — a fraction of the bytes),
-    #   repartition-then-count (the cooccurrence discipline: no
-    #   map-side hash map over near-distinct keys), zero sorts
+    #   repartition-then-count (the exchange comes first and the count
+    #   runs after it, so no map-side hash map is built over
+    #   near-distinct keys), zero sorts
     #   anywhere.  Counting OCCURRENCES instead of distinct docs admits
     #   a same-doc-repeat false candidate, which the exact-gram verify
     #   below re-checks (it recomputes the >= 2-distinct-docs condition

@@ -91,22 +91,21 @@ def run_curation(
     }
     if cfg.mixture_rates is not None:
         paths["sampled"] = f"{out_dir}/sampled"
-    _stage_profile(spark, input_source, paths, cfg, resume)
-    _stage_exact(spark, paths, cfg, resume)
-    _stage_neardup(spark, paths, cfg, resume)
-    _stage_filter(spark, paths, cfg, resume)
+    _stage_profile(spark, input_source, out_dir, paths, cfg, resume)
+    _stage_exact(spark, out_dir, paths, cfg, resume)
+    _stage_neardup(spark, out_dir, paths, cfg, resume)
+    _stage_filter(spark, out_dir, paths, cfg, resume)
     if cfg.mixture_rates is not None:
-        _stage_sample(spark, paths, cfg, resume)
+        _stage_sample(spark, out_dir, paths, cfg, resume)
     return paths
 
 
 # ---------------------------------------------------------------------------
 # stage 1: text profile (bucket-granular resume)
 # ---------------------------------------------------------------------------
-def _stage_profile(spark, input_source, paths, cfg, resume) -> None:
+def _stage_profile(spark, input_source, out_dir, paths, cfg, resume) -> None:
     stage = "profile"
-    out_root = paths["lineage"].rsplit("/", 1)[0]
-    done = set(lin.completed_keys(spark, out_root, stage)) if resume else set()
+    done = set(lin.completed_keys(spark, out_dir, stage)) if resume else set()
     all_buckets = {str(b) for b in range(cfg.n_buckets)}
     todo = sorted(all_buckets - done, key=int)
     if not todo:
@@ -135,18 +134,17 @@ def _stage_profile(spark, input_source, paths, cfg, resume) -> None:
             options={"parquet.block.size": m2nio.INTERMEDIATE_ROW_GROUP_BYTES},
         )
     got = obs.get
-    entries = []
-    for b in todo:
-        n = got.get(f"n_{b}") or 0
-        c = got.get(f"c_{b}")
-        entries.append((b, 0, int(n), str(c) if c is not None else "0", t.wall_ms))
-    lin.record(spark, out_root, stage, entries, cfg.run_id)
+    entries = [
+        (b, 0, int(got.get(f"n_{b}") or 0), got.get(f"c_{b}"), t.wall_ms)
+        for b in todo
+    ]
+    lin.record(spark, out_dir, stage, entries, cfg.run_id)
 
 
 # ---------------------------------------------------------------------------
 # stages 2-4: global stages (whole-stage lineage, resume = skip)
 # ---------------------------------------------------------------------------
-def _global_stage(spark, paths, cfg, resume, stage, produce,
+def _global_stage(spark, out_dir, paths, cfg, resume, stage, produce,
                   partition_by=("bucket",)) -> None:
     """Shared shape: read -> transform -> observed write -> lineage row.
 
@@ -155,8 +153,7 @@ def _global_stage(spark, paths, cfg, resume, stage, produce,
     write — no second execution of the transform) lands in the lineage
     entry's input_rows slot, so shrinkage is never silent.  ``n_in`` is
     a parquet-metadata count of the previous stage's table — cheap."""
-    out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if resume and lin.completed_keys(spark, out_dir, stage):
         return
     with lin.StageTimer() as t:
         df, n_in = produce()
@@ -168,9 +165,8 @@ def _global_stage(spark, paths, cfg, resume, stage, produce,
     got = obs.get
     dropped = n_in - int(got["n"])
     lin.record(
-        spark, out_root, stage,
-        [(lin.STAGE_KEY, int(dropped), int(got["n"]),
-          str(got["c"]) if got["c"] is not None else "0", t.wall_ms)],
+        spark, out_dir, stage,
+        [(lin.STAGE_KEY, int(dropped), int(got["n"]), got["c"], t.wall_ms)],
         cfg.run_id,
     )
 
@@ -179,15 +175,15 @@ _STAGE_OUT = {"exact": "exact", "neardup": "neardup", "filter": "curated",
               "sample": "sampled"}
 
 
-def _stage_exact(spark, paths, cfg, resume) -> None:
+def _stage_exact(spark, out_dir, paths, cfg, resume) -> None:
     def produce():
         prof = spark.read.parquet(paths["profiled"])
         return dedup_mod.exact_dedup(prof, "text", "doc_id"), prof.count()
 
-    _global_stage(spark, paths, cfg, resume, "exact", produce)
+    _global_stage(spark, out_dir, paths, cfg, resume, "exact", produce)
 
 
-def _stage_neardup(spark, paths, cfg, resume) -> None:
+def _stage_neardup(spark, out_dir, paths, cfg, resume) -> None:
     def produce():
         ex = spark.read.parquet(paths["exact"])
         comp = dedup_mod.minhash_dedup_components(
@@ -200,10 +196,10 @@ def _stage_neardup(spark, paths, cfg, resume) -> None:
         kept = ex.join(survivors.select("doc_id"), "doc_id", "left_semi")
         return kept, ex.count()
 
-    _global_stage(spark, paths, cfg, resume, "neardup", produce)
+    _global_stage(spark, out_dir, paths, cfg, resume, "neardup", produce)
 
 
-def _stage_filter(spark, paths, cfg, resume) -> None:
+def _stage_filter(spark, out_dir, paths, cfg, resume) -> None:
     def produce():
         nd = spark.read.parquet(paths["neardup"])
         kept = nd.filter(
@@ -220,10 +216,10 @@ def _stage_filter(spark, paths, cfg, resume) -> None:
             kept = kept.join(rep_keep, "doc_id", "left_semi")
         return kept, nd.count()
 
-    _global_stage(spark, paths, cfg, resume, "filter", produce)
+    _global_stage(spark, out_dir, paths, cfg, resume, "filter", produce)
 
 
-def _stage_sample(spark, paths, cfg, resume) -> None:
+def _stage_sample(spark, out_dir, paths, cfg, resume) -> None:
     def produce():
         cur = spark.read.parquet(paths["curated"])
         kept = sampling_mod.mixture_sample(
@@ -244,7 +240,7 @@ def _stage_sample(spark, paths, cfg, resume) -> None:
         )
         return kept, cur.count()
 
-    _global_stage(spark, paths, cfg, resume, "sample", produce,
+    _global_stage(spark, out_dir, paths, cfg, resume, "sample", produce,
                   partition_by=())
 
 

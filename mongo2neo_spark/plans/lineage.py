@@ -85,14 +85,17 @@ def record(
     entries: Sequence[tuple],
     run_id: str,
 ) -> None:
-    """entries: (partition_key, input_rows, output_rows, checksum, wall_ms)."""
+    """entries: (partition_key, input_rows, output_rows, checksum, wall_ms).
+    A ``None`` checksum (the observed sum over zero rows) is written as
+    "0"."""
     if not entries:
         return
     # a pandas frame with a declared schema becomes an Arrow
     # LocalTableScan: no Python worker and no pickled-row RDD to ship
     rows = pd.DataFrame(
         [
-            (stage, str(k), int(i), int(o), str(c), int(w), run_id)
+            (stage, str(k), int(i), int(o), "0" if c is None else str(c),
+             int(w), run_id)
             for (k, i, o, c, w) in entries
         ],
         columns=_RECORD_SCHEMA.fieldNames(),

@@ -90,23 +90,22 @@ def run_pipeline(
         "triples": f"{out_dir}/triples",
         "lineage": lin.lineage_path(out_dir),
     }
-    _stage_extract(spark, input_source, paths, cfg, resume)
-    vocab = _stage_components(spark, paths, cfg, resume)
-    _stage_materialize(spark, paths, cfg, resume, vocab)
+    _stage_extract(spark, input_source, out_dir, paths, cfg, resume)
+    vocab = _stage_components(spark, out_dir, paths, cfg, resume)
+    _stage_materialize(spark, out_dir, paths, cfg, resume, vocab)
     return paths
 
 
 # ---------------------------------------------------------------------------
 # stage 1: ingest + extract (bucket-granular resume)
 # ---------------------------------------------------------------------------
-def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
+def _stage_extract(spark, input_source, out_dir, paths, cfg, resume) -> None:
     stage = "extract"
-    done = set(lin.completed_keys(spark, paths["lineage"].rsplit("/", 1)[0], stage)) if resume else set()
+    done = set(lin.completed_keys(spark, out_dir, stage)) if resume else set()
     all_buckets = {str(b) for b in range(cfg.n_buckets)}
     todo = sorted(all_buckets - done, key=int)
     if not todo:
         return
-    out_root = paths["lineage"].rsplit("/", 1)[0]
     todo_ints = [int(b) for b in todo]
 
     with lin.StageTimer() as t:
@@ -180,12 +179,11 @@ def _stage_extract(spark, input_source, paths, cfg, resume) -> None:
         )
 
     got = obs.get
-    entries = []
-    for b in todo:
-        n = got.get(f"n_{b}") or 0
-        c = got.get(f"c_{b}")
-        entries.append((b, 0, int(n), str(c) if c is not None else "0", t.wall_ms))
-    lin.record(spark, out_root, stage, entries, cfg.run_id)
+    entries = [
+        (b, 0, int(got.get(f"n_{b}") or 0), got.get(f"c_{b}"), t.wall_ms)
+        for b in todo
+    ]
+    lin.record(spark, out_dir, stage, entries, cfg.run_id)
 
 
 # ---------------------------------------------------------------------------
@@ -197,7 +195,7 @@ def _read_extracted(spark, paths) -> DataFrame:
     return spark.read.schema(schemas.EXTRACTED).parquet(paths["extracted"])
 
 
-def _stage_components(spark, paths, cfg, resume):
+def _stage_components(spark, out_dir, paths, cfg, resume):
     """Link + canonicalize.  Returns the in-memory vocabulary
     (mention_stats rows, component rows) for the materialize stage, or
     None when the stage was skipped or the vocabulary stayed on Spark.
@@ -215,8 +213,7 @@ def _stage_components(spark, paths, cfg, resume):
     keeps the all-Spark path (norm_components, then canonicalization in
     materialize)."""
     stage = "components"
-    out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if resume and lin.completed_keys(spark, out_dir, stage):
         return None
     vocab = None
     with lin.StageTimer() as t:
@@ -270,9 +267,8 @@ def _stage_components(spark, paths, cfg, resume):
             bands.unpersist()
     got = obs.get
     lin.record(
-        spark, out_root, stage,
-        [(lin.STAGE_KEY, dropped, int(got["n"]),
-          str(got["c"]) if got["c"] is not None else "0", t.wall_ms)],
+        spark, out_dir, stage,
+        [(lin.STAGE_KEY, dropped, int(got["n"]), got["c"], t.wall_ms)],
         cfg.run_id,
     )
     return vocab
@@ -281,13 +277,12 @@ def _stage_components(spark, paths, cfg, resume):
 # ---------------------------------------------------------------------------
 # stage 3: materialize (global stage)
 # ---------------------------------------------------------------------------
-def _stage_materialize(spark, paths, cfg, resume, vocab=None) -> None:
+def _stage_materialize(spark, out_dir, paths, cfg, resume, vocab=None) -> None:
     """Nodes, edges and triples.  ``vocab`` is the components stage's
     driver-venue result; without it (distributed venue, or a resumed run
     whose components stage was already done) everything is read back."""
     stage = "materialize"
-    out_root = paths["lineage"].rsplit("/", 1)[0]
-    if resume and lin.completed_keys(spark, out_root, stage):
+    if resume and lin.completed_keys(spark, out_dir, stage):
         return
     with lin.StageTimer() as t:
         extracted = _read_extracted(spark, paths)
@@ -342,9 +337,8 @@ def _stage_materialize(spark, paths, cfg, resume, vocab=None) -> None:
             df.unpersist()
     got = obs.get
     lin.record(
-        spark, out_root, stage,
-        [(lin.STAGE_KEY, 0, int(got["n"]),
-          str(got["c"]) if got["c"] is not None else "0", t.wall_ms)],
+        spark, out_dir, stage,
+        [(lin.STAGE_KEY, 0, int(got["n"]), got["c"], t.wall_ms)],
         cfg.run_id,
     )
 

@@ -44,18 +44,12 @@ DEFAULT_CONFS = {
     "spark.sql.parquet.compression.codec": "zstd",
     # ObjectHashAggregate (collect_set/collect_list) falls back to
     # sort-based aggregation after 128 in-memory keys — sized for
-    # huge-object aggs, pathological for the bounded small-set aggs
-    # this engine runs (co-occurrence item sets, provenance lists):
-    # event-log-measured 4.9 GB of sort-spill on a 1M-group build.
-    # 64k keys of bounded small sets is a few tens of MB per task.
+    # huge-object aggs, pathological for bounded small-set aggs such as
+    # materialize.edges' provenance collect_list (at most max_provenance
+    # turn ids per edge): event-log-measured 4.9 GB of sort-spill on a
+    # 1M-group build.  64k keys of bounded small sets is a few tens of
+    # MB per task.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
-    # several operators materialize ephemeral localCheckpoint caches
-    # (tokenized corpus, fingerprint arrays) whose blocks are only
-    # released when the driver GC lets the ContextCleaner see the dead
-    # references; the 30min default lets them pile up across a long
-    # multi-query session — 5min keeps the block manager flat without
-    # measurable overhead (a periodic System.gc on the driver only)
-    "spark.cleaner.periodicGC.interval": "5min",
 }
 
 

@@ -252,12 +252,17 @@ def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case,
 def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
     """A 0-row transcript table: extraction writes no data files, and
     every later table comes out empty instead of failing to read back,
-    on every venue, fresh and resumed."""
+    on every venue, fresh and resumed.  Every lineage row records 0 rows
+    out and the checksum "0" (the observed sum over no rows is null)."""
     inp = _write_input(spark, [], str(tmp_path / "in"))
     for paths in _run_venues(spark, inp, tmp_path, monkeypatch,
                              check_resume=True):
         for table in GRAPH_TABLES:
             assert _rows(spark, paths[table]) == [], table
+        lineage = spark.read.parquet(paths["lineage"]).collect()
+        assert len(lineage) == 4 + 2  # extract buckets, components, materialize
+        for r in lineage:
+            assert (r.output_rows, r.checksum) == (0, "0"), r
 
 
 # Spark jobs of one fresh run on the small fixture, per venue: 17 on the

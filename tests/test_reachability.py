@@ -23,7 +23,7 @@ ENTRY_FILES = [
     ROOT / "BENCH" / "scaling.py",
     ROOT / "BENCH" / "run_pipeline_job.py",
 ]
-# Document curation, packing, joins and retrieval operators: not on the
+# Document curation, packing and joins operators: not on the
 # transcript->KG path, kept with their own tests (and entry_oracle, their
 # pure-Python reference outputs).  A module joins this list on purpose or
 # not at all.
@@ -31,7 +31,6 @@ LIBRARY_FILES = [
     ROOT / PKG / "plans" / "curation.py",
     ROOT / PKG / "operators" / "packing.py",
     ROOT / PKG / "operators" / "joins.py",
-    ROOT / PKG / "operators" / "retrieval.py",
     ROOT / PKG / "entry_oracle.py",
 ]
 
