@@ -1,8 +1,8 @@
 """Pure-Python reference outputs for the document-curation operators
-(operators.dedup/packing/text, plans.curation).
+(operators.dedup/text, plans.curation).
 
 Those operators are deterministic but not sanely SQL-expressible
-(MinHash-LSH clustering, SimHash, bin packing).  For each, the
+(MinHash-LSH clustering, SimHash).  For each, the
 *specification implementation* — simple pure-Python loops sharing
 ``functions.hashing`` with nothing Spark about them (the same
 parity-by-construction approach as ``mongo2neo_spark.oracle``) —
@@ -186,34 +186,3 @@ def _oracle_token_count(text) -> int:
     import re
 
     return len(re.findall("[^ \t\n\x0B\f\r]+", text or ""))
-
-
-
-def pack_rows(
-    sf_dir: str | None = None, budget: int = 256, n_buckets: int = 16
-) -> List[tuple]:
-    """First-fit-decreasing replica of ``operators.packing.
-    pack_sequences``: per (doc_id mod n_buckets) bucket, docs sorted by
-    (n_tokens desc, doc_id asc), first sequence with room wins."""
-    ids, texts = _read_docs(sf_dir)
-    buckets: defaultdict = defaultdict(list)
-    for i, t in zip(ids, texts):
-        buckets[i % n_buckets].append((int(i), _oracle_token_count(t)))
-    out = []
-    for b in sorted(buckets):
-        rows = sorted(buckets[b], key=lambda r: (-r[1], r[0]))
-        room: List[int] = []
-        for doc_id, n_tok in rows:
-            if n_tok > budget:
-                room.append(0)
-                out.append((doc_id, b, len(room) - 1, n_tok, True))
-                continue
-            for s in range(len(room)):
-                if room[s] >= n_tok:
-                    room[s] -= n_tok
-                    out.append((doc_id, b, s, n_tok, False))
-                    break
-            else:
-                room.append(budget - n_tok)
-                out.append((doc_id, b, len(room) - 1, n_tok, False))
-    return sorted(out)

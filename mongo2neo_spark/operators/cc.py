@@ -81,6 +81,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
         sym.unpersist()
         return connected_components_star(edges, vertices)
     sym.unpersist()
+    # the labels read the last round's checkpoint, not its cache
+    handle.unpersist()
     # every vertex has a label (its own id rides along as the old one);
     # the coalesce only keeps min()'s nullable result out of the schema,
     # so every CC branch returns a not-null component for not-null ids
@@ -169,6 +171,8 @@ def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFram
         handle = nxt
         cur = nxt
         prev_sig = sig
+    # the labels read the last round's checkpoint, not its cache
+    handle.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected_components_star: edge set did not reach a fixed "
@@ -260,7 +264,9 @@ def min_labels(edges) -> dict:
 
 def _materialize(df: DataFrame) -> DataFrame:
     """Checkpoint (reliable if a checkpoint dir is set, else local) to cut
-    the iterative plan's lineage, then persist for the next round."""
+    the iterative plan's lineage, then persist for the next round.  The
+    checkpoint holds the rows by itself: a frame read after its
+    ``unpersist`` reads them from there."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         out = df.checkpoint(eager=True)

@@ -63,17 +63,24 @@ def extract(rows: Sequence) -> Tuple[List[dict], List[dict]]:
     return mentions, raw_triples
 
 
-def candidate_pairs(norms: Iterable[str]) -> Set[Tuple[str, str]]:
-    """MinHash-LSH candidate generation over *distinct* norms, with the
-    same band keys and band-size cap the Spark path uses."""
+def lsh_buckets(norms: Iterable[str]) -> Dict[str, List[str]]:
+    """MinHash-LSH band key -> the *distinct* norms (sorted) that have it,
+    with the same signatures and band keys the Spark path uses."""
     buckets: Dict[str, List[str]] = defaultdict(list)
     for n in sorted(set(norms)):
         sig = hashing.minhash_signature(rules.char_ngrams(n))
         for bk in hashing.band_keys(sig):
             buckets[bk].append(n)
+    return buckets
+
+
+def candidate_pairs(norms: Iterable[str],
+                    band_cap: int = hashing.BAND_CAP) -> Set[Tuple[str, str]]:
+    """Every pair of norms that shares a band of at most ``band_cap``
+    norms (the Spark path's band-size cap)."""
     pairs: Set[Tuple[str, str]] = set()
-    for bk, members in buckets.items():
-        if len(members) > hashing.BAND_CAP:
+    for members in lsh_buckets(norms).values():
+        if len(members) > band_cap:
             continue  # K3 hot-band drop (same rule as Spark side)
         for i in range(len(members)):
             for j in range(i + 1, len(members)):

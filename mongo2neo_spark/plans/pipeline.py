@@ -61,11 +61,12 @@ class PipelineConfig:
     dedup_strategy: str = "auto"
     # LSH venue: vocabularies of up to this many mention_stats rows (one
     # per distinct norm) are banded, scored and union-found on the driver
-    # (link.driver_link_components — bit-identical, same shared
-    # hashing/rules code) instead of paying the Spark fixed costs
-    # (UDF passes, band join) on a vocabulary-sized problem; 0 forces
-    # distributed LSH.  Where the vocabulary itself lives is bounded by
-    # DRIVER_VOCAB_MAX, not by this
+    # (link.driver_link_components); above it the driver still bands and
+    # groups them, and the pair scoring runs as one Spark job
+    # (link.spark_link_components), which pays a job and a Python
+    # worker's start; 0 forces the Spark venue.  Both run the same kernel.
+    # Where the vocabulary itself lives is bounded by DRIVER_VOCAB_MAX,
+    # not by this
     driver_link_max: int = 100_000
     run_id: str = ""
 
@@ -131,10 +132,15 @@ def _stage_extract(spark, input_source, out_dir, paths, cfg, resume) -> None:
         # salt exchange.
         strategy = cfg.dedup_strategy
         if strategy == "auto":
-            s = raw.limit(20_000).agg(
-                F.avg(F.length("text")).alias("t"),
-                F.avg(F.length("conv_id")).alias("k"),
-            ).first()
+            # lengths before the LIMIT: its single-partition exchange then
+            # carries two ints per sampled row, not the text
+            s = (
+                raw.select(F.length("text").alias("t"),
+                           F.length("conv_id").alias("k"))
+                .limit(20_000)
+                .agg(F.avg("t").alias("t"), F.avg("k").alias("k"))
+                .first()
+            )
             wide = s.t is not None and s.t > 4.0 * (float(s.k or 0) + 8.0)
             strategy = "adaptive" if wide else "shuffle"
         if strategy == "adaptive":
@@ -205,10 +211,11 @@ def _stage_components(spark, out_dir, paths, cfg, resume):
       rollup if it has at most DRIVER_VOCAB_MAX rows; then the driver
       holds it whichever venue links, and materialize builds canonical
       names, the norm->entity map and nodes from it;
-    - where LSH runs: up to ``cfg.driver_link_max`` norms on the driver
-      (link.driver_link_components), above that as Spark jobs over a
-      driver-made norm frame (link.spark_link_components), whose linked
-      pairs go to a driver union-find only up to cc.DRIVER_CC_MAX_EDGES.
+    - where pair scoring runs: up to ``cfg.driver_link_max`` norms on the
+      driver (link.driver_link_components), above that as one Spark job
+      over the driver-grouped band groups (link.spark_link_components),
+      whose linked pairs go to a driver union-find only up to
+      cc.DRIVER_CC_MAX_EDGES.
     A vocabulary above DRIVER_VOCAB_MAX, or more linked pairs than that,
     keeps the all-Spark path (norm_components, then canonicalization in
     materialize)."""

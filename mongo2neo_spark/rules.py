@@ -131,7 +131,11 @@ def char_ngrams(norm: str, n: int = 3) -> frozenset:
 
 def pair_score(norm_a: str, norm_b: str) -> float:
     """Exact jaccard similarity on char-3-gram sets (0.0 .. 1.0)."""
-    a, b = char_ngrams(norm_a), char_ngrams(norm_b)
+    return jaccard(char_ngrams(norm_a), char_ngrams(norm_b))
+
+
+def jaccard(a: frozenset, b: frozenset) -> float:
+    """:func:`pair_score` over precomputed :func:`char_ngrams` sets."""
     if not a or not b:
         return 0.0
     inter = len(a & b)

@@ -3,6 +3,7 @@ idempotent resume, lineage contents."""
 
 import dataclasses
 import glob
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -268,24 +269,31 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
 # Spark jobs of one fresh run on the small fixture, per venue: 17 on the
 # driver link venue since canonical names and nodes are driver-built, the
 # driver-built frames are Arrow local tables and the read-backs declare
-# their schemas (34 before); 26 on the distributed-LSH venue since the
-# vocabulary stays on the driver there too (44 before); 59 on the
-# all-Spark chain with distributed CC rounds (DRIVER_VOCAB_MAX and
-# DRIVER_CC_MAX_EDGES patched to 0)
-MAX_FRESH_RUN_JOBS = {"driver_link": 17, "distributed_lsh": 26,
+# their schemas (34 before); 18 on the distributed-LSH venue since the
+# driver groups the band keys and pair scoring is one job (26 before, 44
+# before the vocabulary stayed on the driver); 59 on the all-Spark chain
+# with distributed CC rounds (DRIVER_VOCAB_MAX and DRIVER_CC_MAX_EDGES
+# patched to 0)
+MAX_FRESH_RUN_JOBS = {"driver_link": 17, "distributed_lsh": 18,
                       "all_spark_cc": 59}
+
+
+def _cached_rdds(sc):
+    return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
 
 
 @pytest.mark.parametrize("venue", list(MAX_FRESH_RUN_JOBS))
 def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     """Fixed cost guard: a read-back or an inferring read that comes back
-    shows up here as extra Spark jobs."""
+    shows up here as extra Spark jobs.  A run also leaves nothing it
+    persisted cached (the all-Spark chain's CC rounds included)."""
     if venue == "all_spark_cc":
         monkeypatch.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
     driver_link_max = 100_000 if venue == "driver_link" else 0
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
     sc = spark.sparkContext
+    cached_before = _cached_rdds(sc)
     group = f"job-count-{tmp_path.name}"
     sc.setJobGroup(group, "fresh pipeline run")
     try:
@@ -298,6 +306,11 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[venue], n_jobs
+    # unpersist drops blocks asynchronously
+    deadline = time.monotonic() + 10
+    while _cached_rdds(sc) - cached_before and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert _cached_rdds(sc) <= cached_before
 
 
 def test_read_lineage_raises_on_corrupt_table(spark, tmp_path):
