@@ -23,11 +23,12 @@ ENTRY_FILES = [
     ROOT / "BENCH" / "scaling.py",
     ROOT / "BENCH" / "run_pipeline_job.py",
 ]
-# Document curation operators: not on the transcript->KG path, kept with
-# their own tests (and entry_oracle, their pure-Python reference
+# Document curation and joins operators: not on the transcript->KG path,
+# kept with their own tests (and entry_oracle, their pure-Python reference
 # outputs).  A module joins this list on purpose or not at all.
 LIBRARY_FILES = [
     ROOT / PKG / "plans" / "curation.py",
+    ROOT / PKG / "operators" / "joins.py",
     ROOT / PKG / "entry_oracle.py",
 ]
 
