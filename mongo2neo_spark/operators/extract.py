@@ -8,6 +8,11 @@ ArrowEvalPython island in the plan — everything around it stays in
 whole-stage codegen.  The UDF body delegates to the shared
 ``mongo2neo_spark.rules`` module, the same functions the pure-Python
 oracle runs, so triple-set parity is by construction.
+
+The stage writes only what later stages read: each mention's norm and
+the triples as indexes into them.  Spans and surfaces only locate the
+predicate gaps, and entity kind is a function of the norm, computed once
+per vocabulary entry when the nodes are built (``materialize``).
 """
 
 from __future__ import annotations
@@ -27,11 +32,7 @@ from .. import rules
 # struct shape is rebuilt JVM-side with arrays_zip (free in codegen).
 EXTRACT_TYPE = T.StructType(
     [
-        T.StructField("m_start", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("m_end", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("m_surface", T.ArrayType(T.StringType(), False), False),
         T.StructField("m_norm", T.ArrayType(T.StringType(), False), False),
-        T.StructField("m_kind", T.ArrayType(T.StringType(), False), False),
         T.StructField("t_subj", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("t_pred", T.ArrayType(T.StringType(), False), False),
         T.StructField("t_obj", T.ArrayType(T.IntegerType(), False), False),
@@ -41,64 +42,52 @@ EXTRACT_TYPE = T.StructType(
 
 @pandas_udf(EXTRACT_TYPE)
 def extract_turn_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text -> flat mention/triple arrays (one row per turn).
+    """text -> mention norms and triple arrays (one row per turn).
 
     Scalar-iterator form amortizes per-batch setup; inside a batch the
     compiled regex in ``rules`` does the work (Arrow moves the data, not
-    per-row Python serialization).
+    per-row Python serialization).  No span is kept: each predicate gap
+    runs from the previous mention's end to the next mention's start.
 
     Surface forms and predicate gaps are vocabulary-bounded, so their
-    normalize/kind lookups are memoized across the worker's lifetime —
+    normalizations are memoized across the worker's lifetime —
     pure-function caching, bit-identical to calling ``rules`` directly
     (which the oracle-parity tests assert end-to-end).
     """
     finditer = rules.MENTION_RE.finditer
     normalize = rules.normalize
-    infer_kind = rules.infer_kind
     predicates = rules.PREDICATE_SET
-    surf_cache: dict = {}
+    norm_cache: dict = {}
     gap_cache: dict = {}
 
     for texts in batches:
-        cols = {k: [] for k in
-                ("m_start", "m_end", "m_surface", "m_norm", "m_kind",
-                 "t_subj", "t_pred", "t_obj")}
+        cols = {k: [] for k in ("m_norm", "t_subj", "t_pred", "t_obj")}
         for text in texts:
             text = text or ""
-            starts, ends, surfs, norms, kinds = [], [], [], [], []
+            norms, t_subj, t_pred, t_obj = [], [], [], []
+            end = None  # the previous mention's end: the gap starts there
             for m in finditer(text):
+                if end is not None:
+                    gap_raw = text[end : m.start()]
+                    pred = gap_cache.get(gap_raw)
+                    if pred is None:
+                        pred = normalize(gap_raw.strip(" .,;:!?"))
+                        if len(gap_cache) < 2_000_000:
+                            gap_cache[gap_raw] = pred
+                    if pred in predicates:
+                        t_subj.append(len(norms) - 1)
+                        t_pred.append(pred)
+                        t_obj.append(len(norms))
                 surface = m.group(0)
-                cached = surf_cache.get(surface)
-                if cached is None:
+                norm = norm_cache.get(surface)
+                if norm is None:
                     norm = normalize(surface)
-                    cached = (norm, infer_kind(norm))
-                    if len(surf_cache) < 2_000_000:
-                        surf_cache[surface] = cached
-                starts.append(m.start())
-                ends.append(m.end())
-                surfs.append(surface)
-                norms.append(cached[0])
-                kinds.append(cached[1])
-            t_subj, t_pred, t_obj = [], [], []
-            for i in range(len(starts) - 1):
-                gap_raw = text[ends[i] : starts[i + 1]]
-                pred = gap_cache.get(gap_raw)
-                if pred is None:
-                    pred = normalize(gap_raw.strip(" .,;:!?"))
-                    if len(gap_cache) < 2_000_000:
-                        gap_cache[gap_raw] = pred
-                if pred in predicates:
-                    t_subj.append(i)
-                    t_pred.append(pred)
-                    t_obj.append(i + 1)
-            cols["m_start"].append(starts)
-            cols["m_end"].append(ends)
-            cols["m_surface"].append(surfs)
-            cols["m_norm"].append(norms)
-            cols["m_kind"].append(kinds)
-            cols["t_subj"].append(t_subj)
-            cols["t_pred"].append(t_pred)
-            cols["t_obj"].append(t_obj)
+                    if len(norm_cache) < 2_000_000:
+                        norm_cache[surface] = norm
+                norms.append(norm)
+                end = m.end()
+            for k, v in zip(cols, (norms, t_subj, t_pred, t_obj)):
+                cols[k].append(v)
         yield pd.DataFrame(cols)
 
 
@@ -114,33 +103,11 @@ def extract(turns: DataFrame) -> DataFrame:
 
 
 def mentions(extracted: DataFrame) -> DataFrame:
-    """Unnest the flat mention arrays into one row per mention (one
-    shuffle-free explode of a JVM-side arrays_zip;
-    mention_id = xxhash64(conv_id, turn_idx, span_start))."""
-    zipped = extracted.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.explode(
-            F.arrays_zip(
-                F.col("ex.m_start").alias("span_start"),
-                F.col("ex.m_end").alias("span_end"),
-                F.col("ex.m_surface").alias("surface"),
-                F.col("ex.m_norm").alias("norm"),
-                F.col("ex.m_kind").alias("kind"),
-            )
-        ).alias("m"),
-    )
-    return zipped.select(
-        F.xxhash64("conv_id", "turn_idx", F.col("m.span_start")).alias("mention_id"),
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.col("m.span_start").alias("span_start"),
-        F.col("m.span_end").alias("span_end"),
-        F.col("m.surface").alias("surface"),
-        F.col("m.norm").alias("norm"),
-        F.col("m.kind").alias("kind"),
+    """One row per mention, (conv_id, turn_idx, ts, norm): a shuffle-free
+    explode of the norm array.  A turn that names an entity twice gives
+    two equal rows; mention counts are counts of these rows."""
+    return extracted.select(
+        "conv_id", "turn_idx", "ts", F.explode("ex.m_norm").alias("norm")
     )
 
 

@@ -11,7 +11,9 @@ from typing import Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .. import rules
 from . import cc as cc_mod
 
 MAX_PROVENANCE = 20
@@ -40,14 +42,14 @@ def norm_components(mentions: DataFrame, pairs: DataFrame,
 
 def mention_stats(mentions: DataFrame) -> DataFrame:
     """ONE pass over the mention stream -> vocabulary-sized rollup
-    (norm, kind, cnt, first_ts, last_ts).
+    (norm, cnt, first_ts, last_ts), one row per norm.
 
     Canonical-name election AND the node table both derive from this
     aggregate, so the (huge) mention stream is scanned/shuffled exactly
     once for both — everything downstream is vocabulary-sized.  Persist
     the result when feeding multiple consumers.
     """
-    return mentions.groupBy("norm", "kind").agg(
+    return mentions.groupBy("norm").agg(
         F.count("*").alias("cnt"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
@@ -60,8 +62,7 @@ def canonical_names(components: DataFrame, stats: DataFrame) -> DataFrame:
 
     ``stats`` is a (persisted) :func:`mention_stats` rollup, so the
     mention stream is never scanned here."""
-    counts = stats.groupBy("norm").agg(F.sum("cnt").alias("cnt"))
-    joined = counts.join(components, "norm")
+    joined = stats.select("norm", "cnt").join(components, "norm")
     w = Window.partitionBy("entity_id").orderBy(F.desc("cnt"), F.asc("norm"))
     return (
         joined.withColumn("_rn", F.row_number().over(w))
@@ -75,16 +76,16 @@ def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
     """Driver venue of :func:`canonical_names` -> :func:`norm_to_entity`
     -> :func:`nodes` for a vocabulary the driver already holds.
 
-    ``stats`` are collected :func:`mention_stats` rows (norm, kind, cnt,
+    ``stats`` are collected :func:`mention_stats` rows (norm, cnt,
     first_ts, last_ts), ``components`` the (norm, entity_id) rows.
     Returns the (norm, entity) map and the node rows (entity, kind,
     n_mentions, first_ts, last_ts) as pandas frames, with the Spark
     functions' tie-breaks: canonical name by ``cnt`` desc then ``norm``
-    asc, majority kind by ``kcnt`` desc then ``kind`` asc, and first/last
-    timestamps as min/max that skip nulls.
+    asc, majority kind (``rules.infer_kind`` of each norm) by ``kcnt``
+    desc then ``kind`` asc, and first/last timestamps as min/max that
+    skip nulls.
     """
-    counts = stats.groupby("norm", as_index=False, dropna=False)["cnt"].sum()
-    joined = counts.merge(components, on="norm")
+    joined = stats[["norm", "cnt"]].merge(components, on="norm")
     canon = (
         joined.sort_values(["cnt", "norm"], ascending=[False, True])
         .drop_duplicates("entity_id")[["entity_id", "norm"]]
@@ -93,6 +94,7 @@ def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
     n2e = components.merge(canon, on="entity_id")[["norm", "entity"]]
 
     m = stats.merge(n2e, on="norm")
+    m["kind"] = m["norm"].map(rules.infer_kind)
     by_kind = m.groupby(["entity", "kind"], as_index=False, dropna=False).agg(
         kcnt=("cnt", "sum")
     )
@@ -170,15 +172,22 @@ def edges(resolved: DataFrame, max_provenance: int = MAX_PROVENANCE) -> DataFram
     )
 
 
+@F.pandas_udf(T.StringType())
+def kind_udf(norms: pd.Series) -> pd.Series:
+    """``rules.infer_kind`` over a batch of norms."""
+    return norms.map(rules.infer_kind)
+
+
 def nodes(stats: DataFrame, n2e: DataFrame) -> DataFrame:
     """A2 + W3: node table with mention stats and majority kind.
 
     Derives from the vocabulary-sized :func:`mention_stats` rollup
-    ``stats`` and the norm->entity map ``n2e``: the (entity, kind)
+    ``stats`` and the norm->entity map ``n2e``: each norm's kind
+    (:func:`kind_udf` over the vocabulary rows), the (entity, kind)
     histogram, stats, and majority-kind election all run on tiny
     aggregates, never on the mention stream itself.
     """
-    m = stats.join(F.broadcast(n2e), "norm")
+    m = stats.join(F.broadcast(n2e), "norm").withColumn("kind", kind_udf("norm"))
     by_kind = m.groupBy("entity", "kind").agg(
         F.sum("cnt").alias("kcnt"),
         F.min("first_ts").alias("first_ts"),

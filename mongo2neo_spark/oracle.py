@@ -136,6 +136,29 @@ def pipeline_triples(rows: Sequence) -> Set[Tuple[str, str, str]]:
     return out
 
 
+def nodes(rows: Sequence) -> List[tuple]:
+    """End-to-end: transcript rows -> sorted node rows (entity, kind,
+    n_mentions, first_ts, last_ts), one per canonical entity.  The kind is
+    the one with the most mentions, ties to the smaller kind; first/last
+    are the min/max timestamp of the mentioning turns, skipping nulls."""
+    rows = dedup_turns(rows)
+    mentions, _ = extract(rows)
+    ts = {(r.conv_id, r.turn_idx): r.ts for r in rows}
+    comp = link_components([m["norm"] for m in mentions])
+    canon = canonical_names(mentions, comp)
+    by_entity: Dict[str, list] = defaultdict(list)
+    for m in mentions:
+        by_entity[canon[comp[m["norm"]]]].append(
+            (m["kind"], ts[(m["conv_id"], m["turn_idx"])]))
+    out = []
+    for entity, ms in by_entity.items():
+        kinds = Counter(k for k, _ in ms)
+        stamps = [t for _, t in ms if t is not None]
+        out.append((entity, min(kinds, key=lambda k: (-kinds[k], k)), len(ms),
+                    min(stamps, default=None), max(stamps, default=None)))
+    return sorted(out)
+
+
 def precision_recall(ours: Set[tuple], ref: Set[tuple]) -> Tuple[float, float]:
     if not ours or not ref:
         return (0.0, 0.0)

@@ -226,16 +226,14 @@ def _stage_components(spark, out_dir, paths, cfg, resume):
     with lin.StageTimer() as t:
         ments = extract_mod.mentions(_read_extracted(spark, paths))
         # LIMIT max+1 over the vocabulary-sized mention_stats rollup (one
-        # row per norm: kind is a function of the norm).  If it comes back
-        # short, the driver holds the whole vocabulary with its counts and
-        # timestamps
+        # row per norm).  If it comes back short, the driver holds the
+        # whole vocabulary with its counts and timestamps
         stats = probe_mod.driver_probe(
             mat_mod.mention_stats(ments).withColumn("id", F.xxhash64("norm")),
             DRIVER_VOCAB_MAX, as_pandas=True,
         )
         if stats is not None:
-            ids = stats[["norm", "id"]].drop_duplicates()
-            norm_ids = zip(ids["norm"].tolist(), ids["id"].tolist())
+            norm_ids = zip(stats["norm"].tolist(), stats["id"].tolist())
             if 0 < cfg.driver_link_max and len(stats) <= cfg.driver_link_max:
                 # banding, scoring and CC collapse to driver arithmetic
                 # over the same shared hashing/rules functions
@@ -357,7 +355,7 @@ def main(argv=None) -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=PipelineConfig.n_buckets)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args(argv)

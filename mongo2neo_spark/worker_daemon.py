@@ -71,6 +71,6 @@ if __name__ == "__main__":
     import pyspark.daemon
     import pyspark.sql.pandas.serializers  # noqa: F401
 
-    from mongo2neo_spark.operators import extract, link  # noqa: F401
+    from mongo2neo_spark.operators import extract, link, materialize  # noqa: F401
 
     pyspark.daemon.manager()

@@ -170,6 +170,7 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
     first = venues[0]
     for table in GRAPH_TABLES:
         assert len(_rows(spark, first[table])) > 0, table
+    assert _rows(spark, first["nodes"]) == oracle.nodes(small_rows)
     assert len(dropped(first)) == 1
     for paths in venues[1:]:
         for table in GRAPH_TABLES:
@@ -189,21 +190,22 @@ def test_driver_graph_tables_match_spark(spark):
     from mongo2neo_spark.operators import materialize as mat
 
     t = [dt.datetime(2026, 1, 1, h) for h in range(8)]
+    # kinds come from rules.infer_kind: "delta corp" is an org and
+    # "delta co" a person, with equal counts
     stats_pdf = pd.DataFrame(
         [
-            ("alpha", "person", 3, t[1], t[5]),
-            ("alpha", "org", 3, None, t[6]),
-            ("alpah", "person", 6, t[0], None),
-            ("beta", "tool", 2, None, None),
-            ("gamma", "place", 1, t[2], t[3]),
-            ("gama", "place", 1, t[4], t[4]),
-            ("delta corp", "org", 2, t[7], t[7]),
-            ("delta co", "person", 2, t[3], t[3]),
+            ("alpha", 3, None, t[6]),
+            ("alpah", 6, t[0], None),
+            ("toolbox", 2, None, None),
+            ("gamma", 1, t[2], t[3]),
+            ("gama", 1, t[4], t[4]),
+            ("delta corp", 2, t[7], t[7]),
+            ("delta co", 2, t[3], t[3]),
         ],
-        columns=["norm", "kind", "cnt", "first_ts", "last_ts"],
+        columns=["norm", "cnt", "first_ts", "last_ts"],
     )
     comp_pdf = pd.DataFrame(
-        [("alpha", 1), ("alpah", 1), ("beta", 2), ("gamma", 3), ("gama", 3),
+        [("alpha", 1), ("alpah", 1), ("toolbox", 2), ("gamma", 3), ("gama", 3),
          ("delta corp", 4), ("delta co", 4)],
         columns=["norm", "entity_id"],
     )
@@ -211,7 +213,7 @@ def test_driver_graph_tables_match_spark(spark):
 
     stats = spark.createDataFrame(
         stats_pdf,
-        "norm string, kind string, cnt long, first_ts timestamp, last_ts timestamp",
+        "norm string, cnt long, first_ts timestamp, last_ts timestamp",
     )
     comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
     n2e = mat.norm_to_entity(comp, mat.canonical_names(components=comp, stats=stats))
@@ -223,7 +225,8 @@ def test_driver_graph_tables_match_spark(spark):
         map(tuple, want_nodes.collect())
     )
     assert {r.entity: r.kind for r in got_nodes.collect()} == {
-        "alpah": "person", "beta": "tool", "gama": "place", "delta co": "org",
+        "alpah": "artifact", "toolbox": "tool", "gama": "artifact",
+        "delta co": "org",
     }
 
 

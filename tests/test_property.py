@@ -1,15 +1,41 @@
 """Property-based tests (hypothesis) for the shared rule/hash layer —
 the invariants the whole pipeline's determinism rests on."""
 
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mongo2neo_spark import rules
 from mongo2neo_spark.functions import hashing
+from mongo2neo_spark.operators import extract
 
 text_st = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
     max_size=400,
+)
+
+# turn texts built from the pieces the extraction rules care about:
+# capitalized runs, each after a predicate gap padded with the
+# punctuation and whitespace the gap rule strips, lowercase filler or
+# arbitrary text
+_mention_st = st.lists(
+    st.from_regex(r"[A-Z][A-Za-z0-9]{0,6}", fullmatch=True), min_size=1, max_size=3
+).map(" ".join)
+_pad_st = st.text(alphabet=" .,;:!?", max_size=3)
+_gap_st = st.builds(
+    lambda left, pred, ws, right: left + pred.replace(" ", ws) + right,
+    _pad_st, st.sampled_from(rules.PREDICATES), st.sampled_from([" ", "  ", "\t"]),
+    _pad_st,
+)
+_between_st = st.one_of(
+    _gap_st, _gap_st, st.from_regex(r"[a-z ]{1,12}", fullmatch=True),
+    st.text(max_size=8),
+)
+turn_text_st = st.one_of(
+    st.none(), st.just(""),
+    st.lists(st.tuples(_between_st, _mention_st), max_size=6).map(
+        lambda pieces: "".join(a + b for a, b in pieces)
+    ),
 )
 
 
@@ -30,6 +56,26 @@ def test_triples_index_into_mentions(text):
         assert 0 <= t.subj_idx < len(ms)
         assert 0 <= t.obj_idx < len(ms)
         assert t.pred in rules.PREDICATE_SET
+
+
+@given(st.lists(turn_text_st, max_size=8), st.integers(0, 8))
+@settings(max_examples=300, deadline=None)
+def test_extract_udf_matches_rules(texts, split):
+    """The extraction UDF's body (its own memoized copy of the triple
+    rule), run without Spark over two batches, gives each turn the norms
+    and triples of ``rules.extract_mentions``/``extract_triples``."""
+    batches = [pd.Series(texts[:split], dtype=object),
+               pd.Series(texts[split:], dtype=object)]
+    out = pd.concat(list(extract.extract_turn_udf.func(iter(batches))),
+                    ignore_index=True)
+    assert len(out) == len(texts)
+    for text, row in zip(texts, out.itertuples()):
+        ms = rules.extract_mentions(text or "")
+        ts = rules.extract_triples(text or "", ms)
+        assert list(row.m_norm) == [m.norm for m in ms]
+        assert list(row.t_subj) == [t.subj_idx for t in ts]
+        assert list(row.t_pred) == [t.pred for t in ts]
+        assert list(row.t_obj) == [t.obj_idx for t in ts]
 
 
 @given(st.text(max_size=100))
