@@ -2,18 +2,24 @@
 components, elect canonical names, and build the node/edge tables with
 set-semantics dedup — the Spark analogue of the reference's batched
 Cypher MERGE upserts (SURVEY.md §2.3 J2, §2.4 A1/A2/A4, §2.5 W3).
+
+Canonical names and nodes come from one pair of pandas kernels,
+:func:`canonical_rows` and :func:`node_rows`.  Each groups internally, so
+one call over any set of whole entities is exact: the driver venue
+(:func:`driver_graph_tables`) calls them once over the probed
+vocabulary, and the Spark functions :func:`canonical_names` and
+:func:`nodes` call them once per hash partition of the entity key.
 """
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import Callable, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .. import rules
+from .. import rules, schemas
 from . import cc as cc_mod
 
 MAX_PROVENANCE = 20
@@ -56,45 +62,23 @@ def mention_stats(mentions: DataFrame) -> DataFrame:
     )
 
 
-def canonical_names(components: DataFrame, stats: DataFrame) -> DataFrame:
-    """W3: per entity, the most frequent norm (by mention count), ties
-    broken lexicographically -> (entity_id, entity) canonical name.
-
-    ``stats`` is a (persisted) :func:`mention_stats` rollup, so the
-    mention stream is never scanned here."""
-    joined = stats.select("norm", "cnt").join(components, "norm")
-    w = Window.partitionBy("entity_id").orderBy(F.desc("cnt"), F.asc("norm"))
+def canonical_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """W3 kernel: (norm, cnt, entity_id) rows -> (entity_id, entity), per
+    entity the most frequent norm, ties broken by the smallest norm."""
     return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("entity_id", F.col("norm").alias("entity"))
-    )
-
-
-def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
-                        ) -> Tuple[pd.DataFrame, pd.DataFrame]:
-    """Driver venue of :func:`canonical_names` -> :func:`norm_to_entity`
-    -> :func:`nodes` for a vocabulary the driver already holds.
-
-    ``stats`` are collected :func:`mention_stats` rows (norm, cnt,
-    first_ts, last_ts), ``components`` the (norm, entity_id) rows.
-    Returns the (norm, entity) map and the node rows (entity, kind,
-    n_mentions, first_ts, last_ts) as pandas frames, with the Spark
-    functions' tie-breaks: canonical name by ``cnt`` desc then ``norm``
-    asc, majority kind (``rules.infer_kind`` of each norm) by ``kcnt``
-    desc then ``kind`` asc, and first/last timestamps as min/max that
-    skip nulls.
-    """
-    joined = stats[["norm", "cnt"]].merge(components, on="norm")
-    canon = (
-        joined.sort_values(["cnt", "norm"], ascending=[False, True])
+        pdf.sort_values(["cnt", "norm"], ascending=[False, True])
         .drop_duplicates("entity_id")[["entity_id", "norm"]]
         .rename(columns={"norm": "entity"})
     )
-    n2e = components.merge(canon, on="entity_id")[["norm", "entity"]]
 
-    m = stats.merge(n2e, on="norm")
-    m["kind"] = m["norm"].map(rules.infer_kind)
+
+def node_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """A2 + W3 kernel: (norm, cnt, first_ts, last_ts, entity) rows -> node
+    rows (entity, kind, n_mentions, first_ts, last_ts).  Kind is the
+    majority ``rules.infer_kind`` of the entity's norms by summed count,
+    ties to the smallest kind; first/last timestamps are min/max that
+    skip nulls."""
+    m = pdf.assign(kind=pdf["norm"].map(rules.infer_kind))
     by_kind = m.groupby(["entity", "kind"], as_index=False, dropna=False).agg(
         kcnt=("cnt", "sum")
     )
@@ -106,10 +90,45 @@ def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
         first_ts=("first_ts", "min"),
         last_ts=("last_ts", "max"),
     )
-    node_rows = majority.merge(per_entity, on="entity")[
+    return majority.merge(per_entity, on="entity")[
         ["entity", "kind", "n_mentions", "first_ts", "last_ts"]
     ]
-    return n2e, node_rows
+
+
+def driver_graph_tables(stats: pd.DataFrame, components: pd.DataFrame
+                        ) -> Tuple[pd.DataFrame, pd.DataFrame]:
+    """Driver venue for a vocabulary the driver already holds: ``stats``
+    are collected :func:`mention_stats` rows (norm, cnt, first_ts,
+    last_ts), ``components`` the (norm, entity_id) rows.  Returns the
+    (norm, entity) map and the :func:`node_rows` as pandas frames."""
+    canon = canonical_rows(stats[["norm", "cnt"]].merge(components, on="norm"))
+    n2e = components.merge(canon, on="entity_id")[["norm", "entity"]]
+    return n2e, node_rows(stats.merge(n2e, on="norm"))
+
+
+def _per_partition(df: DataFrame, key: str,
+                   kernel: Callable[[pd.DataFrame], pd.DataFrame],
+                   schema) -> DataFrame:
+    """Spark venue of a kernel that groups by ``key`` internally: hash
+    partitioning on ``key`` puts each group whole in one partition, and
+    the kernel runs once over each partition's concatenated Arrow
+    batches (not once per group: a pandas call per group costs more than
+    the kernel's work at vocabulary size)."""
+    def run(batches):
+        pdfs = list(batches)
+        if pdfs:
+            yield kernel(pd.concat(pdfs, ignore_index=True))
+
+    return df.repartition(key).mapInPandas(run, schema)
+
+
+def canonical_names(components: DataFrame, stats: DataFrame) -> DataFrame:
+    """:func:`canonical_rows` per hash partition of ``entity_id`` over the
+    (persisted) :func:`mention_stats` rollup ``stats`` joined to the
+    components, so the mention stream is never scanned here."""
+    joined = stats.select("norm", "cnt").join(components, "norm")
+    return _per_partition(joined, "entity_id", canonical_rows,
+                          "entity_id long, entity string")
 
 
 def norm_to_entity(components: DataFrame, canon: DataFrame) -> DataFrame:
@@ -172,33 +191,9 @@ def edges(resolved: DataFrame, max_provenance: int = MAX_PROVENANCE) -> DataFram
     )
 
 
-@F.pandas_udf(T.StringType())
-def kind_udf(norms: pd.Series) -> pd.Series:
-    """``rules.infer_kind`` over a batch of norms."""
-    return norms.map(rules.infer_kind)
-
-
 def nodes(stats: DataFrame, n2e: DataFrame) -> DataFrame:
-    """A2 + W3: node table with mention stats and majority kind.
-
-    Derives from the vocabulary-sized :func:`mention_stats` rollup
-    ``stats`` and the norm->entity map ``n2e``: each norm's kind
-    (:func:`kind_udf` over the vocabulary rows), the (entity, kind)
-    histogram, stats, and majority-kind election all run on tiny
-    aggregates, never on the mention stream itself.
-    """
-    m = stats.join(F.broadcast(n2e), "norm").withColumn("kind", kind_udf("norm"))
-    by_kind = m.groupBy("entity", "kind").agg(
-        F.sum("cnt").alias("kcnt"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-    )
-    w = Window.partitionBy("entity").orderBy(F.desc("kcnt"), F.asc("kind"))
-    return (
-        by_kind.withColumn("_rn", F.row_number().over(w))
-        .withColumn("n_mentions", F.sum("kcnt").over(Window.partitionBy("entity")))
-        .withColumn("first_ts", F.min("first_ts").over(Window.partitionBy("entity")))
-        .withColumn("last_ts", F.max("last_ts").over(Window.partitionBy("entity")))
-        .filter(F.col("_rn") == 1)
-        .select("entity", "kind", "n_mentions", "first_ts", "last_ts")
-    )
+    """:func:`node_rows` per hash partition of ``entity`` over the
+    vocabulary-sized :func:`mention_stats` rollup ``stats`` joined to the
+    norm->entity map ``n2e``, never over the mention stream itself."""
+    m = stats.join(F.broadcast(n2e), "norm")
+    return _per_partition(m, "entity", node_rows, schemas.NODE_ROWS)

@@ -40,10 +40,11 @@ EXTRACTED = T.StructType(
 )
 
 
-# frames the driver builds (pandas -> Arrow LocalTableScan).  Nullability
-# as the Spark path's joins/windows produce it, so every venue writes the
-# same schema: a component label is an xxhash64 id, never null (the Spark
-# path's frame goes through DataFrame.to(COMPONENT_ROWS), which keeps it so)
+# frames the driver builds (pandas -> Arrow LocalTableScan), declared so
+# that every venue writes the same schema: a component label is an xxhash64
+# id, never null (the Spark path's frame goes through
+# DataFrame.to(COMPONENT_ROWS), which keeps it so), and the Spark runner of
+# the node kernel (materialize.nodes) declares NODE_ROWS itself
 COMPONENT_ROWS = T.StructType(
     [
         T.StructField("norm", T.StringType(), True),

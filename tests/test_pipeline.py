@@ -181,8 +181,13 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
 
 
 def test_driver_graph_tables_match_spark(spark):
-    """The driver venue's canonical names, norm->entity map and node rows
-    equal the Spark functions' on ties (count, kind) and null timestamps."""
+    """The driver venue (driver_graph_tables) and the Spark runners
+    (canonical_names -> norm_to_entity -> nodes) both give the
+    hand-written canonical names and node rows: count ties to the
+    smallest norm, kind ties to the smallest kind, and timestamps as
+    min/max that skip nulls (one entity has none at all).  The Spark side
+    runs with two rows per Arrow batch, so the three-norm entity reaches
+    its partition's kernel call in several batches."""
     import datetime as dt
 
     import pandas as pd
@@ -190,12 +195,11 @@ def test_driver_graph_tables_match_spark(spark):
     from mongo2neo_spark.operators import materialize as mat
 
     t = [dt.datetime(2026, 1, 1, h) for h in range(8)]
-    # kinds come from rules.infer_kind: "delta corp" is an org and
-    # "delta co" a person, with equal counts
     stats_pdf = pd.DataFrame(
         [
             ("alpha", 3, None, t[6]),
             ("alpah", 6, t[0], None),
+            ("alpa", 1, t[5], t[5]),
             ("toolbox", 2, None, None),
             ("gamma", 1, t[2], t[3]),
             ("gama", 1, t[4], t[4]),
@@ -205,29 +209,47 @@ def test_driver_graph_tables_match_spark(spark):
         columns=["norm", "cnt", "first_ts", "last_ts"],
     )
     comp_pdf = pd.DataFrame(
-        [("alpha", 1), ("alpah", 1), ("toolbox", 2), ("gamma", 3), ("gama", 3),
-         ("delta corp", 4), ("delta co", 4)],
+        [("alpha", 1), ("alpah", 1), ("alpa", 1), ("toolbox", 2), ("gamma", 3),
+         ("gama", 3), ("delta corp", 4), ("delta co", 4)],
         columns=["norm", "entity_id"],
     )
-    n2e_pdf, nodes_pdf = mat.driver_graph_tables(stats_pdf, comp_pdf)
+    want_n2e = [
+        ("alpa", "alpah"), ("alpah", "alpah"), ("alpha", "alpah"),
+        ("delta co", "delta co"), ("delta corp", "delta co"),
+        ("gama", "gama"), ("gamma", "gama"), ("toolbox", "toolbox"),
+    ]
+    # rules.infer_kind: "delta corp" is an org and "delta co" a person,
+    # with equal counts; the other alpha/gamma norms are artifacts
+    want_nodes = [
+        ("alpah", "artifact", 10, t[0], t[6]),
+        ("delta co", "org", 4, t[3], t[7]),
+        ("gama", "artifact", 2, t[2], t[4]),
+        ("toolbox", "tool", 2, None, None),
+    ]
 
-    stats = spark.createDataFrame(
-        stats_pdf,
-        "norm string, cnt long, first_ts timestamp, last_ts timestamp",
-    )
-    comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
-    n2e = mat.norm_to_entity(comp, mat.canonical_names(components=comp, stats=stats))
-    got_n2e = spark.createDataFrame(n2e_pdf, schemas.NORM_TO_ENTITY)
-    assert sorted(got_n2e.collect()) == sorted(n2e.collect())
-    got_nodes = spark.createDataFrame(nodes_pdf, schemas.NODE_ROWS)
-    want_nodes = mat.nodes(stats=stats, n2e=n2e)
-    assert sorted(map(tuple, got_nodes.collect())) == sorted(
-        map(tuple, want_nodes.collect())
-    )
-    assert {r.entity: r.kind for r in got_nodes.collect()} == {
-        "alpah": "artifact", "toolbox": "tool", "gama": "artifact",
-        "delta co": "org",
-    }
+    def rows(pdf, schema):
+        return sorted(map(tuple, spark.createDataFrame(pdf, schema).collect()))
+
+    n2e_pdf, nodes_pdf = mat.driver_graph_tables(stats_pdf, comp_pdf)
+    assert rows(n2e_pdf, schemas.NORM_TO_ENTITY) == want_n2e
+    assert rows(nodes_pdf, schemas.NODE_ROWS) == want_nodes
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        stats = spark.createDataFrame(
+            stats_pdf,
+            "norm string, cnt long, first_ts timestamp, last_ts timestamp",
+        )
+        comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
+        n2e = mat.norm_to_entity(
+            comp, mat.canonical_names(components=comp, stats=stats))
+        assert sorted(map(tuple, n2e.collect())) == want_n2e
+        nodes = mat.nodes(stats=stats, n2e=n2e)
+        assert sorted(map(tuple, nodes.collect())) == want_nodes
+    finally:
+        spark.conf.set(conf, old)
 
 
 def _no_mention_rows(rows):
@@ -274,11 +296,12 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
 # driver-built frames are Arrow local tables and the read-backs declare
 # their schemas (34 before); 18 on the distributed-LSH venue since the
 # driver groups the band keys and pair scoring is one job (26 before, 44
-# before the vocabulary stayed on the driver); 59 on the all-Spark chain
+# before the vocabulary stayed on the driver); 57 on the all-Spark chain
 # with distributed CC rounds (DRIVER_VOCAB_MAX and DRIVER_CC_MAX_EDGES
-# patched to 0)
+# patched to 0) since canonical names and nodes run their kernels once per
+# hash partition (58 with the window functions)
 MAX_FRESH_RUN_JOBS = {"driver_link": 17, "distributed_lsh": 18,
-                      "all_spark_cc": 59}
+                      "all_spark_cc": 57}
 
 
 def _cached_rdds(sc):
