@@ -63,7 +63,7 @@ def _word_shingles(text: str, n: int = 3) -> frozenset:
 def _shingle_band_keys_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     # fused shingle->hash path (memoized crc32, no per-index slicing) —
     # value-identical to [_word_shingles -> minhash_signatures_batch]
-    # (property-tested); this UDF is the curation pipeline's hottest loop
+    # (property-tested); this UDF is MinHash dedup's hottest loop
     for texts in batches:
         hls = hashing.shingle_hash_lists(list(texts))
         sigs = hashing.minhash_signatures_from_hashes(hls)

@@ -4,7 +4,7 @@ This is "the reference's emitted triple set" for P/R scoring: a simple,
 loop-based implementation of the exact same pipeline semantics —
 dedup → mention/triple extraction → MinHash-LSH linking →
 connected-components canonicalization → canonical-name election →
-distinct (subj, pred, obj) set.
+distinct (subj, pred, obj) set, node rows and weighted edge rows.
 
 It shares ``rules`` and ``functions.hashing`` with the Spark pipeline, so
 parity is by construction; the tests then *verify* it (never assume).
@@ -123,17 +123,33 @@ def canonical_names(mentions: Sequence[dict],
     return out
 
 
-def pipeline_triples(rows: Sequence) -> Set[Tuple[str, str, str]]:
-    """End-to-end: transcript rows -> distinct canonical (subj, pred, obj)."""
+def _resolved(rows: Sequence):
+    """Deduplicated rows, their mentions and raw triples, and norm ->
+    canonical entity."""
     rows = dedup_turns(rows)
     mentions, raw = extract(rows)
     comp = link_components([m["norm"] for m in mentions])
     canon = canonical_names(mentions, comp)
-    out: Set[Tuple[str, str, str]] = set()
+    return rows, mentions, raw, {n: canon[c] for n, c in comp.items()}
+
+
+def pipeline_triples(rows: Sequence) -> Set[Tuple[str, str, str]]:
+    """End-to-end: transcript rows -> distinct canonical (subj, pred, obj)."""
+    return {e[:3] for e in edges(rows, max_provenance=0)}
+
+
+def edges(rows: Sequence, max_provenance: int) -> List[tuple]:
+    """End-to-end: transcript rows -> sorted edge rows (subj, pred, obj,
+    weight, provenance), one per canonical triple.  The weight counts its
+    raw triple occurrences; the provenance is the first
+    ``max_provenance`` of their sorted (conv_id, turn_idx), repeats kept."""
+    _, _, raw, entity = _resolved(rows)
+    occurrences: Dict[tuple, list] = defaultdict(list)
     for t in raw:
-        out.add((canon[comp[t["subj_norm"]]], t["pred"],
-                 canon[comp[t["obj_norm"]]]))
-    return out
+        key = (entity[t["subj_norm"]], t["pred"], entity[t["obj_norm"]])
+        occurrences[key].append((t["conv_id"], t["turn_idx"]))
+    return sorted((*key, len(occ), sorted(occ)[:max_provenance])
+                  for key, occ in occurrences.items())
 
 
 def nodes(rows: Sequence) -> List[tuple]:
@@ -141,21 +157,18 @@ def nodes(rows: Sequence) -> List[tuple]:
     n_mentions, first_ts, last_ts), one per canonical entity.  The kind is
     the one with the most mentions, ties to the smaller kind; first/last
     are the min/max timestamp of the mentioning turns, skipping nulls."""
-    rows = dedup_turns(rows)
-    mentions, _ = extract(rows)
+    rows, mentions, _, entity = _resolved(rows)
     ts = {(r.conv_id, r.turn_idx): r.ts for r in rows}
-    comp = link_components([m["norm"] for m in mentions])
-    canon = canonical_names(mentions, comp)
     by_entity: Dict[str, list] = defaultdict(list)
     for m in mentions:
-        by_entity[canon[comp[m["norm"]]]].append(
+        by_entity[entity[m["norm"]]].append(
             (m["kind"], ts[(m["conv_id"], m["turn_idx"])]))
     out = []
-    for entity, ms in by_entity.items():
+    for entity_name, ms in by_entity.items():
         kinds = Counter(k for k, _ in ms)
         stamps = [t for _, t in ms if t is not None]
-        out.append((entity, min(kinds, key=lambda k: (-kinds[k], k)), len(ms),
-                    min(stamps, default=None), max(stamps, default=None)))
+        out.append((entity_name, min(kinds, key=lambda k: (-kinds[k], k)),
+                    len(ms), min(stamps, default=None), max(stamps, default=None)))
     return sorted(out)
 
 

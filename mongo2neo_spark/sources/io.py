@@ -8,7 +8,7 @@ partition overwrite — the same idempotent per-partition replace
 semantics Iceberg's ``overwritePartitions`` gives (the Spark analogue
 of the reference's Cypher ``MERGE`` upsert).
 
-Stage code never mentions a format — it calls ``read_table``/
+Stage code never mentions a format — it calls ``read_transcripts``/
 ``write_table`` only.
 """
 
@@ -27,10 +27,6 @@ def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
 
     ``source`` is a path (parquet) or a catalog table name (iceberg).
     """
-    return read_table(spark, source)
-
-
-def read_table(spark: SparkSession, source: str) -> DataFrame:
     if TABLE_FORMAT == "iceberg" and not _is_path(source):
         return spark.read.format("iceberg").load(source)
     return spark.read.parquet(source)

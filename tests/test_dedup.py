@@ -216,8 +216,7 @@ def test_simhash_hot_bucket_cap_bounds_join_and_is_audited(spark):
 
 def test_simhash_clusters_match_pure_python_oracle(spark, tmp_path):
     """End-to-end parity of simhash_dedup_components vs the
-    entry_oracle replica on a corpus with planted near-identical texts
-    (the same parity contract the driver's harness checks at sf0.01)."""
+    entry_oracle replica on a corpus with planted near-identical texts."""
     from mongo2neo_spark import entry_oracle
 
     texts = []

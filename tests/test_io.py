@@ -116,8 +116,8 @@ def test_read_table_branch_selection(iceberg_format):
             return _FakeReader(self.log)
 
     sp = _FakeSpark()
-    m2nio.read_table(sp, "cat.db.turns")
+    m2nio.read_transcripts(sp, "cat.db.turns")
     assert sp.log == [("format", "iceberg"), ("load", "cat.db.turns")]
     sp2 = _FakeSpark()
-    m2nio.read_table(sp2, "/data/turns.parquet")
+    m2nio.read_transcripts(sp2, "/data/turns.parquet")
     assert sp2.log == [("parquet", "/data/turns.parquet")]

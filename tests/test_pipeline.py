@@ -42,19 +42,19 @@ def test_precision_recall_vs_oracle(spark, small_rows, pipeline_out):
 def test_resume_is_noop(spark, pipeline_out):
     tmp, paths = pipeline_out
     before = _triples(spark, paths)
-    lin_before = spark.read.parquet(paths["lineage"]).count()
+    lin_before = lin.read_lineage(spark, str(tmp / "out")).count()
     run_pipeline(
         spark, str(tmp / "in"), str(tmp / "out"),
         PipelineConfig(n_buckets=8, run_id="r2"),
     )
     assert _triples(spark, paths) == before
     # no new lineage rows: every partition was already recorded
-    assert spark.read.parquet(paths["lineage"]).count() == lin_before
+    assert lin.read_lineage(spark, str(tmp / "out")).count() == lin_before
 
 
 def test_lineage_shape(spark, pipeline_out):
-    _, paths = pipeline_out
-    lin_df = spark.read.parquet(paths["lineage"])
+    tmp, _ = pipeline_out
+    lin_df = lin.read_lineage(spark, str(tmp / "out"))
     stages = {r.stage for r in lin_df.select("stage").distinct().collect()}
     assert stages == {"extract", "components", "materialize"}
     # extraction is bucket-granular
@@ -65,22 +65,24 @@ def test_bucket_invariance(spark, small_rows, tmp_path):
     """K1: the conversation bucket count changes only the layout of the
     extraction table, and the dedup strategy only the plan, never the
     graph — n_buckets 1 and 8 with the shuffle and the adaptive dedup
-    give identical triples, nodes and edges, and the triples are the
-    oracle's."""
+    give the oracle's triples, nodes and edges.  The provenance cap is 1,
+    so that it binds: no edge of the fixture reaches the default cap."""
     inp = _write_input(spark, fixtures.with_duplicates_and_shuffle(small_rows),
                        str(tmp_path / "in"))
-    runs = [
-        run_pipeline(spark, inp, str(tmp_path / f"b{n}-{strategy}"),
-                     PipelineConfig(n_buckets=n, dedup_strategy=strategy,
-                                    run_id=f"b{n}-{strategy}"),
-                     resume=False)
-        for n in (1, 8) for strategy in ("shuffle", "adaptive")
-    ]
-    first = runs[0]
-    for paths in runs[1:]:
-        for table in ("triples", "nodes", "edges"):
-            assert _rows(spark, first[table]) == _rows(spark, paths[table]), table
-    assert set(_rows(spark, first["triples"])) == oracle.pipeline_triples(small_rows)
+    want_triples = oracle.pipeline_triples(small_rows)
+    want_nodes = oracle.nodes(small_rows)
+    want_edges = oracle.edges(small_rows, max_provenance=1)
+    assert any(e[3] > 1 for e in want_edges)
+    for n in (1, 8):
+        for strategy in ("shuffle", "adaptive"):
+            paths = run_pipeline(
+                spark, inp, str(tmp_path / f"b{n}-{strategy}"),
+                PipelineConfig(n_buckets=n, dedup_strategy=strategy,
+                               max_provenance=1, run_id=f"b{n}-{strategy}"),
+                resume=False)
+            assert set(_rows(spark, paths["triples"])) == want_triples
+            assert _rows(spark, paths["nodes"]) == want_nodes
+            assert _rows(spark, paths["edges"]) == want_edges
 
 
 def test_nodes_and_edges_consistent(spark, pipeline_out):
@@ -113,29 +115,30 @@ GRAPH_TABLES = ("components", "nodes", "edges", "triples")
 
 
 def _run(spark, inp, tmp_path, name, link_max, check_resume=False):
-    """Paths of a fresh run with ``driver_link_max=link_max``.  With
-    ``check_resume``, a resumed run follows it and must leave the graph
-    tables as they are and add no lineage row."""
+    """Out dir and paths of a fresh run with ``driver_link_max=link_max``.
+    With ``check_resume``, a resumed run follows it and must leave the
+    graph tables as they are and add no lineage row."""
     out = str(tmp_path / name)
     cfg = PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max)
     paths = run_pipeline(spark, inp, out, cfg, resume=False)
     if check_resume:
         before = {t: _rows(spark, paths[t]) for t in GRAPH_TABLES}
-        n_lineage = spark.read.parquet(paths["lineage"]).count()
+        n_lineage = lin.read_lineage(spark, out).count()
         run_pipeline(spark, inp, out,
                      dataclasses.replace(cfg, run_id=f"{name}-resumed"),
                      resume=True)
         for table in GRAPH_TABLES:
             assert _rows(spark, paths[table]) == before[table], (name, table)
-        assert spark.read.parquet(paths["lineage"]).count() == n_lineage, name
-    return paths
+        assert lin.read_lineage(spark, out).count() == n_lineage, name
+    return out, paths
 
 
 def _run_venues(spark, inp, tmp_path, monkeypatch, check_resume=False):
-    """Paths of fresh runs on the three venues: driver link, distributed
-    LSH with the vocabulary on the driver, and fully distributed (the
-    vocabulary over DRIVER_VOCAB_MAX, so canonicalization runs on
-    Spark); ``check_resume`` as in :func:`_run`."""
+    """Out dirs and paths of fresh runs on the three venues: driver link,
+    distributed LSH with the vocabulary on the driver, and fully
+    distributed (the vocabulary over DRIVER_VOCAB_MAX, so
+    canonicalization runs on Spark); ``check_resume`` as in
+    :func:`_run`."""
     drv = _run(spark, inp, tmp_path, "drv", 100_000, check_resume)
     lsh = _run(spark, inp, tmp_path, "lsh", 0, check_resume)
     with monkeypatch.context() as m:
@@ -150,34 +153,37 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
     driver; LSH on Spark with the vocabulary on the driver; everything on
     Spark; and distributed LSH with more linked pairs than a driver
     union-find takes, which hands over to the all-Spark path and its
-    distributed CC rounds) must produce identical components, nodes
-    (stats, timestamps, majority kind), edges (weight, provenance),
-    triples, parquet schemas and lineage drop audits — same shared
-    hashing/rules code, different venue only."""
+    distributed CC rounds) must produce the oracle's nodes (stats,
+    timestamps, majority kind) and edges (weight, provenance), and
+    identical components, triples, parquet schemas and lineage drop
+    audits — same shared hashing/rules code, different venue only."""
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
     venues = list(_run_venues(spark, inp, tmp_path, monkeypatch))
     with monkeypatch.context() as m:
         m.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
         venues.append(_run(spark, inp, tmp_path, "dist_cc", 0))
 
-    def dropped(paths):
+    def dropped(out):
         return [
             r.input_rows
-            for r in spark.read.parquet(paths["lineage"])
+            for r in lin.read_lineage(spark, out)
             .filter("stage = 'components'").collect()
         ]
 
-    first = venues[0]
+    want_nodes = oracle.nodes(small_rows)
+    want_edges = oracle.edges(small_rows, PipelineConfig().max_provenance)
+    first_out, first = venues[0]
     for table in GRAPH_TABLES:
         assert len(_rows(spark, first[table])) > 0, table
-    assert _rows(spark, first["nodes"]) == oracle.nodes(small_rows)
-    assert len(dropped(first)) == 1
-    for paths in venues[1:]:
+    assert len(dropped(first_out)) == 1
+    for out, paths in venues:
+        assert _rows(spark, paths["nodes"]) == want_nodes, out
+        assert _rows(spark, paths["edges"]) == want_edges, out
         for table in GRAPH_TABLES:
             assert _rows(spark, first[table]) == _rows(spark, paths[table]), table
             assert _schema(first[table]).equals(
                 _schema(paths[table]), check_metadata=True), table
-        assert dropped(first) == dropped(paths)
+        assert dropped(first_out) == dropped(out)
 
 
 def test_driver_graph_tables_match_spark(spark):
@@ -267,8 +273,8 @@ def test_degenerate_input_both_venues(spark, small_rows, tmp_path, case,
     inp = _write_input(spark, rows, str(tmp_path / "in"))
     want = oracle.pipeline_triples(rows)
     assert (len(want) == 0) == (case == "no_mentions")
-    for paths in _run_venues(spark, inp, tmp_path, monkeypatch,
-                             check_resume=True):
+    for _, paths in _run_venues(spark, inp, tmp_path, monkeypatch,
+                                check_resume=True):
         assert set(_rows(spark, paths["triples"])) == want
         if case == "no_mentions":
             for table in ("components", "nodes", "edges"):
@@ -281,11 +287,11 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
     on every venue, fresh and resumed.  Every lineage row records 0 rows
     out and the checksum "0" (the observed sum over no rows is null)."""
     inp = _write_input(spark, [], str(tmp_path / "in"))
-    for paths in _run_venues(spark, inp, tmp_path, monkeypatch,
-                             check_resume=True):
+    for out, paths in _run_venues(spark, inp, tmp_path, monkeypatch,
+                                  check_resume=True):
         for table in GRAPH_TABLES:
             assert _rows(spark, paths[table]) == [], table
-        lineage = spark.read.parquet(paths["lineage"]).collect()
+        lineage = lin.read_lineage(spark, out).collect()
         assert len(lineage) == 4 + 2  # extract buckets, components, materialize
         for r in lineage:
             assert (r.output_rows, r.checksum) == (0, "0"), r

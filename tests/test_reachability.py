@@ -23,11 +23,14 @@ ENTRY_FILES = [
     ROOT / "BENCH" / "scaling.py",
     ROOT / "BENCH" / "run_pipeline_job.py",
 ]
-# Document curation operators: not on the transcript->KG path, kept with
-# their own tests (and entry_oracle, their pure-Python reference outputs).
-# A module joins this list on purpose or not at all.
+# Document operators: not on the transcript->KG path, kept with their own
+# tests (and entry_oracle, their pure-Python reference outputs) until the
+# deletion slice of each lands (ROADMAP item 10).  A module joins this
+# list on purpose or not at all.
 LIBRARY_FILES = [
-    ROOT / PKG / "plans" / "curation.py",
+    ROOT / PKG / "operators" / "dedup.py",
+    ROOT / PKG / "operators" / "text.py",
+    ROOT / PKG / "operators" / "sampling.py",
     ROOT / PKG / "entry_oracle.py",
 ]
 
