@@ -2,12 +2,11 @@
 (operators.dedup and operators.text).
 
 Those operators are deterministic but not sanely SQL-expressible
-(SimHash clustering, the shingle Jaccard verify, token counting).  For
-each, the *specification implementation* — simple pure-Python loops
-sharing ``functions.hashing`` with nothing Spark about them (the same
-parity-by-construction approach as ``mongo2neo_spark.oracle``) —
-computes the expected rows driver-side, and the operator's tests compare
-the Spark result to them row for row.
+(SimHash clustering, token counting).  For each, the *specification
+implementation* — simple pure-Python loops sharing ``functions.hashing``
+with nothing Spark about them (the same parity-by-construction approach
+as ``mongo2neo_spark.oracle``) — computes the expected rows driver-side,
+and the operator's tests compare the Spark result to them row for row.
 
 No Spark imports here.  Inputs are a test's own parquet directory.
 """
@@ -18,19 +17,6 @@ from collections import defaultdict
 from typing import List
 
 from .functions import hashing
-
-
-def _word_shingles(text: str, n: int = 3) -> frozenset:
-    # mirrors operators.dedup._word_shingles (no Spark import allowed here)
-    toks = (text or "").split()
-    if len(toks) < n:
-        return frozenset((" ".join(toks),)) if toks else frozenset()
-    return frozenset(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
-
-
-def _jaccard(a: frozenset, b: frozenset) -> float:
-    u = len(a | b)
-    return len(a & b) / u if u else 1.0
 
 
 def simhash_cluster_rows(

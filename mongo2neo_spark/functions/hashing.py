@@ -12,7 +12,7 @@ bands, and candidate pairs (SURVEY.md §5.1 parity-by-construction).
 from __future__ import annotations
 
 import zlib
-from typing import Dict, Iterable, List, Sequence, Tuple
+from typing import Dict, Iterable, List, Sequence
 
 import numpy as np
 
@@ -69,100 +69,6 @@ def minhash_signatures_batch(token_sets: Sequence[Iterable[str]]) -> np.ndarray:
     return sig
 
 
-_TOKEN_HASH_MEMO: Dict[str, int] = {}
-_RAW_CRC_MEMO: Dict[str, int] = {}
-# per-Python-worker cap: ~170 MB at 1M typical shingles; with 32 reused
-# workers that bounds memo memory at a few GB per executor host even on
-# unbounded-vocabulary corpora (the memo is an accelerator, not a
-# correctness dependency — misses just recompute the crc)
-_MEMO_CAP = 1_000_000
-
-
-def shingle_hash_lists(texts: Sequence[str], n: int = 3) -> List[List[int]]:
-    """Per-text word-``n``-shingle base-hash lists, fused and memoized —
-    the hot path of the banding UDF.
-
-    Semantics are IDENTICAL to ``[_word_shingles -> token_hash]``:
-    shingle strings are built zip-wise (no per-index list slicing), the
-    crc32 is memoized across the worker's lifetime (pure function of the
-    string; natural shingle reuse makes the hit rate high on real
-    corpora too), and deduplication happens on the hash value — safe,
-    because MinHash minima are invariant under duplicate base hashes, so
-    a crc collision between two distinct shingles of the SAME document
-    cannot change the signature."""
-    memo = _TOKEN_HASH_MEMO
-    crc = zlib.crc32
-    out: List[List[int]] = []
-    for text in texts:
-        toks = (text or "").split()
-        if len(toks) < n:
-            if not toks:
-                out.append([])
-                continue
-            s = " ".join(toks)
-            h = memo.get(s)
-            if h is None:
-                h = crc(s.encode("utf-8")) % MERSENNE_P
-                if len(memo) < _MEMO_CAP:
-                    memo[s] = h
-            out.append([h])
-            continue
-        hs = set()
-        for t3 in zip(*(toks[i:] for i in range(n))):
-            s = " ".join(t3)
-            h = memo.get(s)
-            if h is None:
-                h = crc(s.encode("utf-8")) % MERSENNE_P
-                if len(memo) < _MEMO_CAP:
-                    memo[s] = h
-            hs.add(h)
-        out.append(list(hs))
-    return out
-
-
-def minhash_signatures_from_hashes(hash_lists: Sequence[Sequence[int]]) -> np.ndarray:
-    """(n, NUM_HASHES) signatures from precomputed base-hash lists —
-    same flattened matrix + ``minimum.reduceat`` as
-    :func:`minhash_signatures_batch`."""
-    if len(hash_lists) == 0:
-        return np.empty((0, NUM_HASHES), dtype=np.int64)
-    offsets = np.empty(len(hash_lists), dtype=np.int64)
-    total = 0
-    empties = []
-    for i, hl in enumerate(hash_lists):
-        offsets[i] = total
-        if hl:
-            total += len(hl)
-        else:
-            empties.append(i)
-            total += 1  # placeholder slot
-    xs = np.zeros(total, dtype=np.int64)
-    pos = 0
-    for hl in hash_lists:
-        m = len(hl) or 1
-        if hl:
-            xs[pos : pos + m] = hl
-        pos += m
-    h = (HASH_A[:, None] * xs[None, :] + HASH_B[:, None]) % MERSENNE_P
-    sig = np.minimum.reduceat(h, offsets, axis=1).T
-    if empties:
-        sig[np.asarray(empties)] = MERSENNE_P
-    return sig
-
-
-def band_keys_batch(sig_matrix: np.ndarray) -> List[List[str]]:
-    """Batch :func:`band_keys` over an (n, NUM_HASHES) signature matrix —
-    one ``tolist()`` (C-speed int conversion) + direct-index f-strings,
-    ~3x faster than the per-signature path; value-identical
-    (property-tested)."""
-    if LSH_ROWS == 2:
-        return [
-            [f"{b}:{s[2 * b]}:{s[2 * b + 1]}" for b in range(LSH_BANDS)]
-            for s in sig_matrix.tolist()
-        ]
-    return [band_keys(s) for s in sig_matrix.tolist()]
-
-
 def band_keys(sig: Sequence[int]) -> List[str]:
     """LSH band keys of a signature: one string key per band.
 
@@ -179,6 +85,12 @@ def band_keys(sig: Sequence[int]) -> List[str]:
 # SimHash (near-dup detection over documents)
 # ---------------------------------------------------------------------------
 SIMHASH_BITS = 64
+# crc32 of each token, memoized for simhash_batch
+_RAW_CRC_MEMO: Dict[str, int] = {}
+# per-Python-worker cap: bounds memo memory even on unbounded-vocabulary
+# corpora (the memo is an accelerator, not a correctness dependency —
+# misses just recompute the crc)
+_MEMO_CAP = 1_000_000
 
 
 def simhash(tokens: Iterable[str]) -> int:
@@ -213,7 +125,7 @@ def simhash_batch(token_lists: Sequence[Sequence[str]]) -> np.ndarray:
     offsets = np.empty(n, dtype=np.int64)
     empties = []
     crc = zlib.crc32
-    local = _RAW_CRC_MEMO  # raw crc32 (the %P memo is a different fn)
+    local = _RAW_CRC_MEMO
     total = 0
     for i, toks in enumerate(token_lists):
         offsets[i] = total
@@ -246,7 +158,7 @@ def simhash_batch(token_lists: Sequence[Sequence[str]]) -> np.ndarray:
         pos[np.asarray(empties)] = False  # spec: empty token list -> 0
     weights = (np.uint64(1) << np.arange(SIMHASH_BITS, dtype=np.uint64))
     packed = (pos.astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)
-    return packed.astype(np.int64)  # two's-complement == _to_i64 per value
+    return packed.astype(np.int64)  # two's-complement int64 per value
 
 
 def simhash_block_plan(max_hamming: int = 3):
@@ -404,8 +316,7 @@ def token_window_fps_batch(texts, k: int):
     shifted multiply-adds over one numpy array per document (the
     rolling_fingerprints_batch vectorization, kept O(n*k/simd) instead
     of a per-window Python loop).  token_hash calls are memoized per
-    batch — natural text repeats tokens constantly (same trick as
-    shingle_hash_lists)."""
+    batch — natural text repeats tokens constantly."""
     pows = [pow(TOKEN_FP_BASE, k - 1 - j, MERSENNE_P) for j in range(k)]
     memo: dict = {}
     out = []

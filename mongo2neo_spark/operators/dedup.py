@@ -1,17 +1,16 @@
 """Document deduplication operators for large-scale training-data
-pipelines: exact, MinHash+LSH near-dup, SimHash near-dup, and n-gram
-Jaccard — all DataFrame-first, reusing the engine's hashing and
-connected-components machinery.
+pipelines: SimHash near-dup and exact substring dedup — DataFrame-first,
+reusing the engine's hashing and connected-components machinery.
 
-Scale shape (identical for every near-dup variant):
-    signature UDF (Arrow batch) → band/bucket explode → bucket self-join
+SimHash scale shape:
+    signature UDF (Arrow batch) → block-key explode → bucket self-join
     (equi join, AQE-skew-handled) → exact verify → CC → min-id survivor.
 The self-join is always *within buckets*, never all-pairs.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -21,450 +20,6 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions import hashing
 from . import cc as cc_mod
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", hash_fn=None) -> DataFrame:
-    """Exact dedup: one survivor (min id) per identical text value.
-
-    One shuffle, keyed by (xxhash64(text), length(text), text).  The
-    hash prefix keeps the partitioner cheap; the text itself stays in
-    the grouping key as the in-group equality VERIFY, so a 64-bit hash
-    collision between two distinct documents can never silently delete
-    one of them (at the 10^10+-doc design scale birthday collisions are
-    expected: ~n²/2⁶⁵).  Shuffle width is unchanged — the row carries
-    the text column either way; only the comparator sees it, and the
-    hash prefix short-circuits almost every comparison.
-
-    ``hash_fn`` injects the prefix hash (tests force a constant to prove
-    the verify step keeps colliding-but-distinct documents apart).
-    """
-    text = F.col(text_col)
-    h = hash_fn(text) if hash_fn is not None else F.xxhash64(text)
-    w = Window.partitionBy(h, F.length(text), text).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-# ---------------------------------------------------------------------------
-# word-shingle MinHash LSH near-dup
-# ---------------------------------------------------------------------------
-def _word_shingles(text: str, n: int = 3) -> frozenset:
-    toks = (text or "").split()
-    if len(toks) < n:
-        return frozenset((" ".join(toks),)) if toks else frozenset()
-    return frozenset(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def _shingle_band_keys_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    # fused shingle->hash path (memoized crc32, no per-index slicing) —
-    # value-identical to [_word_shingles -> minhash_signatures_batch]
-    # (property-tested); this UDF is MinHash dedup's hottest loop
-    for texts in batches:
-        hls = hashing.shingle_hash_lists(list(texts))
-        sigs = hashing.minhash_signatures_from_hashes(hls)
-        yield pd.Series(hashing.band_keys_batch(sigs))
-
-
-_BANDS_AND_HASHES_TYPE = T.StructType(
-    [
-        T.StructField("bands", T.ArrayType(T.StringType())),
-        T.StructField("sh", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-@pandas_udf(_BANDS_AND_HASHES_TYPE)
-def _bands_and_hashes_udf(
-    batches: Iterator[pd.Series],
-) -> Iterator[pd.DataFrame]:
-    """One Arrow pass yielding BOTH the LSH band keys and the distinct
-    shingle-hash array per text.  The banding UDF and the verify-array
-    UDF each start from the same ``shingle_hash_lists`` — running them
-    as two separate UDF columns shingles every document TWICE (two full
-    Python passes over the corpus); this fused form shares the one
-    shingle pass.  Field values are bit-identical to the two single
-    UDFs (same functions, same inputs)."""
-    for texts in batches:
-        hls = hashing.shingle_hash_lists(list(texts))
-        sigs = hashing.minhash_signatures_from_hashes(hls)
-        yield pd.DataFrame(
-            {"bands": hashing.band_keys_batch(sigs), "sh": hls}
-        )
-
-
-@pandas_udf(T.DoubleType())
-def _shingle_jaccard_udf(
-    it: Iterator[Tuple[pd.Series, pd.Series]]
-) -> Iterator[pd.Series]:
-    # hashed-shingle-set jaccard — same spec as the jvm verify path and
-    # the oracle replica (see shingle_hash_col)
-    for a, b in it:
-        out = []
-        for x, y in zip(a, b):
-            sa = {hashing.token_hash(s) for s in _word_shingles(x)}
-            sb = {hashing.token_hash(s) for s in _word_shingles(y)}
-            u = len(sa | sb)
-            out.append(len(sa & sb) / u if u else 1.0)
-        yield pd.Series(out, dtype="float64")
-
-
-def word_shingles_col(text, n: int = 3):
-    """JVM-side word-``n``-shingle SET of a text column — the exact
-    column-expression mirror of :func:`_word_shingles` (split on
-    whitespace runs, short texts collapse to one joined shingle, empty
-    text to the empty set).  Pure built-ins: transform/sequence/slice/
-    array_join/array_distinct, all inside whole-stage codegen."""
-    t = F.trim(F.coalesce(text, F.lit("")))
-    toks = F.split(t, r"\s+")
-    empty = F.array().cast("array<string>")
-    joined = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return (
-        F.when(F.length(t) == 0, empty)
-        .when(F.size(toks) < n, F.array(F.array_join(toks, " ")))
-        .otherwise(F.array_distinct(joined))
-    )
-
-
-@pandas_udf(T.ArrayType(T.LongType()))
-def _shingle_hashes_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """text -> DISTINCT crc32%P shingle-hash array (int64), via the same
-    memoized fused path as the banding UDF — ~10x cheaper than building
-    the equivalent array with interpreted JVM transforms (measured), and
-    value-identical to :func:`shingle_hash_col` as a SET (tested)."""
-    for texts in batches:
-        yield pd.Series(hashing.shingle_hash_lists(list(texts)))
-
-
-def shingle_hash_col(text, n: int = 3):
-    """JVM-side DISTINCT crc32%P hash set of a text's word-``n``-shingles
-    (int64 array) — the exact column mirror of
-    ``{hashing.token_hash(s) for s in _word_shingles(text)}``.
-
-    The dedup verify runs on these hash sets instead of the shingle
-    strings: 8 B/shingle instead of ~20 (2.5x less candidate-join
-    shuffle) and integer set ops instead of string compares.  Jaccard
-    over the hash sets differs from string-shingle jaccard only when
-    crc32 collides inside one pair's union (~|union|/2^31 per pair);
-    the pure-Python oracle hashes identically, so parity is exact by
-    construction, collisions included."""
-    return F.array_distinct(
-        F.transform(
-            word_shingles_col(text, n),
-            lambda s: F.crc32(F.encode(s, "UTF-8"))
-            % F.lit(hashing.MERSENNE_P),
-        )
-    )
-
-
-def shingle_jaccard_col(a_text, b_text, n: int = 3):
-    """Exact word-shingle jaccard of two text columns, fully JVM-side
-    (array_intersect/array_union sizes) — same values as
-    :func:`_shingle_jaccard_udf` (integer set sizes, one IEEE division),
-    with zero Python in the verify stage."""
-    sa, sb = word_shingles_col(a_text, n), word_shingles_col(b_text, n)
-    u = F.size(F.array_union(sa, sb))
-    i = F.size(F.array_intersect(sa, sb))
-    return F.when(u == 0, F.lit(1.0)).otherwise(
-        i.cast("double") / u.cast("double")
-    )
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    band_cap: int = hashing.BAND_CAP,
-) -> DataFrame:
-    """Candidate near-dup id pairs (a_id < b_id) from LSH banding.
-
-    The band stream is (id, band_key) ONLY — the text column never
-    enters the explode or the self-join shuffle (id-width payload).
-    Bands over ``band_cap`` members are dropped (K3 hot-band rule)."""
-    bands = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.explode(_shingle_band_keys_udf(F.col(text_col))).alias("band_key"),
-    )
-    return _pairs_from_band_stream(bands, band_cap)
-
-
-def _pairs_from_band_stream(bands: DataFrame, band_cap: int) -> DataFrame:
-    """(id, band_key) stream -> deduplicated candidate (a_id, b_id)
-    pairs with the K3 hot-band cap — shared by the standalone
-    candidate-pair API and the fused verified-edges path."""
-    w = Window.partitionBy("band_key")
-    bands = bands.withColumn("bs", F.count("*").over(w)).filter(
-        F.col("bs") <= band_cap
-    )
-    a = bands.select(F.col("id").alias("a_id"), "band_key")
-    b = bands.select(F.col("id").alias("b_id"), "band_key")
-    return (
-        a.join(b, "band_key")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-
-
-def minhash_dedup_components(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    band_cap: int = hashing.BAND_CAP,
-    verify: str = "jvm",
-) -> DataFrame:
-    """(id, component) near-dup clusters: MinHash over word-3-shingles,
-    LSH banding, hashed-shingle-set jaccard verify at ``threshold``
-    (see :func:`shingle_hash_col` — exact up to in-pair crc32
-    collisions, replicated identically by the oracle), CC.
-
-    Shuffle discipline: the band stream is (id, band_key) ONLY — the
-    document text never rides the ×LSH_BANDS explode or the band
-    self-join (that would be ~12× corpus bytes of shuffle at 100 TB).
-    Texts rejoin for the *surviving candidate pairs* only, via two
-    narrow id-keyed joins that AQE turns into broadcasts whenever the
-    candidate set is small relative to the corpus.
-
-    ``verify="jvm"`` (default): each document's DISTINCT shingle-HASH
-    array is built ONCE by the same memoized Arrow pass as the banding
-    UDF (measured 2.3x faster than building string-shingle arrays with
-    interpreted JVM transforms, which itself was 12x faster than
-    per-pair re-shingling); an exact length prefilter (jaccard >= t
-    forces min/max size ratio >= t) drops unpassable pairs on a
-    16 B/doc size map BEFORE any array ships; the per-PAIR work is pure
-    JVM array_intersect/array_union over int64 arrays (8 B/shingle in
-    the candidate join instead of ~20 B strings).
-    ``verify="python"`` computes the same hashed-set jaccard in an
-    Arrow UDF on raw texts (property-tested equal).
-    """
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("_t")
-    )
-    edges = minhash_verified_edges(df, text_col, id_col, threshold, band_cap,
-                                   verify)
-    return cc_mod.connected_components_auto(edges, base.select("id"))
-
-
-def minhash_verified_edges(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    band_cap: int = hashing.BAND_CAP,
-    verify: str = "jvm",
-) -> DataFrame:
-    """The (src, dst) near-dup edge stream feeding CC — factored out so
-    its plan can be inspected on its own (the verify stage has zero
-    Python operators on the jvm path)."""
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("_t")
-    )
-    if verify == "jvm":
-        # ONE fused Arrow pass computes band keys AND verify hash arrays,
-        # checkpointed so the candidate-pair subtree and the two verify
-        # joins all read the cache — the corpus is shingled in Python
-        # exactly once instead of twice (banding UDF + hashes UDF), and
-        # the band self-join no longer re-runs the UDF per join leg.
-        from pyspark import StorageLevel
-
-        # DISK_ONLY: band-key strings + hash arrays as deserialized heap
-        # objects would linger in the block manager (checkpoint blocks
-        # are only context-cleaned on driver GC); serialized+compressed
-        # blocks keep the suite's heap flat for a cache read ~3 times
-        sig = df.select(
-            F.col(id_col).cast("long").alias("id"),
-            _bands_and_hashes_udf(F.col(text_col)).alias("_bh"),
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        pairs = _pairs_from_band_stream(
-            sig.select("id", F.explode("_bh.bands").alias("band_key")),
-            band_cap,
-        )
-        sh = sig.select("id", F.col("_bh.sh").alias("_sh"))
-        # EXACT length prefilter (PPJoin's size bound): with |A| <= |B|,
-        # jaccard = i/u <= |A|/|B|, so jaccard >= t forces
-        # |A| >= t * |B|.  The (id, n_shingles) map is 16 B/doc — two
-        # cheap joins drop every candidate pair that cannot possibly
-        # pass BEFORE the wide shingle arrays ship anywhere.  Pure
-        # candidate pruning: verified edge set is unchanged.
-        sizes = sh.select("id", F.size("_sh").alias("_n"))
-        pairs = (
-            pairs.join(
-                sizes.select(F.col("id").alias("a_id"), F.col("_n").alias("a_n")),
-                "a_id",
-            )
-            .join(
-                sizes.select(F.col("id").alias("b_id"), F.col("_n").alias("b_n")),
-                "b_id",
-            )
-            .filter(
-                F.least("a_n", "b_n").cast("double")
-                >= F.lit(float(threshold)) * F.greatest("a_n", "b_n")
-            )
-            .select("a_id", "b_id")
-        )
-        with_sets = pairs.join(
-            sh.select(F.col("id").alias("a_id"), F.col("_sh").alias("a_s")),
-            "a_id",
-        ).join(
-            sh.select(F.col("id").alias("b_id"), F.col("_sh").alias("b_s")),
-            "b_id",
-        )
-        u = F.size(F.array_union("a_s", "b_s"))
-        i = F.size(F.array_intersect("a_s", "b_s"))
-        jac = F.when(u == 0, F.lit(1.0)).otherwise(
-            i.cast("double") / u.cast("double")
-        )
-        verified = with_sets.withColumn("jac", jac).filter(
-            F.col("jac") >= threshold
-        )
-    else:
-        pairs = minhash_candidate_pairs(df, text_col, id_col, band_cap)
-        with_texts = pairs.join(
-            base.select(F.col("id").alias("a_id"), F.col("_t").alias("a_t")),
-            "a_id",
-        ).join(
-            base.select(F.col("id").alias("b_id"), F.col("_t").alias("b_t")),
-            "b_id",
-        )
-        verified = with_texts.withColumn(
-            "jac", _shingle_jaccard_udf(F.col("a_t"), F.col("b_t"))
-        ).filter(F.col("jac") >= threshold)
-    return verified.select(
-        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-    )
-
-
-def minhash_dedup(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", threshold: float = 0.7) -> DataFrame:
-    """Near-dup dedup: keep the min-id document of each near-dup cluster."""
-    comp = minhash_dedup_components(df, text_col, id_col, threshold)
-    survivors = comp.groupBy("component").agg(F.min("id").alias("keep_id"))
-    return df.join(
-        survivors.select(F.col("keep_id").alias(id_col)), id_col, "left_semi"
-    )
-
-
-# ---------------------------------------------------------------------------
-# exact n-gram-Jaccard near-dup via prefix filtering (PPJoin-style)
-# ---------------------------------------------------------------------------
-def ngram_jaccard_dedup_components(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    block_cap: int = hashing.BAND_CAP,
-) -> DataFrame:
-    """(id, component) clusters under EXACT word-``shingle_n``-gram
-    jaccard >= ``threshold`` — no MinHash approximation anywhere, with
-    prefix filtering doing the blocking.
-
-    Prefix-filter principle: order every document's shingle set by a
-    global total order — (crc32, shingle), hash-first so the order is
-    content-uniform, shingle tiebreak so it is total; the same order is
-    computable by the pure-Python oracle (zlib.crc32), and any
-    consistent order is sound (frequency order would merely shrink
-    blocks further).  If jaccard(A, B) >= t then the two prefixes of
-    length |S| - ceil(t * |S|) + 1 must SHARE at least one shingle, so
-    only the prefix shingles are exploded into (id, shingle) blocking
-    rows — a ~(1 - t)x fraction of the full inverted index, and the
-    candidate join is an equi-join on the shingle, never all-pairs.
-
-    Scale shape mirrors the MinHash path: blocking stream is
-    (id, shingle-hash) only; the full shingle arrays rejoin for the
-    surviving candidate pairs; blocks over ``block_cap`` ids are dropped
-    with the same K3 audit semantics (a shingle shared by >cap docs is
-    stopword-like and discriminates nothing).  RECALL CAVEAT of the cap:
-    unlike MinHash (probabilistic anyway), dropping a hot block here can
-    lose a true pair whose ONLY prefix overlap is the hot shingle —
-    acceptable for dedup (hot shingles are near-universal n-grams), and
-    the pure-Python oracle replicates the cap exactly.
-    """
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        word_shingles_col(F.col(text_col), shingle_n).alias("_sh"),
-    )
-    # order by (crc32, shingle); prefix length = |S| - ceil(t|S|) + 1
-    hashed = base.select(
-        "id",
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    "_sh",
-                    lambda s: F.struct(
-                        F.crc32(F.encode(s, "UTF-8")).alias("h"),
-                        s.alias("s"),
-                    ),
-                )
-            ),
-            lambda st: st["s"],
-        ).alias("_hs"),
-        "_sh",
-    )
-    prefix_len = (
-        F.size("_hs") - F.ceil(F.size("_hs") * F.lit(float(threshold)))
-        + F.lit(1)
-    ).cast("int")
-    blocks = hashed.select(
-        "id", F.explode(F.slice("_hs", 1, prefix_len)).alias("k")
-    )
-    w = Window.partitionBy("k")
-    blocks = blocks.withColumn("bs", F.count("*").over(w)).filter(
-        F.col("bs") <= block_cap
-    )
-    a = blocks.select(F.col("id").alias("a_id"), "k")
-    b = blocks.select(F.col("id").alias("b_id"), "k")
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    sh = hashed.select("id", "_sh")
-    # exact length prefilter, same bound as the MinHash path: with
-    # |A| <= |B|, jaccard <= |A|/|B|, so pairs outside the size-ratio
-    # band can never pass — drop them on a 16 B/doc map before the
-    # shingle arrays ship
-    sizes = sh.select("id", F.size("_sh").alias("_n"))
-    pairs = (
-        pairs.join(
-            sizes.select(F.col("id").alias("a_id"), F.col("_n").alias("a_n")),
-            "a_id",
-        )
-        .join(
-            sizes.select(F.col("id").alias("b_id"), F.col("_n").alias("b_n")),
-            "b_id",
-        )
-        .filter(
-            F.least("a_n", "b_n").cast("double")
-            >= F.lit(float(threshold)) * F.greatest("a_n", "b_n")
-        )
-        .select("a_id", "b_id")
-    )
-    with_sets = pairs.join(
-        sh.select(F.col("id").alias("a_id"), F.col("_sh").alias("a_s")), "a_id"
-    ).join(
-        sh.select(F.col("id").alias("b_id"), F.col("_sh").alias("b_s")), "b_id"
-    )
-    u = F.size(F.array_union("a_s", "b_s"))
-    i = F.size(F.array_intersect("a_s", "b_s"))
-    jac = F.when(u == 0, F.lit(1.0)).otherwise(
-        i.cast("double") / u.cast("double")
-    )
-    edges = (
-        with_sets.withColumn("jac", jac)
-        .filter(F.col("jac") >= threshold)
-        .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    )
-    return cc_mod.connected_components_auto(edges, base.select("id"))
 
 
 # ---------------------------------------------------------------------------
@@ -479,10 +34,6 @@ def _simhash_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             hashing.simhash_batch([(t or "").split() for t in texts]),
             dtype="int64",
         )
-
-
-def _to_i64(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
 
 
 def simhash_groups(df: DataFrame, text_col: str = "text",
@@ -585,7 +136,7 @@ def simhash_dropped_from_blocks(
 ) -> DataFrame:
     """K3 audit: (block_key, bs) buckets whose size exceeded the cap —
     the same logged-never-silent drop rule as every sibling blocking
-    path (link.dropped_from_bands, the minhash band cap)."""
+    path (link.dropped_from_bands)."""
     return (
         bx.select("block_key", "bs")
         .dropDuplicates(["block_key"])
@@ -626,7 +177,7 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", max_hamming: int = 3,
                   bucket_cap: int = hashing.BAND_CAP) -> DataFrame:
     """Near-dup dedup under SimHash hamming distance: keep the min-id
-    document of each cluster (same survivor rule as minhash_dedup)."""
+    document of each cluster."""
     comp = simhash_dedup_components(df, text_col, id_col, max_hamming,
                                     bucket_cap)
     survivors = comp.groupBy("component").agg(F.min("id").alias("keep_id"))
@@ -640,10 +191,10 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # The published sub-document dedup recipe ("Deduplicating Training Data
 # Makes Language Models Better", Lee et al. 2021) removes long EXACT
-# substrings repeated across documents — whole-doc near-dup families
-# (MinHash/SimHash/...) cannot see these.  The paper builds a corpus
-# suffix array on one machine; the Spark-first re-expression replaces
-# it with a distributed GROUP-BY over per-window fingerprints:
+# substrings repeated across documents — whole-doc near-dup (SimHash)
+# cannot see these.  The paper builds a corpus suffix array on one
+# machine; the Spark-first re-expression replaces it with a distributed
+# GROUP-BY over per-window fingerprints:
 #
 #     window fps (Arrow batch, O(n) per doc)  ->  group by fp, keep fps
 #     seen in >=2 distinct docs  ->  rejoin the surviving (id, pos)
@@ -680,8 +231,7 @@ def _doc_windows(df: DataFrame, text_col: str, id_col: str, k: int,
     """(id, pos, fp) — fingerprint of every k-token window (0-based
     token position).  ``fp_fn`` injects the fingerprint column builder
     (tests force a constant fp to prove the exact-gram verify keeps
-    colliding-but-distinct windows apart, same pattern as
-    exact_dedup's hash_fn).
+    colliding-but-distinct windows apart).
 
     The per-doc fp ARRAY column is checkpointed before the posexplode:
     the caller's gate and recovery subtrees both scan the window
@@ -704,7 +254,7 @@ def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, _t trimmed text, _toks) with the JVM tokenization that
     mirrors the fingerprint UDF's python ``str.split()`` (whitespace
     runs; ASCII whitespace — the engine-wide tokenizer pairing, same
-    as word_shingles_col vs _word_shingles)."""
+    as text.word_shingles_col)."""
     t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
     return df.select(
         F.col(id_col).cast("long").alias("id"),

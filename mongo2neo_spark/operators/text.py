@@ -330,6 +330,26 @@ def repetition_profile(
 # ---------------------------------------------------------------------------
 # benchmark decontamination (n-gram overlap vs an eval set)
 # ---------------------------------------------------------------------------
+def word_shingles_col(text, n: int = 3):
+    """JVM-side word-``n``-shingle SET of a text column: split on
+    whitespace runs, a text shorter than ``n`` tokens collapses to one
+    joined shingle, empty or null text to the empty set.  Pure built-ins:
+    transform/sequence/slice/array_join/array_distinct, all inside
+    whole-stage codegen."""
+    t = F.trim(F.coalesce(text, F.lit("")))
+    toks = F.split(t, r"\s+")
+    empty = F.array().cast("array<string>")
+    joined = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
+        lambda i: F.array_join(F.slice(toks, i, n), " "),
+    )
+    return (
+        F.when(F.length(t) == 0, empty)
+        .when(F.size(toks) < n, F.array(F.array_join(toks, " ")))
+        .otherwise(F.array_distinct(joined))
+    )
+
+
 def contamination_flags(
     docs: DataFrame,
     eval_df: DataFrame,
@@ -351,8 +371,6 @@ def contamination_flags(
     scanned once, never shuffled; exact string n-grams, so there is no
     hash-collision false-positive caveat.
     """
-    from .dedup import word_shingles_col
-
     did = F.col(id_col).alias("id")
     grams = docs.select(
         did, F.explode(word_shingles_col(F.col(text_col), n)).alias("g")

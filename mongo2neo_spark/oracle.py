@@ -22,20 +22,18 @@ from .functions import hashing
 
 def _dedup_key(row) -> tuple:
     # deterministic survivor election: same total order the Spark side uses
-    # (orderBy role, text, tool, ts — asc, nulls first)
-    return (
-        (row.role is None, row.role),
-        (row.text is None, row.text),
-        (row.tool is None, row.tool),
-        (row.ts is None, row.ts),
-    )
+    # (min over struct(role, text, tool, ts) — asc, nulls first)
+    return tuple((v is not None, v) for v in (row.role, row.text, row.tool, row.ts))
 
 
 def dedup_turns(rows: Sequence) -> List:
     """Exactly one row per (conv_id, turn_idx): the min row under the
-    deterministic survivor order (mirrors operators/ingest.py)."""
+    deterministic survivor order, among the rows that pass ingest's
+    validity filter (mirrors operators/ingest.py)."""
     best: Dict[Tuple[str, int], object] = {}
     for r in rows:
+        if r.conv_id is None or r.turn_idx is None or not r.text:
+            continue
         k = (r.conv_id, r.turn_idx)
         if k not in best or _dedup_key(r) < _dedup_key(best[k]):
             best[k] = r

@@ -50,6 +50,10 @@ DEFAULT_CONFS = {
     # 1M-group build.  64k keys of bounded small sets is a few tens of
     # MB per task.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
+    # connected components checkpoints every round into the reliable
+    # checkpoint dir below; delete each round's files once its RDD is
+    # garbage-collected instead of leaving them on disk for good
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 

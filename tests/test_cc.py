@@ -202,3 +202,36 @@ def test_component_not_null_on_every_branch(spark, monkeypatch):
     for name, out in outs:
         assert not out.schema["component"].nullable, name
         assert {r.id: r.component for r in out.collect()} == want, name
+
+
+def test_round_checkpoints_are_deleted_once_unreferenced(spark):
+    """Every hash-min round writes a reliable checkpoint; once the frames
+    that read them are dropped and the JVM has collected them, the
+    context cleaner deletes their rdd-* directories."""
+    import gc
+    import time
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from mongo2neo_spark.operators.cc import connected_components
+
+    sc = spark.sparkContext
+    ckpt = Path(urlparse(sc.getCheckpointDir()).path)
+
+    def rdd_dirs():
+        return set(ckpt.glob("rdd-*"))
+
+    before = rdd_dirs()
+    e = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
+    v = spark.createDataFrame([(i,) for i in range(7)], "id long")
+    out = connected_components(e, v)
+    assert {r.component for r in out.collect()} == {0}
+    made = rdd_dirs() - before
+    assert made  # the rounds did checkpoint
+    del e, v, out
+    deadline = time.monotonic() + 20
+    while made & rdd_dirs() and time.monotonic() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.5)
+    assert not made & rdd_dirs()

@@ -1,4 +1,4 @@
-"""Dedup operators: exact, MinHash-LSH near-dup, SimHash."""
+"""Dedup operators: SimHash near-dup and exact substring dedup."""
 
 import pandas as pd
 import pytest
@@ -10,103 +10,6 @@ def _docs(spark, texts):
     return spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-
-
-def test_exact_dedup_keeps_min_id(spark):
-    df = _docs(spark, ["aaa", "bbb", "aaa", "aaa", "ccc"])
-    out = sorted(r.doc_id for r in dedup.exact_dedup(df).collect())
-    assert out == [0, 1, 4]
-
-
-def test_exact_dedup_hash_collision_does_not_merge(spark):
-    """Two DISTINCT texts forced into one hash group (constant hash_fn)
-    must both survive — the text column in the grouping key is the
-    in-group equality verify that defuses 64-bit birthday collisions."""
-    from pyspark.sql import functions as F
-
-    df = _docs(spark, ["first document", "second document", "first document"])
-    out = sorted(
-        r.doc_id
-        for r in dedup.exact_dedup(df, hash_fn=lambda c: F.lit(0)).collect()
-    )
-    assert out == [0, 1]  # true dup (id 2) gone; colliding distinct kept
-
-
-def test_minhash_dedup_merges_near_duplicates(spark):
-    base = " ".join(f"tok{i}" for i in range(60))
-    near = " ".join(f"tok{i}" for i in range(58)) + " x1 x2"  # ~93% shingle overlap
-    other = " ".join(f"zzz{i}" for i in range(60))
-    df = _docs(spark, [base, near, other])
-    comp = {r.id: r.component for r in
-            dedup.minhash_dedup_components(df, threshold=0.7).collect()}
-    assert comp[0] == comp[1]  # near-dups merged
-    assert comp[2] != comp[0]  # unrelated doc stays apart
-    kept = sorted(r.doc_id for r in dedup.minhash_dedup(df, threshold=0.7).collect())
-    assert kept == [0, 2]
-
-
-def test_minhash_dedup_identical_texts(spark):
-    t = "alpha beta gamma delta epsilon zeta"
-    df = _docs(spark, [t, t, t])
-    kept = sorted(r.doc_id for r in dedup.minhash_dedup(df).collect())
-    assert kept == [0]
-
-
-def test_jvm_shingle_jaccard_equals_python_spec(spark):
-    """Both verify paths — string-shingle jaccard (shingle_jaccard_col)
-    and the hashed-set jaccard the dedup pipeline actually runs
-    (shingle_hash_col arrays / _shingle_jaccard_udf) — must be
-    bit-identical to their pure-Python specs, including the edge cases:
-    empty text, whitespace-only, fewer-than-n tokens, whitespace runs."""
-    from pyspark.sql import functions as F
-
-    from mongo2neo_spark.functions.hashing import token_hash
-
-    texts = [
-        "", "   ", "one", "one two", "one two three",
-        "one two three four five", "one  two\tthree  four",
-        "a b c d e f g", "a b c d e f g",
-    ]
-    pairs = [(a, b) for a in texts for b in texts]
-    df = spark.createDataFrame(
-        pd.DataFrame({"a_t": [p[0] for p in pairs],
-                      "b_t": [p[1] for p in pairs]})
-    )
-    ha, hb = (dedup.shingle_hash_col(F.col(c)) for c in ("a_t", "b_t"))
-    u_h = F.size(F.array_union(ha, hb))
-    i_h = F.size(F.array_intersect(ha, hb))
-    out = df.select(
-        "a_t", "b_t",
-        dedup.shingle_jaccard_col(F.col("a_t"), F.col("b_t")).alias("jvm_str"),
-        F.when(u_h == 0, F.lit(1.0))
-        .otherwise(i_h.cast("double") / u_h.cast("double"))
-        .alias("jvm_hash"),
-        dedup._shingle_jaccard_udf(F.col("a_t"), F.col("b_t")).alias("py"),
-    ).collect()
-    for r in out:
-        sa, sb = dedup._word_shingles(r.a_t), dedup._word_shingles(r.b_t)
-        u = len(sa | sb)
-        spec_str = len(sa & sb) / u if u else 1.0
-        hsa = {token_hash(s) for s in sa}
-        hsb = {token_hash(s) for s in sb}
-        uh = len(hsa | hsb)
-        spec_hash = len(hsa & hsb) / uh if uh else 1.0
-        assert r.jvm_str == spec_str, (r.a_t, r.b_t, r.jvm_str, spec_str)
-        assert r.jvm_hash == r.py == spec_hash, (
-            r.a_t, r.b_t, r.jvm_hash, r.py, spec_hash,
-        )
-
-
-def test_minhash_components_jvm_matches_python_verify(spark):
-    base = " ".join(f"tok{i}" for i in range(60))
-    near = " ".join(f"tok{i}" for i in range(58)) + " x1 x2"
-    other = " ".join(f"zzz{i}" for i in range(60))
-    df = _docs(spark, [base, near, other, base])
-    jvm = sorted(tuple(r) for r in
-                 dedup.minhash_dedup_components(df, verify="jvm").collect())
-    py = sorted(tuple(r) for r in
-                dedup.minhash_dedup_components(df, verify="python").collect())
-    assert jvm == py
 
 
 def test_simhash_components_cluster_hamming_close(spark):
@@ -242,81 +145,6 @@ def test_simhash_clusters_match_pure_python_oracle(spark, tmp_path):
     assert got == [tuple(r) for r in expected]
 
 
-def test_ngram_jaccard_prefix_filter_is_complete(spark):
-    """The prefix filter must find EVERY pair with exact jaccard >=
-    threshold (no-cap case): compare against brute-force all-pairs
-    union-find on a mixed corpus of dups, near-dups, and unrelated
-    docs."""
-    import itertools
-
-    import pandas as pd
-
-    from mongo2neo_spark.entry_oracle import _jaccard, _word_shingles
-    from mongo2neo_spark.operators.dedup import ngram_jaccard_dedup_components
-
-    base = ("the quick brown fox jumps over the lazy dog near the old "
-            "stone bridge by the river bank under a pale morning sun")
-    texts = {
-        0: base,
-        1: base,                                  # exact dup
-        2: base.replace("fox", "cat"),            # near dup
-        3: base + " and then some more words",    # near dup
-        4: "completely different text about spark query planning and "
-           "shuffle partitions in a distributed engine at scale",
-        5: "short one",
-        6: "",
-        7: "the quick brown fox",                 # subset, low jaccard
-    }
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
-    )
-    got = {
-        (r.id, r.component)
-        for r in ngram_jaccard_dedup_components(df, threshold=0.5).collect()
-    }
-    # brute force reference
-    sh = {i: _word_shingles(t) for i, t in texts.items()}
-    parent = {i: i for i in texts}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in itertools.combinations(sorted(texts), 2):
-        if _jaccard(sh[a], sh[b]) >= 0.5:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    exp = {(i, find(i)) for i in texts}
-    assert got == exp
-    # sanity: the dup trio actually clustered
-    comp = dict(got)
-    assert comp[0] == comp[1] == comp[2] == comp[3]
-    assert comp[4] != comp[0]
-
-
-def test_shingle_hash_udf_equals_jvm_col_as_sets(spark):
-    """The Arrow hash-array builder (_shingle_hashes_udf, the verify's
-    corpus-side pass) and the JVM reference column (shingle_hash_col)
-    must agree as SETS on every edge case."""
-    from pyspark.sql import functions as F
-
-    texts = ["", "   ", "one", "one two", "one two three",
-             "one two three four five", "one  two\tthree  four",
-             "dup dup dup dup dup", "a b c a b c a b c"]
-    df = spark.createDataFrame(pd.DataFrame({"t": texts}))
-    out = df.select(
-        "t",
-        F.sort_array(dedup._shingle_hashes_udf(F.col("t"))).alias("udf"),
-        F.sort_array(dedup.shingle_hash_col(F.col("t"))).alias("jvm"),
-    ).collect()
-    for r in out:
-        assert list(r.udf) == list(r.jvm), (r.t, r.udf, r.jvm)
-
-
 def test_simhash_dedup_keeps_min_id_per_cluster(spark):
     # exact duplicates are hamming-0 by construction; the default
     # max_hamming=3 merges them while the unrelated doc survives
@@ -435,8 +263,7 @@ def test_duplicated_windows_fp_collisions_cannot_false_positive(
 ):
     """With EVERY window forced into one fingerprint bucket (fp=0), the
     exact-gram verify must still produce exactly the true result —
-    proving fp is candidate pruning only (exact_dedup's hash_fn test
-    pattern)."""
+    proving fp is candidate pruning only."""
     df, _ = planted_docs
     real = sorted(
         tuple(r) for r in dedup.duplicated_windows(df, k=8).collect()

@@ -84,51 +84,6 @@ def test_fingerprint_batch_matches_scalar():
     assert list(got) == exp
 
 
-def test_fused_shingle_hash_path_matches_spec():
-    """shingle_hash_lists + minhash_signatures_from_hashes (the banding
-    UDF's fused hot path) must be bit-identical to the two-step spec
-    (_word_shingles -> minhash_signatures_batch), including empties,
-    short texts, and heavy duplicate shingles."""
-    import random
-
-    import numpy as np
-
-    from mongo2neo_spark.functions.hashing import (
-        minhash_signatures_batch,
-        minhash_signatures_from_hashes,
-        shingle_hash_lists,
-    )
-    from mongo2neo_spark.operators.dedup import _word_shingles
-
-    rng = random.Random(17)
-    words = [f"w{i}" for i in range(40)]
-    texts = [
-        " ".join(rng.choice(words) for _ in range(rng.randrange(0, 60)))
-        for _ in range(300)
-    ] + ["", "a", "a b", "x y z", "dup dup dup dup dup"]
-    old = minhash_signatures_batch([_word_shingles(t) for t in texts])
-    new = minhash_signatures_from_hashes(shingle_hash_lists(texts))
-    assert np.array_equal(old, new)
-
-
-def test_band_keys_batch_matches_scalar():
-    import random
-
-    from mongo2neo_spark.functions.hashing import (
-        band_keys,
-        band_keys_batch,
-        minhash_signatures_from_hashes,
-        shingle_hash_lists,
-    )
-
-    rng = random.Random(23)
-    texts = ["", "a", " ".join(f"w{rng.randrange(30)}" for _ in range(50))]
-    texts += [" ".join(f"w{rng.randrange(30)}" for _ in range(20))
-              for _ in range(100)]
-    sigs = minhash_signatures_from_hashes(shingle_hash_lists(texts))
-    assert band_keys_batch(sigs) == [band_keys(s) for s in sigs]
-
-
 def test_simhash_batch_matches_scalar():
     import random
     import time

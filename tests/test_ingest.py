@@ -99,3 +99,33 @@ def test_dedup_adaptive_survivor_determinism(spark):
     out = {r.turn_idx: r for r in ingest.dedup_adaptive(ingest.clean(df)).collect()}
     assert out[0].role == "assistant" and out[0].text == "aaa"
     assert out[1].text == "solo"
+
+
+def test_oracle_dedup_matches_ingest_on_null_and_empty_fields(spark):
+    """Two rows per turn that differ only in one field: a null role, tool
+    or ts sorts first (Spark's min over a struct), and an empty text
+    never survives (ingest.clean drops it before dedup).  The plain and
+    adaptive dedups and the oracle keep the same row."""
+    from mongo2neo_spark import oracle
+    from mongo2neo_spark.fixtures import Turn
+
+    ts = dt.datetime(2026, 1, 1)
+    rows = [
+        Turn("c", 0, None, "Ada met Bob", None, ts),
+        Turn("c", 0, "user", "Ada met Bob", None, ts),
+        Turn("c", 1, "tool", "Ada met Bob", "search", ts),
+        Turn("c", 1, "tool", "Ada met Bob", None, ts),
+        Turn("c", 2, "user", "Ada met Bob", None, ts),
+        Turn("c", 2, "user", "Ada met Bob", None, None),
+        Turn("c", 3, "user", "", None, ts),
+        Turn("c", 3, "user", "Ada met Bob", None, ts),
+    ]
+    want = {
+        0: (None, None, ts), 1: ("tool", None, ts), 2: ("user", None, None),
+        3: ("user", None, ts),
+    }
+    df = ingest.clean(_df(spark, rows))
+    for got in (ingest.dedup(df).collect(), ingest.dedup_adaptive(df).collect(),
+                oracle.dedup_turns(rows)):
+        assert {r.turn_idx: (r.role, r.tool, r.ts) for r in got} == want
+        assert {r.text for r in got} == {"Ada met Bob"}

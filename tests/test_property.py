@@ -1,13 +1,20 @@
 """Property-based tests (hypothesis) for the shared rule/hash layer —
-the invariants the whole pipeline's determinism rests on."""
+the invariants the whole pipeline's determinism rests on — and a
+differential test of the whole pipeline against the oracle."""
+
+import dataclasses
+import datetime as dt
+import tempfile
+from unittest import mock
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
-from mongo2neo_spark import rules
+from mongo2neo_spark import fixtures, oracle, rules, schemas
 from mongo2neo_spark.functions import hashing
 from mongo2neo_spark.operators import extract
+from mongo2neo_spark.plans import pipeline
 
 text_st = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
@@ -114,3 +121,64 @@ def test_minhash_batch_equals_scalar(tokens):
 def test_fingerprint_deterministic(text):
     assert hashing.rolling_fingerprint(text) == hashing.rolling_fingerprint(text)
     assert 0 <= hashing.rolling_fingerprint(text) < hashing.FP_MOD
+
+
+# small transcripts: few (conv_id, turn_idx) keys, so rows that share a
+# key but differ in role, text, tool or ts are common, plus a verbatim
+# copy of every third row; null and empty texts, null roles and
+# timestamps, Unicode conversation ids and text between the mentions.
+# Most texts mention names from a pool of misspelled aliases, so that
+# linking merges norms into one entity
+_alias_st = st.sampled_from(
+    ["Ada Lovelace", "Ada Lovelac", "Ada Lovelaces", "Alan Turing", "Alan Turin",
+     "Bob"])
+_linked_text_st = st.lists(
+    st.tuples(_between_st, _alias_st | _mention_st), min_size=1, max_size=6
+).map(lambda pieces: "".join(a + b for a, b in pieces))
+_turn_st = st.builds(
+    fixtures.Turn,
+    conv_id=st.sampled_from(["c0", "c1", "ünï 2"]),
+    turn_idx=st.integers(0, 5),
+    role=st.sampled_from(["user", "assistant", "tool", None]),
+    text=turn_text_st | _linked_text_st | _linked_text_st,
+    tool=st.sampled_from([None, "search"]),
+    ts=st.none() | st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2030, 1, 1)),
+)
+transcript_st = st.lists(_turn_st, min_size=6, max_size=24).map(
+    lambda rows: rows + rows[::3])
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+@given(transcript_st)
+@settings(max_examples=4, deadline=None,
+          phases=[Phase.explicit, Phase.reuse, Phase.generate])
+def test_pipeline_venues_match_oracle(spark, rows):
+    """Each transcript goes through the driver venue and the all-Spark
+    chain (no driver linking, the vocabulary over DRIVER_VOCAB_MAX); both
+    write the oracle's triples, nodes and edges.  An example costs two
+    pipeline runs (seconds), so a failure is reported as found, without
+    shrinking it."""
+    cfg = pipeline.PipelineConfig(n_buckets=1)
+    want_triples = oracle.pipeline_triples(rows)
+    want_nodes = oracle.nodes(rows)
+    want_edges = oracle.edges(rows, cfg.max_provenance)
+    with tempfile.TemporaryDirectory() as tmp:
+        inp = f"{tmp}/in"
+        spark.createDataFrame(
+            fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
+        ).write.parquet(inp)
+        for venue, link_max, vocab_max in [
+            ("driver", cfg.driver_link_max, pipeline.DRIVER_VOCAB_MAX),
+            ("spark", 0, 0),
+        ]:
+            with mock.patch.object(pipeline, "DRIVER_VOCAB_MAX", vocab_max):
+                paths = pipeline.run_pipeline(
+                    spark, inp, f"{tmp}/{venue}",
+                    dataclasses.replace(cfg, driver_link_max=link_max),
+                    resume=False)
+            assert set(_rows(spark, paths["triples"])) == want_triples, venue
+            assert _rows(spark, paths["nodes"]) == want_nodes, venue
+            assert _rows(spark, paths["edges"]) == want_edges, venue

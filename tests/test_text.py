@@ -236,15 +236,27 @@ def test_contamination_flags_detects_shared_ngrams(spark):
     # doc 1 embeds 8 consecutive eval tokens -> exactly contaminated
     leak = "x y " + " ".join(f"ev{i}" for i in range(8)) + " z"
     short = "ev0 ev1"  # <8 tokens: collapses to one joined shingle, no hit
+    # a short eval text is one joined shingle too: a doc equal to it up to
+    # whitespace runs is a hit; null and empty texts have no shingles, so
+    # they match neither each other nor anything else
+    short_eval = "tiny eval text"
     docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1, 2], "text": [clean, leak, short]})
+        pd.DataFrame({
+            "doc_id": [0, 1, 2, 3, 4, 5],
+            "text": [clean, leak, short, "  tiny \t eval  text ", None, ""],
+        })
     )
-    ev = spark.createDataFrame(pd.DataFrame({"text": [eval_text]}))
+    ev = spark.createDataFrame(
+        pd.DataFrame({"text": [eval_text, short_eval, None, ""]})
+    )
     got = {r.id: (r.n_eval_hits, r.contaminated)
            for r in textops.contamination_flags(docs, ev, n=8).collect()}
     assert got[0] == (0, False)
     assert got[1] == (1, True)   # one distinct shared 8-gram
     assert got[2] == (0, False)
+    assert got[3] == (1, True)
+    assert got[4] == (0, False)
+    assert got[5] == (0, False)
 
 
 def test_redact_pii_counts_and_replaces(spark):
