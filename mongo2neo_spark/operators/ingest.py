@@ -19,10 +19,8 @@ from pyspark.sql import functions as F
 def clean(df: DataFrame) -> DataFrame:
     """P1 prune/cast + P2 validity filter (no dedup).
 
-    Kept separate from :func:`dedup` so the pipeline can insert its own
-    hash repartition on the dedup key between them (AQE sizes that
-    exchange) — the dedup aggregate then runs partition-locally on it
-    (one full-text shuffle total).
+    Kept separate from :func:`dedup`, which :func:`dedup_adaptive` runs
+    on the duplicated rows only.
     """
     return df.select(
         F.col("conv_id").cast("string").alias("conv_id"),

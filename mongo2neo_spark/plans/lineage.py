@@ -2,32 +2,41 @@
 §2.3, §2.4) — the resume contract: "checkpoints per-partition lineage and
 extraction metrics so any stage resumes idempotently" (BASELINE.json).
 
-Lineage is an append-only table.  A stage partition (a conversation
-bucket for extraction; the whole stage for the global linking/CC/
-materialize stages) is *done* when a lineage row exists for its
-(stage, partition_key); resume anti-joins the work list against the
-recorded keys and recomputes only the remainder.
+Lineage is a directory of records.  Each stage commit is one JSON-lines
+file, one line per partition, written by the driver through Hadoop's
+FileSystem API (so any ``out_dir`` scheme works) under a ``_``-prefixed
+temp name and then renamed: readers skip ``_``/``.`` names, so a crash
+between the write and the rename leaves nothing a reader takes for a
+record.  Recording and reading lineage start no Spark job.
+
+A stage partition (a conversation bucket for extraction; the whole stage
+for the global linking/CC/materialize stages) is *done* when a record
+exists for its (stage, partition_key); resume subtracts the recorded keys
+from the work list and recomputes only the remainder.
 
 Checksums are order-insensitive content hashes — sum(xxhash64(row)) —
 so a resumed run can be diffed against a fresh run bit-for-bit.
 At design scale (10^12 turns → ~10^6-10^7 tasks/stage) lineage is
-per-partition, never per-row: the lineage table stays tiny relative to
-the data (SURVEY.md §6).
+per-partition, never per-row: the records stay tiny relative to the data
+(SURVEY.md §6).
 """
 
 from __future__ import annotations
 
+import json
 import time
+import uuid
+from datetime import datetime, timezone
 from typing import List, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..schemas import LINEAGE
 
 STAGE_KEY = "__stage__"  # partition_key for single-partition (global) stages
+_FIELDS = LINEAGE.fieldNames()
 
 
 def checksum_expr(cols: Sequence[str]) -> F.Column:
@@ -46,36 +55,78 @@ def lineage_path(out_dir: str) -> str:
     return f"{out_dir}/lineage"
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    """The lineage table, or None when no run has recorded any yet.  Only
-    a missing path means "no lineage": any other failure (an unreadable
-    or corrupt table) is raised, never taken for an empty history."""
-    path = lineage_path(out_dir)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+def _lineage_dir(spark: SparkSession, out_dir: str):
+    """(Hadoop FileSystem, Path) of ``out_dir``'s lineage directory."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(lineage_path(out_dir))
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def _read_file(fs, status) -> bytes:
+    if status.isDirectory():
+        raise ValueError("a directory")
+    stream = fs.open(status.getPath())
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def _parse(data: bytes) -> List[dict]:
+    lines = data.decode("utf-8").splitlines()
+    if not lines:
+        raise ValueError("no records")
+    records = [json.loads(line) for line in lines]
+    for r in records:
+        if not isinstance(r, dict) or set(r) != set(_FIELDS):
+            raise ValueError(f"{r!r} does not hold the fields {_FIELDS}")
+    return records
+
+
+def read_records(spark: SparkSession, out_dir: str) -> Optional[List[dict]]:
+    """Every lineage record (a dict of the ``LINEAGE`` fields, ``ts`` an
+    ISO-8601 string) in commit order, or None when no run has recorded
+    any yet.  Only a missing directory means "no lineage": a file that is
+    not a record — a damaged one, or a parquet part file of the lineage
+    table older versions wrote — raises, never taken for an empty
+    history that would redo (or skip) work."""
+    fs, path = _lineage_dir(spark, out_dir)
+    if not fs.exists(path):
         return None
-    return spark.read.schema(LINEAGE).parquet(path)
+    records = []
+    # names start with the commit's zero-padded epoch nanoseconds
+    for status in sorted(fs.listStatus(path), key=lambda s: s.getPath().getName()):
+        f = status.getPath()
+        if f.getName().startswith(("_", ".")):
+            continue
+        try:
+            records.extend(_parse(_read_file(fs, status)))
+        except ValueError as e:  # UnicodeDecodeError and JSONDecodeError too
+            raise ValueError(
+                f"lineage file {f} is not a lineage record ({e}); lineage "
+                f"from an older version or a damaged record cannot be "
+                f"resumed from: rerun with --no-resume (resume=False), "
+                f"which starts a new lineage") from e
+    return records
+
+
+def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
+    """The lineage records as a ``LINEAGE`` frame (a driver-built local
+    table), or None when no run has recorded any yet; errors as in
+    :func:`read_records`."""
+    records = read_records(spark, out_dir)
+    if records is None:
+        return None
+    pdf = pd.DataFrame(records, columns=_FIELDS)
+    pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+    return spark.createDataFrame(pdf, LINEAGE)
 
 
 def completed_keys(spark: SparkSession, out_dir: str, stage: str) -> List[str]:
     """Partition keys already recorded for a stage (across all runs —
     idempotent re-runs skip work done by any previous run)."""
-    lin = read_lineage(spark, out_dir)
-    if lin is None:
-        return []
-    rows = (
-        lin.filter(F.col("stage") == stage)
-        .select("partition_key")
-        .distinct()
-        .collect()
-    )
-    return [r.partition_key for r in rows]
-
-
-# the LINEAGE fields a record call supplies (ts is stamped by Spark)
-_RECORD_SCHEMA = T.StructType(
-    [T.StructField(f.name, f.dataType) for f in LINEAGE.fields if f.name != "ts"]
-)
+    records = read_records(spark, out_dir) or []
+    return list(dict.fromkeys(
+        r["partition_key"] for r in records if r["stage"] == stage))
 
 
 def record(
@@ -87,23 +138,27 @@ def record(
 ) -> None:
     """entries: (partition_key, input_rows, output_rows, checksum, wall_ms).
     A ``None`` checksum (the observed sum over zero rows) is written as
-    "0"."""
+    "0".  One file per call, stamped with the driver's UTC time."""
     if not entries:
         return
-    # a pandas frame with a declared schema becomes an Arrow
-    # LocalTableScan: no Python worker and no pickled-row RDD to ship
-    rows = pd.DataFrame(
-        [
-            (stage, str(k), int(i), int(o), "0" if c is None else str(c),
-             int(w), run_id)
-            for (k, i, o, c, w) in entries
-        ],
-        columns=_RECORD_SCHEMA.fieldNames(),
+    ts = datetime.now(timezone.utc).isoformat()
+    body = "".join(
+        json.dumps(dict(zip(_FIELDS, (
+            stage, str(k), int(i), int(o), "0" if c is None else str(c),
+            int(w), run_id, ts)))) + "\n"
+        for (k, i, o, c, w) in entries
     )
-    df = spark.createDataFrame(rows, _RECORD_SCHEMA).withColumn(
-        "ts", F.current_timestamp()
-    )
-    df.write.mode("append").parquet(lineage_path(out_dir))
+    fs, path = _lineage_dir(spark, out_dir)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"{time.time_ns():020d}-{stage}-{uuid.uuid4().hex[:8]}.jsonl"
+    tmp, final = Path(path, f"_{name}"), Path(path, name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(body.encode("utf-8")))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not rename lineage record {tmp} to {final}")
 
 
 def observe_bucket_metrics(df: DataFrame, buckets: Sequence[int],

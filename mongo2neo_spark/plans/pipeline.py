@@ -53,12 +53,9 @@ class PipelineConfig:
     band_cap: int = hashing.BAND_CAP
     threshold: float = rules.LINK_THRESHOLD
     max_provenance: int = mat_mod.MAX_PROVENANCE
-    # P3 strategy: "shuffle" (classic full-row exchange), "adaptive"
-    # (narrow dup-scan + anti/semi join — the text stream never shuffles
-    # when duplicates are absent), or "auto" (cost-based: adaptive pays
-    # when the text payload is wide relative to the dedup key, measured
-    # from a row sample; both strategies produce identical rows)
-    dedup_strategy: str = "auto"
+    # P3 dedup: "adaptive" is the only strategy (ingest.dedup_adaptive).
+    # The field stays until the benchmark's traced run stops passing it
+    dedup_strategy: str = "adaptive"
     # LSH venue: vocabularies of up to this many mention_stats rows (one
     # per distinct norm) are banded, scored and union-found on the driver
     # (link.driver_link_components); above it the driver still bands and
@@ -71,6 +68,9 @@ class PipelineConfig:
     run_id: str = ""
 
     def __post_init__(self):
+        if self.dedup_strategy != "adaptive":
+            raise ValueError(
+                f"dedup_strategy {self.dedup_strategy!r}: only 'adaptive' exists")
         if not self.run_id:
             self.run_id = uuid.uuid4().hex[:12]
 
@@ -91,6 +91,13 @@ def run_pipeline(
         "triples": f"{out_dir}/triples",
         "lineage": lin.lineage_path(out_dir),
     }
+    if not resume:
+        # a fresh run starts over: no lineage record of an earlier run
+        # survives it, and no extraction bucket that its own write does
+        # not replace (an earlier run with more buckets)
+        for path in (paths["lineage"], paths["extracted"]):
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+            jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
     _stage_extract(spark, input_source, out_dir, paths, cfg, resume)
     vocab = _stage_components(spark, out_dir, paths, cfg, resume)
     _stage_materialize(spark, out_dir, paths, cfg, resume, vocab)
@@ -115,43 +122,15 @@ def _stage_extract(spark, input_source, out_dir, paths, cfg, resume) -> None:
             raw = raw.filter(
                 skew_mod.bucket_of(F.col("conv_id"), cfg.n_buckets).isin(todo_ints)
             )
-        # P3 dedup, cost-based:
-        # - "adaptive": a narrow column-pruned aggregate finds the (rare)
-        #   duplicated keys; the text stream is anti-joined against that
-        #   tiny set (AQE broadcast) and NEVER shuffles when duplicates
-        #   are absent — the win grows with text width (real transcripts
-        #   are KBs/turn; the dup-scan moves only the ~30-byte keys).
-        # - "shuffle": the classic full-row exchange + partition-local
-        #   min(struct) aggregate — cheaper when rows are barely wider
-        #   than their keys, because adaptive's dup-scan would move
-        #   almost as many bytes and still pay the extra pass.
-        # Both yield identical rows (tests assert it); "auto" picks by
-        # the sampled text:key byte ratio.  Either way (conv_id,
-        # turn_idx) is fine-grained, so a hot conversation spreads
+        # P3 dedup: a narrow column-pruned aggregate finds the (rare)
+        # duplicated keys; the text stream is anti-joined against that
+        # tiny set (AQE broadcast) and NEVER shuffles when duplicates are
+        # absent — real transcripts are KBs/turn, and the dup-scan moves
+        # only the ~30-byte keys.  (conv_id, turn_idx) is fine-grained, so
+        # the duplicated subset's shuffle spreads a hot conversation
         # across partitions — the K1 salting effect without a dedicated
         # salt exchange.
-        strategy = cfg.dedup_strategy
-        if strategy == "auto":
-            # lengths before the LIMIT: its single-partition exchange then
-            # carries two ints per sampled row, not the text
-            s = (
-                raw.select(F.length("text").alias("t"),
-                           F.length("conv_id").alias("k"))
-                .limit(20_000)
-                .agg(F.avg("t").alias("t"), F.avg("k").alias("k"))
-                .first()
-            )
-            wide = s.t is not None and s.t > 4.0 * (float(s.k or 0) + 8.0)
-            strategy = "adaptive" if wide else "shuffle"
-        if strategy == "adaptive":
-            turns = ingest_mod.dedup_adaptive(raw)
-        else:
-            # no explicit partition count: AQE coalesces the exchange by
-            # bytes, so a small input does not pay one Python-UDF task
-            # (a fixed worker cost) per shuffle partition in extraction
-            turns = ingest_mod.dedup(
-                raw.repartition(F.col("conv_id"), F.col("turn_idx"))
-            )
+        turns = ingest_mod.dedup_adaptive(raw)
         # ONE write of the combined extraction table (flat mention/triple
         # arrays, one row per turn); mentions/raw_triples are derived
         # columnar at read time by later stages.  One UDF pass + one
@@ -363,8 +342,11 @@ def main(argv=None) -> None:
         master=args.master, shuffle_partitions=args.shuffle_partitions
     )
     cfg = PipelineConfig(n_buckets=args.buckets)
-    paths = run_pipeline(spark, args.input, args.out, cfg, resume=not args.no_resume)
-    n = spark.read.parquet(paths["triples"]).count()
+    run_pipeline(spark, args.input, args.out, cfg, resume=not args.no_resume)
+    # the materialize record counts the triples table's rows as it was
+    # written; reading it starts no Spark job
+    n = [r for r in lin.read_records(spark, args.out)
+         if r["stage"] == "materialize"][-1]["output_rows"]
     print(f"pipeline complete: {n} distinct triples -> {args.out}")
 
 

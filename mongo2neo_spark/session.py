@@ -8,7 +8,9 @@ still reflects multi-executor design (SURVEY.md §2.10/§2.11/§4).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -100,9 +102,11 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # reliable checkpoint dir for iterative CC lineage truncation (S4)
+    # reliable checkpoint dir for iterative CC lineage truncation (S4):
+    # one per session, removed when the process exits (Spark makes a
+    # subdirectory per SparkContext in it and never deletes that)
     if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(
-            os.path.join(tempfile.gettempdir(), "m2n_checkpoints")
-        )
+        checkpoints = tempfile.mkdtemp(prefix="m2n_checkpoints-")
+        atexit.register(shutil.rmtree, checkpoints, True)
+        spark.sparkContext.setCheckpointDir(checkpoints)
     return spark

@@ -3,6 +3,7 @@ idempotent resume, lineage contents."""
 
 import dataclasses
 import glob
+import shutil
 import time
 
 import pyarrow.parquet as pq
@@ -63,26 +64,27 @@ def test_lineage_shape(spark, pipeline_out):
 
 def test_bucket_invariance(spark, small_rows, tmp_path):
     """K1: the conversation bucket count changes only the layout of the
-    extraction table, and the dedup strategy only the plan, never the
-    graph — n_buckets 1 and 8 with the shuffle and the adaptive dedup
-    give the oracle's triples, nodes and edges.  The provenance cap is 1,
-    so that it binds: no edge of the fixture reaches the default cap."""
+    extraction table, never the graph — n_buckets 8 and then 1, fresh
+    runs into one out dir, give the oracle's triples, nodes and edges: the
+    second run leaves none of the first run's buckets behind.  The
+    provenance cap is 1, so that it binds: no edge of the fixture reaches
+    the default cap.  The adaptive dedup is the only strategy there is."""
+    with pytest.raises(ValueError, match="adaptive"):
+        PipelineConfig(dedup_strategy="shuffle")
     inp = _write_input(spark, fixtures.with_duplicates_and_shuffle(small_rows),
                        str(tmp_path / "in"))
     want_triples = oracle.pipeline_triples(small_rows)
     want_nodes = oracle.nodes(small_rows)
     want_edges = oracle.edges(small_rows, max_provenance=1)
     assert any(e[3] > 1 for e in want_edges)
-    for n in (1, 8):
-        for strategy in ("shuffle", "adaptive"):
-            paths = run_pipeline(
-                spark, inp, str(tmp_path / f"b{n}-{strategy}"),
-                PipelineConfig(n_buckets=n, dedup_strategy=strategy,
-                               max_provenance=1, run_id=f"b{n}-{strategy}"),
-                resume=False)
-            assert set(_rows(spark, paths["triples"])) == want_triples
-            assert _rows(spark, paths["nodes"]) == want_nodes
-            assert _rows(spark, paths["edges"]) == want_edges
+    for n in (8, 1):
+        paths = run_pipeline(
+            spark, inp, str(tmp_path / "out"),
+            PipelineConfig(n_buckets=n, max_provenance=1, run_id=f"b{n}"),
+            resume=False)
+        assert set(_rows(spark, paths["triples"])) == want_triples
+        assert _rows(spark, paths["nodes"]) == want_nodes
+        assert _rows(spark, paths["edges"]) == want_edges
 
 
 def test_nodes_and_edges_consistent(spark, pipeline_out):
@@ -297,47 +299,63 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
             assert (r.output_rows, r.checksum) == (0, "0"), r
 
 
-# Spark jobs of one fresh run on the small fixture, per venue: 17 on the
+# Spark jobs of one fresh run on the small fixture, per venue: 13 on the
 # driver link venue since canonical names and nodes are driver-built, the
 # driver-built frames are Arrow local tables and the read-backs declare
-# their schemas (34 before); 18 on the distributed-LSH venue since the
+# their schemas (34 before); 14 on the distributed-LSH venue since the
 # driver groups the band keys and pair scoring is one job (26 before, 44
-# before the vocabulary stayed on the driver); 57 on the all-Spark chain
+# before the vocabulary stayed on the driver); 53 on the all-Spark chain
 # with distributed CC rounds (DRIVER_VOCAB_MAX and DRIVER_CC_MAX_EDGES
 # patched to 0) since canonical names and nodes run their kernels once per
-# hash partition (58 with the window functions)
-MAX_FRESH_RUN_JOBS = {"driver_link": 17, "distributed_lsh": 18,
-                      "all_spark_cc": 57}
+# hash partition (58 with the window functions).  Each venue made 4 more
+# (17/18/57) while the dedup strategy was picked from a 2-job row sample
+# and each of the three lineage records was a parquet append job
+MAX_FRESH_RUN_JOBS = {"driver_link": 13, "distributed_lsh": 14,
+                      "all_spark_cc": 53}
 
 
 def _cached_rdds(sc):
     return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
 
 
+def _jobs_in_group(sc, group, fn):
+    """Spark jobs that ``fn()`` starts, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("venue", list(MAX_FRESH_RUN_JOBS))
 def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     """Fixed cost guard: a read-back or an inferring read that comes back
     shows up here as extra Spark jobs.  A run also leaves nothing it
-    persisted cached (the all-Spark chain's CC rounds included)."""
+    persisted cached (the all-Spark chain's CC rounds included), and a
+    resumed run over its finished output starts no job at all: lineage
+    is read and written by the driver."""
     if venue == "all_spark_cc":
         monkeypatch.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
     driver_link_max = 100_000 if venue == "driver_link" else 0
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
     sc = spark.sparkContext
     cached_before = _cached_rdds(sc)
-    group = f"job-count-{tmp_path.name}"
-    sc.setJobGroup(group, "fresh pipeline run")
-    try:
-        run_pipeline(spark, inp, str(tmp_path / "out"),
+
+    def run(resume):
+        run_pipeline(spark, inp, out,
                      PipelineConfig(n_buckets=4, run_id="jobs",
                                     driver_link_max=driver_link_max),
-                     resume=False)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                     resume=resume)
+
+    n_jobs = _jobs_in_group(sc, f"job-count-{tmp_path.name}",
+                            lambda: run(False))
     assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[venue], n_jobs
+    assert _jobs_in_group(sc, f"job-count-resumed-{tmp_path.name}",
+                          lambda: run(True)) == 0
     # unpersist drops blocks asynchronously
     deadline = time.monotonic() + 10
     while _cached_rdds(sc) - cached_before and time.monotonic() < deadline:
@@ -345,23 +363,63 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     assert _cached_rdds(sc) <= cached_before
 
 
+def test_cli_prints_triple_count_and_resumes_without_jobs(
+        spark, small_rows, tmp_path, capsys):
+    """The CLI's summary line counts the triples from the materialize
+    lineage record; a second call over the same --out is a resumed no-op
+    that prints the same count and starts no Spark job."""
+    inp = _write_input(spark, small_rows, str(tmp_path / "in"))
+    # the test session's own master and partitions: main's get_spark
+    # reuses the session and sets these on it
+    argv = ["--input", inp, "--out", str(tmp_path / "out"), "--buckets", "4",
+            "--master", "local[4]", "--shuffle-partitions", "8"]
+    want = (f"pipeline complete: {len(oracle.pipeline_triples(small_rows))} "
+            f"distinct triples -> {tmp_path / 'out'}\n")
+    pipeline.main(argv)
+    assert capsys.readouterr().out == want
+    sc = spark.sparkContext
+    assert _jobs_in_group(sc, f"cli-resumed-{tmp_path.name}",
+                          lambda: pipeline.main(argv)) == 0
+    assert capsys.readouterr().out == want
+
+
 def test_read_lineage_raises_on_corrupt_table(spark, tmp_path):
-    """Only a missing lineage path means "no lineage"; a corrupt table is
-    an error, never an empty history that would redo (or skip) work."""
-    out = tmp_path / "out"
-    assert lin.read_lineage(spark, str(out)) is None
-    assert lin.completed_keys(spark, str(out), "extract") == []
-    part = out / "lineage" / "part-00000.parquet"
-    part.parent.mkdir(parents=True)
-    part.write_bytes(b"not a parquet file")
-    with pytest.raises(Exception):
-        lin.completed_keys(spark, str(out), "extract")
-    # a stray directory makes the table unreadable when it is opened,
-    # before any row is scanned
-    part.unlink()
-    (out / "lineage" / "stage=extract").mkdir()
-    (out / "lineage" / "other=1").mkdir()
-    for d in ("stage=extract", "other=1"):
-        (out / "lineage" / d / "part-00000.parquet").write_bytes(b"x")
-    with pytest.raises(Exception):
-        lin.read_lineage(spark, str(out))
+    """Only a missing lineage directory means "no lineage"; a damaged
+    record, or a parquet part file of the lineage table older versions
+    wrote, is an error that points at --no-resume, never an empty history
+    that would redo (or skip) work.  A temp file left by a crash between
+    a record's write and its rename is not a record, and is ignored."""
+    out = str(tmp_path / "out")
+    assert lin.read_lineage(spark, out) is None
+    assert lin.completed_keys(spark, out, "extract") == []
+    lin.record(spark, out, "extract", [("0", 0, 5, 7, 10), ("1", 0, 0, None, 10)],
+               "r1")
+    assert lin.completed_keys(spark, out, "extract") == ["0", "1"]
+    lineage = tmp_path / "out" / "lineage"
+    (good,) = [p for p in lineage.iterdir() if not p.name.startswith(".")]
+    line = good.read_text().splitlines()[0]
+
+    # crash between write and rename: the temp name is skipped
+    (lineage / f"_{good.name}-crashed").write_text(line + "\n")
+    assert lin.completed_keys(spark, out, "extract") == ["0", "1"]
+    assert lin.read_lineage(spark, out).count() == 2
+
+    bad = lineage / "99999999999999999999-extract-truncated.jsonl"
+    bad.write_text(line[: len(line) // 2])
+    with pytest.raises(ValueError, match="truncated.jsonl.*--no-resume"):
+        lin.completed_keys(spark, out, "extract")
+    bad.unlink()
+
+    # an older version's parquet lineage table
+    spark.createDataFrame([("extract", "0")], "stage string, k string") \
+        .coalesce(1).write.parquet(str(lineage / "old"))
+    (part,) = (lineage / "old").glob("part-*.parquet")
+    part.rename(lineage / part.name)
+    shutil.rmtree(lineage / "old")
+    with pytest.raises(ValueError, match=r"part-.*\.parquet.*--no-resume"):
+        lin.read_lineage(spark, out)
+    # a fresh (--no-resume) run starts a new lineage
+    inp = _write_input(spark, [], str(tmp_path / "in"))
+    run_pipeline(spark, inp, out, PipelineConfig(n_buckets=2, run_id="new"),
+                 resume=False)
+    assert {r.run_id for r in lin.read_lineage(spark, out).collect()} == {"new"}
