@@ -230,7 +230,11 @@ def _stage_components(spark, out_dir, paths, cfg, resume):
             comp_rows, dropped = linked
             comp_pdf = pd.DataFrame(comp_rows, columns=["norm", "entity_id"])
             vocab = (stats, comp_pdf)
-            comp = spark.createDataFrame(comp_pdf, schemas.COMPONENT_ROWS)
+            # one write task, one file: a LocalTableScan of a
+            # DRIVER_VOCAB_MAX-bounded frame is otherwise sliced into
+            # defaultParallelism files, each paying its own commit
+            comp = spark.createDataFrame(
+                comp_pdf, schemas.COMPONENT_ROWS).coalesce(1)
         else:
             # one LSH pass feeds both candidates and the drop audit
             bands = link_mod.lsh_bands(ments).persist()
@@ -274,10 +278,11 @@ def _stage_materialize(spark, out_dir, paths, cfg, resume, vocab=None) -> None:
         if vocab is not None:
             # driver venue: canonical names, the norm->entity map and the
             # node rows are driver arithmetic over the probed vocabulary;
-            # both go to Spark as Arrow LocalTableScans (no job)
+            # both go to Spark as Arrow LocalTableScans (no job); the
+            # nodes are written as one file, like the components
             n2e_pdf, nodes_pdf = mat_mod.driver_graph_tables(*vocab)
             n2e = spark.createDataFrame(n2e_pdf, schemas.NORM_TO_ENTITY)
-            nodes = spark.createDataFrame(nodes_pdf, schemas.NODE_ROWS)
+            nodes = spark.createDataFrame(nodes_pdf, schemas.NODE_ROWS).coalesce(1)
         else:
             # The (huge) mention stream is scanned ONCE, straight into the
             # vocabulary-sized mention_stats rollup; canonical naming, the

@@ -12,7 +12,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from mongo2neo_spark.session import get_spark
 
-    s = get_spark(app_name="m2n-tests", master="local[4]", shuffle_partitions=8)
+    # the status store keeps every stage of the session: beyond 1,000
+    # stages Spark evicts skipped stages first, even recent ones, and
+    # tests read the stages of a run's job group
+    s = get_spark(app_name="m2n-tests", master="local[4]", shuffle_partitions=8,
+                  extra_confs={"spark.ui.retainedStages": "100000"})
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -158,7 +158,9 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
     distributed CC rounds) must produce the oracle's nodes (stats,
     timestamps, majority kind) and edges (weight, provenance), and
     identical components, triples, parquet schemas and lineage drop
-    audits — same shared hashing/rules code, different venue only."""
+    audits — same shared hashing/rules code, different venue only.  The
+    two venues that hold the vocabulary on the driver write its
+    pandas-built components and nodes tables as one file each."""
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
     venues = list(_run_venues(spark, inp, tmp_path, monkeypatch))
     with monkeypatch.context() as m:
@@ -178,6 +180,9 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
     for table in GRAPH_TABLES:
         assert len(_rows(spark, first[table])) > 0, table
     assert len(dropped(first_out)) == 1
+    for _, paths in venues[:2]:
+        for table in ("components", "nodes"):
+            assert len(glob.glob(f"{paths[table]}/part-*.parquet")) == 1, table
     for out, paths in venues:
         assert _rows(spark, paths["nodes"]) == want_nodes, out
         assert _rows(spark, paths["edges"]) == want_edges, out
@@ -313,6 +318,14 @@ def test_empty_input_both_venues(spark, tmp_path, monkeypatch):
 MAX_FRESH_RUN_JOBS = {"driver_link": 13, "distributed_lsh": 14,
                       "all_spark_cc": 53}
 
+# Shuffle bytes the same fresh runs write, summed over their stages: with
+# zstd as Spark's IO codec they measured 22,214 on both LSH venues and
+# 55,395 on the all-Spark chain (twice each, equal); with lz4, Spark's
+# default, 36,054 and 88,249.  The caps leave 5% above the zstd figures,
+# so a run that goes back to lz4 fails them
+MAX_FRESH_RUN_SHUFFLE_BYTES = {"driver_link": 23_300, "distributed_lsh": 23_300,
+                               "all_spark_cc": 58_200}
+
 
 def _cached_rdds(sc):
     return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
@@ -329,13 +342,26 @@ def _jobs_in_group(sc, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _shuffle_write_bytes(sc, group):
+    """Shuffle bytes written by the stages of ``group``'s jobs, read from
+    Spark's status store (what the UI's REST API serves), which must still
+    hold them (conftest's session keeps every stage); a skipped stage
+    wrote none.  Call it after :func:`_jobs_in_group` drained the bus."""
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds}
+    return sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages)
+
+
 @pytest.mark.parametrize("venue", list(MAX_FRESH_RUN_JOBS))
 def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     """Fixed cost guard: a read-back or an inferring read that comes back
-    shows up here as extra Spark jobs.  A run also leaves nothing it
-    persisted cached (the all-Spark chain's CC rounds included), and a
-    resumed run over its finished output starts no job at all: lineage
-    is read and written by the driver."""
+    shows up here as extra Spark jobs, and an exchange that widens, or a
+    codec that compresses less, as extra shuffle bytes.  A run also
+    leaves nothing it persisted cached (the all-Spark chain's CC rounds
+    included), and a resumed run over its finished output starts no job
+    at all: lineage is read and written by the driver."""
     if venue == "all_spark_cc":
         monkeypatch.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
@@ -351,9 +377,11 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
                                     driver_link_max=driver_link_max),
                      resume=resume)
 
-    n_jobs = _jobs_in_group(sc, f"job-count-{tmp_path.name}",
-                            lambda: run(False))
+    group = f"job-count-{tmp_path.name}"
+    n_jobs = _jobs_in_group(sc, group, lambda: run(False))
     assert 0 < n_jobs <= MAX_FRESH_RUN_JOBS[venue], n_jobs
+    shuffled = _shuffle_write_bytes(sc, group)
+    assert 0 < shuffled <= MAX_FRESH_RUN_SHUFFLE_BYTES[venue], shuffled
     assert _jobs_in_group(sc, f"job-count-resumed-{tmp_path.name}",
                           lambda: run(True)) == 0
     # unpersist drops blocks asynchronously
