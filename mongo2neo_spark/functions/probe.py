@@ -2,7 +2,7 @@
 size-adaptive execution-venue choice in the engine.
 
 Pattern (used by plans.pipeline's vocabulary probe and by
-operators.link.spark_link_components' linked-pair collect): some stage
+operators.link.link_components' Spark-scored linked-pair collect): some stage
 is a fixed-cost distributed job (Python UDF passes, CC rounds) whose
 input is USUALLY tiny — a norm vocabulary, a linked-pair set.  Instead
 of paying the fixed cost, run ONE

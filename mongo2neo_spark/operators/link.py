@@ -15,12 +15,12 @@ One kernel links a vocabulary the driver holds, in either venue:
 key and groups equal keys by sort (SparkER-style blocking with the K3
 hot-band drop); :func:`linked_pairs` scores every pair of a kept group
 once, in the first band the pair shares (the comparison-propagation
-rule), with the exact shared ``rules`` score.  :func:`driver_link_components`
-runs both on the driver; :func:`spark_link_components` groups on the
-driver and scores the groups in one Spark job.  Vocabularies above
-``pipeline.DRIVER_VOCAB_MAX`` take the all-Spark chain instead
-(:func:`lsh_bands` -> :func:`candidate_pairs_from_bands`, with
-:func:`dropped_from_bands` as the drop audit).
+rule), with the exact shared ``rules`` score.  :func:`link_components`
+bands and groups on the driver, and scores there up to
+:data:`LINK_SPARK_MIN_PAIRS` kept-group pairs, above that in one Spark
+job.  Vocabularies above ``pipeline.DRIVER_VOCAB_MAX`` take the all-Spark
+chain instead (:func:`lsh_bands` -> :func:`candidate_pairs_from_bands`,
+with :func:`dropped_from_bands` as the drop audit).
 """
 
 from __future__ import annotations
@@ -116,59 +116,91 @@ def dropped_from_bands(bands: DataFrame,
     )
 
 
-def driver_link_components(
-    norm_ids,
-    band_cap: int = hashing.BAND_CAP,
-    threshold: float = rules.LINK_THRESHOLD,
-):
-    """Driver venue of the linking stage for vocabulary-sized norm sets:
-    ``(norm, xxhash64-id)`` pairs -> (``[(norm, entity_id)]``,
-    ``n_dropped_bands``).
-
-    :func:`band_groups` and :func:`linked_pairs` over the whole
-    vocabulary, then :func:`cc.min_labels`: the same signatures, band
-    keys, K3 over-cap drop, exact pair scores and min-id component labels
-    as the all-Spark ``lsh_bands -> candidate_pairs_from_bands ->
-    connected_components`` chain, from the same ``hashing``/``rules``
-    functions.  Each candidate pair is scored once, and no pair set is
-    built.
-    """
-    items = sorted(norm_ids)  # deterministic order
-    grams = [rules.char_ngrams(n or "") for n, _ in items]
-    keys, groups, dropped = band_groups(grams, band_cap)
-    a, b = linked_pairs(grams, keys, *groups, threshold)
-    ids = np.array([i for _, i in items], dtype=np.int64)
-    return _min_id_components(items, zip(ids[a].tolist(), ids[b].tolist())), dropped
+# Candidate pairs (the kept groups' sum of size * (size - 1) / 2) up to
+# which link_components scores on the driver; above it the scoring runs as
+# one Spark job.  Scoring time grows with these pairs, not with the norms
+# (dropped bands and group shapes set how many pairs a vocabulary holds).
+# Measured on `_vocab_pool` vocabularies (4-core host; README "Scale
+# design notes" has the table), driver / Spark: at 2.50M pairs
+# 0.88-1.00 / 1.11-1.27 s cold (the session's second Python job, as after
+# the extraction) and 1.14-1.20 / 0.82-0.89 s warm; at 8.10M pairs
+# 2.8-3.1 / 1.7-2.4 s cold.  kg_vocab's 35.7k pairs take 0.05 /
+# 0.23-0.31 s warm, and a session's first Python job costs Spark 3.1-4.4 s.
+# Whole pipeline runs of kg_vocab's input scaled 20x / 40x (8.1M / 20.1M
+# pairs) took 8-20% less wall on Spark than on the driver, and 0.4 / 0.6 GB
+# more peak RSS: the Python workers the scoring job starts
+LINK_SPARK_MIN_PAIRS = 2_600_000
 
 
-def spark_link_components(
+def link_components(
     spark,
     norm_ids,
     band_cap: int = hashing.BAND_CAP,
     threshold: float = rules.LINK_THRESHOLD,
 ):
-    """Spark venue with the contract of :func:`driver_link_components`,
-    or None when more than ``cc.DRIVER_CC_MAX_EDGES`` pairs link — the
+    """The linking stage over a vocabulary the driver holds: ``(norm,
+    xxhash64-id)`` pairs -> (``[(norm, entity_id)]``, ``n_dropped_bands``),
+    or None when more than ``cc.DRIVER_CC_MAX_EDGES`` pairs link -- the
     bound :func:`cc.connected_components_auto` puts on a driver
     union-find; the caller then stays on the distributed CC path.
 
-    The driver bands and groups the vocabulary (:func:`band_groups`);
-    scoring, the part that grows with the candidate pairs, runs on
-    Spark.  The kept groups go out as the rows of a driver-made frame,
-    one row per slice of about equal pair counts (a ``LocalTableScan``
-    splits its rows evenly by count, so one row is one task); the norms
-    and their band keys go out in one broadcast.  A ``mapInPandas`` runs
+    The driver bands and groups the vocabulary once (:func:`band_groups`).
+    Up to :data:`LINK_SPARK_MIN_PAIRS` kept-group pairs, and no more
+    than ``cc.DRIVER_CC_MAX_EDGES`` (so every pair that links fits the
+    union-find), it scores them itself (:func:`linked_pairs`); above
+    that, scoring, the part that grows with the pairs, runs on Spark
+    (:func:`_spark_linked_pairs`).  With ``spark`` None it always scores
+    on the driver.  Either way the linked
+    pairs are union-found on the driver (:func:`cc.min_labels`): the same
+    signatures, band keys, K3 over-cap drop, exact pair scores and min-id
+    component labels as the all-Spark ``lsh_bands ->
+    candidate_pairs_from_bands -> connected_components`` chain, from the
+    same ``hashing``/``rules`` functions.
+    """
+    items = sorted(norm_ids)  # deterministic order
+    grams = [rules.char_ngrams(n or "") for n, _ in items]
+    keys, groups, dropped = band_groups(grams, band_cap)
+    sizes = groups[1]
+    n_pairs = int((sizes * (sizes - 1) // 2).sum())
+    if spark is None or n_pairs <= min(LINK_SPARK_MIN_PAIRS,
+                                       cc_mod.DRIVER_CC_MAX_EDGES):
+        a, b = linked_pairs(grams, keys, *groups, threshold)
+    else:
+        linked = _spark_linked_pairs(spark, [n for n, _ in items], keys, groups,
+                                     n_pairs, threshold)
+        if linked is None:
+            return None
+        a, b = linked
+    ids = np.array([i for _, i in items], dtype=np.int64)
+    return _min_id_components(items, zip(ids[a].tolist(), ids[b].tolist())), dropped
+
+
+def driver_link_components(
+    norm_ids,
+    band_cap: int = hashing.BAND_CAP,
+    threshold: float = rules.LINK_THRESHOLD,
+):
+    """:func:`link_components` scored on the driver whatever the pair
+    count."""
+    return link_components(None, norm_ids, band_cap, threshold)
+
+
+def _spark_linked_pairs(spark, norms, keys, groups, n_pairs, threshold):
+    """:func:`linked_pairs` of the kept ``groups`` (``n_pairs`` candidate
+    pairs) run as one Spark job: the linked norm-index arrays ``(a, b)``,
+    or None when more than ``cc.DRIVER_CC_MAX_EDGES`` pairs link.
+
+    The kept groups go out as the rows of a driver-made frame, one row
+    per slice of about equal pair counts (a ``LocalTableScan`` splits its
+    rows evenly by count, so one row is one task); the norms and their
+    band keys go out in one broadcast.  A ``mapInPandas`` runs
     :func:`linked_pairs` per slice and only the linked norm-index pairs
     come back: one job, no exchange.
     """
-    items = sorted(norm_ids)
-    norms = [n for n, _ in items]
-    keys, (bands, sizes, members), dropped = band_groups(
-        [rules.char_ngrams(n or "") for n in norms], band_cap
-    )
+    bands, sizes, members = groups
     rows = _pair_slices(bands, sizes, members, spark.sparkContext.defaultParallelism)
     if rows.empty:
-        return _min_id_components(items, ()), dropped
+        return np.empty(0, np.int64), np.empty(0, np.int64)
     bc = spark.sparkContext.broadcast((norms, keys))
 
     def score(batches):
@@ -188,7 +220,7 @@ def spark_link_components(
         # each candidate pair links at most once: when they are few enough,
         # a plain collect holds every linked pair, with no LIMIT (whose
         # single-partition exchange the probe would add)
-        if (sizes * (sizes - 1) // 2).sum() <= max_edges:
+        if n_pairs <= max_edges:
             linked = scored.toPandas()
         else:
             linked = probe_mod.driver_probe(scored, max_edges, as_pandas=True)
@@ -196,9 +228,7 @@ def spark_link_components(
         bc.destroy()
     if linked is None:
         return None
-    ids = np.array([i for _, i in items], dtype=np.int64)
-    a, b = ids[linked["a"].to_numpy()], ids[linked["b"].to_numpy()]
-    return _min_id_components(items, zip(a.tolist(), b.tolist())), dropped
+    return linked["a"].to_numpy(), linked["b"].to_numpy()
 
 
 def band_groups(grams, band_cap: int = hashing.BAND_CAP):

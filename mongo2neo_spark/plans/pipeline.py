@@ -38,12 +38,20 @@ from . import lineage as lin
 
 
 # Vocabularies (mention_stats rows, one per distinct norm) of up to this
-# many rows are held on the driver whichever venue runs LSH: components,
-# canonical names, the norm->entity map and nodes are then driver
-# arithmetic (materialize.driver_graph_tables).  Above it the whole
-# components/canonicalization chain runs as Spark jobs.  A design bound,
-# not a measured capacity: the largest vocabulary a pipeline run held is
-# ~1.5k norms (README "Scale design notes" has the driver-side figures).
+# many rows are held on the driver whichever venue scores the pairs:
+# banding, components, canonical names, the norm->entity map and nodes are
+# then driver arithmetic (link.link_components,
+# materialize.driver_graph_tables).  Above it the whole
+# components/canonicalization chain runs as Spark jobs.  Measured on
+# `_vocab_pool` norms (4-core host, 3 GB JVM heap), at 250k / 500k / 1M
+# norms: the probe's collect 3.5 / 4.0 / 7.2 s; band_groups 3.8 / 7.4 s
+# (char-3-grams included) with driver Python peak RSS 1.7 / 3.4 GB, from
+# MinHash's (24, grams) hash matrix, not run at 1M; driver_graph_tables
+# 1.0 / 2.2 / 7.7 s; writing the components and nodes 3.2 / 5.0 / 9.0 s;
+# driver Python RSS after them 0.36 / 0.56 / 0.95 GB.  Such
+# vocabularies hold 149M / 397M kept-group pairs, so their pair scoring
+# runs on Spark.  The all-Spark chain would self-join those pairs, so the
+# bound stays: the driver's banding memory is the cost to cut
 DRIVER_VOCAB_MAX = 1_000_000
 
 
@@ -56,14 +64,10 @@ class PipelineConfig:
     # P3 dedup: "adaptive" is the only strategy (ingest.dedup_adaptive).
     # The field stays until the benchmark's traced run stops passing it
     dedup_strategy: str = "adaptive"
-    # LSH venue: vocabularies of up to this many mention_stats rows (one
-    # per distinct norm) are banded, scored and union-found on the driver
-    # (link.driver_link_components); above it the driver still bands and
-    # groups them, and the pair scoring runs as one Spark job
-    # (link.spark_link_components), which pays a job and a Python
-    # worker's start; 0 forces the Spark venue.  Both run the same kernel.
-    # Where the vocabulary itself lives is bounded by DRIVER_VOCAB_MAX,
-    # not by this
+    # Decides nothing: link.link_components picks the scoring venue by the
+    # kept groups' candidate-pair count (link.LINK_SPARK_MIN_PAIRS), so a
+    # value here (0 included) forces no venue.  The field stays until the
+    # benchmark stops passing and reading it
     driver_link_max: int = 100_000
     run_id: str = ""
 
@@ -190,10 +194,10 @@ def _stage_components(spark, out_dir, paths, cfg, resume):
       rollup if it has at most DRIVER_VOCAB_MAX rows; then the driver
       holds it whichever venue links, and materialize builds canonical
       names, the norm->entity map and nodes from it;
-    - where pair scoring runs: up to ``cfg.driver_link_max`` norms on the
-      driver (link.driver_link_components), above that as one Spark job
-      over the driver-grouped band groups (link.spark_link_components),
-      whose linked pairs go to a driver union-find only up to
+    - where pair scoring runs (link.link_components): the driver bands
+      and groups the vocabulary, and scores the kept groups itself up to
+      link.LINK_SPARK_MIN_PAIRS candidate pairs, above that in one Spark
+      job; the linked pairs go to a driver union-find only up to
       cc.DRIVER_CC_MAX_EDGES.
     A vocabulary above DRIVER_VOCAB_MAX, or more linked pairs than that,
     keeps the all-Spark path (norm_components, then canonicalization in
@@ -212,20 +216,15 @@ def _stage_components(spark, out_dir, paths, cfg, resume):
             DRIVER_VOCAB_MAX, as_pandas=True,
         )
         if stats is not None:
-            norm_ids = zip(stats["norm"].tolist(), stats["id"].tolist())
-            if 0 < cfg.driver_link_max and len(stats) <= cfg.driver_link_max:
-                # banding, scoring and CC collapse to driver arithmetic
-                # over the same shared hashing/rules functions
-                linked = link_mod.driver_link_components(
-                    norm_ids, cfg.band_cap, cfg.threshold
-                )
-            else:
-                # None: more linked pairs than a driver union-find takes
-                linked = link_mod.spark_link_components(
-                    spark, norm_ids, cfg.band_cap, cfg.threshold
-                )
-                if linked is None:
-                    stats = None
+            # banding and union-find on the driver, scoring on the driver
+            # or, for many candidate pairs, as one Spark job; None: more
+            # linked pairs than a driver union-find takes
+            linked = link_mod.link_components(
+                spark, zip(stats["norm"].tolist(), stats["id"].tolist()),
+                cfg.band_cap, cfg.threshold,
+            )
+            if linked is None:
+                stats = None
         if stats is not None:
             comp_rows, dropped = linked
             comp_pdf = pd.DataFrame(comp_rows, columns=["norm", "entity_id"])

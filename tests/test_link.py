@@ -45,41 +45,48 @@ def test_band_cap_drops_hot_bands(spark, bands_df):
     assert dropped.count() > 0  # and the drops are observable, not silent
 
 
-@pytest.mark.parametrize("band_cap", [1, link.hashing.BAND_CAP])
-def test_spark_link_components_match_driver(spark, small_rows, band_cap):
-    """The distributed-LSH venue returns the driver venue's components
-    and dropped-band count, also when the cap drops every band (then no
-    norm links)."""
+def _fixture_norm_ids(spark, small_rows):
     ref_m, _ = oracle.extract(oracle.dedup_turns(small_rows))
     norms = sorted({m["norm"] for m in ref_m})
     ids = spark.createDataFrame([(n,) for n in norms], "norm string").select(
         "norm", F.xxhash64("norm").alias("id")).collect()
-    norm_ids = [(r.norm, r.id) for r in ids]
+    return [(r.norm, r.id) for r in ids]
+
+
+@pytest.mark.parametrize("band_cap", [1, link.hashing.BAND_CAP])
+def test_spark_link_components_match_driver(spark, small_rows, band_cap,
+                                            monkeypatch):
+    """Scored on Spark (LINK_SPARK_MIN_PAIRS below any pair count),
+    link_components returns the driver venue's components and
+    dropped-band count, also when the cap drops every band (then no norm
+    links)."""
+    norm_ids = _fixture_norm_ids(spark, small_rows)
     want = link.driver_link_components(norm_ids, band_cap)
-    assert link.spark_link_components(spark, norm_ids, band_cap) == want
+    monkeypatch.setattr(link, "LINK_SPARK_MIN_PAIRS", -1)
+    assert link.link_components(spark, norm_ids, band_cap) == want
     rows, dropped = want
     assert (dropped > 0) == (band_cap == 1)
-    assert (len({e for _, e in rows}) == len(norms)) == (band_cap == 1)
+    assert (len({e for _, e in rows}) == len(norm_ids)) == (band_cap == 1)
 
 
 def test_spark_link_components_bounded_by_driver_cc_edges(spark, small_rows,
                                                           monkeypatch):
-    """Above cc.DRIVER_CC_MAX_EDGES linked pairs the distributed-LSH venue
-    returns None (the caller keeps the distributed CC path) instead of
-    collecting the pairs to a driver union-find."""
-    ref_m, _ = oracle.extract(oracle.dedup_turns(small_rows))
-    norms = sorted({m["norm"] for m in ref_m})
-    ids = spark.createDataFrame([(n,) for n in norms], "norm string").select(
-        "norm", F.xxhash64("norm").alias("id")).collect()
-    norm_ids = [(r.norm, r.id) for r in ids]
+    """Above cc.DRIVER_CC_MAX_EDGES linked pairs link_components returns
+    None (the caller keeps the distributed CC path) instead of collecting
+    the pairs to a driver union-find: also when LINK_SPARK_MIN_PAIRS
+    would score them on the driver, since more candidate pairs than that
+    bound are always scored on Spark."""
+    norm_ids = _fixture_norm_ids(spark, small_rows)
     rows, _ = link.driver_link_components(norm_ids)
     # a component of k norms has at least k - 1 linked pairs
     n_linked = len(rows) - len({e for _, e in rows})
     assert n_linked > 1
     monkeypatch.setattr(link.cc_mod, "DRIVER_CC_MAX_EDGES", n_linked - 1)
-    assert link.spark_link_components(spark, norm_ids) is None
+    assert link.link_components(spark, norm_ids) is None
+    monkeypatch.setattr(link, "LINK_SPARK_MIN_PAIRS", -1)
+    assert link.link_components(spark, norm_ids) is None
     monkeypatch.setattr(link.cc_mod, "DRIVER_CC_MAX_EDGES", n_linked + 10**6)
-    assert link.spark_link_components(spark, norm_ids) is not None
+    assert link.link_components(spark, norm_ids) is not None
 
 
 _SYLLABLES = ["ka", "lo", "mer", "tin", "sa", "vo", "ri", "den", "pa", "qua",
@@ -128,11 +135,11 @@ def _oracle_components(norm_ids, band_cap):
 @pytest.mark.parametrize("band_cap", [2, link.hashing.BAND_CAP])
 def test_link_venues_match_oracle_on_alias_vocabulary(spark, band_cap,
                                                       monkeypatch):
-    """At a realistic vocabulary size (~1.3k norms), the driver venue, the
-    Spark venue and the oracle (candidate pairs, exact scores, min-id
-    labels) give the same components and dropped-band count, with over-cap
-    drops (cap 2) and real links (default cap) both present; the Spark
-    venue sends each linked pair to the driver once."""
+    """At a realistic vocabulary size (~1.3k norms), the driver scoring
+    venue, the Spark scoring venue and the oracle (candidate pairs, exact
+    scores, min-id labels) give the same components and dropped-band
+    count, with over-cap drops (cap 2) and real links (default cap) both
+    present; the Spark venue sends each linked pair to the driver once."""
     norms = _alias_vocabulary(seed=5, n_entities=700)
     assert len(norms) > 1_200
     rng = random.Random(band_cap)
@@ -153,7 +160,8 @@ def test_link_venues_match_oracle_on_alias_vocabulary(spark, band_cap,
         return min_labels(pairs)
 
     monkeypatch.setattr(link.cc_mod, "min_labels", recording_min_labels)
-    rows, dropped = link.spark_link_components(spark, norm_ids, band_cap)
+    monkeypatch.setattr(link, "LINK_SPARK_MIN_PAIRS", -1)
+    rows, dropped = link.link_components(spark, norm_ids, band_cap)
     assert (sorted(rows), dropped) == (want, want_dropped)
     assert len(sent) == len({frozenset(p) for p in sent}) > 0
     assert len({e for _, e in want}) < len(norms)  # aliases link

@@ -9,8 +9,8 @@ import time
 import pyarrow.parquet as pq
 import pytest
 
-from mongo2neo_spark import fixtures, oracle, schemas
-from mongo2neo_spark.operators import cc
+from mongo2neo_spark import fixtures, oracle, rules, schemas
+from mongo2neo_spark.operators import cc, link
 from mongo2neo_spark.plans import lineage as lin
 from mongo2neo_spark.plans import pipeline
 from mongo2neo_spark.plans.pipeline import PipelineConfig, run_pipeline
@@ -116,12 +116,12 @@ def _write_input(spark, rows, path):
 GRAPH_TABLES = ("components", "nodes", "edges", "triples")
 
 
-def _run(spark, inp, tmp_path, name, link_max, check_resume=False):
-    """Out dir and paths of a fresh run with ``driver_link_max=link_max``.
-    With ``check_resume``, a resumed run follows it and must leave the
-    graph tables as they are and add no lineage row."""
+def _run(spark, inp, tmp_path, name, check_resume=False):
+    """Out dir and paths of a fresh run.  With ``check_resume``, a resumed
+    run follows it and must leave the graph tables as they are and add no
+    lineage row."""
     out = str(tmp_path / name)
-    cfg = PipelineConfig(n_buckets=4, run_id=name, driver_link_max=link_max)
+    cfg = PipelineConfig(n_buckets=4, run_id=name)
     paths = run_pipeline(spark, inp, out, cfg, resume=False)
     if check_resume:
         before = {t: _rows(spark, paths[t]) for t in GRAPH_TABLES}
@@ -137,15 +137,17 @@ def _run(spark, inp, tmp_path, name, link_max, check_resume=False):
 
 def _run_venues(spark, inp, tmp_path, monkeypatch, check_resume=False):
     """Out dirs and paths of fresh runs on the three venues: driver link,
-    distributed LSH with the vocabulary on the driver, and fully
+    distributed LSH with the vocabulary on the driver (pair scoring forced
+    onto Spark: LINK_SPARK_MIN_PAIRS below any pair count), and fully
     distributed (the vocabulary over DRIVER_VOCAB_MAX, so
     canonicalization runs on Spark); ``check_resume`` as in
     :func:`_run`."""
-    drv = _run(spark, inp, tmp_path, "drv", 100_000, check_resume)
-    lsh = _run(spark, inp, tmp_path, "lsh", 0, check_resume)
+    drv = _run(spark, inp, tmp_path, "drv", check_resume)
     with monkeypatch.context() as m:
+        m.setattr(link, "LINK_SPARK_MIN_PAIRS", -1)
+        lsh = _run(spark, inp, tmp_path, "lsh", check_resume)
         m.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
-        dist = _run(spark, inp, tmp_path, "dist", 0, check_resume)
+        dist = _run(spark, inp, tmp_path, "dist", check_resume)
     return drv, lsh, dist
 
 
@@ -165,7 +167,7 @@ def test_driver_link_venue_matches_distributed(spark, small_rows, tmp_path,
     venues = list(_run_venues(spark, inp, tmp_path, monkeypatch))
     with monkeypatch.context() as m:
         m.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
-        venues.append(_run(spark, inp, tmp_path, "dist_cc", 0))
+        venues.append(_run(spark, inp, tmp_path, "dist_cc"))
 
     def dropped(out):
         return [
@@ -362,19 +364,18 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     leaves nothing it persisted cached (the all-Spark chain's CC rounds
     included), and a resumed run over its finished output starts no job
     at all: lineage is read and written by the driver."""
+    if venue == "distributed_lsh":
+        monkeypatch.setattr(link, "LINK_SPARK_MIN_PAIRS", -1)
     if venue == "all_spark_cc":
         monkeypatch.setattr(pipeline, "DRIVER_VOCAB_MAX", 0)
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
-    driver_link_max = 100_000 if venue == "driver_link" else 0
     inp = _write_input(spark, small_rows, str(tmp_path / "in"))
     out = str(tmp_path / "out")
     sc = spark.sparkContext
     cached_before = _cached_rdds(sc)
 
     def run(resume):
-        run_pipeline(spark, inp, out,
-                     PipelineConfig(n_buckets=4, run_id="jobs",
-                                    driver_link_max=driver_link_max),
+        run_pipeline(spark, inp, out, PipelineConfig(n_buckets=4, run_id="jobs"),
                      resume=resume)
 
     group = f"job-count-{tmp_path.name}"
@@ -389,6 +390,74 @@ def test_fresh_run_job_count(spark, small_rows, tmp_path, monkeypatch, venue):
     while _cached_rdds(sc) - cached_before and time.monotonic() < deadline:
         time.sleep(0.1)
     assert _cached_rdds(sc) <= cached_before
+
+
+def test_link_venue_follows_candidate_pairs(spark, small_rows, tmp_path,
+                                            monkeypatch):
+    """The scoring venue is picked by the kept groups' candidate-pair
+    count, not by the number of norms: with LINK_SPARK_MIN_PAIRS at the
+    fixture's pair count a fresh run scores on the driver, and one pair
+    lower it makes exactly one Spark job more (the scoring job); both
+    write the oracle's nodes and edges.  ``driver_link_max`` decides
+    nothing."""
+    ref_m, _ = oracle.extract(oracle.dedup_turns(small_rows))
+    norms = sorted({m["norm"] for m in ref_m})
+    _, (_, sizes, _), _ = link.band_groups(
+        [rules.char_ngrams(n) for n in norms])
+    n_pairs = int((sizes * (sizes - 1) // 2).sum())
+    assert 0 < n_pairs < len(norms) ** 2
+    inp = _write_input(spark, small_rows, str(tmp_path / "in"))
+    want_nodes = oracle.nodes(small_rows)
+    want_edges = oracle.edges(small_rows, PipelineConfig().max_provenance)
+    sc = spark.sparkContext
+
+    def jobs(name, min_pairs, **cfg):
+        monkeypatch.setattr(link, "LINK_SPARK_MIN_PAIRS", min_pairs)
+        out = str(tmp_path / name)
+        paths = {}
+
+        def run():
+            paths.update(run_pipeline(
+                spark, inp, out, PipelineConfig(n_buckets=4, run_id=name, **cfg),
+                resume=False))
+
+        n = _jobs_in_group(sc, f"venue-{name}-{tmp_path.name}", run)
+        assert _rows(spark, paths["nodes"]) == want_nodes, name
+        assert _rows(spark, paths["edges"]) == want_edges, name
+        return n
+
+    on_driver = jobs("at", n_pairs)
+    assert on_driver <= MAX_FRESH_RUN_JOBS["driver_link"]
+    assert jobs("below", n_pairs - 1) == on_driver + 1
+    assert jobs("inert", n_pairs, driver_link_max=0) == on_driver
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "string"])
+def test_pandas_typed_input(spark, small_rows, tmp_path, ts_type):
+    """A transcript table that pyarrow wrote from a plain pandas frame,
+    with pandas' physical types instead of the contract's (int64
+    ``turn_idx``; ``ts`` as a timestamp without time zone, or as text),
+    gives the oracle's triples, nodes and edges: the input is read with
+    the file's own types and ingest casts them (a read with the
+    contract's schema declared fails such a file at its first task)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    pdf = pd.DataFrame(fixtures.with_duplicates_and_shuffle(small_rows))
+    if ts_type == "string":
+        pdf["ts"] = pdf["ts"].dt.strftime("%Y-%m-%d %H:%M:%S")
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    assert table.schema.field("turn_idx").type == pa.int64()
+    inp = tmp_path / "in"
+    inp.mkdir()
+    # microseconds: Spark reads no nanosecond parquet timestamp
+    pq.write_table(table, str(inp / "part-0.parquet"), coerce_timestamps="us")
+    paths = run_pipeline(spark, str(inp), str(tmp_path / "out"),
+                         PipelineConfig(n_buckets=4), resume=False)
+    assert set(_rows(spark, paths["triples"])) == oracle.pipeline_triples(small_rows)
+    assert _rows(spark, paths["nodes"]) == oracle.nodes(small_rows)
+    assert _rows(spark, paths["edges"]) == oracle.edges(
+        small_rows, PipelineConfig().max_provenance)
 
 
 def test_cli_prints_triple_count_and_resumes_without_jobs(

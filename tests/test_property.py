@@ -2,7 +2,6 @@
 the invariants the whole pipeline's determinism rests on — and a
 differential test of the whole pipeline against the oracle."""
 
-import dataclasses
 import datetime as dt
 import tempfile
 from unittest import mock
@@ -13,7 +12,7 @@ from hypothesis import strategies as st
 
 from mongo2neo_spark import fixtures, oracle, rules, schemas
 from mongo2neo_spark.functions import hashing
-from mongo2neo_spark.operators import extract
+from mongo2neo_spark.operators import extract, link
 from mongo2neo_spark.plans import pipeline
 
 text_st = st.text(
@@ -157,7 +156,7 @@ def _rows(spark, path):
           phases=[Phase.explicit, Phase.reuse, Phase.generate])
 def test_pipeline_venues_match_oracle(spark, rows):
     """Each transcript goes through the driver venue and the all-Spark
-    chain (no driver linking, the vocabulary over DRIVER_VOCAB_MAX); both
+    chain (no driver scoring, the vocabulary over DRIVER_VOCAB_MAX); both
     write the oracle's triples, nodes and edges.  An example costs two
     pipeline runs (seconds), so a failure is reported as found, without
     shrinking it."""
@@ -170,15 +169,14 @@ def test_pipeline_venues_match_oracle(spark, rows):
         spark.createDataFrame(
             fixtures.turns_to_pandas(rows), schemas.TRANSCRIPTS
         ).write.parquet(inp)
-        for venue, link_max, vocab_max in [
-            ("driver", cfg.driver_link_max, pipeline.DRIVER_VOCAB_MAX),
-            ("spark", 0, 0),
+        for venue, min_pairs, vocab_max in [
+            ("driver", link.LINK_SPARK_MIN_PAIRS, pipeline.DRIVER_VOCAB_MAX),
+            ("spark", -1, 0),
         ]:
-            with mock.patch.object(pipeline, "DRIVER_VOCAB_MAX", vocab_max):
+            with mock.patch.object(link, "LINK_SPARK_MIN_PAIRS", min_pairs), \
+                    mock.patch.object(pipeline, "DRIVER_VOCAB_MAX", vocab_max):
                 paths = pipeline.run_pipeline(
-                    spark, inp, f"{tmp}/{venue}",
-                    dataclasses.replace(cfg, driver_link_max=link_max),
-                    resume=False)
+                    spark, inp, f"{tmp}/{venue}", cfg, resume=False)
             assert set(_rows(spark, paths["triples"])) == want_triples, venue
             assert _rows(spark, paths["nodes"]) == want_nodes, venue
             assert _rows(spark, paths["edges"]) == want_edges, venue
